@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.ident import quote_ident
 from .similarity import as_double, cosine, lsh_signatures, norm
 
 
@@ -485,7 +486,7 @@ def jl_project(
     repr-round-tripped double literals, so values and plan are
     bit-identical)."""
     scale = out_dim ** 0.5
-    v = f"transform(`{vec_col}`, x -> CAST(x AS DOUBLE))"
+    v = f"transform({quote_ident(vec_col)}, x -> CAST(x AS DOUBLE))"
     rows = [
         (
             f"aggregate(zip_with({v}, array("

@@ -32,6 +32,20 @@ tests/test_jpeg_decode.py, tests/test_avi_decode.py). Other formats
 still raise and fall back to the deterministic byte-level feature
 extractor; the Spark-side plumbing — schema, batching, partitioning,
 UDF signature — is identical either way.
+
+The algorithms several formats share live once in ``codec_core``: the
+LZW decode loop (GIF LSB-first, TIFF MSB-first with its early width
+steps), the buffered bit writer (GIF/TIFF LZW and JPEG entropy
+segments, which add their own 1-padding and byte stuffing), the
+canonical prefix-code assigner (JPEG DHT tables on both sides), the
+``quarantine`` decorator that turns struct.error/IndexError into the
+ValueError every decoder entry point raises on malformed input, and
+the decode-size bound: header dimensions are checked against
+``codec_core.MAX_PIXELS`` (64M px) before any raster, list or
+coefficient array is sized from them. On top of that, GIF and JPEG
+reject dimensions their payload could never fill, MP4 rejects sample
+counts its payload could never hold, and PNG inflates no more IDAT
+output than IHDR implies, so a deflate bomb stops at the raster size.
 """
 
 from __future__ import annotations
@@ -41,6 +55,16 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from .codec_core import (
+    MAX_DECODED_BYTES,
+    BitWriter,
+    canonical_codes,
+    check_size,
+    lzw_decode,
+    lzw_width,
+    quarantine,
+)
 
 FEATURE_BINS = 16
 
@@ -716,18 +740,6 @@ def frame_dedup(
     )
 
 
-def _decode_tiff(data: bytes) -> DecodedImage:
-    """Quarantine boundary for `_decode_tiff_inner` (same contract as
-    the JPEG/GIF/MP4 wrappers: malformed streams surface as
-    ValueError, never struct.error/IndexError)."""
-    import struct
-
-    try:
-        return _decode_tiff_inner(data)
-    except (struct.error, IndexError) as exc:
-        raise ValueError(f"malformed TIFF stream: {exc}") from exc
-
-
 def _tiff_packbits_decode(data: bytes, expected: int) -> bytes:
     """PackBits (TIFF 6 §9, compression 32773): control byte n —
     0..127 copies the next n+1 literal bytes, 129..255 repeats the
@@ -756,127 +768,53 @@ def _tiff_packbits_decode(data: bytes, expected: int) -> bytes:
     return bytes(out[:expected])
 
 
-def _tiff_lzw_width(effective: int) -> int:
-    """TIFF LZW code width under the EARLY-CHANGE convention (TIFF 6
-    §13, the historical off-by-one every real writer ships): the
-    9->10/10->11/11->12 bumps happen when the ENCODER's next free
-    entry reaches 2^w - 1 (511/1023/2047), one code earlier than
-    GIF's variant (``_gif_lzw_decode`` bumps at 2^w). Both sides call
-    this with the encoder-side counter — the decoder lags one table
-    entry behind, so it passes next_code + 1 (see _tiff_lzw_decode) —
-    making the symmetry explicit instead of burying two different
-    threshold constants."""
-    w = 9
-    while w < 12 and effective >= (1 << w) - 1:
-        w += 1
-    return w
+_TIFF_LZW_EARLY = 2
 
 
-def _tiff_lzw_decode(data: bytes, expected: int) -> bytes:
-    """TIFF-variant LZW (compression 5): MSB-first bit packing
-    (GIF's twin ``_gif_lzw_decode`` is LSB-first), fixed 8-bit roots,
-    ClearCode 256 / EOI 257 / first dynamic entry 258, early-change
-    width schedule via ``_tiff_lzw_width``. Stops at ``expected``
-    decompressed bytes; structural damage raises ValueError."""
-    out = bytearray()
-    bitpos = 0
-    n_bytes = len(data)
-    nbits = n_bytes * 8
+def _tiff_lzw_width(next_code: int) -> int:
+    """TIFF LZW code width given the ENCODER's next free entry: the
+    9->10/10->11/11->12 steps come when it reaches 2^w - 1
+    (511/1023/2047). The decoder's table is one entry behind, hence
+    ``codec_core.lzw_width(next_code - 1, ...)``."""
+    return lzw_width(next_code - 1, 8, _TIFF_LZW_EARLY)
 
-    def read(width: int) -> int:
-        nonlocal bitpos
-        if bitpos + width > nbits:
-            raise ValueError("truncated TIFF LZW stream")
-        i = bitpos >> 3
-        acc = data[i] << 16
-        if i + 1 < n_bytes:
-            acc |= data[i + 1] << 8
-            if i + 2 < n_bytes:
-                acc |= data[i + 2]
-        v = (acc >> (24 - (bitpos & 7) - width)) & ((1 << width) - 1)
-        bitpos += width
-        return v
 
-    table: list[bytes] = []
-    prev: bytes | None = None
-
-    def reset() -> None:
-        nonlocal table, prev
-        table = [bytes([i]) for i in range(256)] + [b"", b""]
-        prev = None
-
-    reset()
-    while len(out) < expected:
-        # decoder counter lags the encoder by one entry except on the
-        # first code after a clear — effective = encoder-side counter
-        effective = len(table) if prev is None else len(table) + 1
-        code = read(_tiff_lzw_width(effective))
-        if code == 256:
-            reset()
-            continue
-        if code == 257:
-            break
-        if prev is None:
-            if code > 255:
-                raise ValueError(f"invalid first TIFF LZW code {code}")
-            entry = table[code]
-        elif code < len(table):
-            entry = table[code]
-            table.append(prev + entry[:1])
-        elif code == len(table):
-            entry = prev + prev[:1]
-            table.append(entry)
-        else:
-            raise ValueError(f"TIFF LZW code {code} beyond table")
-        out += entry
-        prev = entry
-    if len(out) < expected:
-        raise ValueError(
-            f"TIFF LZW stream ended early ({len(out)} < {expected} bytes)"
-        )
-    return bytes(out[:expected])
+def _tiff_lzw_decode(data: bytes, expected: int) -> bytearray:
+    """TIFF-variant LZW (compression 5): MSB-first bit packing, fixed
+    8-bit roots, ClearCode 256 / EOI 257, the ``_tiff_lzw_width``
+    schedule. Stops at ``expected`` decompressed bytes."""
+    return lzw_decode(
+        data, 8, expected, msb=True, early=_TIFF_LZW_EARLY, what="TIFF"
+    )
 
 
 def _tiff_lzw_encode(data: bytes) -> bytes:
     """TIFF-variant LZW writer: inverse of ``_tiff_lzw_decode``
     (MSB-first, early change, clear at table entry 4093 per the
     writers-must-reset convention)."""
-    out = bytearray()
-    acc = 0
-    accbits = 0
-
-    def emit(code: int, width: int) -> None:
-        nonlocal acc, accbits
-        acc = (acc << width) | code
-        accbits += width
-        while accbits >= 8:
-            out.append((acc >> (accbits - 8)) & 0xFF)
-            accbits -= 8
-
+    out = BitWriter(msb=True)
     table: dict[bytes, int] = {bytes([i]): i for i in range(256)}
     next_code = 258
-    emit(256, _tiff_lzw_width(next_code))  # leading clear
+    out.write(256, _tiff_lzw_width(next_code))  # leading clear
     w = b""
     for i in range(len(data)):
         c = data[i : i + 1]
         if w + c in table:
             w += c
             continue
-        emit(table[w], _tiff_lzw_width(next_code))
+        out.write(table[w], _tiff_lzw_width(next_code))
         table[w + c] = next_code
         next_code += 1
         w = c
         if next_code == 4093:
-            emit(256, _tiff_lzw_width(next_code))
+            out.write(256, _tiff_lzw_width(next_code))
             table = {bytes([j]): j for j in range(256)}
             next_code = 258
     if w:
-        emit(table[w], _tiff_lzw_width(next_code))
+        out.write(table[w], _tiff_lzw_width(next_code))
         next_code += 1
-    emit(257, _tiff_lzw_width(next_code))  # EOI
-    if accbits:
-        out.append((acc << (8 - accbits)) & 0xFF)
-    return bytes(out)
+    out.write(257, _tiff_lzw_width(next_code))  # EOI
+    return out.bytes()
 
 
 def _tiff_packbits_encode(row: bytes) -> bytes:
@@ -909,13 +847,14 @@ def _tiff_packbits_encode(row: bytes) -> bytes:
     return bytes(out)
 
 
-def _decode_tiff_inner(data: bytes) -> DecodedImage:
+@quarantine("TIFF stream")
+def _decode_tiff(data: bytes) -> DecodedImage:
     """Pure-stdlib TIFF decode (r14; compression legs r15): both byte
     orders (II little-endian / MM big-endian), first-IFD walk over
     the core tags, 8-bit samples, strips. Compression 1
-    (uncompressed), 5 (LZW, MSB-first early-change variant — the GIF
-    leg's machinery with the two documented deltas, see
-    ``_tiff_lzw_decode``) and 32773 (PackBits) decode, each strip an
+    (uncompressed), 5 (LZW through the shared ``codec_core``
+    decoder, MSB-first with the early width steps of
+    ``_tiff_lzw_width``) and 32773 (PackBits) decode, each strip an
     independent stream; horizontal differencing (Predictor tag 317 =
     2, the usual LZW companion) is inverted with one vectorized
     cumsum. Photometric 2 (RGB, extra samples/alpha dropped), 1
@@ -967,6 +906,7 @@ def _decode_tiff_inner(data: bytes) -> DecodedImage:
     width, height = first(256), first(257)
     if not width or not height:
         raise ValueError("TIFF missing image dimensions")
+    check_size("TIFF image", width, height)
     comp = first(259, 1)
     if comp not in (1, 5, 32773):
         raise ValueError(
@@ -1293,27 +1233,35 @@ def _decode_png(data: bytes) -> DecodedImage:
         )
     if width <= 0 or height <= 0:
         raise ValueError(f"degenerate PNG dimensions {width}x{height}")
+    check_size("PNG image", width, height)
     bpp = max(1, channels * depth // 8)  # filter back-distance, bytes
+    # sub-images: the whole raster, or the seven Adam7 passes, each
+    # filtered from its own prior row (empty passes: zero bytes)
+    subs = []
+    for x0, y0, dx, dy in _PNG_ADAM7 if interlace else ((0, 0, 1, 1),):
+        pw = (width - x0 + dx - 1) // dx
+        ph = (height - y0 + dy - 1) // dy
+        if pw > 0 and ph > 0:
+            stride = (pw * channels * depth + 7) // 8
+            subs.append((x0, y0, dx, dy, pw, ph, stride))
+    need = sum((stride + 1) * ph for *_, ph, stride in subs)
+    # inflate no further than the filtered bytes IHDR implies: a
+    # deflate bomb (tiny IHDR, huge IDAT output) stops at ``need``;
+    # image data past it is ignored, as it always was, but no longer
+    # inflated or checked
+    inflater = zlib.decompressobj()
     try:
-        raw = zlib.decompress(b"".join(idat))
+        raw = inflater.decompress(b"".join(idat), need)
     except zlib.error as exc:
         raise ValueError(f"corrupt PNG IDAT stream: {exc}") from exc
-    if interlace == 0:
-        stride = (width * channels * depth + 7) // 8
-        out = _png_defilter(raw, 0, height, stride, bpp)
-        samples = _png_samples(out, width, channels, depth)
-    else:  # Adam7: seven sub-images, each filtered from its own prior
-        samples = np.zeros((height, width, channels), dtype=np.uint8)
-        offset = 0
-        for x0, y0, dx, dy in _PNG_ADAM7:
-            pw = (width - x0 + dx - 1) // dx
-            ph = (height - y0 + dy - 1) // dy
-            if pw <= 0 or ph <= 0:
-                continue  # empty pass: zero bytes in the stream
-            pstride = (pw * channels * depth + 7) // 8
-            out = _png_defilter(raw, offset, ph, pstride, bpp)
-            offset += (pstride + 1) * ph
-            samples[y0::dy, x0::dx] = _png_samples(out, pw, channels, depth)
+    if len(raw) < need and not inflater.eof:
+        raise ValueError("corrupt PNG IDAT stream: truncated zlib stream")
+    samples = np.zeros((height, width, channels), dtype=np.uint8)
+    offset = 0
+    for x0, y0, dx, dy, pw, ph, stride in subs:
+        out = _png_defilter(raw, offset, ph, stride, bpp)
+        offset += (stride + 1) * ph
+        samples[y0::dy, x0::dx] = _png_samples(out, pw, channels, depth)
     if ctype == 2:
         return DecodedImage(
             width, height, np.ascontiguousarray(samples).tobytes()
@@ -1377,15 +1325,13 @@ def _jpeg_huffman_table(counts: bytes, symbols: bytes) -> tuple:
     dominate any real JPEG stream) into ONE list index instead of up
     to 16 per-bit dict probes — entropy decode is the family's priced
     bottleneck (SCALE.md §24), so the constant matters."""
-    exact = {}
-    code = 0
-    k = 0
-    for length in range(1, 17):
-        for _ in range(counts[length - 1]):
-            exact[(length, code)] = symbols[k]
-            code += 1
-            k += 1
-        code <<= 1
+    lengths = [ln for ln in range(1, 17) for _ in range(counts[ln - 1])]
+    if len(symbols) < len(lengths):
+        raise ValueError("truncated JPEG DHT segment")
+    exact = {
+        (length, code): sym
+        for sym, code, length in canonical_codes(zip(symbols, lengths))
+    }
     lut = [(0, 0)] * 256
     for (length, c), sym in exact.items():
         if length <= 8:
@@ -1515,21 +1461,8 @@ def _idct_8x8_matrix():
     return a
 
 
+@quarantine("JPEG stream")
 def _decode_jpeg(data: bytes) -> DecodedImage:
-    """Quarantine boundary for `_decode_jpeg_inner`: a malformed
-    stream must surface as ValueError — never struct.error or
-    IndexError from deep in the marker walk — so one bad payload can
-    only ever be SKIPPED by the featurizers, not fail the Spark task
-    (the r12-advice WAV lesson, applied to the whole parser)."""
-    import struct
-
-    try:
-        return _decode_jpeg_inner(data)
-    except (struct.error, IndexError) as exc:
-        raise ValueError(f"malformed JPEG stream: {exc}") from exc
-
-
-def _decode_jpeg_inner(data: bytes) -> DecodedImage:
     """Pure-stdlib JPEG decode, baseline AND progressive (ITU T.81
     SOF0/SOF1 sequential DCT + SOF2 progressive DCT, 8-bit precision):
     marker walk -> DQT/DHT tables (redefinable between scans) -> one
@@ -1657,6 +1590,16 @@ def _decode_jpeg_inner(data: bytes) -> DecodedImage:
                 raise ValueError("JPEG SOS before SOF")
             if geom is None:
                 geom = _jpeg_geometry(frame)
+                # every block costs at least one bit in the scan that
+                # codes its DC (a Huffman code is >= 1 bit), so a frame
+                # claiming more blocks than the payload has bits cannot
+                # decode: reject it before the coefficient lists exist
+                nblocks = sum(bh * bw for *_, bh, bw in geom["blocks"])
+                if nblocks > 8 * len(data):
+                    raise ValueError(
+                        f"JPEG frame {frame[1]}x{frame[0]} implausible "
+                        f"for a {len(data)}-byte payload"
+                    )
                 # plain nested lists during entropy decode: the scan
                 # loops mutate single coefficients, where Python-int
                 # list ops run ~5x numpy scalar indexing (the same
@@ -1748,6 +1691,7 @@ def _jpeg_geometry(frame: tuple) -> dict:
     height, width, comps = frame
     if height == 0 or width == 0:
         raise ValueError(f"degenerate JPEG dimensions {width}x{height}")
+    check_size("JPEG frame", width, height)
     hmax = max(c[1] for c in comps)
     vmax = max(c[2] for c in comps)
     if not (1 <= hmax <= 4 and 1 <= vmax <= 4):
@@ -2641,31 +2585,13 @@ def _jpeg_scaled_quant(base: tuple, quality: int):
     return np.clip(q, 1, 255)
 
 
-class _JpegBitWriter:
-    """MSB-first bit accumulator with T.81 byte stuffing (a produced
-    0xFF is followed by 0x00) and 1-padding on flush."""
-
-    __slots__ = ("buf", "acc", "n")
-
-    def __init__(self) -> None:
-        self.buf = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def put(self, val: int, nbits: int) -> None:
-        for i in reversed(range(nbits)):
-            self.acc = (self.acc << 1) | ((val >> i) & 1)
-            self.n += 1
-            if self.n == 8:
-                self.buf.append(self.acc)
-                if self.acc == 0xFF:
-                    self.buf.append(0x00)
-                self.acc = 0
-                self.n = 0
-
-    def flush(self) -> None:
-        if self.n:
-            self.put((1 << (8 - self.n)) - 1, 8 - self.n)
+def _jpeg_segment(wtr: BitWriter) -> bytes:
+    """Close one entropy-coded segment (T.81 F.1.2.3): 1-pad to a
+    byte boundary, pack, then stuff a 0x00 after every produced 0xFF."""
+    pad = -wtr.bit_length() % 8
+    if pad:
+        wtr.write((1 << pad) - 1, pad)
+    return wtr.bytes().replace(b"\xff", b"\xff\x00")
 
 
 def _jpeg_canonical(symbol_freq: dict) -> tuple:
@@ -2682,17 +2608,10 @@ def _jpeg_canonical(symbol_freq: dict) -> tuple:
     pairs.sort(key=lambda sl: sl[1])
     codes = {}
     counts = [0] * 16
-    symbols = []
-    code = 0
-    last_len = pairs[0][1]
-    for sym, length in pairs:
-        code <<= length - last_len
+    for sym, code, length in canonical_codes(pairs):
         codes[sym] = (length, code)
         counts[length - 1] += 1
-        symbols.append(sym)
-        code += 1
-        last_len = length
-    return codes, counts, symbols
+    return codes, counts, [sym for sym, _ in pairs]
 
 
 def _jpeg_plan(
@@ -2867,15 +2786,14 @@ def _encode_jpeg_baseline(
             seg = bytes([(cls << 4) | tid]) + bytes(counts) + bytes(symbols)
             dht += b"\xff\xc4" + struct.pack(">H", 2 + len(seg)) + seg
 
-    wtr = _JpegBitWriter()
+    wtr = BitWriter(msb=True)
     for is_dc, tid, sym, val in toks:
         table = dc_tables[tid] if is_dc else ac_tables[tid]
         length, code = table[sym]
-        wtr.put(code, length)
+        wtr.write(code, length)
         t = sym & 0x0F if not is_dc else sym
         if t:
-            wtr.put(val if val >= 0 else val + (1 << t) - 1, t)
-    wtr.flush()
+            wtr.write(val if val >= 0 else val + (1 << t) - 1, t)
 
     out = bytearray(b"\xff\xd8")
     for tq in table_ids:
@@ -2893,7 +2811,7 @@ def _encode_jpeg_baseline(
         sos += bytes([cid, (tid << 4) | tid])
     sos += bytes([0, 63, 0])
     out += b"\xff\xda" + struct.pack(">H", 2 + len(sos)) + sos
-    out += wtr.buf
+    out += _jpeg_segment(wtr)
     out += b"\xff\xd9"
     return bytes(out)
 
@@ -2995,18 +2913,17 @@ def _encode_jpeg_progressive(
             sos += bytes([comps[ci][0], 0x00])
         sos += bytes([ss, se, (ah << 4) | al])
         out += b"\xff\xda" + struct.pack(">H", 2 + len(sos)) + sos
-        wtr = _JpegBitWriter()
+        wtr = BitWriter(msb=True)
         for t in toks:
             if t[0] == 0:
                 length, code = codes[t[1]]
-                wtr.put(code, length)
+                wtr.write(code, length)
             elif t[0] == 1:
-                wtr.put(t[1], t[2])
+                wtr.write(t[1], t[2])
             else:  # restart boundary: byte-align, emit RSTn
-                wtr.flush()
-                wtr.buf += bytes([0xFF, 0xD0 + t[1]])
-        wtr.flush()
-        out += wtr.buf
+                out += _jpeg_segment(wtr)
+                out += bytes([0xFF, 0xD0 + t[1]])
+        out += _jpeg_segment(wtr)
     out += b"\xff\xd9"
     return bytes(out)
 
@@ -3281,6 +3198,7 @@ def _mp4_boxes(data: bytes, pos: int, end: int):
         pos += size
 
 
+@quarantine("ISO-BMFF stream")
 def _parse_mp4_tables(data: bytes) -> dict:
     """Quarantine boundary + ISO-BMFF box walk for the first video
     track (r13 verdict item 2: real video corpora are MP4): ftyp
@@ -3291,15 +3209,6 @@ def _parse_mp4_tables(data: bytes) -> dict:
     n_samples, samples: [(offset, size)], keyframes: [1-based sample
     numbers]} without touching a single sample byte — the metadata
     layer is independent of whether the codec is decodable here."""
-    import struct
-
-    try:
-        return _parse_mp4_tables_inner(data)
-    except (struct.error, IndexError) as exc:
-        raise ValueError(f"malformed ISO-BMFF stream: {exc}") from exc
-
-
-def _parse_mp4_tables_inner(data: bytes) -> dict:
     import struct
 
     if len(data) < 12 or data[4:8] != b"ftyp":
@@ -3397,6 +3306,13 @@ def _mp4_video_track(data: bytes, t0: int, t1: int) -> dict | None:
                         struct.unpack_from(f">{n}I", data, b0 + 12)
                     )
                 else:
+                    # each sample is uniform_size bytes of this payload:
+                    # reject a count it cannot hold before sizing a list
+                    if uniform_size * n > len(data):
+                        raise ValueError(
+                            f"MP4 stsz declares {n} samples of "
+                            f"{uniform_size} bytes overrunning the stream"
+                        )
                     sizes = [uniform_size] * n
             elif btype == b"stsc":
                 (n,) = struct.unpack_from(">I", data, b0 + 4)
@@ -3602,108 +3518,11 @@ def encode_video_mp4(
     return ftyp + mdat + moov
 
 
-def _gif_lzw_decode(data: bytes, min_code: int, expected: int) -> bytearray:
-    """GIF's LZW variant (LSB-first bit packing, CLEAR/END codes,
-    code width growing to 12 bits as the dictionary fills): returns
-    palette indices. Stops after ``expected`` indices (some encoders
-    omit END); anything structurally invalid raises ValueError."""
-    if not (2 <= min_code <= 8):
-        raise ValueError(f"bad GIF LZW minimum code size {min_code}")
-    clear = 1 << min_code
-    end = clear + 1
-    out = bytearray()
-    bitpos = 0
-    n_bytes = len(data)
-    nbits = n_bytes * 8
-
-    def read(width: int) -> int:
-        # LSB-first field read via a 3-byte window (codes are <= 12
-        # bits, spanning at most 3 bytes) — one shift+mask instead of
-        # a per-bit loop; LZW is the GIF family's priced bottleneck
-        # (SCALE.md §24)
-        nonlocal bitpos
-        if bitpos + width > nbits:
-            raise ValueError("truncated GIF LZW stream")
-        i = bitpos >> 3
-        acc = data[i]
-        if i + 1 < n_bytes:
-            acc |= data[i + 1] << 8
-            if i + 2 < n_bytes:
-                acc |= data[i + 2] << 16
-        v = (acc >> (bitpos & 7)) & ((1 << width) - 1)
-        bitpos += width
-        return v
-
-    table: list[bytes] = []
-    code_size = min_code + 1
-    prev: bytes | None = None
-
-    def reset() -> None:
-        nonlocal table, code_size, prev
-        table = [bytes([i]) for i in range(clear)] + [b"", b""]
-        code_size = min_code + 1
-        prev = None
-
-    reset()
-    while len(out) < expected:
-        code = read(code_size)
-        if code == clear:
-            reset()
-            continue
-        if code == end:
-            break
-        if prev is None:
-            if code >= len(table) or code >= clear:
-                raise ValueError(f"invalid first GIF LZW code {code}")
-            entry = table[code]
-        elif code < len(table):
-            entry = table[code]
-            table.append(prev + entry[:1])
-        elif code == len(table):
-            entry = prev + prev[:1]
-            table.append(entry)
-        else:
-            raise ValueError(f"GIF LZW code {code} beyond table")
-        if len(table) == (1 << code_size) and code_size < 12:
-            code_size += 1
-        out += entry
-        prev = entry
-    if len(out) < expected:
-        raise ValueError(
-            f"GIF LZW stream ended early ({len(out)} < {expected} indices)"
-        )
-    return out[:expected]
-
-
 _GIF_INTERLACE_PASSES = ((0, 8), (4, 8), (2, 4), (1, 2))
 
 
-# GIF resource bounds (r13 advice, medium): the logical-screen header
-# alone sizes the canvas, so a tiny crafted payload could otherwise
-# demand a multi-GB allocation. Per-canvas pixels are capped both
-# absolutely and against what the payload's LZW data could possibly
-# emit (n codes of >=3 bits can decode to at most ~n^2/2 symbols —
-# dictionary strings grow by one per code); total decoded bytes across
-# an animation are capped so frame count can't multiply past memory.
-_GIF_MAX_CANVAS_PIXELS = 1 << 26  # 64M px = 192 MB RGB per frame
-_GIF_MAX_TOTAL_BYTES = 1 << 28  # 256 MB of composited frames/payload
-
-
+@quarantine("GIF stream")
 def _parse_gif(data: bytes) -> tuple[float, list[DecodedImage]]:
-    """Quarantine boundary for `_parse_gif_inner`: a malformed stream
-    must surface as ValueError — never struct.error or IndexError from
-    deep in the block walk — so one bad payload can only ever be
-    SKIPPED by the featurizers, not fail the Spark task (r13 advice,
-    high: the same wrapper `_decode_jpeg` already has)."""
-    import struct
-
-    try:
-        return _parse_gif_inner(data)
-    except (struct.error, IndexError) as exc:
-        raise ValueError(f"malformed GIF stream: {exc}") from exc
-
-
-def _parse_gif_inner(data: bytes) -> tuple[float, list[DecodedImage]]:
     """Pure-stdlib GIF87a/GIF89a parse -> (fps, frames): logical
     screen + global color table, per-frame image descriptors with
     local color tables, the GIF LZW decompressor above, Adam-free
@@ -3726,17 +3545,14 @@ def _parse_gif_inner(data: bytes) -> tuple[float, list[DecodedImage]]:
     width, height = struct.unpack_from("<HH", data, 6)
     if width == 0 or height == 0:
         raise ValueError(f"degenerate GIF dimensions {width}x{height}")
-    # Resource bounds BEFORE the canvas allocation: absolute pixel cap,
-    # plus an LZW-feasibility cap — a payload of L bytes holds at most
-    # ~8L/3 codes (minimum code width 3 bits) and LZW output is at most
-    # quadratic in code count, so a header claiming far more pixels
-    # than the data could ever decode is rejected, not materialized
-    # (the BMP/DIB decoders' truncation check, adapted to compression).
-    if width * height > _GIF_MAX_CANVAS_PIXELS:
-        raise ValueError(
-            f"GIF logical screen {width}x{height} exceeds the "
-            f"{_GIF_MAX_CANVAS_PIXELS}-pixel canvas bound"
-        )
+    # Resource bounds BEFORE the canvas allocation: the shared pixel
+    # cap, plus an LZW-feasibility cap — a payload of L bytes holds at
+    # most ~8L/3 codes (minimum code width 3 bits) and LZW output is at
+    # most quadratic in code count (dictionary strings grow by one per
+    # code), so a header claiming far more pixels than the data could
+    # ever decode is rejected, not materialized (the BMP/DIB decoders'
+    # truncation check, adapted to compression).
+    check_size("GIF logical screen", width, height)
     max_codes = (8 * len(data)) // 3
     lzw_budget = max(4096, max_codes * (max_codes + 1) // 2)
     if width * height > lzw_budget:
@@ -3831,8 +3647,13 @@ def _parse_gif_inner(data: bytes) -> tuple[float, list[DecodedImage]]:
             if pos >= len(data):
                 raise ValueError("unterminated GIF image data")
             pos += 1
+            if not (2 <= min_code <= 8):
+                raise ValueError(f"bad GIF LZW minimum code size {min_code}")
             idx = np.frombuffer(
-                _gif_lzw_decode(b"".join(chunks), min_code, fw * fh),
+                lzw_decode(
+                    b"".join(chunks), min_code, fw * fh,
+                    msb=False, early=0, what="GIF",
+                ),
                 dtype=np.uint8,
             ).reshape(fh, fw)
             if interlaced:
@@ -3853,10 +3674,11 @@ def _parse_gif_inner(data: bytes) -> tuple[float, list[DecodedImage]]:
                 rect[mask] = rgb[mask]
             else:
                 rect[:] = rgb
-            if (len(frames) + 1) * width * height * 3 > _GIF_MAX_TOTAL_BYTES:
+            # frame count must not multiply past memory either
+            if (len(frames) + 1) * width * height * 3 > MAX_DECODED_BYTES:
                 raise ValueError(
                     "GIF animation exceeds the "
-                    f"{_GIF_MAX_TOTAL_BYTES}-byte decoded-frames bound"
+                    f"{MAX_DECODED_BYTES}-byte decoded-frames bound"
                 )
             frames.append(DecodedImage(width, height, canvas.tobytes()))
             delays.append(delay_cs)
@@ -3922,45 +3744,26 @@ def _encode_gif(img: DecodedImage) -> bytes:
 
 
 def _gif_lzw_encode(indices, min_code: int) -> bytes:
-    """Literal-code LZW emission with a CLEAR before each code-width
-    growth (the classic uncompressed-GIF form every decoder accepts)
-    — shared by the still and animated write paths."""
+    """Literal-code LZW emission: every index is its own code, with a
+    CLEAR before the code whose table entry would step the decoder's
+    code width (the classic uncompressed-GIF form every decoder
+    accepts) — shared by the still and animated write paths."""
     clear = 1 << min_code
-    end = clear + 1
-    buf = bytearray()
-    acc = 0
-    nbits = 0
-
-    def put(val: int, width: int) -> None:
-        nonlocal acc, nbits
-        acc |= val << nbits
-        nbits += width
-        while nbits >= 8:
-            buf.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-
-    cs = min_code + 1
-    put(clear, cs)
-    table_len = clear + 2
-    first = True
-    for ix in indices:
-        if not first and table_len + 1 == (1 << cs):
-            put(clear, cs)
-            cs = min_code + 1
-            table_len = clear + 2
-            first = True
-        put(int(ix), cs)
-        if first:
-            first = False
-        else:
-            table_len += 1
-            if table_len == (1 << cs) and cs < 12:
-                cs += 1
-    put(end, cs)
-    if nbits:
-        buf.append(acc & 0xFF)
-    return bytes(buf)
+    width = lzw_width(clear + 2, min_code, 0)
+    # after a CLEAR the first literal adds no table entry and each
+    # later one adds one; literal j would leave clear + 2 + j entries
+    per_clear = 1
+    while lzw_width(clear + 2 + per_clear, min_code, 0) == width:
+        per_clear += 1
+    codes = []
+    for at in range(0, max(len(indices), 1), per_clear):
+        codes.append(clear)
+        codes.extend(int(ix) for ix in indices[at : at + per_clear])
+    codes.append(clear + 1)  # END
+    out = BitWriter()
+    out.vals.extend(codes)
+    out.widths.extend([width] * len(codes))
+    return out.bytes()
 
 
 def _gif_subblocks(data: bytes) -> bytes:

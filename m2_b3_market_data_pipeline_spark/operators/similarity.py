@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.ident import quote_ident
 from .dedup import NUM_HASHES  # noqa: F401  (shared hashing constants live in dedup)
 
 
@@ -252,7 +253,13 @@ def ivf_assign(
     (full vectors riding every row) into a per-vector sort — at 100 TB
     an exchange of cells× the corpus width; now the corpus never
     shuffles at all and the only non-corpus input is one
-    |cells|-element array."""
+    |cells|-element array.
+
+    Assignment is per ROW, not per id: ``id_col`` is carried through,
+    never deduplicated, so an id that appears on k input rows yields
+    k × ``nprobe`` output rows, each row's probes scored from that
+    row's own vector. Callers that need one assignment per id
+    deduplicate first."""
     return _assign_probes(
         corpus,
         _cent_array_row(centroids, id_col, vec_col),
@@ -333,7 +340,7 @@ def lsh_signatures(
     same resolved tree (same per-bit CASE/zip_with/aggregate, same
     repr-round-tripped double literals, so values and plan shape are
     bit-identical; A/B in OPTIMIZATION_r15.md)."""
-    v = f"transform(`{vec_col}`, x -> CAST(x AS DOUBLE))"
+    v = f"transform({quote_ident(vec_col)}, x -> CAST(x AS DOUBLE))"
     terms = []
     for i in range(n_bits):
         lits = ", ".join(repr(c) + "D" for c in _hyperplane(dim, i))
@@ -441,7 +448,7 @@ def _banded_values(
     # Column-API py4j calls — same tree, same repr-round-tripped double
     # literals, seconds of driver time saved per construction (the
     # lsh_signatures rewrite, guide §7.3; A/B in OPTIMIZATION_r15.md).
-    v = f"transform(`{vec_col}`, x -> CAST(x AS DOUBLE))"
+    v = f"transform({quote_ident(vec_col)}, x -> CAST(x AS DOUBLE))"
     vals = []
     for j in range(n_bands):
         terms = []

@@ -23,6 +23,11 @@ two new legs:
   is unavoidable (same canonical-code and predictor math every
   implementation shares); the code itself is original.
 
+The bit writer, the canonical-code assignment and the quarantine
+boundary are the shared ones in ``codec_core``; the VP8L header's
+dimensions are checked against ``codec_core.MAX_PIXELS`` before any
+pixel list is built.
+
 Lossy VP8 pixel decode is out of scope (a DCT codec the size of the
 JPEG leg again): ``decode_webp`` raises NotImplementedError for VP8
 payloads so the featurizers' byte-level stand-in applies, while
@@ -35,6 +40,7 @@ from __future__ import annotations
 
 import struct
 
+from .codec_core import BitWriter, canonical_codes, check_size, quarantine
 from .multimodal import DecodedImage
 
 # ---------------------------------------------------------------- bit IO
@@ -82,50 +88,6 @@ class _BitReader:
         self.nbits -= n
 
 
-class _BitWriter:
-    """LSB-first bit writer. Writes are BUFFERED as (value, width)
-    pairs and bit-packed vectorized in ``bytes()`` (r15, guide §4.2:
-    the per-bit Python append loop was the encoder's hottest path —
-    ~2.7s of the 3.9s per-295-image encode profile)."""
-
-    __slots__ = ("vals", "widths")
-
-    def __init__(self):
-        self.vals: list[int] = []
-        self.widths: list[int] = []
-
-    def write(self, val: int, n: int) -> None:
-        self.vals.append(val & ((1 << n) - 1))
-        self.widths.append(n)
-
-    def write_code(self, code: int, length: int) -> None:
-        # canonical prefix codes go MSB-first into the LSB-first
-        # stream: reverse the bits once, then it is a plain write
-        # (the bulk encode loop skips even this — _write_prefix_code
-        # returns PRE-REVERSED tables consumed by plain write())
-        self.write(_rev_bits(code, length), length)
-
-    def bytes(self) -> bytes:
-        import numpy as np
-
-        if not self.vals:
-            return b""
-        v = np.array(self.vals, dtype=np.int64)
-        nb = np.array(self.widths, dtype=np.int64)
-        self.vals = []
-        self.widths = []
-        off = np.empty(len(nb), dtype=np.int64)
-        off[0] = 0
-        np.cumsum(nb[:-1], out=off[1:])
-        bits = np.zeros(int(nb.sum()), dtype=np.uint8)
-        for j in range(int(nb.max())):
-            m = nb > j
-            bits[off[m] + j] = (v[m] >> j) & 1
-        # packbits zero-pads the trailing partial byte — identical to
-        # the old flush of the low bits of the accumulator
-        return np.packbits(bits, bitorder="little").tobytes()
-
-
 # ------------------------------------------------------- prefix codes
 
 
@@ -147,16 +109,8 @@ def _rev_bits(code: int, n: int) -> int:
 def _canonical_codes(lengths: dict) -> dict:
     """sym -> (code, length), canonical DEFLATE-style: shorter codes
     first, ties by symbol order."""
-    codes = {}
-    code = 0
-    prev = 0
-    for sym in sorted(lengths, key=lambda s: (lengths[s], s)):
-        ln = lengths[sym]
-        code <<= ln - prev
-        prev = ln
-        codes[sym] = (code, ln)
-        code += 1
-    return codes
+    order = sorted(lengths.items(), key=lambda sl: (sl[1], sl[0]))
+    return {sym: (code, ln) for sym, code, ln in canonical_codes(order)}
 
 
 class _PrefixCode:
@@ -628,6 +582,7 @@ def _decode_vp8l(payload: bytes) -> DecodedImage:
     version = bits.read(3)
     if version != 0:
         raise ValueError(f"unsupported VP8L version {version}")
+    check_size("VP8L image", w, h)
     pixels, transforms = _decode_image_stream(bits, w, h, True)
     for ttype, tdata in reversed(transforms):
         if ttype == 0:
@@ -751,7 +706,7 @@ def _huffman_lengths(freqs: dict, limit: int) -> dict:
     return out
 
 
-def _write_prefix_code(bw: _BitWriter, freqs: dict, alphabet_size: int):
+def _write_prefix_code(bw: BitWriter, freqs: dict, alphabet_size: int):
     """Emit one prefix code; returns sym -> (code, length) for the
     data pass. Uses the simple form for <= 2 distinct symbols (when
     they fit 8 bits), else the full code-length-coded form with
@@ -849,7 +804,7 @@ def _write_prefix_code(bw: _BitWriter, freqs: dict, alphabet_size: int):
         bw.write(0, 1)
     for s, extra, ebits in cl_stream:
         code, ln = cl_codes[s]
-        bw.write_code(code, ln)
+        bw.write(_rev_bits(code, ln), ln)  # codes go MSB-of-code first
         if ebits:
             bw.write(extra, ebits)
     # pre-reversed for the bulk emit loop: (stream-order code, length)
@@ -911,7 +866,7 @@ def encode_webp_vp8l(
             cnt = np.bincount(ch, minlength=256)
             freqs.append({int(s): int(c) for s, c in enumerate(cnt) if c})
         gf, rf, bf, af = freqs
-        bw = _BitWriter()
+        bw = BitWriter()
         bw.write(w - 1, 14)
         bw.write(h - 1, 14)
         bw.write(0, 1)  # no alpha
@@ -997,7 +952,7 @@ def encode_webp_vp8l(
                 _plane_code_value(t[2])
             )
             df[dc] = df.get(dc, 0) + 1
-    bw = _BitWriter()
+    bw = BitWriter()
     bw.write(w - 1, 14)
     bw.write(h - 1, 14)
     bw.write(0, 1)  # no alpha
@@ -1093,19 +1048,13 @@ def _vp8l_header(data: bytes, b0: int, b1: int) -> tuple:
     return w, h, bool(alpha)
 
 
+@quarantine("WEBP container")
 def webp_meta(data: bytes) -> dict:
     """Header-walk metadata for any WebP flavor: simple lossy (VP8),
     simple lossless (VP8L), extended (VP8X, incl. ANIM/ANMF animation
     frames). Never reads coefficient data — the decide-before-decode
     layer (the ``mp4_video_meta`` pattern). Raises ValueError on
     malformed containers (quarantine contract)."""
-    try:
-        return _webp_meta_inner(data)
-    except (struct.error, IndexError) as exc:
-        raise ValueError(f"malformed WEBP container: {exc}") from exc
-
-
-def _webp_meta_inner(data: bytes) -> dict:
     fmt = None
     width = height = 0
     has_alpha = False
@@ -1151,6 +1100,7 @@ def _webp_meta_inner(data: bytes) -> dict:
     }
 
 
+@quarantine("VP8L stream")
 def decode_webp(data: bytes) -> DecodedImage:
     """Decode a (non-animated) lossless WebP to RGB. Lossy VP8 raises
     NotImplementedError (a full DCT codec — ``webp_meta`` still serves
@@ -1171,7 +1121,4 @@ def decode_webp(data: bytes) -> DecodedImage:
                 "its header); byte-level features apply"
             )
         raise ValueError("WEBP container has no VP8L chunk")
-    try:
-        return _decode_vp8l(data[vp8l[0] : vp8l[1]])
-    except (struct.error, IndexError) as exc:
-        raise ValueError(f"malformed VP8L stream: {exc}") from exc
+    return _decode_vp8l(data[vp8l[0] : vp8l[1]])

@@ -543,7 +543,7 @@ def webp_meta_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     item 1, the ``mp4_video_meta`` pattern): per doc a WebP container
     rotating |doc_id| mod 3 across the three flavors — simple
     lossless (a VP8L chunk whose 14+14+1+3-bit header is packed BY
-    HAND here, independently of the production ``_BitWriter``),
+    HAND here, independently of the production ``codec_core.BitWriter``),
     simple lossy (a VP8 keyframe frame-tag + start code + 14-bit
     dims, the bitstream the stdlib chain can NEVER pixel-decode —
     metadata must not depend on decodability), and extended/animated

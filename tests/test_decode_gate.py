@@ -137,120 +137,3 @@ def test_encode_video_mjpeg_roundtrip():
         encode_video_mjpeg([imgs[0], DecodedImage(8, 8, bytes(192))])
     with pytest.raises(ValueError, match="at least one"):
         encode_video_mjpeg([])
-
-
-def test_jpeg_and_avi_quarantine_under_deterministic_fuzz():
-    """Mutated / truncated JPEG and AVI payloads must decode or raise
-    ValueError/NotImplementedError — never struct.error, IndexError,
-    or any other class that would escape the featurizers' quarantine
-    net and fail a whole Spark task on one bad payload."""
-    from m2_b3_market_data_pipeline_spark.operators.multimodal import (
-        DecodedImage,
-        _parse_avi,
-        decode_image,
-        encode_image,
-        encode_video_mjpeg,
-    )
-    from tests.test_jpeg_decode import _rgb_array, _smooth
-
-    rgb = _rgb_array(16, 16, _smooth)
-    img = DecodedImage(16, 16, rgb.tobytes())
-    jpeg = bytearray(encode_image(img, "jpeg", quality=75))
-    avi = bytearray(encode_video_mjpeg([img, img], quality=75))
-
-    def probe(fn, payload):
-        try:
-            fn(bytes(payload))
-        except (ValueError, NotImplementedError):
-            pass  # the quarantine contract
-
-    for base, fn in ((jpeg, decode_image), (avi, _parse_avi)):
-        for i in range(1, 200):
-            flipped = bytearray(base)
-            flipped[(i * 7919) % len(flipped)] ^= 0xFF
-            probe(fn, flipped)
-            probe(fn, base[: (i * 131) % len(base)])  # truncation
-
-
-def test_lossless_and_wav_quarantine_under_deterministic_fuzz():
-    """The BMP/PPM/PNG/WAV parsers under the same 300-point flip +
-    truncation fuzz as JPEG/AVI: decode or ValueError/
-    NotImplementedError, nothing else escapes the quarantine net."""
-    import struct
-
-    from m2_b3_market_data_pipeline_spark.operators.multimodal import (
-        DecodedImage,
-        _decode_wav,
-        decode_image,
-        encode_image,
-    )
-
-    rgb = np.arange(16 * 16 * 3, dtype=np.uint8).reshape(16, 16, 3)
-    img = DecodedImage(16, 16, rgb.tobytes())
-
-    def probe(fn, payload):
-        try:
-            fn(bytes(payload))
-        except (ValueError, NotImplementedError):
-            pass
-
-    for fmt in ("bmp", "ppm", "png"):
-        base = bytearray(encode_image(img, fmt))
-        for i in range(1, 300):
-            flipped = bytearray(base)
-            flipped[(i * 7919) % len(flipped)] ^= 0xFF
-            probe(decode_image, flipped)
-            probe(decode_image, base[: (i * 131) % len(base)])
-
-    wav = bytearray(
-        b"RIFF" + struct.pack("<I", 36 + 64) + b"WAVE"
-        + b"fmt " + struct.pack("<I", 16)
-        + struct.pack("<HHIIHH", 1, 1, 8000, 16000, 2, 16)
-        + b"data" + struct.pack("<I", 64) + bytes(64)
-    )
-    for i in range(1, 200):
-        flipped = bytearray(wav)
-        flipped[(i * 7919) % len(flipped)] ^= 0xFF
-        probe(_decode_wav, flipped)
-        probe(_decode_wav, wav[: (i * 13) % len(wav)])
-
-
-def test_netpbm_trio_quarantine_under_deterministic_fuzz():
-    """The late-r14 Netpbm legs (P5 PGM, 16-bit PPM/PGM, P4 PBM)
-    under the same 300-point flip + truncation fuzz: decode or
-    ValueError/NotImplementedError, nothing else escapes the
-    quarantine net. Bit flips hitting the ASCII header mutate magic,
-    dimensions, and maxval arbitrarily — exactly the corrupt-crawl
-    shape the guards exist for."""
-    from m2_b3_market_data_pipeline_spark.operators.multimodal import (
-        DecodedImage,
-        decode_image,
-        encode_image,
-    )
-
-    rng = np.random.RandomState(11)
-    gray = np.repeat(
-        rng.randint(0, 256, (16, 16, 1), dtype=np.uint8), 3, axis=2
-    )
-    gimg = DecodedImage(16, 16, gray.tobytes())
-    bilevel = np.repeat(
-        (rng.randint(0, 2, (16, 16, 1), dtype=np.uint8) * 255), 3, axis=2
-    )
-    bimg = DecodedImage(16, 16, bilevel.tobytes())
-    rgb = rng.randint(0, 256, (16, 16, 3), dtype=np.uint8)
-    cimg = DecodedImage(16, 16, rgb.tobytes())
-
-    def probe(payload):
-        try:
-            decode_image(bytes(payload))
-        except (ValueError, NotImplementedError):
-            pass  # the quarantine contract
-
-    for img, fmt in ((gimg, "pgm"), (gimg, "pgm-16"), (cimg, "ppm-16"),
-                     (bimg, "pbm")):
-        base = bytearray(encode_image(img, fmt))
-        for i in range(1, 300):
-            flipped = bytearray(base)
-            flipped[(i * 7919) % len(flipped)] ^= 0xFF
-            probe(flipped)
-            probe(base[: (i * 131) % len(base)])

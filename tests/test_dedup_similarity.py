@@ -151,6 +151,54 @@ def test_cosine_pairs_threshold(spark):
     assert pairs == {(1, 2)}
 
 
+def test_generated_sql_quotes_a_backtick_column_name(spark):
+    """jl_project, lsh_signatures and the banded LSH values splice the
+    vector column into one generated SQL string: a backtick in its
+    name stays inside one quoted identifier and the values match the
+    plain-named column's."""
+    from m2_b3_market_data_pipeline_spark.functions.ident import quote_ident
+    from m2_b3_market_data_pipeline_spark.operators.embeddings import jl_project
+    from m2_b3_market_data_pipeline_spark.operators.similarity import (
+        _banded_values,
+        lsh_signatures,
+    )
+
+    assert quote_ident("emb`x") == "`emb``x`"
+    plain = _vecs(spark)
+    odd = plain.withColumnRenamed("embedding", "emb`x")
+    builds = (
+        (lambda df, c: jl_project(df, vec_col=c, dim=4, out_dim=3), "projected"),
+        (lambda df, c: lsh_signatures(df, vec_col=c, dim=4, n_bits=8), "lsh_sig"),
+        (
+            lambda df, c: _banded_values(
+                df, vec_col=c, dim=4, band_bits=2, n_bands=3, plane_stride=2
+            ),
+            "__bv",
+        ),
+    )
+    for build, out in builds:
+        want = {r["vec_id"]: r[out] for r in build(plain, "embedding").collect()}
+        got = {r["vec_id"]: r[out] for r in build(odd, "emb`x").collect()}
+        assert got == want, out
+
+
+def test_ivf_assign_is_per_row_on_duplicate_ids(spark):
+    """An id on two input rows is assigned twice, each row from its own
+    vector — ivf_assign never deduplicates ids."""
+    from m2_b3_market_data_pipeline_spark.operators.similarity import ivf_assign
+
+    vecs = _vecs(spark)
+    dup = vecs.union(
+        spark.createDataFrame([(1, [0.0, 1.0, 0.0, 0.0])], vecs.schema)
+    )
+    cents = spark.createDataFrame(
+        [(10, [1.0, 0.0, 0.0, 0.0]), (11, [0.0, 1.0, 0.0, 0.0])],
+        "vec_id long, embedding array<float>",
+    )
+    got = sorted((r.vec_id, r.cid) for r in ivf_assign(dup, cents).collect())
+    assert got == [(1, 10), (1, 11), (2, 10), (3, 11), (4, 11)]
+
+
 def test_ivf_probing_all_cells_equals_exact(spark, sf_dir):
     """Equivalence: with nprobe = |cells| the IVF path degenerates to
     brute force — same pairs, same cosines, same ranks. Pins that the

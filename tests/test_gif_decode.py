@@ -248,22 +248,6 @@ def test_gif_fail_loud_variants():
         _decode_gif(good[:13] + _PALETTE16 + b"\x3B")
 
 
-def test_gif_quarantine_under_deterministic_fuzz():
-    from m2_b3_market_data_pipeline_spark.operators.multimodal import decode_image
-
-    base = bytearray(
-        _make_gif([(0, 0, _grid(16, 16), 0, None)], width=16, height=16)
-    )
-    for i in range(1, 300):
-        flipped = bytearray(base)
-        flipped[(i * 7919) % len(flipped)] ^= 0xFF
-        for payload in (bytes(flipped), bytes(base[: (i * 131) % len(base)])):
-            try:
-                decode_image(payload)
-            except (ValueError, NotImplementedError):
-                pass
-
-
 def test_animated_gif_through_video_featurizer(spark):
     """decoded_video_frame_features dispatches animated GIFs: one GIF
     row fans out to n_frames composited-frame feature rows."""

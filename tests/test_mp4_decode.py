@@ -256,21 +256,6 @@ def test_mp4_fail_loud_variants():
         _parse_mp4_tables(bytes(soun))
 
 
-def test_mp4_quarantine_under_deterministic_fuzz():
-    from m2_b3_market_data_pipeline_spark.operators.multimodal import _parse_mp4
-
-    _vals, samples = _solid_frames(n=2)
-    base = bytearray(_independent_mp4(samples, w=16, h=16))
-    for i in range(1, 300):
-        flipped = bytearray(base)
-        flipped[(i * 7919) % len(flipped)] ^= 0xFF
-        for payload in (bytes(flipped), bytes(base[: (i * 131) % len(base)])):
-            try:
-                _parse_mp4(payload)
-            except (ValueError, NotImplementedError):
-                pass
-
-
 def test_mp4_through_video_featurizer(spark):
     """End-to-end through Spark mapInPandas with MIXED containers:
     the same solid frames shipped as AVI, MP4, and (via palette) GIF

@@ -91,10 +91,10 @@ def test_gif_animation_total_bytes_cap():
     advice's 'multiplied by frame count in the video featurizer'
     escalation). 1024x1024 canvas = 3 MB/frame -> 86 frames clear
     the 256 MB bound."""
-    from m2_b3_market_data_pipeline_spark.operators.multimodal import (
-        _GIF_MAX_TOTAL_BYTES,
-        _parse_gif,
+    from m2_b3_market_data_pipeline_spark.operators.codec_core import (
+        MAX_DECODED_BYTES as _GIF_MAX_TOTAL_BYTES,
     )
+    from m2_b3_market_data_pipeline_spark.operators.multimodal import _parse_gif
 
     w = h = 1024
     idx = np.zeros((1, 1), dtype=np.uint8)
@@ -723,7 +723,6 @@ def test_tiff_fail_loud_and_fuzz():
     from m2_b3_market_data_pipeline_spark.operators.multimodal import (
         DecodedImage,
         _decode_tiff,
-        decode_image,
         encode_image,
     )
 
@@ -746,14 +745,6 @@ def test_tiff_fail_loud_and_fuzz():
             _s.pack_into("<H", jpeg_in_tiff, at + 8, 7)
     with pytest.raises(ValueError, match="compression"):
         _decode_tiff(bytes(jpeg_in_tiff))
-    for i in range(1, 300):
-        flipped = bytearray(base)
-        flipped[(i * 7919) % len(flipped)] ^= 0xFF
-        for payload in (bytes(flipped), bytes(base[: (i * 131) % len(base)])):
-            try:
-                decode_image(payload)
-            except (ValueError, NotImplementedError):
-                pass
 
 
 def test_animated_gif_writer_lossless_and_through_featurizer(spark):

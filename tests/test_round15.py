@@ -364,24 +364,3 @@ class TestTiffCompression:
         assert np.array_equal(
             np.frombuffer(img.pixels, np.uint8).reshape(h, w, 3), rgb
         )
-
-    @pytest.mark.parametrize("fmt", ["tiff-lzw", "tiff-pb"])
-    def test_quarantine_fuzz_compressed(self, fmt):
-        from m2_b3_market_data_pipeline_spark.operators.multimodal import (
-            decode_image,
-            encode_image,
-        )
-
-        img = self._img(12, 12, "noise", seed=99)
-        base = encode_image(img, fmt)
-        for i in range(1, 200):
-            flipped = bytearray(base)
-            flipped[(i * 7919) % len(flipped)] ^= 0xFF
-            for payload in (
-                bytes(flipped),
-                base[: (i * 131) % len(base)],
-            ):
-                try:
-                    decode_image(payload)
-                except (ValueError, NotImplementedError):
-                    pass

@@ -637,28 +637,3 @@ def test_meta_fail_loud():
     body = b"WEBP" + b"EXIF" + struct.pack("<I", 2) + b"ab"
     with pytest.raises(ValueError):
         webp_meta(b"RIFF" + struct.pack("<I", len(body)) + body)
-
-
-def test_quarantine_fuzz():
-    """Deterministic mutation fuzz: truncations and byte flips must
-    raise ValueError / NotImplementedError (the featurizers' net) or
-    decode cleanly — never escape with another exception type."""
-    rng = np.random.default_rng(1234)
-    rgb = rng.integers(0, 256, size=(12, 12, 3), dtype=np.uint8)
-    good = encode_webp_vp8l(DecodedImage(12, 12, rgb.tobytes()))
-    for cut in range(0, len(good), 7):
-        try:
-            decode_webp(good[:cut])
-        except (ValueError, NotImplementedError):
-            pass
-    for i in range(0, len(good), 3):
-        mutated = bytearray(good)
-        mutated[i] ^= 0x5A
-        try:
-            decode_webp(bytes(mutated))
-        except (ValueError, NotImplementedError):
-            pass
-        try:
-            webp_meta(bytes(mutated))
-        except (ValueError, NotImplementedError):
-            pass
