@@ -3525,7 +3525,7 @@ _GIF_INTERLACE_PASSES = ((0, 8), (4, 8), (2, 4), (1, 2))
 def _parse_gif(data: bytes) -> tuple[float, list[DecodedImage]]:
     """Pure-stdlib GIF87a/GIF89a parse -> (fps, frames): logical
     screen + global color table, per-frame image descriptors with
-    local color tables, the GIF LZW decompressor above, Adam-free
+    local color tables, the shared ``codec_core`` LZW decoder, Adam-free
     4-pass interlace reorder, GCE transparency (transparent pixels
     keep the canvas — the compositing rule animation relies on), and
     disposal methods 0/1 (leave) and 2 (restore background). Frames
