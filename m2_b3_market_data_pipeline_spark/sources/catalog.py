@@ -13,6 +13,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions.ident import quote_ident
+
 
 def register_parquet_table(
     spark: SparkSession,
@@ -20,16 +22,17 @@ def register_parquet_table(
     location: str,
     *,
     database: str = "default",
-    repair: bool = True,
 ) -> None:
-    """CREATE TABLE ... USING PARQUET LOCATION + partition discovery."""
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {database}")
-    spark.sql(
-        f"CREATE TABLE IF NOT EXISTS {database}.{name} USING PARQUET LOCATION '{location}'"
-    )
-    if repair:
-        # Replaces the Glue Crawler's partition discovery.
-        spark.sql(f"MSCK REPAIR TABLE {database}.{name}")
+    """Register ``location`` as an external parquet table (if not yet
+    registered) and discover its partitions. The names are quoted and
+    the location goes through the catalog API, so neither is spliced
+    into SQL text."""
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS {quote_ident(database)}")
+    table = f"{quote_ident(database)}.{quote_ident(name)}"
+    if not spark.catalog.tableExists(table):
+        spark.catalog.createTable(table, path=location, source="parquet")
+    # Replaces the Glue Crawler's partition discovery (MSCK REPAIR TABLE).
+    spark.catalog.recoverPartitions(table)
 
 
 def register_testdata_views(spark: SparkSession, sf_dir: str) -> None:
@@ -43,4 +46,4 @@ def register_testdata_views(spark: SparkSession, sf_dir: str) -> None:
 
 def show_tables(spark: SparkSession, database: str = "default") -> DataFrame:
     """Q4 surface (reference: README.md:275-282)."""
-    return spark.sql(f"SHOW TABLES IN {database}")
+    return spark.sql(f"SHOW TABLES IN {quote_ident(database)}")

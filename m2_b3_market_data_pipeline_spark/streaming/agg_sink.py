@@ -18,40 +18,22 @@ streams through one code path. At 100 TB the state table is partitioned
 by key range and each batch touches only the partitions its keys hash
 to (here: one parquet dir, same plan).
 
-Exactly-once: the file-source checkpoint tracks consumed batches; the
-merge is NOT idempotent under replay (counts would double), so the
-snapshot directory embeds the last applied (checkpoint id, batch id)
-and replays of an already-applied batch are skipped — the standard
-transactional-sink dance that a table format's commit log would
-otherwise provide. Two failure modes are handled explicitly:
-
-- Crash-safe swap: the new state is staged, then the old state is
-  renamed ASIDE (never deleted first), the staging promoted, and only
-  then the old copy removed. ``_recover_state`` runs before every batch
-  and promotes a complete staging snapshot (marker present) or restores
-  the set-aside copy, so no crash window can lose the state dir.
-- Checkpoint identity: batch ids restart at 0 if the checkpoint dir is
-  deleted or relocated while the state survives; a bare
-  ``applied >= batch_id`` check would then silently drop genuinely new
-  batches. The marker therefore records the checkpoint's stream id
-  alongside the batch id, and a mismatch FAILS the batch loudly instead
-  of skipping.
+Exactly-once: the merge is NOT idempotent under replay (counts would
+double), so every batch runs behind ``commit.guard_replay`` and lands
+through ``commit.staged_swap`` (the module doc there carries the crash
+windows and the checkpoint-identity rule).
 """
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
-# Underscore prefix => ignored by Spark's parquet reader, so the marker
-# can live inside the state dir without polluting the table scan.
-_APPLIED_MARKER = "_applied_batch_id"
+from .commit import guard_replay, read_updates, staged_swap, start_stream
 
 
 def _partials(df: DataFrame, *, keys: list[str], value_col: str) -> DataFrame:
@@ -92,131 +74,6 @@ def read_aggregates(spark: SparkSession, state_path: str) -> DataFrame:
     )
 
 
-def _read_marker(path: str) -> tuple[int, str | None]:
-    """(applied batch id, checkpoint id) from a snapshot dir; (-1, None)
-    if absent OR unparseable. A torn/partial marker must read as
-    'staging incomplete', never raise: the marker certifies completeness,
-    so garbage CONTENT means the write did not finish — raising on it
-    would make the recovery path itself unrecoverable.
-
-    IO failures are a different matter: an EXISTING marker that cannot
-    be READ (EACCES/EIO — not torn, merely unreadable) must raise, not
-    read as 'never applied'. Swallowing it would return -1 for an
-    already-merged state dir, so a replayed batch re-merges
-    (non-idempotent: counts double) and the foreign-checkpoint identity
-    guard is bypassed. Only a delete race (FileNotFound between the
-    exists check and the open) reads as absent."""
-    marker = os.path.join(path, _APPLIED_MARKER)
-    if not os.path.exists(marker):
-        return -1, None
-    try:
-        with open(marker) as fh:
-            raw = fh.read().strip()
-    except FileNotFoundError:
-        return -1, None
-    try:
-        payload = json.loads(raw)
-        return int(payload["batch_id"]), payload.get("checkpoint_id")
-    except (TypeError, KeyError, ValueError):
-        try:
-            return int(raw), None  # legacy plain-int marker
-        except ValueError:
-            return -1, None  # torn/garbage content == incomplete staging
-
-
-def _write_marker(path: str, *, batch_id: int, checkpoint_id: str | None) -> None:
-    """Atomically publish the completeness marker: write to a temp name,
-    fsync, then rename into place. A crash mid-write leaves no marker
-    (staging reads incomplete and is discarded) — never a torn one."""
-    marker = os.path.join(path, _APPLIED_MARKER)
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as fh:
-        fh.write(json.dumps({"batch_id": batch_id, "checkpoint_id": checkpoint_id}))
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.rename(tmp, marker)
-
-
-def _checkpoint_identity(checkpoint_path: str) -> str | None:
-    """The stream id Spark writes to ``<checkpoint>/metadata`` — stable
-    across restarts of the same checkpoint, different for a fresh or
-    relocated one."""
-    meta = os.path.join(checkpoint_path, "metadata")
-    if not os.path.exists(meta):
-        return None
-    try:
-        with open(meta) as fh:
-            return json.loads(fh.read()).get("id")
-    except (ValueError, OSError):  # pragma: no cover - unreadable metadata
-        return None
-
-
-def _recover_state(state_path: str) -> None:
-    """Roll the swap protocol forward after a crash: promote the newest
-    COMPLETE staging snapshot (its marker is written last, so marker
-    presence == complete) if the state dir is missing, else restore the
-    set-aside previous state; then clear leftovers."""
-    parent = os.path.dirname(state_path) or "."
-    base = os.path.basename(state_path)
-    old = state_path + ".old"
-    staging = []
-    if os.path.isdir(parent):
-        staging = [
-            os.path.join(parent, d)
-            for d in os.listdir(parent)
-            if d.startswith(base + ".staging-")
-        ]
-    if not os.path.exists(state_path):
-        complete = [p for p in staging if _read_marker(p)[0] >= 0]
-        if complete:
-            newest = max(complete, key=lambda p: _read_marker(p)[0])
-            os.rename(newest, state_path)
-            staging.remove(newest)
-        elif os.path.exists(old):
-            os.rename(old, state_path)
-    for p in staging:
-        shutil.rmtree(p, ignore_errors=True)
-    if os.path.exists(old):
-        shutil.rmtree(old, ignore_errors=True)
-
-
-def _migrate_flat_store(state_path: str) -> bool:
-    """Upgrade a pre-batch-partition store in place (round-12, advisor
-    order). Round 11 changed the near-dedup / semdedup sinks from one
-    flat directory (rewritten whole via the swap protocol) to
-    append-only ``batch=<id>`` partitions; a flat store promoted by an
-    older run is invisible to their ``_batch_dirs`` listing, so it
-    would silently read as an EMPTY corpus — new batches admitted
-    without dedup against it — and its rows unreachable to the store
-    readers. Detect root-level data (parquet part files, or
-    ``centroid_id=*`` cell dirs from the semdedup swap layout) and move
-    it into a ``batch=-1`` partition, which every later batch's
-    strictly-``below`` corpus filter includes.
-
-    Idempotent and crash-safe: each entry is a same-filesystem
-    ``os.rename``; a crash mid-migration leaves the remaining root
-    entries for the next call to move. Returns True if anything moved.
-    Bookkeeping names (``_*``, ``.*``, ``batch=*``) are left alone."""
-    if not os.path.isdir(state_path):
-        return False
-    flat = []
-    for name in os.listdir(state_path):
-        if name.startswith(("_", ".", "batch=")):
-            continue
-        full = os.path.join(state_path, name)
-        if name.endswith(".parquet") or (
-            os.path.isdir(full) and name.startswith("centroid_id=")
-        ):
-            flat.append(name)
-    if not flat:
-        return False
-    dest = os.path.join(state_path, "batch=-1")
-    os.makedirs(dest, exist_ok=True)
-    for name in flat:
-        os.rename(os.path.join(state_path, name), os.path.join(dest, name))
-    return True
-
-
 def run_incremental_agg_stream(
     spark: SparkSession,
     *,
@@ -226,7 +83,6 @@ def run_incremental_agg_stream(
     schema: T.StructType,
     keys: list[str],
     value_col: str,
-    available_now: bool = True,
     transform=None,
 ) -> StreamingQuery:
     """Start the incremental-aggregation stream: file source over
@@ -237,27 +93,12 @@ def run_incremental_agg_stream(
     feature-derivation hook (e.g. text -> token counts for the mixture
     sink) so raw landings stream straight into a derived materialized
     view without a separate staging table."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(updates_path)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         if transform is not None:
             batch_df = transform(batch_df)
-        _recover_state(state_path)
-        ckpt_id = _checkpoint_identity(checkpoint_path)
-        applied, applied_ckpt = _read_marker(state_path)
-        if applied >= 0 and applied_ckpt and ckpt_id and applied_ckpt != ckpt_id:
-            raise RuntimeError(
-                f"state at {state_path} was written under checkpoint "
-                f"{applied_ckpt} but this stream runs under {ckpt_id}; "
-                "batch ids are not comparable across checkpoints — "
-                "refusing to merge (delete the state dir to rebuild, or "
-                "restore the original checkpoint)."
-            )
-        if applied >= batch_id:
+        applied, ckpt_id = guard_replay(state_path, checkpoint_path, batch_id)
+        if applied:
             return  # replayed batch after a crash: already merged
         delta = _partials(batch_df, keys=keys, value_col=value_col)
         if os.path.exists(state_path):
@@ -265,24 +106,8 @@ def run_incremental_agg_stream(
             merged = merge_partials(base, delta, keys=keys)
         else:
             merged = delta
-        staging = f"{state_path}.staging-{batch_id}"
-        merged.write.mode("overwrite").parquet(staging)
-        # Marker last: its presence certifies the staging dir complete.
-        _write_marker(staging, batch_id=batch_id, checkpoint_id=ckpt_id)
-        # Swap: set the old state ASIDE (never delete-first — a crash
-        # between delete and promote would lose the state dir, and the
-        # replayed batch would silently rebuild from empty).
-        old = state_path + ".old"
-        if os.path.exists(state_path):
-            os.rename(state_path, old)
-        os.rename(staging, state_path)
-        shutil.rmtree(old, ignore_errors=True)
+        staged_swap(merged, state_path, batch_id=batch_id, checkpoint_id=ckpt_id)
 
-    writer = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("update")
+    return start_stream(
+        read_updates(spark, updates_path, schema), checkpoint_path, apply_batch
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

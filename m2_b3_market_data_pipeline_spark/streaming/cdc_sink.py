@@ -3,21 +3,17 @@ upsert/tombstone batches.
 
 Each micro-batch is merged into the on-disk snapshot with
 ``operators/merge.py::merge_upsert`` (one shuffle on the merge key per
-batch), then the snapshot is swapped atomically. The file-source
-checkpoint gives exactly-once batch tracking, so replays after a crash
-re-apply the same merge idempotently (latest-wins is idempotent by
-construction).
-
-The plain-parquet directory swap here is the local/posix form; on an
-object store at 100 TB the same ``foreachBatch`` body would target a
-table format with atomic commit (the merge plan — union + per-key
-winner — is identical, only the commit protocol changes).
+batch), then the snapshot is replaced through ``commit.staged_swap``
+after ``commit._recover_state`` (the module doc there carries the crash
+windows). A replay after a crash re-applies the same merge, and
+latest-wins is idempotent by construction, so the sink needs no
+checkpoint-identity guard: a fresh checkpoint over an old snapshot is
+fine.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -25,6 +21,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.merge import merge_upsert
+from .commit import _recover_state, read_updates, staged_swap, start_stream
 
 
 def run_cdc_merge_stream(
@@ -37,17 +34,12 @@ def run_cdc_merge_stream(
     keys: list[str],
     version_col: str,
     tombstone_col: str | None = None,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Start the streaming merge: file source over ``updates_path`` ->
     per-batch latest-wins merge into ``snapshot_path``."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(updates_path)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+        _recover_state(snapshot_path)
         if os.path.exists(snapshot_path):
             base = spark.read.parquet(snapshot_path)
             if tombstone_col is not None and tombstone_col not in base.columns:
@@ -63,17 +55,8 @@ def run_cdc_merge_stream(
             version_col=version_col,
             tombstone_col=tombstone_col,
         )
-        staging = f"{snapshot_path}.staging-{batch_id}"
-        merged.write.mode("overwrite").parquet(staging)
-        if os.path.exists(snapshot_path):
-            shutil.rmtree(snapshot_path)
-        os.rename(staging, snapshot_path)
+        staged_swap(merged, snapshot_path, batch_id=batch_id, checkpoint_id=None)
 
-    writer = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("update")
+    return start_stream(
+        read_updates(spark, updates_path, schema), checkpoint_path, apply_batch
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

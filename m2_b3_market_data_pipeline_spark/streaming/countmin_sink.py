@@ -15,7 +15,7 @@ many batches land, and each batch's shuffle is map-side-combined down to
 at most depth x width partial rows. ``read_countmin`` hands the merged
 table straight to ``countmin_estimate`` — estimates over the live
 stream with zero corpus rescans. Batch equivalence is pinned in
-tests/test_streaming_round7.py: draining N batches reproduces
+tests/test_streaming_sinks.py: draining N batches reproduces
 ``countmin_table`` over their union exactly.
 """
 
@@ -43,7 +43,6 @@ def run_incremental_countmin_stream(
     depth: int = 3,
     width: int = 8,
     seed: int = CM_SEED,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """File-source stream of document batches -> continuously merged CM
     counter state at ``state_path``."""
@@ -70,7 +69,6 @@ def run_incremental_countmin_stream(
         schema=schema,
         keys=CM_KEYS,
         value_col="one",
-        available_now=available_now,
         transform=to_coords,
     )
 

@@ -8,18 +8,18 @@ plane is ~30 lines:
 
 - new-file detection: the Structured Streaming file source on ``raw/``;
 - single-flight: inherent — one streaming query per checkpoint;
-- completion hook / crawler: ``foreachBatch`` post-commit;
+- crawler: the caller registers the table once the stream has run
+  (``sources/catalog.py::register_parquet_table``);
 - reprocess-everything semantics (T4): the reference recomputes from ALL
   raw data every trigger because mm_7d and the per-asset aggregates need
   full history. ``foreachBatch`` + full recompute reproduces that
-  faithfully; ``trigger(availableNow=True)`` gives the batch-style run.
+  faithfully; ``commit.start_stream`` runs it as one availableNow
+  drain, the batch-style run.
 
 Incremental stateful variants (watermarked windows) live in windows.py.
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -27,6 +27,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..plans.pipeline import refined
 from ..sources.parquet_io import write_refined
+from .commit import start_stream
 
 RAW_OHLCV_SCHEMA = T.StructType(
     [
@@ -41,25 +42,15 @@ RAW_OHLCV_SCHEMA = T.StructType(
 )
 
 
-def read_raw_stream(
-    spark: SparkSession,
-    raw_path: str,
-    *,
-    schema: T.StructType = RAW_OHLCV_SCHEMA,
-    glob: str = "*.parquet",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
+def read_raw_stream(spark: SparkSession, raw_path: str) -> DataFrame:
     """T1: the file source replaces S3-notification->Lambda. New-file
-    discovery, exactly-once tracking, and backpressure
-    (maxFilesPerTrigger) are built in."""
-    reader = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", glob)
+    discovery and exactly-once tracking are built in."""
+    return (
+        spark.readStream.schema(RAW_OHLCV_SCHEMA)
+        .option("pathGlobFilter", "*.parquet")
         .option("recursiveFileLookup", "true")
+        .parquet(raw_path)
     )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.parquet(raw_path)
 
 
 def run_etl_stream(
@@ -69,21 +60,16 @@ def run_etl_stream(
     refined_path: str,
     checkpoint_path: str,
     run_date: str | None = None,
-    available_now: bool = True,
-    on_batch_committed: Callable[[int], None] | None = None,
 ) -> StreamingQuery:
     """T2-T4: the full reference ETL as one streaming query.
 
     Every micro-batch re-runs the full transform over ALL raw data seen
     so far (matching the reference's recompute-everything semantics,
     etl/etl_job.py:79-98) and dynamically overwrites the refined
-    partitions it touches. ``on_batch_committed`` is the post-commit
-    hook where the reference started its crawler (handler.py:48-51) —
-    here a catalog refresh, if anything.
+    partitions it touches.
     """
-    raw_stream = read_raw_stream(spark, raw_path)
 
-    def process_batch(_batch_df: DataFrame, batch_id: int) -> None:
+    def process_batch(_batch_df: DataFrame, _batch_id: int) -> None:
         # Recompute from the full raw prefix (T4 semantics). The batch
         # frame only signals *that* new files arrived; the reference
         # likewise ignores which file triggered it.
@@ -92,14 +78,5 @@ def run_etl_stream(
         ).parquet(raw_path)
         out = refined(full_raw, run_date=run_date)
         write_refined(out, refined_path)
-        if on_batch_committed is not None:
-            on_batch_committed(batch_id)
 
-    writer = (
-        raw_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_stream(read_raw_stream(spark, raw_path), checkpoint_path, process_batch)

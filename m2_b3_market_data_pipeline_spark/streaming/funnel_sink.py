@@ -57,7 +57,6 @@ def run_incremental_funnel_stream(
     state_path: str,
     checkpoint_path: str,
     schema: T.StructType,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """File-source stream of document batches -> continuously merged
     quality-gate funnel table at ``state_path``."""
@@ -69,7 +68,6 @@ def run_incremental_funnel_stream(
         schema=schema,
         keys=["stage"],
         value_col="n_tok",
-        available_now=available_now,
         transform=_stage_rows,
     )
 

@@ -38,7 +38,6 @@ def run_incremental_mixture_stream(
     checkpoint_path: str,
     schema: T.StructType,
     text_col: str = "text",
-    available_now: bool = True,
 ) -> StreamingQuery:
     """File-source stream of document batches -> continuously merged
     per-(source, lang) doc/token partial table at ``state_path``."""
@@ -56,7 +55,6 @@ def run_incremental_mixture_stream(
         schema=schema,
         keys=MIXTURE_KEYS,
         value_col="n_tok",
-        available_now=available_now,
         transform=tokenize,
     )
 

@@ -20,13 +20,11 @@ construction). Per batch:
    directory, so a replay is idempotent;
 2. the delta's signatures overwrite-write ``state_path/batch=<id>``
    (replay-idempotent for the same exclusion reason), then the
-   (checkpoint id, batch id) marker commits — the agg_sink marker
-   protocol, with the atomic whole-store swap retired to
-   ``_recover_state`` compatibility (a crashed pre-round-11 swap still
-   rolls forward, and a PROMOTED pre-round-11 flat store is migrated
-   into a ``batch=-1`` partition on first touch — agg_sink
-   ``_migrate_flat_store`` — so the old corpus is neither invisible to
-   dedup nor unreachable to the readers).
+   (checkpoint id, batch id) marker commits — the ``commit`` module's
+   protocol, with the staged swap kept for compaction. A flat store
+   from an older run is migrated into a ``batch=-1`` partition on first
+   touch (``commit._migrate_flat_store``), so the old corpus is neither
+   invisible to dedup nor unreachable to the readers.
 
 Batch-equivalence contract (pinned in tests): after draining batches
 b1..bN, the union of pair outputs equals running the BATCH incremental
@@ -37,9 +35,7 @@ dedup; this sink owns cross-batch admission).
 
 from __future__ import annotations
 
-import glob as _glob
 import os
-import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -51,36 +47,16 @@ from ..operators.dedup import (
     require_numeric_minhash,
     with_minhash,
 )
-from .agg_sink import (
-    _checkpoint_identity,
+from .commit import (
     _migrate_flat_store,
-    _read_marker,
-    _recover_state,
-    _write_marker,
+    batch_partitions,
+    commit_partition,
+    guard_replay,
+    read_updates,
+    start_stream,
 )
 
 PAIR_SCHEMA = "delta_id long, corpus_id long, jaccard double"
-
-_BATCH_DIR = re.compile(r"^batch=(-?\d+)$")
-
-
-def _batch_dirs(state_path: str, *, below: int | None = None) -> list[str]:
-    """Committed per-batch partitions that hold data (a zero-row batch
-    writes only _SUCCESS and must not break schema inference), limited
-    to ids strictly below ``below`` for the replay crash window."""
-    if not os.path.isdir(state_path):
-        return []
-    out = []
-    for name in sorted(os.listdir(state_path)):
-        m = _BATCH_DIR.match(name)
-        if not m:
-            continue
-        if below is not None and int(m.group(1)) >= below:
-            continue
-        d = os.path.join(state_path, name)
-        if _glob.glob(os.path.join(d, "*.parquet")):
-            out.append(d)
-    return out
 
 
 def read_signatures(
@@ -89,9 +65,9 @@ def read_signatures(
     """The signature store (with_minhash layout: id, sh, mh0..mhK). The
     ``batch`` bookkeeping partition column is dropped on read. A
     pre-round-11 flat store is migrated into ``batch=-1`` first so its
-    rows stay reachable (agg_sink._migrate_flat_store)."""
+    rows stay reachable (commit._migrate_flat_store)."""
     _migrate_flat_store(state_path)
-    paths = _batch_dirs(state_path, below=below_batch)
+    paths = batch_partitions(state_path, below=below_batch)
     if not paths:
         raise FileNotFoundError(f"no committed store data under {state_path}")
     return spark.read.option("basePath", state_path).parquet(*paths).drop("batch")
@@ -117,7 +93,6 @@ def run_incremental_dedup_stream(
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.5,
-    available_now: bool = True,
     compact_every: int | None = None,
 ) -> StreamingQuery:
     """Start the stream: file source over ``updates_path`` -> per-batch
@@ -125,33 +100,19 @@ def run_incremental_dedup_stream(
     carries the store design and its crash windows).
 
     ``compact_every``: fold the per-batch partitions into one every N
-    committed batches through the agg_sink swap protocol — bounds file
-    count at waves x files-per-wave for long-lived streams; None
-    (default) never compacts, the right call for bounded drains. Same
-    semantics as the semdedup sink's knob."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(updates_path)
-    )
+    committed batches through the staged swap — bounds file count at
+    waves x files-per-wave for long-lived streams; None (default) never
+    compacts, the right call for bounded drains. Same semantics as the
+    semdedup sink's knob."""
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _recover_state(state_path)
-        # Pre-round-11 flat store -> batch=-1, BEFORE the has_corpus
-        # check: otherwise the promoted old corpus reads as empty and
-        # this batch is admitted without dedup against it.
-        _migrate_flat_store(state_path)
-        ckpt_id = _checkpoint_identity(checkpoint_path)
-        applied, applied_ckpt = _read_marker(state_path)
-        if applied >= 0 and applied_ckpt and ckpt_id and applied_ckpt != ckpt_id:
-            raise RuntimeError(
-                f"signature store at {state_path} was written under checkpoint "
-                f"{applied_ckpt} but this stream runs under {ckpt_id}; "
-                "refusing to merge (delete the state dir to rebuild, or "
-                "restore the original checkpoint)."
-            )
-        if applied >= batch_id:
+        applied, ckpt_id = guard_replay(state_path, checkpoint_path, batch_id)
+        if applied:
             return  # replayed batch: pairs + signatures already on disk
+        # Flat store -> batch=-1, BEFORE the has_corpus check: otherwise
+        # the old corpus reads as empty and this batch is admitted
+        # without dedup against it.
+        _migrate_flat_store(state_path)
         d_signed = with_minhash(
             fan_out(batch_df.select(id_col, text_col)),
             text_col=text_col,
@@ -163,7 +124,7 @@ def run_incremental_dedup_stream(
             ]
             # Corpus = committed batches strictly below this one (the
             # replay crash window — see module doc).
-            has_corpus = bool(_batch_dirs(state_path, below=batch_id))
+            has_corpus = bool(batch_partitions(state_path, below=batch_id))
             if has_corpus:
                 corpus_sigs = read_signatures(
                     spark, state_path, below_batch=batch_id
@@ -185,42 +146,16 @@ def run_incremental_dedup_stream(
             d_signed.select(*sig_cols).write.mode("overwrite").parquet(
                 os.path.join(state_path, f"batch={batch_id}")
             )
-            _write_marker(state_path, batch_id=batch_id, checkpoint_id=ckpt_id)
-            if compact_every and len(_batch_dirs(state_path)) >= compact_every:
-                _compact(spark, state_path, batch_id=batch_id, ckpt_id=ckpt_id)
+            commit_partition(
+                spark, state_path, read_signatures, batch_id=batch_id,
+                checkpoint_id=ckpt_id, compact_every=compact_every,
+            )
         finally:
-            # Unconditional: a mid-batch failure (write error, foreign
-            # checkpoint) must not leak the persisted frame for the life
-            # of the session — each retry would persist a fresh copy.
+            # Unconditional: a mid-batch failure (a failed write) must
+            # not leak the persisted frame for the life of the session —
+            # each retry would persist a fresh copy.
             d_signed.unpersist()
 
-    writer = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("update")
+    return start_stream(
+        read_updates(spark, updates_path, schema), checkpoint_path, apply_batch
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def _compact(
-    spark: SparkSession, state_path: str, *, batch_id: int, ckpt_id: str | None
-) -> None:
-    """Fold every per-batch partition into a single ``batch=<id>`` via
-    the agg_sink swap protocol (staging write -> marker -> rename):
-    crash-safe at every point, and the staged marker equals the
-    already-committed batch id, so a post-compaction replay of the
-    same batch is still skipped (the semdedup sink's _compact,
-    minus the cell partitioning this flat store does not have)."""
-    import shutil
-
-    full = read_signatures(spark, state_path)
-    staging = f"{state_path}.staging-{batch_id}"
-    full.write.mode("overwrite").parquet(os.path.join(staging, f"batch={batch_id}"))
-    _write_marker(staging, batch_id=batch_id, checkpoint_id=ckpt_id)
-    old = state_path + ".old"
-    if os.path.exists(state_path):
-        os.rename(state_path, old)
-    os.rename(staging, state_path)
-    shutil.rmtree(old, ignore_errors=True)

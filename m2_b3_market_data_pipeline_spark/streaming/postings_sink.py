@@ -19,7 +19,7 @@ What is deliberately NOT state: the postings (per-doc tf). They live in
 the landed parquet itself — at 100 TB the tf of a query's few terms is a
 scan-side computation over candidate docs (``bm25_topk_with_stats``),
 while the state table stays |vocab| + 1 rows forever. Batch equivalence
-is pinned in tests/test_streaming_round9.py: draining N batches and
+is pinned in tests/test_streaming_sinks.py: draining N batches and
 scoring with the streamed stats reproduces ``bm25_topk`` over their
 union row-for-row.
 """
@@ -45,7 +45,6 @@ def run_bm25_stats_stream(
     checkpoint_path: str,
     schema: T.StructType,
     text_col: str = "text",
-    available_now: bool = True,
 ) -> StreamingQuery:
     """File-source stream of document batches -> continuously merged
     BM25 statistics at ``state_path``."""
@@ -76,7 +75,6 @@ def run_bm25_stats_stream(
         schema=schema,
         keys=POSTINGS_KEYS,
         value_col="dl",
-        available_now=available_now,
         transform=to_stats_rows,
     )
 

@@ -36,8 +36,8 @@ Per batch:
    ``state_path/batch=<id>`` (replay-idempotent for the same reason:
    the decisions they derive from exclude this batch's own partial
    data), then the (checkpoint id, batch id) marker commits — the
-   same marker protocol as ``agg_sink`` / ``near_dedup_sink``, with
-   the atomic whole-store swap reserved for compaction.
+   ``commit`` module's protocol, with the staged swap reserved for
+   compaction.
 
 Batch-equivalence contract (pinned in tests): after draining batches
 b1..bN, the union of decision outputs equals applying the BATCH
@@ -49,10 +49,7 @@ cross-batch admission).
 
 from __future__ import annotations
 
-import glob as _glob
 import os
-import re
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -60,40 +57,16 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.embeddings import assign_with_vector, semdedup_prune_assigned
-from .agg_sink import (
-    _checkpoint_identity,
+from .commit import (
     _migrate_flat_store,
-    _read_marker,
-    _recover_state,
-    _write_marker,
+    batch_partitions,
+    commit_partition,
+    guard_replay,
+    read_updates,
+    start_stream,
 )
 
 DECISION_SCHEMA = "vec_id long, centroid_id long, pruned boolean"
-
-_BATCH_DIR = re.compile(r"^batch=(-?\d+)$")
-
-
-def _batch_dirs(state_path: str, *, below: int | None = None) -> list[str]:
-    """The store's committed per-batch partitions that actually hold
-    data (a zero-survivor batch writes only _SUCCESS — no parquet
-    files — and must not break schema inference), optionally limited
-    to batch ids strictly below ``below`` (the replay crash window: a
-    reprocessed batch must never see its own partial write as
-    corpus)."""
-    if not os.path.isdir(state_path):
-        return []
-    out = []
-    for name in sorted(os.listdir(state_path)):
-        m = _BATCH_DIR.match(name)
-        if not m:
-            continue
-        if below is not None and int(m.group(1)) >= below:
-            continue
-        d = os.path.join(state_path, name)
-        if _glob.glob(os.path.join(d, "**", "*.parquet"), recursive=True):
-            out.append(d)
-    return out
-
 
 def read_assigned(
     spark: SparkSession, state_path: str, *, below_batch: int | None = None
@@ -109,9 +82,9 @@ def read_assigned(
     normalized to the long the assignment produces. The ``batch``
     bookkeeping column is dropped. A pre-round-11 flat store is
     migrated into ``batch=-1`` first so its rows stay reachable
-    (agg_sink._migrate_flat_store)."""
+    (commit._migrate_flat_store)."""
     _migrate_flat_store(state_path)
-    paths = _batch_dirs(state_path, below=below_batch)
+    paths = batch_partitions(state_path, below=below_batch)
     if not paths:
         raise FileNotFoundError(f"no committed store data under {state_path}")
     celled = [
@@ -156,7 +129,6 @@ def run_semdedup_stream(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.45,
-    available_now: bool = True,
     assign_fn=None,
     compact_every: int | None = None,
 ) -> StreamingQuery:
@@ -179,9 +151,9 @@ def run_semdedup_stream(
       occupancy bounded by sizing bits to the planned corpus.
 
     ``compact_every``: fold the per-batch partitions into one every N
-    committed batches (the atomic swap protocol, amortized) — bounds
-    file count at waves x cells for long-lived streams; None (default)
-    never compacts, the right call for bounded drains.
+    committed batches (the staged swap, amortized) — bounds file count
+    at waves x cells for long-lived streams; None (default) never
+    compacts, the right call for bounded drains.
 
     Everything downstream of assignment — the shared prune rule, the
     decisions/survivor writes, the marker — is identical across
@@ -189,48 +161,31 @@ def run_semdedup_stream(
     both."""
     if (centroids is None) == (assign_fn is None):
         raise ValueError("pass exactly one of centroids / assign_fn")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(updates_path)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _recover_state(state_path)  # roll a crashed compaction swap forward
-        # Pre-round-11 flat store (centroid_id=* cells at the root) ->
-        # batch=-1, BEFORE the has_corpus check: otherwise the promoted
-        # old corpus reads as empty and this batch is admitted without
-        # pruning against it.
-        _migrate_flat_store(state_path)
-        ckpt_id = _checkpoint_identity(checkpoint_path)
-        applied, applied_ckpt = _read_marker(state_path)
-        if applied >= 0 and applied_ckpt and ckpt_id and applied_ckpt != ckpt_id:
-            raise RuntimeError(
-                f"assigned store at {state_path} was written under checkpoint "
-                f"{applied_ckpt} but this stream runs under {ckpt_id}; "
-                "refusing to merge (delete the state dir to rebuild, or "
-                "restore the original checkpoint)."
-            )
-        if applied >= batch_id:
+        applied, ckpt_id = guard_replay(state_path, checkpoint_path, batch_id)
+        if applied:
             return  # replayed batch: decisions + survivors already on disk
+        # Flat store (centroid_id=* cells at the root) -> batch=-1,
+        # BEFORE the has_corpus check: otherwise the old corpus reads as
+        # empty and this batch is admitted without pruning against it.
+        _migrate_flat_store(state_path)
+        batch = batch_df.select(id_col, vec_col)
         if assign_fn is not None:
-            assigned = assign_fn(
-                batch_df.select(id_col, vec_col), id_col=id_col, vec_col=vec_col
-            ).persist()
+            assigned = assign_fn(batch, id_col=id_col, vec_col=vec_col)
         else:
             assigned = assign_with_vector(
-                batch_df.select(id_col, vec_col),
-                centroids,
-                id_col=id_col,
-                vec_col=vec_col,
-            ).persist()
+                batch, centroids, id_col=id_col, vec_col=vec_col
+            )
+        assigned = assigned.persist()
+        cached = [assigned]
         try:
             # Corpus = committed batches strictly below this one: a
             # replay after a crash between the survivor write and the
             # marker must not see its own partial partition (the
             # delta's vectors would self-match at cos 1.0 and every
             # replayed row would flip to pruned).
-            has_corpus = bool(_batch_dirs(state_path, below=batch_id))
+            has_corpus = bool(batch_partitions(state_path, below=batch_id))
             if has_corpus:
                 corpus = read_assigned(spark, state_path, below_batch=batch_id)
                 decisions = semdedup_prune_assigned(
@@ -242,6 +197,7 @@ def run_semdedup_stream(
                     id_col, "centroid_id", F.lit(False).alias("pruned")
                 )
             decisions = decisions.persist()
+            cached.append(decisions)
             # Decisions first (per-batch dir, overwrite => replay-
             # idempotent), then the survivor partition, then the marker
             # that commits both.
@@ -262,42 +218,16 @@ def run_semdedup_stream(
             survivors.write.mode("overwrite").parquet(
                 os.path.join(state_path, f"batch={batch_id}")
             )
-            _write_marker(state_path, batch_id=batch_id, checkpoint_id=ckpt_id)
-            if compact_every and len(_batch_dirs(state_path)) >= compact_every:
-                _compact(spark, state_path, batch_id=batch_id, ckpt_id=ckpt_id)
-            decisions.unpersist()
+            commit_partition(
+                spark, state_path, read_assigned, batch_id=batch_id,
+                checkpoint_id=ckpt_id, compact_every=compact_every,
+            )
         finally:
             # Unconditional: a mid-batch failure must not leak the
-            # persisted frame for the life of the session.
-            assigned.unpersist()
+            # persisted frames for the life of the session.
+            for df in cached:
+                df.unpersist()
 
-    writer = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("update")
+    return start_stream(
+        read_updates(spark, updates_path, schema), checkpoint_path, apply_batch
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def _compact(
-    spark: SparkSession, state_path: str, *, batch_id: int, ckpt_id: str | None
-) -> None:
-    """Fold every per-batch partition into a single ``batch=<id>`` via
-    the agg_sink swap protocol (staging write -> marker -> rename):
-    crash-safe at every point (_recover_state promotes a complete
-    staging or restores the set-aside copy), and the marker it carries
-    equals the already-committed batch id, so a post-compaction replay
-    of the same batch is still skipped."""
-    full = read_assigned(spark, state_path)
-    staging = f"{state_path}.staging-{batch_id}"
-    full.write.mode("overwrite").parquet(
-        os.path.join(staging, f"batch={batch_id}")
-    )
-    _write_marker(staging, batch_id=batch_id, checkpoint_id=ckpt_id)
-    old = state_path + ".old"
-    if os.path.exists(state_path):
-        os.rename(state_path, old)
-    os.rename(staging, state_path)
-    shutil.rmtree(old, ignore_errors=True)

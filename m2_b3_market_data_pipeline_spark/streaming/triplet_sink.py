@@ -16,9 +16,8 @@ Per batch:
 
 1. triplets land under ``triplets_path/batch=<id>`` — overwrite per
    batch directory, so a replay is idempotent;
-2. the batch's (id, label, vector) rows union into the corpus store via
-   the crash-safe swap + (checkpoint id, batch id) marker shared with
-   ``agg_sink`` / ``near_dedup_sink``.
+2. the batch's (id, label, vector) rows union into the corpus store
+   behind ``commit.guard_replay`` and through ``commit.staged_swap``.
 
 State is the labeled corpus store itself — vectors are read once, in
 the batch that admitted them; no raw-text or re-scoring state.
@@ -27,7 +26,6 @@ the batch that admitted them; no raw-text or re-scoring state.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,12 +33,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.similarity import hard_negative_mining
-from .agg_sink import (
-    _checkpoint_identity,
-    _read_marker,
-    _recover_state,
-    _write_marker,
-)
+from .commit import guard_replay, read_updates, staged_swap, start_stream
 
 TRIPLET_SCHEMA = (
     "query_id long, label int, wave long, pos_id long, pos_cos double, "
@@ -74,7 +67,6 @@ def run_triplet_stream(
     vec_col: str = "embedding",
     label_col: str = "label",
     query_predicate: str | None = None,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Start the stream: file source over ``updates_path`` -> per-batch
     triplet mining vs the corpus-so-far + corpus merge.
@@ -84,24 +76,10 @@ def run_triplet_stream(
     batch is admitted to the corpus either way. The mining query side
     is broadcast per the ``hard_negative_mining`` contract, so the
     predicate is also the broadcast-size control."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(updates_path)
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _recover_state(state_path)
-        ckpt_id = _checkpoint_identity(checkpoint_path)
-        applied, applied_ckpt = _read_marker(state_path)
-        if applied >= 0 and applied_ckpt and ckpt_id and applied_ckpt != ckpt_id:
-            raise RuntimeError(
-                f"corpus store at {state_path} was written under checkpoint "
-                f"{applied_ckpt} but this stream runs under {ckpt_id}; "
-                "refusing to merge (delete the state dir to rebuild, or "
-                "restore the original checkpoint)."
-            )
-        if applied >= batch_id:
+        applied, ckpt_id = guard_replay(state_path, checkpoint_path, batch_id)
+        if applied:
             return  # replayed batch: triplets + corpus rows already on disk
         batch = batch_df.select(id_col, label_col, vec_col)
         has_corpus = os.path.exists(state_path)
@@ -128,25 +106,9 @@ def run_triplet_stream(
         triplets.write.mode("overwrite").parquet(
             os.path.join(triplets_path, f"batch={batch_id}")
         )
-        merged = (
-            read_corpus(spark, state_path).unionByName(batch)
-            if has_corpus
-            else batch
-        )
-        staging = f"{state_path}.staging-{batch_id}"
-        merged.write.mode("overwrite").parquet(staging)
-        _write_marker(staging, batch_id=batch_id, checkpoint_id=ckpt_id)
-        old = state_path + ".old"
-        if os.path.exists(state_path):
-            os.rename(state_path, old)
-        os.rename(staging, state_path)
-        shutil.rmtree(old, ignore_errors=True)
+        merged = corpus.unionByName(batch) if has_corpus else batch
+        staged_swap(merged, state_path, batch_id=batch_id, checkpoint_id=ckpt_id)
 
-    writer = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("update")
+    return start_stream(
+        read_updates(spark, updates_path, schema), checkpoint_path, apply_batch
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -5,6 +5,9 @@ tables).
 
 from __future__ import annotations
 
+import pytest
+from pyspark.errors import AnalysisException, ParseException
+
 from m2_b3_market_data_pipeline_spark.plans.ohlcv import derive_ohlcv, load_events
 from m2_b3_market_data_pipeline_spark.plans.pipeline import refined
 from m2_b3_market_data_pipeline_spark.sources.catalog import (
@@ -50,3 +53,23 @@ def test_testdata_views_queryable(spark, sf_dir):
         "SELECT count(*) AS n FROM lineitem JOIN orders ON l_orderkey = o_orderkey"
     ).collect()[0].n
     assert got > 0
+
+
+def test_register_keeps_names_and_location_out_of_sql_text(spark, tmp_path):
+    """A location holding a quote registers and its partitions are
+    discovered; a table name is one quoted identifier, so a backtick or
+    SQL text in it is refused by the catalog as a name, never parsed."""
+    location = str(tmp_path / "it's refined")
+    spark.createDataFrame([(1, "a"), (2, "b")], "v long, p string").write.partitionBy(
+        "p"
+    ).parquet(location)
+    register_parquet_table(spark, "quoted_location", location)
+    try:
+        assert spark.sql("SHOW PARTITIONS quoted_location").count() == 2
+        for name in ("we`ird", "x USING json --"):
+            with pytest.raises(AnalysisException) as err:
+                register_parquet_table(spark, name, location)
+            assert not isinstance(err.value, ParseException)
+        assert {r.tableName for r in show_tables(spark).collect()} >= {"quoted_location"}
+    finally:
+        spark.sql("DROP TABLE IF EXISTS quoted_location")

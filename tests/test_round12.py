@@ -17,7 +17,7 @@ def test_migrate_flat_store_moves_only_data(tmp_path):
     """Pure-fs contract: root-level parquet files and centroid_id=*
     cell dirs move into batch=-1; markers, hidden files, _SUCCESS and
     existing batch=* partitions stay put; second call is a no-op."""
-    from m2_b3_market_data_pipeline_spark.streaming.agg_sink import (
+    from m2_b3_market_data_pipeline_spark.streaming.commit import (
         _migrate_flat_store,
     )
 

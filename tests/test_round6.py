@@ -151,7 +151,7 @@ def test_read_marker_raises_on_unreadable_marker(tmp_path):
 
     import pytest as _pytest
 
-    from m2_b3_market_data_pipeline_spark.streaming.agg_sink import (
+    from m2_b3_market_data_pipeline_spark.streaming.commit import (
         _APPLIED_MARKER,
         _read_marker,
     )

@@ -327,11 +327,13 @@ def test_incremental_agg_state_swap_crash_recovery(spark, tmp_path):
     from pyspark.sql import types as T
 
     from m2_b3_market_data_pipeline_spark.streaming.agg_sink import (
+        read_aggregates,
+        run_incremental_agg_stream,
+    )
+    from m2_b3_market_data_pipeline_spark.streaming.commit import (
         _APPLIED_MARKER,
         _read_marker,
         _recover_state,
-        read_aggregates,
-        run_incremental_agg_stream,
     )
 
     updates = str(tmp_path / "agg_updates")
@@ -382,7 +384,7 @@ def test_marker_torn_write_reads_incomplete(tmp_path):
     """A torn/partial marker (crash mid-write) must read as 'staging
     incomplete' — (-1, None) — never raise: if _read_marker raises, the
     recovery path itself becomes unrecoverable without manual cleanup."""
-    from m2_b3_market_data_pipeline_spark.streaming.agg_sink import (
+    from m2_b3_market_data_pipeline_spark.streaming.commit import (
         _APPLIED_MARKER,
         _read_marker,
         _write_marker,
@@ -418,7 +420,7 @@ def test_recover_state_converges_at_every_crash_window(tmp_path, crash_after):
     import json
     import os
 
-    from m2_b3_market_data_pipeline_spark.streaming.agg_sink import (
+    from m2_b3_market_data_pipeline_spark.streaming.commit import (
         _APPLIED_MARKER,
         _read_marker,
         _recover_state,
@@ -470,53 +472,6 @@ def test_recover_state_converges_at_every_crash_window(tmp_path, crash_after):
     _recover_state(state)
     assert _read_marker(state)[0] == expect  # .old restored, torn staging dropped
     assert not os.path.exists(staging)
-
-
-def test_incremental_agg_rejects_foreign_checkpoint(spark, tmp_path):
-    """If the checkpoint dir is deleted while the state survives, batch
-    ids restart at 0 and a bare applied>=batch_id check would silently
-    drop genuinely new batches. The marker pins the checkpoint identity
-    and a mismatch must FAIL the stream loudly, not skip."""
-    from py4j.protocol import Py4JJavaError
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-    from pyspark.sql import types as T
-
-    from m2_b3_market_data_pipeline_spark.streaming.agg_sink import (
-        run_incremental_agg_stream,
-    )
-
-    updates = str(tmp_path / "agg_updates")
-    state = str(tmp_path / "agg_state")
-    schema = T.StructType(
-        [T.StructField("k", T.StringType()), T.StructField("v", T.LongType())]
-    )
-    spark.createDataFrame([("a", 10)], schema).write.parquet(f"{updates}/b1")
-    run_incremental_agg_stream(
-        spark,
-        updates_path=updates,
-        state_path=state,
-        checkpoint_path=str(tmp_path / "ckpt_one"),
-        schema=schema,
-        keys=["k"],
-        value_col="v",
-    ).awaitTermination(120)
-
-    q = run_incremental_agg_stream(
-        spark,
-        updates_path=updates,
-        state_path=state,
-        checkpoint_path=str(tmp_path / "ckpt_two"),  # fresh checkpoint
-        schema=schema,
-        keys=["k"],
-        value_col="v",
-    )
-    try:
-        q.awaitTermination(120)
-        raised = q.exception() is not None
-    except (StreamingQueryException, Py4JJavaError):
-        raised = True
-    assert raised, "foreign-checkpoint merge must fail loudly"
-    assert "refusing to merge" in str(q.exception())
 
 
 def test_streaming_incremental_dedup_matches_batch(spark, tmp_path):
