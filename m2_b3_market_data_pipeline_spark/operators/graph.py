@@ -5,203 +5,125 @@ Near-duplicate detection yields PAIRS; corpus curation needs CLUSTERS
 computes, for every node, the minimum node id reachable through the
 pair graph — the standard cluster-id convention.
 
-Algorithm: iterative min-label propagation (Pregel-style). Each round
-every node adopts the smallest label among itself and its neighbors;
-convergence takes O(diameter) rounds. Near-dup graphs are
-small-diameter by construction (components are clouds of mutually
-similar documents, not long chains), so a handful of rounds suffices at
-any corpus size; the iteration cap is a safety valve, and the operator
-raises rather than returning silently-wrong labels if it is hit. Each
-round is one shuffle (join on node) + one aggregation (min per node).
-``localCheckpoint`` truncates the growing lineage so the plan does not
-deepen with each round — without it, round N replans rounds 1..N-1.
+Algorithm: the large-star/small-star alternation (Kiveris et al.,
+"Connected Components in MapReduce and Beyond", SoCC'14). Each round
+rewires every edge toward the smallest id in a neighbourhood, so the
+edge set contracts to one star per component (center = the component
+minimum) in O(log^2 n) rounds even on a chain, where min-label
+propagation needs O(diameter) rounds: a run of successive edits of a
+templated page forms exactly such a chain, and a round cap on label
+propagation turns it into an abort. Small-diameter near-dup clouds
+still converge in a few rounds.
 
-The driver-side loop only inspects a scalar per-round convergence count
-(the data never leaves the cluster), which is the standard Spark shape
-for iterative graph algorithms. For adversarial long-chain graphs the
-two-phase large-star/small-star algorithm (Kiveris et al., "Connected
-Components in MapReduce and Beyond", SoCC'14) converges in
-O(log^2 n) rounds with the same join+min primitive; label propagation
-is the right default for dedup workloads.
+One exchange per star: the symmetric edge set is hash-partitioned on
+``src`` once, and both the dedup of that set and the neighbourhood
+minimum (a window partitioned by ``src``) reuse that partitioning — a
+star is one shuffle, no ``groupBy`` and no join. A round (large star,
+small star, dedup of the round output) ends in ``localCheckpoint`` and
+one driver action: a noop write that materializes the checkpoint
+(truncating lineage, so round N does not replan rounds 1..N-1) and
+observes the ``(count, bit_xor(xxhash64))`` fingerprint of the deduped
+edge set. The loop stops at the fixed point, when a round's fingerprint
+equals the previous round's.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
+
+# Safety cap: the alternation needs O(log^2 n) rounds (10 on a 400-node
+# chain, <= 5 on the near-dup fixtures), so hitting this means a bug,
+# and the operator raises rather than return unconverged labels.
+MAX_ROUNDS = 100
+
+
+def _star(edges: DataFrame, *, large: bool) -> DataFrame:
+    """One large-star or small-star step over the edge list (src, dst).
+
+    For each node u with neighbourhood N(u) and m = min(N(u) ∪ {u}):
+    - large-star links every neighbour v > u to m;
+    - small-star links u and every neighbour v < u to m.
+    Output edges point from the larger id to the smaller (dst < src).
+    """
+    m = F.least(F.min("dst").over(Window.partitionBy("src")), F.col("src"))
+    star = (
+        # both directions from ONE pass over the input: a union of the
+        # edge list and its swap plans the input twice, and round 1's
+        # input is the whole pair-finding plan
+        edges.selectExpr("inline(array(struct(src, dst), struct(dst AS src, src AS dst)))")
+        .repartition(F.col("src"))
+        .distinct()
+        .select("src", "dst", m.alias("m"))
+    )
+    if large:
+        return star.filter(F.col("dst") > F.col("src")).select(
+            F.col("dst").alias("src"), F.col("m").alias("dst")
+        )
+    return (
+        star.filter(F.col("dst") < F.col("src"))
+        .select(F.explode(F.array("src", "dst")).alias("src"), F.col("m").alias("dst"))
+        .filter(F.col("src") != F.col("dst"))
+    )
 
 
 def connected_components(
     pairs: DataFrame,
     nodes: DataFrame,
     *,
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
     node_col: str = "node",
-    max_iter: int = 20,
     stats: dict | None = None,
 ) -> DataFrame:
     """Label every node with the minimum node id in its connected
-    component. ``pairs`` is an undirected edge list; ``nodes`` is the
-    node universe (isolated nodes keep their own id as cluster id).
+    component. ``pairs`` is an undirected edge list (id_a, id_b);
+    ``nodes`` is the node universe (isolated nodes keep their own id as
+    cluster id).
 
-    Returns (node_col, cluster_id). When ``stats`` is passed, records
-    ``stats["rounds"]`` = rounds to convergence — near-dup graphs must
-    converge in a handful (tests pin <= 5 on the fixture), so a fixture
-    or algorithm change that degrades convergence is visible.
+    Returns (node_col, cluster_id), computed from checkpointed rounds
+    only: the result never reads ``pairs``, so callers may release its
+    cache right after the call. When ``stats`` is passed, records
+    ``stats["rounds"]`` = rounds to convergence, the confirming round
+    included (tests pin it on the fixture and on a long chain).
     """
-    edges = (
-        pairs.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .union(pairs.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst")))
-        # r16 (guide §2.4): key the edge build's ONE exchange on the
-        # probe key. hash(src) satisfies the distinct's (src, dst)
-        # clustering (same-src rows colocate, hence same-(src,dst) rows
-        # do), so the repartition and the distinct share one exchange —
-        # same exchange count as the old (src,dst)-keyed build — but
-        # the checkpointed edge list now sits hash-partitioned on
-        # exactly the key every round's join probes it with. At scale
-        # (labels too big to broadcast) that turns the per-round FULL
-        # EDGE-LIST shuffle into a node-sized label shuffle meeting
-        # stationary edges; the pagerank r15 fix, applied to CC.
-        .repartition(F.col("src"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    labels = nodes.select(
-        F.col(node_col).alias("node"), F.col(node_col).alias("cluster_id")
-    )
-    for rounds in range(1, max_iter + 1):
-        # Neighbor labels: for each edge (src -> dst), dst hears src's
-        # label. Self rows are tagged so the SAME aggregation that picks
-        # the new minimum also recovers the previous label — convergence
-        # detection costs no extra join, leaving one shuffle per round.
-        heard = edges.join(labels.withColumnRenamed("node", "src"), "src").select(
-            F.col("dst").alias("node"), "cluster_id", F.lit(False).alias("is_self")
+    edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+    prev = None
+    for rounds in range(1, MAX_ROUNDS + 1):
+        # distinct before the fingerprint: xor cancels duplicate pairs,
+        # so only a deduped edge SET has a faithful fingerprint.
+        edges = (
+            _star(_star(edges, large=True), large=False)
+            .distinct()
+            .localCheckpoint(eager=False)  # materialized by the fingerprint
         )
-        own = labels.select("node", "cluster_id", F.lit(True).alias("is_self"))
-        merged = (
-            own.union(heard)
-            .groupBy("node")
-            .agg(
-                F.min("cluster_id").alias("cluster_id"),
-                F.min(F.when(F.col("is_self"), F.col("cluster_id"))).alias("__old"),
-            )
-            .localCheckpoint(eager=False)  # truncate lineage; the convergence
-            # count right below materializes it in the SAME job (r15:
-            # one action per round instead of two)
-        )
-        changed = merged.filter(F.col("cluster_id") != F.col("__old")).count()
-        labels = merged.select("node", "cluster_id")
-        if changed == 0:
-            if stats is not None:
-                stats["rounds"] = rounds
-            return labels.withColumnRenamed("node", node_col)
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iter} rounds; "
-        "the graph has a longer chain structure than a near-dup workload "
-        "should produce — use the large-star/small-star variant."
-    )
-
-
-def _symmetric(edges: DataFrame) -> DataFrame:
-    return edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
-
-
-def _star_round(edges: DataFrame, *, large: bool) -> DataFrame:
-    """One large-star or small-star round (Kiveris et al., SoCC'14).
-
-    For each node u with neighborhood N(u) and m = min(N(u) ∪ {u}):
-    - large-star links every STRICTLY LARGER neighbor to m;
-    - small-star links u and every neighbor <= u to m.
-    Alternating the two converges to a star per component (center = the
-    component minimum) in O(log^2 n) rounds even on long chains, where
-    plain label propagation needs O(diameter).
-    """
-    sym = _symmetric(edges)
-    # min(src) == src within a group keyed on src — written as min()
-    # (not first()) so the aggregate is self-evidently deterministic.
-    mins = sym.groupBy("src").agg(
-        F.least(F.min("dst"), F.min("src")).alias("m")
-    )
-    j = sym.join(mins, "src")
-    if large:
-        out = j.filter(F.col("dst") > F.col("src")).select(
-            F.col("dst").alias("src"), F.col("m").alias("dst")
-        )
-    else:
-        out = (
-            j.filter(F.col("dst") <= F.col("src"))
-            .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-            .union(j.select("src", F.col("m").alias("dst")))
-        )
-    return out.filter(F.col("src") != F.col("dst")).distinct()
-
-
-def connected_components_twophase(
-    pairs: DataFrame,
-    nodes: DataFrame,
-    *,
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
-    node_col: str = "node",
-    max_iter: int = 30,
-    stats: dict | None = None,
-) -> DataFrame:
-    """Connected components via alternating large-star/small-star — the
-    O(log^2 n)-round fallback for graphs with long chain structure where
-    min-label propagation (``connected_components``) would need
-    O(diameter) rounds. Same contract: every node labeled with its
-    component's minimum id; isolated nodes keep their own id.
-
-    Each round is two join+aggregate passes over the current edge set;
-    the edge set only shrinks toward the final star forest, so per-round
-    cost decreases. Convergence = edge checksum stable across a round
-    (checksum compare costs one small aggregate, no driver-side edge
-    materialization).
-    """
-    edges = (
-        pairs.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-
-    def checksum(e: DataFrame) -> tuple[int, int]:
-        # bit_xor, not sum: a sum of 64-bit hashes overflows under ANSI
-        # mode; xor is closed over long and order-insensitive.
-        row = e.agg(
+        # Observed on the one pass that materializes the checkpoint, so
+        # the fingerprint costs no aggregate stage of its own. bit_xor,
+        # not sum: a sum of 64-bit hashes overflows under ANSI mode; xor
+        # is closed over long and order-insensitive.
+        obs = Observation()
+        edges.observe(
+            obs,
             F.count("*").alias("n"),
             F.coalesce(F.expr("bit_xor(xxhash64(src, dst))"), F.lit(0)).alias("h"),
-        ).collect()[0]
-        return row.n, row.h
-
-    prev = checksum(edges)
-    for rounds in range(1, max_iter + 1):
-        edges = _star_round(
-            _star_round(edges, large=True), large=False
-        ).localCheckpoint(eager=False)  # materialized by checksum() below
-        cur = checksum(edges)
+        ).write.format("noop").mode("overwrite").save()
+        cur = (obs.get["n"], obs.get["h"])
         if cur == prev:
-            if stats is not None:
-                stats["rounds"] = rounds
             break
         prev = cur
-    else:  # pragma: no cover - convergence is O(log^2 n)
+    else:
         raise RuntimeError(
-            f"two-phase connected components did not converge in {max_iter} rounds"
+            f"connected_components did not converge in {MAX_ROUNDS} rounds"
         )
-    # Star forest: every non-center node has exactly one neighbor (its
-    # component min). Isolated nodes never appear in edges.
-    labels = edges.groupBy("src").agg(F.min("dst").alias("cluster_id"))
+    if stats is not None:
+        stats["rounds"] = rounds
+    # Star forest: every non-center node has one edge, to its component
+    # minimum; min over (own id, that edge) labels centers and isolated
+    # nodes with their own id in one aggregate.
     return (
-        nodes.select(F.col(node_col).alias("src"))
-        .join(labels, "src", "left")
-        .select(
-            F.col("src").alias(node_col),
-            F.coalesce("cluster_id", F.col("src")).alias("cluster_id"),
-        )
+        nodes.select(F.col(node_col).alias("node"), F.col(node_col).alias("cluster_id"))
+        .union(edges.select(F.col("src").alias("node"), F.col("dst").alias("cluster_id")))
+        .groupBy("node")
+        .agg(F.min("cluster_id").alias("cluster_id"))
+        .withColumnRenamed("node", node_col)
     )
 
 
@@ -214,7 +136,7 @@ def pagerank(
     iters: int = 3,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list — the
-    iterative NUMERIC-propagation class (label propagation carries
+    iterative NUMERIC-propagation class (connected components carries
     mins, k-means carries centroids; this carries mass), used for
     source/entity authority weighting in corpus curation.
 
@@ -474,7 +396,7 @@ def triangle_counts(
     # oriented frame (sum of outdeg-choose-2; the materialization was
     # needed by the wedge join anyway), read as a single driver scalar
     # to size the plan — the same bounded-scalar class as the BPE
-    # argmax and the label-prop convergence count. When the estimate
+    # argmax and the CC convergence fingerprint. When the estimate
     # exceeds the target per-partition density, BOTH wedge-bearing
     # exchanges (the producing self-join and the closing join, which
     # re-shuffles the full wedge set on (p, q)) are widened; on small

@@ -47,26 +47,6 @@ def rolling_mean(
     return F.when(F.count(col).over(frame) >= need, F.avg(col).over(frame))
 
 
-def rolling_mean_time(
-    value: str | Column,
-    *,
-    window_seconds: int,
-    partition_by: list[str],
-    ts_column: str,
-) -> Column:
-    """Time-based trailing mean over a ``rangeBetween`` frame keyed on the
-    unix timestamp — the calendar-days variant the reference's "7 dias"
-    name implies but does not implement (kept as a documented extension).
-    """
-    frame = (
-        Window.partitionBy(*partition_by)
-        .orderBy(F.unix_timestamp(F.col(ts_column)))
-        .rangeBetween(-window_seconds, 0)
-    )
-    col = F.col(value) if isinstance(value, str) else value
-    return F.avg(col).over(frame)
-
-
 def with_rolling_mean(
     df: DataFrame,
     *,

@@ -9,6 +9,8 @@ algorithm is hash-checked against a declarative transitive closure.
 
 from __future__ import annotations
 
+import textwrap
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -29,37 +31,54 @@ DECONTAM_NGRAM = 3
 BENCH_MOD = 97  # doc_id % 97 == 0 plays the "benchmark/eval set" role
 
 
-@register(
-    "dedup_clusters",
-    oracle=f"""
-WITH RECURSIVE {minhash_pairs_sql()},
+# The cluster-closure oracle every connected-components query shares:
+# both edge directions of the MinHash pairs and the recursive reach
+# relation, each doc's cluster_id = MIN(lab) over reach. ``tail``
+# continues the WITH clause right after ``reach`` (a following CTE or
+# the final SELECT); ``docs`` names the doc relation, ``ctes`` defines
+# it when it is not the documents table.
+CLUSTER_ID_SQL = (
+    "SELECT node AS doc_id, CAST(MIN(lab) AS BIGINT) AS cluster_id\n"
+    "FROM reach GROUP BY node"
+)
+CLUSTERS_CTE = "clusters AS (\n" + textwrap.indent(CLUSTER_ID_SQL, "    ") + "\n)"
+
+
+def clusters_oracle(
+    tail: str = f"\n{CLUSTER_ID_SQL}\n", *, docs: str = "documents", ctes: str = ""
+) -> str:
+    return f"""
+WITH RECURSIVE {ctes}{minhash_pairs_sql(docs)},
 edges AS (
     SELECT id_a AS src, id_b AS dst FROM mh_pairs
     UNION
     SELECT id_b AS src, id_a AS dst FROM mh_pairs
 ),
 reach(node, lab) AS (
-    SELECT doc_id, doc_id FROM documents
+    SELECT doc_id, doc_id FROM {docs}
     UNION
     SELECT e.dst, r.lab FROM reach r JOIN edges e ON e.src = r.node
-)
-SELECT node AS doc_id, CAST(MIN(lab) AS BIGINT) AS cluster_id
-FROM reach GROUP BY node
-""",
-)
-def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup clusters: MinHash+LSH pairs -> distributed connected
-    components (min-label propagation, operators/graph.py). Every doc
-    gets the min doc_id of its component as cluster_id; singletons keep
-    their own id. The oracle computes the same closure declaratively
-    with a recursive CTE."""
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    pairs = minhash_dedup_pairs(docs, threshold=JACCARD_THRESHOLD)
+){tail}"""
+
+
+def doc_clusters(docs: DataFrame) -> DataFrame:
+    """(doc_id, cluster_id) over ``docs`` (with doc_id, text): MinHash+LSH
+    near-dup pairs -> connected components (operators/graph.py). Every
+    doc gets the min doc_id of its component as cluster_id; singletons
+    keep their own id. The components are materialized before the call
+    returns, so the pairs' signature cache is released here."""
+    pairs = minhash_dedup_pairs(docs.select("doc_id", "text"), threshold=JACCARD_THRESHOLD)
     out = connected_components(pairs, docs.select("doc_id"), node_col="doc_id")
-    # The propagation loop has already materialized its result
-    # (localCheckpoint), so the signature cache can be released here.
     release_cached(pairs)
     return out
+
+
+@register("dedup_clusters", oracle=clusters_oracle())
+def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Near-dup clusters: MinHash+LSH pairs -> distributed connected
+    components (large-star/small-star, operators/graph.py). The oracle
+    computes the same closure declaratively with a recursive CTE."""
+    return doc_clusters(load(spark, sf_dir, "documents"))
 
 
 # Deterministic doc sample for scale-decade witnesses: keep a doc iff
@@ -71,23 +90,12 @@ _DOC_SAMPLE_SQL = "substr(md5(CAST(doc_id AS STRING)), 1, 1) = '0'"
 
 @register(
     "dedup_clusters_sample",
-    oracle=f"""
-WITH RECURSIVE sdocs AS (
+    oracle=clusters_oracle(
+        docs="sdocs",
+        ctes=f"""sdocs AS (
     SELECT doc_id, text FROM documents WHERE {_DOC_SAMPLE_SQL}),
-{minhash_pairs_sql("sdocs")},
-edges AS (
-    SELECT id_a AS src, id_b AS dst FROM mh_pairs
-    UNION
-    SELECT id_b AS src, id_a AS dst FROM mh_pairs
-),
-reach(node, lab) AS (
-    SELECT doc_id, doc_id FROM sdocs
-    UNION
-    SELECT e.dst, r.lab FROM reach r JOIN edges e ON e.src = r.node
-)
-SELECT node AS doc_id, CAST(MIN(lab) AS BIGINT) AS cluster_id
-FROM reach GROUP BY node
 """,
+    ),
 )
 def dedup_clusters_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``dedup_clusters`` on a deterministic md5-seeded ~1/16 doc
@@ -99,36 +107,16 @@ def dedup_clusters_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate pairs at any corpus size; the components found are the
     true components of the induced sub-corpus (sampling is applied
     before pairing on BOTH engines). Full-corpus evidence at those
-    scales stays Spark-side (linear label-prop rounds, SCALE.md §13)."""
-    docs = (
-        load(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .filter(F.expr(_DOC_SAMPLE_SQL))
-    )
-    pairs = minhash_dedup_pairs(docs, threshold=JACCARD_THRESHOLD)
-    out = connected_components(pairs, docs.select("doc_id"), node_col="doc_id")
-    release_cached(pairs)
-    return out
+    scales stays Spark-side (star rounds grow O(log^2 n) at worst,
+    SCALE.md §13)."""
+    return doc_clusters(load(spark, sf_dir, "documents").filter(F.expr(_DOC_SAMPLE_SQL)))
 
 
 @register(
     "cluster_size_histogram",
-    oracle=f"""
-WITH RECURSIVE {minhash_pairs_sql()},
-edges AS (
-    SELECT id_a AS src, id_b AS dst FROM mh_pairs
-    UNION
-    SELECT id_b AS src, id_a AS dst FROM mh_pairs
-),
-reach(node, lab) AS (
-    SELECT doc_id, doc_id FROM documents
-    UNION
-    SELECT e.dst, r.lab FROM reach r JOIN edges e ON e.src = r.node
-),
-clusters AS (
-    SELECT node AS doc_id, CAST(MIN(lab) AS BIGINT) AS cluster_id
-    FROM reach GROUP BY node
-),
+    oracle=clusters_oracle(
+        f""",
+{CLUSTERS_CTE},
 sizes AS (
     SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS cluster_size
     FROM clusters GROUP BY cluster_id
@@ -138,7 +126,8 @@ SELECT cluster_size,
        CAST(COUNT(*) * cluster_size AS BIGINT) AS n_docs,
        CAST(COUNT(*) * (cluster_size - 1) AS BIGINT) AS n_removable
 FROM sizes GROUP BY cluster_size
-""",
+"""
+    ),
 )
 def cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The dedup report every curation run reads: distribution of
@@ -147,10 +136,7 @@ def cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cluster table — the only wide work is the clustering itself
     (shared shape with ``dedup_clusters``); the histogram has at most
     max-cluster-size rows, so it collects safely at any corpus scale."""
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    pairs = minhash_dedup_pairs(docs, threshold=JACCARD_THRESHOLD)
-    clusters = connected_components(pairs, docs.select("doc_id"), node_col="doc_id")
-    release_cached(pairs)
+    clusters = doc_clusters(load(spark, sf_dir, "documents"))
     sizes = clusters.groupBy("cluster_id").agg(
         F.count("*").cast("bigint").alias("cluster_size")
     )
@@ -165,22 +151,9 @@ def cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_rate_by_source",
-    oracle=f"""
-WITH RECURSIVE {minhash_pairs_sql()},
-edges AS (
-    SELECT id_a AS src, id_b AS dst FROM mh_pairs
-    UNION
-    SELECT id_b AS src, id_a AS dst FROM mh_pairs
-),
-reach(node, lab) AS (
-    SELECT doc_id, doc_id FROM documents
-    UNION
-    SELECT e.dst, r.lab FROM reach r JOIN edges e ON e.src = r.node
-),
-clusters AS (
-    SELECT node AS doc_id, CAST(MIN(lab) AS BIGINT) AS cluster_id
-    FROM reach GROUP BY node
-)
+    oracle=clusters_oracle(
+        f""",
+{CLUSTERS_CTE}
 SELECT d.source,
        CAST(COUNT(*) AS BIGINT) AS n_docs,
        CAST(COUNT(*) FILTER (WHERE c.doc_id <> c.cluster_id) AS BIGINT)
@@ -189,7 +162,8 @@ SELECT d.source,
            AS dup_rate
 FROM documents d JOIN clusters c ON d.doc_id = c.doc_id
 GROUP BY d.source
-""",
+"""
+    ),
 )
 def dedup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Provenance-level dedup accounting: per SOURCE, how many documents
@@ -200,9 +174,7 @@ def dedup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata on doc_id (one co-partitioned shuffle), then a tiny
     per-source aggregate."""
     docs = load(spark, sf_dir, "documents").select("doc_id", "text", "source")
-    pairs = minhash_dedup_pairs(docs.select("doc_id", "text"), threshold=JACCARD_THRESHOLD)
-    clusters = connected_components(pairs, docs.select("doc_id"), node_col="doc_id")
-    release_cached(pairs)
+    clusters = doc_clusters(docs)
     is_dup = (F.col("doc_id") != F.col("cluster_id")).cast("double")
     return (
         docs.select("doc_id", "source")

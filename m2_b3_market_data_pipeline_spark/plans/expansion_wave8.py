@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .expansion_corpus2 import CLUSTERS_CTE, clusters_oracle, doc_clusters
 from .registry import load, register
 from .sql_fragments import NTOK
 
@@ -158,48 +159,13 @@ def json_parse_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _clusters_oracle() -> str:
-    from .expansion_corpus2 import minhash_pairs_sql
-
-    return f"""
-WITH RECURSIVE {minhash_pairs_sql()},
-edges AS (
-    SELECT id_a AS src, id_b AS dst FROM mh_pairs
-    UNION
-    SELECT id_b AS src, id_a AS dst FROM mh_pairs
-),
-reach(node, lab) AS (
-    SELECT doc_id, doc_id FROM documents
-    UNION
-    SELECT e.dst, r.lab FROM reach r JOIN edges e ON e.src = r.node
-)
-SELECT node AS doc_id, CAST(MIN(lab) AS BIGINT) AS cluster_id
-FROM reach GROUP BY node
-"""
-
-
-@register("dedup_clusters_twophase", oracle=_clusters_oracle())
+@register("dedup_clusters_twophase", oracle=clusters_oracle())
 def dedup_clusters_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup clusters computed with the large-star/small-star
-    alternation (operators/graph.py::connected_components_twophase)
-    instead of label propagation — same MinHash pair graph, same
-    min-id-per-component contract, same recursive-CTE oracle as
-    ``dedup_clusters``. Registered separately so BOTH iterative-graph
-    strategies carry a hash-checked row: label propagation is the
-    low-round-count default for cloud-shaped dedup graphs, the
-    alternating algorithm is the O(log^2 n) guarantee for adversarial
-    chains."""
-    from ..operators.dedup import minhash_dedup_pairs, release_cached
-    from ..operators.graph import connected_components_twophase
-    from .expansion_dedup import JACCARD_THRESHOLD
-
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    pairs = minhash_dedup_pairs(docs, threshold=JACCARD_THRESHOLD)
-    out = connected_components_twophase(
-        pairs, docs.select("doc_id"), node_col="doc_id"
-    )
-    release_cached(pairs)
-    return out
+    """``dedup_clusters`` kept under its registered name: the same
+    MinHash pair graph, the same large-star/small-star connected
+    components (operators/graph.py) and the same recursive-CTE
+    oracle."""
+    return doc_clusters(load(spark, sf_dir, "documents"))
 
 
 SNAP_OLD_MOD = 5   # rows missing from the "new" snapshot -> deleted
@@ -278,19 +244,17 @@ def snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "leakage_safe_split",
-    oracle=_clusters_oracle().replace(
-        "SELECT node AS doc_id, CAST(MIN(lab) AS BIGINT) AS cluster_id\nFROM reach GROUP BY node",
-        """, clusters AS (
-    SELECT node AS doc_id, CAST(MIN(lab) AS BIGINT) AS cluster_id
-    FROM reach GROUP BY node
-)
+    oracle=clusters_oracle(
+        f"""
+, {CLUSTERS_CTE}
 SELECT doc_id, cluster_id,
        CASE WHEN CAST(('0x' || substr(md5('split|' || CAST(cluster_id AS VARCHAR)), 1, 8))
                  AS BIGINT) % 100 < 80 THEN 'train'
             WHEN CAST(('0x' || substr(md5('split|' || CAST(cluster_id AS VARCHAR)), 1, 8))
                  AS BIGINT) % 100 < 90 THEN 'valid'
             ELSE 'test' END AS split
-FROM clusters""",
+FROM clusters
+"""
     ),
 )
 def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -303,14 +267,7 @@ def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     closure into the same bucket arithmetic. The split expression is a
     projection over the cluster table — the only wide work is the
     clustering itself."""
-    from ..operators.dedup import minhash_dedup_pairs, release_cached
-    from ..operators.graph import connected_components
-    from .expansion_dedup import JACCARD_THRESHOLD
-
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    pairs = minhash_dedup_pairs(docs, threshold=JACCARD_THRESHOLD)
-    clusters = connected_components(pairs, docs.select("doc_id"), node_col="doc_id")
-    release_cached(pairs)
+    clusters = doc_clusters(load(spark, sf_dir, "documents"))
     bucket = (
         F.conv(
             F.substring(

@@ -1,40 +1,16 @@
-"""Partitioned Parquet sources and sinks.
+"""Partitioned Parquet sinks and batch helpers.
 
-Replaces the reference's hand-rolled S3 listing + sequential per-file
-reads (etl/etl_job.py:74-98: unpaginated ``list_objects_v2`` capped at
-1000 objects, one file at a time through ``/tmp``) and its single-partition
-writer (etl/etl_job.py:145-166). Spark's directory scan has neither limit:
-listing is distributed, reads are parallel file splits, and partition
-discovery is built in.
+Replaces the reference's single-partition writer (etl/etl_job.py:145-166).
+Its hand-rolled S3 listing + sequential per-file reads (etl/etl_job.py:74-98:
+unpaginated ``list_objects_v2`` capped at 1000 objects, one file at a time
+through ``/tmp``) become Spark directory scans, which have neither limit:
+the ETL's file source (streaming/file_pipeline.py::read_raw_stream) and
+the query loader (plans/registry.py::load).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
-
-
-def read_raw(
-    spark: SparkSession,
-    path: str,
-    *,
-    schema: T.StructType | None = None,
-    glob: str = "*.parquet",
-    merge_schema: bool = False,
-) -> DataFrame:
-    """S7/S8/F1: multi-file Parquet scan with a suffix filter.
-
-    ``pathGlobFilter`` reproduces the ``key.endswith(".parquet")`` guard
-    (reference: etl/etl_job.py:88); the multi-file union (S8,
-    ``pd.concat`` at :98) is implicit. ``mergeSchema`` covers by-name
-    union across drifted file schemas, matching pandas-concat semantics.
-    """
-    reader = spark.read.option("pathGlobFilter", glob)
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(path)
+from pyspark.sql import DataFrame
 
 
 def union_by_name(*frames: DataFrame) -> DataFrame:

@@ -4,8 +4,13 @@ decontamination, and embedding hygiene, on small known inputs.
 
 from __future__ import annotations
 
+import ast
+import inspect
 import math
+import random
+from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 
 from m2_b3_market_data_pipeline_spark.operators.corpus import (
@@ -18,25 +23,147 @@ from m2_b3_market_data_pipeline_spark.operators.embeddings import (
     l2_normalize,
     quantize_int8,
 )
+from m2_b3_market_data_pipeline_spark.operators import graph
 from m2_b3_market_data_pipeline_spark.operators.graph import connected_components
 
 
-def test_connected_components_chain_and_singleton(spark):
-    # chain 1-2-3-4 plus disjoint pair 10-11 plus isolated 99
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11)], "id_a long, id_b long"
-    )
-    nodes = spark.createDataFrame([(n,) for n in [1, 2, 3, 4, 10, 11, 99]], "node long")
-    out = {r.node: r.cluster_id for r in connected_components(pairs, nodes).collect()}
-    assert out == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 99: 99}
+def _union_find(nodes, edges) -> dict:
+    """Reference labels: each node -> the minimum id in its component."""
+    parent = {n: n for n in nodes}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in nodes}
 
 
-def test_connected_components_direction_agnostic(spark):
-    # min id on the *right* side of an edge must still win the component
-    pairs = spark.createDataFrame([(5, 1), (5, 9)], "id_a long, id_b long")
-    nodes = spark.createDataFrame([(1,), (5,), (9,)], "node long")
-    out = {r.node: r.cluster_id for r in connected_components(pairs, nodes).collect()}
-    assert out == {1: 1, 5: 1, 9: 1}
+def _chain(ids):
+    return list(ids), list(zip(ids, ids[1:]))
+
+
+def _shuffled(n, seed):
+    ids = list(range(n))
+    random.Random(seed).shuffle(ids)
+    return ids
+
+
+def _random_graph(n, m, seed):
+    rng = random.Random(seed)
+    edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
+    return list(range(n)), [(a, b) for a, b in edges if a != b]
+
+
+def _star(n, hub):
+    return list(range(n)), [(hub, i) for i in range(n) if i != hub]
+
+
+# case -> (nodes, edges, expected labels or None, rounds bound or None).
+# Every case is also checked against the union-find reference.
+_CC_CASES = {
+    # chain 1-2-3-4, disjoint pair 10-11, isolated 99
+    "chain_and_singleton": (
+        [1, 2, 3, 4, 10, 11, 99],
+        [(1, 2), (2, 3), (3, 4), (10, 11)],
+        {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 99: 99},
+        None,
+    ),
+    # the min id on the right side of an edge must still win
+    "direction_agnostic": ([1, 5, 9], [(5, 1), (5, 9)], {1: 1, 5: 1, 9: 1}, None),
+    # longer than label propagation's old 20-round cap
+    "chain25": (*_chain(list(range(25))), None, None),
+    # diameter 400; the whole chain is labelled 0
+    "chain400": (*_chain(list(range(400))), {i: 0 for i in range(400)}, 10),
+    "chain1000_shuffled_ids": (*_chain(_shuffled(1000, seed=11)), None, None),
+    "star2000_hub_min": (*_star(2000, hub=0), None, None),
+    "star2000_hub_max": (*_star(2000, hub=1999), None, None),
+    "random200": (*_random_graph(200, 150, seed=7), None, None),
+    "empty": ([1, 2, 3], [], {1: 1, 2: 2, 3: 3}, None),
+}
+
+
+@pytest.mark.parametrize("case", ["near_dup_fixture", *_CC_CASES])
+def test_connected_components_matches_union_find(spark, sf_dir, case):
+    """Min-id component labels equal a pure-Python union-find on the
+    fixture's MinHash pair graph (near-dup clouds: <= 5 rounds), chains
+    (label propagation needs O(diameter) rounds there), stars with the
+    hub at either end of the id order, a random graph and no edges."""
+    stats: dict = {}
+    if case == "near_dup_fixture":
+        from m2_b3_market_data_pipeline_spark.operators.dedup import (
+            minhash_dedup_pairs,
+            release_cached,
+        )
+        from m2_b3_market_data_pipeline_spark.plans.expansion_dedup import (
+            JACCARD_THRESHOLD,
+        )
+        from m2_b3_market_data_pipeline_spark.plans.registry import load
+
+        docs = load(spark, sf_dir, "documents").select("doc_id", "text")
+        pairs = minhash_dedup_pairs(docs, threshold=JACCARD_THRESHOLD)
+        out = connected_components(
+            pairs, docs.select("doc_id"), node_col="doc_id", stats=stats
+        )
+        edges = [(r.id_a, r.id_b) for r in pairs.collect()]
+        release_cached(pairs)
+        assert edges, "the fixture must plant near-dup pairs"
+        node_ids = [r.doc_id for r in docs.collect()]
+        got = {r.doc_id: r.cluster_id for r in out.collect()}
+        expected, max_rounds = None, 5
+    else:
+        node_ids, edges, expected, max_rounds = _CC_CASES[case]
+        pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+        nodes = spark.createDataFrame([(n,) for n in node_ids], "node long")
+        got = {
+            r.node: r.cluster_id
+            for r in connected_components(pairs, nodes, stats=stats).collect()
+        }
+    assert got == _union_find(node_ids, edges)
+    if expected is not None:
+        assert got == expected
+    assert stats["rounds"] >= 1
+    if max_rounds is not None:
+        assert stats["rounds"] <= max_rounds, stats
+
+
+def test_one_connected_components_operator():
+    """graph.py defines one CC, with no round-cap or column knobs, and
+    every plan module reaches it as graph.connected_components."""
+    src = Path(graph.__file__).read_text()
+    assert "connected_components_twophase" not in src
+    assert "max_iter" not in src
+    tree = ast.parse(src)
+    defs = [
+        n.name
+        for n in tree.body
+        if isinstance(n, ast.FunctionDef) and "component" in n.name.lower()
+    ]
+    assert defs == ["connected_components"]
+    assert list(inspect.signature(connected_components).parameters) == [
+        "pairs",
+        "nodes",
+        "node_col",
+        "stats",
+    ]
+    from m2_b3_market_data_pipeline_spark import plans
+
+    found = 0
+    for path in Path(plans.__file__).parent.glob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.ImportFrom):
+                continue
+            for alias in node.names:
+                if "component" in alias.name.lower():
+                    assert (node.module or "").endswith("operators.graph"), path.name
+                    assert alias.name == "connected_components", path.name
+                    found += 1
+    assert found >= 1
 
 
 def test_chunk_documents_windows(spark):
@@ -157,91 +284,3 @@ def test_kmeans_iterate_converges_on_separated_clusters(spark):
     assert {k: (v.centroid_id, v.sq_dist) for k, v in out.items()} == {
         k: (v.centroid_id, v.sq_dist) for k, v in again.items()
     }
-
-
-def test_twophase_cc_matches_label_prop_on_random_graph(spark):
-    """Both CC algorithms must label identically on a random graph."""
-    import random
-
-    from m2_b3_market_data_pipeline_spark.operators.graph import (
-        connected_components,
-        connected_components_twophase,
-    )
-
-    rng = random.Random(7)
-    n = 200
-    edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(150)]
-    pairs = spark.createDataFrame(
-        [(a, b) for a, b in edges if a != b], "id_a long, id_b long"
-    )
-    nodes = spark.range(n).withColumnRenamed("id", "node")
-    a = {
-        r.node: r.cluster_id
-        for r in connected_components(pairs, nodes, max_iter=250).collect()
-    }
-    b = {
-        r.node: r.cluster_id
-        for r in connected_components_twophase(pairs, nodes).collect()
-    }
-    assert a == b
-
-
-def test_twophase_cc_converges_on_long_chain(spark):
-    """A 400-node chain has diameter 400: label propagation needs ~400
-    rounds (it raises at its cap), while the two-phase algorithm
-    converges in O(log^2 n) rounds and labels the whole chain 0."""
-    import pytest
-
-    from m2_b3_market_data_pipeline_spark.operators.graph import (
-        connected_components,
-        connected_components_twophase,
-    )
-
-    n = 400
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
-    )
-    nodes = spark.range(n).withColumnRenamed("id", "node")
-    out = connected_components_twophase(pairs, nodes).collect()
-    assert {r.cluster_id for r in out} == {0}
-    assert len(out) == n
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(pairs, nodes, max_iter=5).collect()
-
-
-def test_cc_converges_fast_on_near_dup_fixture(spark, sf_dir):
-    """Rounds-to-convergence telemetry on the REAL dedup graph (MinHash
-    pairs over the documents fixture): near-dup components are
-    small-diameter clouds, so label propagation must converge in <= 5
-    rounds and the two-phase variant in <= 6 — a fixture or algorithm
-    change that degrades convergence (and thus per-query shuffle count)
-    trips this before it shows up as bench regression."""
-    from m2_b3_market_data_pipeline_spark.operators.dedup import (
-        minhash_dedup_pairs,
-        release_cached,
-    )
-    from m2_b3_market_data_pipeline_spark.operators.graph import (
-        connected_components,
-        connected_components_twophase,
-    )
-    from m2_b3_market_data_pipeline_spark.plans.expansion_dedup import (
-        JACCARD_THRESHOLD,
-    )
-    from m2_b3_market_data_pipeline_spark.plans.registry import load
-
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    pairs = minhash_dedup_pairs(docs, threshold=JACCARD_THRESHOLD)
-    lp_stats: dict = {}
-    ts_stats: dict = {}
-    lp = connected_components(
-        pairs, docs.select("doc_id"), node_col="doc_id", stats=lp_stats
-    ).collect()
-    ts = connected_components_twophase(
-        pairs, docs.select("doc_id"), node_col="doc_id", stats=ts_stats
-    ).collect()
-    release_cached(pairs)
-    assert {(r.doc_id, r.cluster_id) for r in lp} == {
-        (r.doc_id, r.cluster_id) for r in ts
-    }
-    assert 1 <= lp_stats["rounds"] <= 5, lp_stats
-    assert 1 <= ts_stats["rounds"] <= 6, ts_stats

@@ -271,7 +271,7 @@ def test_minhash_cache_released(spark):
 
     # Check the scoped frame's own storage level rather than counting
     # session-wide persistent RDDs: other operators legitimately hold
-    # session-lifetime entries (connected_components' localCheckpoint)
+    # session-lifetime entries (connected_components' per-round localCheckpoint)
     # and the ContextCleaner drops them asynchronously, so global counts
     # are racy.
     result = minhash_dedup_pairs(_docs(spark), threshold=0.5)

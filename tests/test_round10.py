@@ -146,8 +146,8 @@ def test_triangle_subgraph_sample_pushes_below_edge_build(spark, sf_dir):
 def test_dedup_clusters_sample_filters_before_shingling(spark, sf_dir):
     """The doc sample must reach the scan side of the signature
     pipeline, so 15/16 of docs are never shingled or hashed. The final
-    clusters frame is a LogicalRDD (connected_components
-    localCheckpoints each round), so the pin inspects the PAIRS stage
+    clusters frame reads a LogicalRDD (connected_components
+    localCheckpoints each star round), so the pin inspects the PAIRS stage
     the query builds — the same sampled relation
     (plans/expansion_corpus2.py::dedup_clusters_sample): the
     md5(doc_id) sample filter prints BELOW (after, in root-first
