@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.ident import quote_ident
+
 
 def profile_columns(df: DataFrame, cols: list[str]) -> DataFrame:
     """One row per column: total rows, nulls, exact distinct count.
@@ -29,11 +31,19 @@ def profile_columns(df: DataFrame, cols: list[str]) -> DataFrame:
         aggs.append(F.count(F.when(F.col(c).isNull(), 1)).alias(f"__null_{c}"))
         aggs.append(F.countDistinct(F.col(c)).alias(f"__dist_{c}"))
     wide = df.agg(*aggs)
-    stack_args = ", ".join(f"'{c}', __null_{c}, __dist_{c}" for c in cols)
-    return wide.selectExpr(
-        "__n as n_rows",
-        f"stack({len(cols)}, {stack_args}) as (column, n_null, n_distinct)",
+    stack_args = []
+    for c in cols:
+        stack_args += [F.lit(c), _wide(f"__null_{c}"), _wide(f"__dist_{c}")]
+    return wide.select(
+        F.col("__n").alias("n_rows"),
+        F.stack(F.lit(len(cols)), *stack_args).alias("column", "n_null", "n_distinct"),
     ).select("column", "n_rows", "n_null", "n_distinct")
+
+
+def _wide(name: str) -> Column:
+    """Column of the one-row aggregate by its exact name (a caller's
+    column or rule name may hold quotes, spaces or dots)."""
+    return F.col(quote_ident(name))
 
 
 def expectation_counts(df: DataFrame, rules: dict[str, Column]) -> DataFrame:
@@ -46,8 +56,12 @@ def expectation_counts(df: DataFrame, rules: dict[str, Column]) -> DataFrame:
         for name, cond in rules.items()
     ]
     wide = df.agg(*aggs)
-    stack_args = ", ".join(f"'{name}', __v_{name}" for name in rules)
-    return wide.selectExpr(f"stack({len(rules)}, {stack_args}) as (rule, n_violations)")
+    stack_args = []
+    for name in rules:
+        stack_args += [F.lit(name), _wide(f"__v_{name}")]
+    return wide.select(
+        F.stack(F.lit(len(rules)), *stack_args).alias("rule", "n_violations")
+    )
 
 
 def fk_orphans(child: DataFrame, parent: DataFrame, *, child_key: str, parent_key: str) -> Column | DataFrame:

@@ -18,17 +18,20 @@ eval-set construction that no existing module covers:
   MMR is always shortlist-then-rerank — the greedy step is inherently
   sequential, so the distributed stage is the relevance shortlist
   (broadcast query, corpus never shuffles, TakeOrdered M rows) and the
-  greedy loop runs over the M-row shortlist only. The argmax arithmetic
-  stays IN SPARK (literal selected-vector arrays, same F.round) so the
-  scores hash-match the oracle's unrolled CTE chain bit-for-bit; the
-  driver only ever holds M <= 32 rows (the bpe.py one-row-argmax
-  precedent, bounded by the shortlist knob, never by corpus size).
+  one greedy loop (``mmr_greedy_multi``) runs over the M-row shortlist
+  only. The argmax arithmetic stays IN SPARK (selected vectors ride
+  back as array literals, same F.round) so the scores hash-match the
+  oracle's unrolled CTE chain bit-for-bit; the Spark driver only holds
+  <= k picks per chain (the bpe.py one-row-argmax precedent, never
+  bounded by corpus size).
 
 Both are deterministic end-to-end (6dp rounding before every argmax /
 ordering, unique-id tiebreaks) so they hash-check against DuckDB.
 """
 
 from __future__ import annotations
+
+import json
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -65,24 +68,31 @@ def bm25_topk(
     Returns (query_id, rank, doc_id, score) with rank 1..k per query,
     scores 6dp-rounded, ties broken by doc_id.
     """
-    spark = docs.sparkSession
-    terms = sorted({t for ts in queries.values() for t in ts})
-    qt = spark.createDataFrame(
-        [(qid, t) for qid, ts in queries.items() for t in ts],
-        schema="query_id string, term string",
+    terms, base, tf = _bm25_tf(docs, queries, id_col=id_col, text_col=text_col)
+    # N and avgdl: one-row aggregate, broadcast (the scalar-subquery idiom).
+    stats = base.agg(
+        F.count("*").alias("__n_docs"), F.avg("__dl").alias("__avgdl")
+    )
+    dfreq = tf.groupBy("term").agg(F.count("*").alias("__df"))
+    idf = dfreq.crossJoin(F.broadcast(stats))
+    return _bm25_ranked(
+        tf.join(F.broadcast(idf), "term"), queries, id_col=id_col, k=k, k1=k1, b=b
     )
 
+
+def _bm25_tf(
+    docs: DataFrame, queries: dict[str, tuple[str, ...]], *, id_col: str, text_col: str
+) -> tuple[list[str], DataFrame, DataFrame]:
+    """The BM25 prelude both scorers share: the sorted query-term list,
+    the tokenized corpus (id, __toks, __dl) and tf per (doc, query
+    term). Tokens intersect the term set BEFORE the explode, so the tf
+    shuffle carries query-term occurrences only."""
+    terms = sorted({t for ts in queries.values() for t in ts})
     base = (
         docs.filter(F.col(text_col).isNotNull())
         .select(F.col(id_col), tokens(text_col).alias("__toks"))
         .withColumn("__dl", F.size("__toks"))
     )
-    # N and avgdl: one-row aggregate, broadcast (the scalar-subquery idiom).
-    stats = base.agg(
-        F.count("*").alias("__n_docs"), F.avg("__dl").alias("__avgdl")
-    )
-    # tf per (doc, query term): intersect with the term set BEFORE
-    # exploding, so the shuffle carries query-term occurrences only.
     tf = (
         base.select(
             id_col,
@@ -92,11 +102,30 @@ def bm25_topk(
         .groupBy(id_col, "__dl", "term")
         .agg(F.count("*").alias("__tf"))
     )
-    dfreq = tf.groupBy("term").agg(F.count("*").alias("__df"))
-    idf = dfreq.crossJoin(F.broadcast(stats))
-    contrib = tf.join(F.broadcast(idf), "term").join(F.broadcast(qt), "term")
-    scored = contrib.groupBy("query_id", id_col).agg(
-        F.round(F.sum(bm25_contrib(k1, b)), 6).alias("score")
+    return terms, base, tf
+
+
+def _bm25_ranked(
+    with_stats: DataFrame,
+    queries: dict[str, tuple[str, ...]],
+    *,
+    id_col: str,
+    k: int,
+    k1: float,
+    b: float,
+) -> DataFrame:
+    """The BM25 ranked tail both scorers share: join the (query_id,
+    term) frame to tf rows that already carry their statistics, sum
+    ``bm25_contrib`` per (query, doc), keep rank 1..k (score desc, doc
+    id asc)."""
+    qt = with_stats.sparkSession.createDataFrame(
+        [(qid, t) for qid, ts in queries.items() for t in ts],
+        schema="query_id string, term string",
+    )
+    scored = (
+        with_stats.join(F.broadcast(qt), "term")
+        .groupBy("query_id", id_col)
+        .agg(F.round(F.sum(bm25_contrib(k1, b)), 6).alias("score"))
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.col(id_col))
     return (
@@ -139,9 +168,10 @@ def mmr_select(
 
     Scale shape: the relevance pass broadcasts the single query row, so
     the corpus never shuffles; TakeOrdered keeps ``shortlist`` rows;
-    the k-step greedy loop touches only those rows (selected vectors
-    ride back in as literals so the scoring arithmetic — and its
-    rounding — is Spark's on every step, never the driver's).
+    the k-step greedy loop (``mmr_greedy_multi``, one chain) touches
+    only those rows (selected vectors ride back in as literals so the
+    scoring arithmetic — and its rounding — is Spark's on every step,
+    never Python's).
 
     Shortlist semantics and sizing (measured, not argued — the knob's
     recall curve is the hash-checked ``mmr_recall_check`` sweep): the
@@ -163,12 +193,9 @@ def mmr_select(
         mmr_relevance(emb, id_col=id_col, vec_col=vec_col)
         .orderBy(F.desc("rel"), "vec_id")
         .limit(shortlist)
-        .cache()
     )
-    try:
-        return mmr_greedy(short, k=k, lam=lam)
-    finally:
-        short.unpersist()
+    picks = mmr_greedy_multi({"short": short}, k=k, lam=lam)["short"]
+    return rows_to_frame(emb.sparkSession, picks)
 
 
 def mmr_reach_band(lam: float) -> float:
@@ -209,9 +236,9 @@ def mmr_select_scaled(
     reachable band covers most of the corpus, i.e. exact parity is
     inherently near-linear-in-n — exactly the decay the r10 gate
     measured for any fixed depth. The greedy cost model tolerates it:
-    k TakeOrdered(1) scans over a cached (id, v, rel) pool — linear,
-    no shuffle, ~100 MB per million vectors. On production reranking
-    pools (relevance concentrated near the query) the same rule yields
+    k scans over a checkpointed (id, v, rel) pool, each one partial
+    aggregate — linear, ~100 MB per million vectors. On production
+    reranking pools (relevance concentrated near the query) the same rule yields
     small shortlists. rel_k comes from one TakeOrdered(k) job at
     plan-build time (the scaled_knobs posture: a knob read from the
     data, mirrored as a scalar subquery in the oracle)."""
@@ -224,11 +251,8 @@ def mmr_select_scaled(
     )
     if rk is not None:
         pool = pool.filter(F.col("rel") >= rk - mmr_reach_band(lam))
-    pool = pool.cache()
-    try:
-        return mmr_greedy(pool, k=k, lam=lam)
-    finally:
-        pool.unpersist()
+    picks = mmr_greedy_multi({"band": pool}, k=k, lam=lam)["band"]
+    return rows_to_frame(emb.sparkSession, picks)
 
 
 def mmr_relevance(
@@ -258,82 +282,31 @@ def mmr_relevance(
     )
 
 
-def mmr_greedy(pool: DataFrame, *, k: int, lam: float) -> DataFrame:
-    """The inherently-sequential greedy MMR loop over an
-    already-CACHED candidate pool (mmr_relevance layout). The caller
-    owns the pool's persist/unpersist; each of the k steps is one
-    TakeOrdered(1) Spark job over the pool — scores stay IN SPARK
-    (selected vectors ride back as literals) so rounding matches the
-    oracle bit-for-bit."""
-    spark = pool.sparkSession
-    picked: list[tuple[int, int, float]] = []
-    sel_vecs: list[list[float]] = []
-    remaining = pool
-    for i in range(1, k + 1):
-        if sel_vecs:
-            sel_lit = F.array(
-                *[
-                    F.array(*[F.lit(float(x)) for x in v])
-                    for v in sel_vecs
-                ]
-            )
-            pen = F.array_max(
-                F.transform(
-                    sel_lit, lambda s: F.round(cosine(F.col("v"), s), 6)
-                )
-            )
-        else:
-            pen = F.lit(0.0)
-        rows = (
-            remaining.select(
-                "vec_id",
-                "v",
-                # + 0.0 folds IEEE -0.0 (lam*rel and the penalty can
-                # cancel exactly) to +0.0, matching the oracle edge.
-                (
-                    F.round(
-                        F.lit(lam) * F.col("rel")
-                        - F.lit(1.0 - lam) * pen,
-                        6,
-                    )
-                    + F.lit(0.0)
-                ).alias("sc"),
-            )
-            .orderBy(F.desc("sc"), "vec_id")
-            .limit(1)
-            .collect()
-        )
-        if not rows:
-            break
-        r = rows[0]
-        picked.append((i, r["vec_id"], r["sc"]))
-        sel_vecs.append(list(r["v"]))
-        remaining = remaining.filter(F.col("vec_id") != r["vec_id"])
-    return spark.createDataFrame(picked, schema=_MMR_SCHEMA)
-
-
 def mmr_greedy_multi(
     pools: dict[str, DataFrame], *, k: int, lam: float
 ) -> dict[str, list]:
-    """N independent greedy MMR chains folded into ONE Spark job per
-    step (round 12, r11 verdict item 5): union the chains' candidate
-    pools under a chain tag; each step left-joins the tagged pool to a
-    tiny broadcast relation of ONE row per chain —
-    (chain, array-of-selected-vectors) — so the penalty is a fixed-size
-    expression over a column value (array_max of 6dp cosines, exactly
-    ``mmr_greedy``'s pen) with no per-literal plan growth and no row
+    """THE greedy MMR loop: N independent chains (one for
+    ``mmr_select`` / ``mmr_select_scaled``, five for the recall sweep)
+    folded into ONE Spark query per step (round 12, r11 verdict item 5).
+    The chains' candidate pools (mmr_relevance layout) union under a
+    chain tag; each step hands every chain its selected vectors as ONE
+    array literal, picked per row by chain — a JSON string that
+    constant-folds once at planning (repr and the JSON parser
+    round-trip IEEE doubles exactly, NaN and -0.0 included), so the
+    step ships no relation and runs no broadcast job, and the penalty
+    is a fixed-size expression (array_max of 6dp cosines) with no row
     explosion; the per-chain argmax is one
     ``max_by(candidate, struct(score, -vec_id))`` partial aggregate
-    (map-side combine, a ~|partitions x chains|-row shuffle). k jobs
-    total. Measured same-session vs N concurrent ``mmr_greedy``
-    chains at sf0.1: faster and far less wall variance (the
-    concurrent form's N*k tiny jobs contend on the scheduler).
+    (map-side combine, a ~|partitions x chains|-row shuffle). Measured
+    same-session vs N concurrent one-chain loops at sf0.1: faster and
+    far less wall variance (the concurrent form's N*k tiny jobs contend
+    on the scheduler).
 
-    The scoring arithmetic (6dp rounds, +0.0 fold, lam weighting) and
-    the (desc score, vec_id asc) tiebreak are ``mmr_greedy``'s exactly
-    — selected vectors round-trip driver<->Spark as IEEE doubles
-    either way — so every chain's picks are IDENTICAL to running it
-    alone, pinned by test and by the unchanged unrolled-CTE oracle.
+    Per step: score = round6(lam*rel - (1-lam)*pen) + 0.0 (the + 0.0
+    folds IEEE -0.0 to +0.0, the oracle's edge), argmax with a
+    (desc score, vec_id asc) tiebreak. Each chain's picks do not
+    depend on which other chains ride along — pinned against the
+    DuckDB chains by test and by the unrolled-CTE oracles.
 
     Plan hygiene, both measured at sf0.1: the tagged union
     localCheckpoints (re-analyzing the union-of-pools lineage cost
@@ -346,7 +319,6 @@ def mmr_greedy_multi(
     bound); ``rows_to_frame`` rebuilds a DataFrame when one is needed.
     """
     tags = list(pools)
-    spark = pools[tags[0]].sparkSession
     tagged = None
     for tag in tags:
         t = pools[tag].select(
@@ -369,27 +341,28 @@ def mmr_greedy_multi(
                     (F.col("__chain") == tag) & F.col("vec_id").isin(ids)
                 )
         cand = tagged.filter(keep)
-        sel_rows = [(tag, sel_vecs[tag]) for tag in live if sel_vecs[tag]]
-        if sel_rows:
-            sel_df = spark.createDataFrame(
-                sel_rows, schema="__chain string, __svs array<array<double>>"
-            )
-            pen_src = cand.join(F.broadcast(sel_df), "__chain", "left")
-            pen = F.array_max(
-                F.transform(
-                    F.col("__svs"),
-                    lambda s: F.round(cosine(F.col("v"), s), 6),
+        svs = None  # per row: its chain's selected vectors
+        for tag in live:
+            if sel_vecs[tag]:
+                arr = F.from_json(
+                    F.lit(json.dumps(sel_vecs[tag])), "array<array<double>>"
                 )
+                svs = (F.when if svs is None else svs.when)(
+                    F.col("__chain") == tag, arr
+                )
+        if svs is not None:
+            pen = F.array_max(
+                F.transform(svs, lambda s: F.round(cosine(F.col("v"), s), 6))
             )
         else:
-            pen_src = cand
             pen = F.lit(None).cast("double")
         rows = (
-            pen_src.select(
+            cand.select(
                 "__chain",
                 "vec_id",
                 "v",
-                # + 0.0 folds IEEE -0.0 to +0.0 — mmr_greedy's edge.
+                # + 0.0 folds IEEE -0.0 (lam*rel and the penalty can
+                # cancel exactly) to +0.0, matching the oracle edge.
                 (
                     F.round(
                         F.lit(lam) * F.col("rel")
@@ -464,27 +437,8 @@ def bm25_topk_with_stats(
 
     Identical contract to ``bm25_topk`` — when the stats are computed
     over the same corpus, outputs match row-for-row (pinned in
-    tests/test_streaming_round9.py)."""
-    spark = docs.sparkSession
-    terms = sorted({t for ts in queries.values() for t in ts})
-    qt = spark.createDataFrame(
-        [(qid, t) for qid, ts in queries.items() for t in ts],
-        schema="query_id string, term string",
-    )
-    base = (
-        docs.filter(F.col(text_col).isNotNull())
-        .select(F.col(id_col), tokens(text_col).alias("__toks"))
-        .withColumn("__dl", F.size("__toks"))
-    )
-    tf = (
-        base.select(
-            id_col,
-            "__dl",
-            F.explode(F.filter("__toks", lambda x: x.isin(*terms))).alias("term"),
-        )
-        .groupBy(id_col, "__dl", "term")
-        .agg(F.count("*").alias("__tf"))
-    )
+    tests/test_streaming_sinks.py)."""
+    terms, _, tf = _bm25_tf(docs, queries, id_col=id_col, text_col=text_col)
     # Restrict the maintained stats to the QUERY terms before the
     # broadcast (round-10 audit): term_stats follows the index
     # vocabulary — |vocab|+1 rows in the postings sink's state, which
@@ -492,18 +446,7 @@ def bm25_topk_with_stats(
     # would outgrow a broadcast; the query-term slice is
     # request-bounded forever. isin over the sorted term list is the
     # same fused filter shape the tf explode uses above.
-    contrib = (
-        tf.join(F.broadcast(term_stats.filter(F.col("term").isin(*terms))), "term")
-        .crossJoin(F.broadcast(corpus_stats))
-        .join(F.broadcast(qt), "term")
-    )
-    scored = contrib.groupBy("query_id", id_col).agg(
-        F.round(F.sum(bm25_contrib(k1, b)), 6).alias("score")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", id_col, "score")
-        .orderBy("query_id", "rank")
-    )
+    with_stats = tf.join(
+        F.broadcast(term_stats.filter(F.col("term").isin(*terms))), "term"
+    ).crossJoin(F.broadcast(corpus_stats))
+    return _bm25_ranked(with_stats, queries, id_col=id_col, k=k, k1=k1, b=b)

@@ -1,16 +1,28 @@
 """Similarity search over embedding columns (array<float>).
 
-Two paths (BASELINE.json north star):
+Every operator is a candidate generator feeding shared scoring code —
+the split distributed similarity search makes between cheap candidate
+generation and exact scoring (Time Series Similarity Search for
+Streaming Data in Distributed Systems, EDBT 2019):
 
-- **Brute-force cosine top-k** (exact baseline): broadcast the (small)
-  query set against the partitioned corpus — embarrassingly parallel,
-  zero corpus shuffle, O(|corpus| × |queries| × dim) flops inside
-  whole-stage codegen via higher-order functions (no Python UDFs).
-- **LSH-bucketed ANN** (scale path): random-hyperplane signatures with
-  deterministic seeds; bucket equi-join turns the quadratic search into
-  |docs| × bands shuffle rows. Approximate — verified by exact cosine on
-  candidates; recall tunable via bands/bits.
+- **Candidate generators**, one per operator: the broadcast query set
+  against the whole corpus (``brute_force_topk``,
+  ``hard_negative_mining``), IVF cells (``ivf_topk``), hyperplane-LSH
+  band equi-joins (``ann_topk``, ``lsh_near_dup_pairs``,
+  ``banded_near_dup_pairs``), IVF or LSH cells over PQ codes
+  (``ivfpq_topk``, ``ivfpq_multiprobe_topk``), an ANN shortlist
+  (``rerank_exact``) and admitted corpus waves (``wave_triplet_mining``).
+- **Shared scorers**, written once: ``_topk`` (the per-query top-k
+  window) and ``_cos_topk`` (exact cosine into it); ``_verify_pairs``
+  (exact cosine over candidate pairs); ``_pq_encode`` and
+  ``_adc_topk`` (PQ codes and the asymmetric-distance search);
+  ``_triplets`` (the positive / hard-negative argmax);
+  ``_explode_bands`` (the band rows both LSH joins key on).
 
+LSH and IVF candidates are verified by exact cosine, so their recall
+is tunable and their precision exact; PQ search scores compressed
+codes by asymmetric distance, and ``rerank_exact`` is its exact second
+stage.
 Cosine is computed in double precision with left-to-right summation so
 results are reproducible across engines (oracle: DuckDB
 list_inner_product over DOUBLE[]).
@@ -22,10 +34,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.ident import quote_ident
-from .dedup import NUM_HASHES  # noqa: F401  (shared hashing constants live in dedup)
-
-
-from .parallelism import ensure_parallelism  # noqa: F401  (shared floor; see that module)
+from .parallelism import ensure_parallelism
 
 
 def as_double(vec: str | Column) -> Column:
@@ -48,6 +57,31 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
+def _topk(scored: DataFrame, score_col: str, k: int, desc: bool) -> DataFrame:
+    """THE per-query top-k: rank each query's (query_id, neighbor_id,
+    ``score_col``) rows by the score (``desc`` for similarities, asc for
+    distances), ties to the lowest neighbor id, and keep rn <= k. The
+    filter over the window plans as a WindowGroupLimit, so each query
+    holds O(k) state."""
+    order = F.desc(score_col) if desc else F.asc(score_col)
+    w = Window.partitionBy("query_id").orderBy(order, F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .select("query_id", "neighbor_id", score_col, "rn")
+    )
+
+
+def _cos_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """Exact scorer for candidate pairs carrying ``qvec`` and ``cvec``:
+    6dp-rounded cosine, then ``_topk``. Returns (query_id, neighbor_id,
+    cos, rn)."""
+    scored = pairs.withColumn(
+        "cos", F.round(cosine(F.col("qvec"), F.col("cvec")), 6)
+    ).select("query_id", "neighbor_id", "cos")
+    return _topk(scored, "cos", k, desc=True)
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -66,16 +100,8 @@ def brute_force_topk(
         F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("cvec")
     )
     q = queries.select(F.col(id_col).alias("query_id"), as_double(vec_col).alias("qvec"))
-    scored = (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos", F.round(cosine(F.col("qvec"), F.col("cvec")), 6))
-        .select("query_id", "neighbor_id", "cos")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cos", "rn")
+    return _cos_topk(
+        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id")), k
     )
 
 
@@ -123,11 +149,19 @@ def lsh_near_dup_pairs(
     corpus = ensure_parallelism(corpus)
     signed = lsh_signatures(corpus, vec_col=vec_col, dim=dim, n_bits=n_bits)
     cands = lsh_candidates(signed, id_col=id_col, n_bits=n_bits, band_bits=band_bits)
-    # Precompute each vector's norm ONCE (below the join, one fold per
-    # corpus row) and carry it through as a column, so the per-candidate
-    # verify is a single dot fold plus a scalar divide instead of three
-    # array folds — the verify join dominates when the band layout is
-    # permissive. dot/(na*nb) keeps the exact FP shape of the oracle.
+    return _verify_pairs(corpus, cands, id_col=id_col, vec_col=vec_col, threshold=threshold)
+
+
+def _verify_pairs(
+    corpus: DataFrame, cands: DataFrame, *, id_col: str, vec_col: str, threshold: float
+) -> DataFrame:
+    """THE exact verify of (id_a, id_b) candidate pairs: fetch both
+    vectors, keep pairs with 6dp cosine >= ``threshold``. Each vector's
+    norm is computed ONCE (below the join, one fold per corpus row) and
+    carried as a column, so the per-candidate verify is a single dot
+    fold plus a scalar divide instead of three array folds — the verify
+    join dominates when the band layout is permissive. dot/(na*nb)
+    keeps the exact FP shape of the oracle."""
     v = as_double(vec_col)
     sides = corpus.select(
         F.col(id_col).alias("__uid"), v.alias("__v"), norm(v).alias("__n")
@@ -296,17 +330,11 @@ def ivf_topk(
     probes = _assign_probes(queries, cent_row, vec_col=vec_col, nprobe=nprobe).select(
         F.col(id_col).alias("query_id"), as_double(vec_col).alias("qvec"), "cid"
     )
-    scored = (
-        cells.join(F.broadcast(probes), "cid")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos", F.round(cosine(F.col("qvec"), F.col("cvec")), 6))
-        .select("query_id", "neighbor_id", "cos")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cos", "rn")
+    return _cos_topk(
+        cells.join(F.broadcast(probes), "cid").filter(
+            F.col("query_id") != F.col("neighbor_id")
+        ),
+        k,
     )
 
 
@@ -340,16 +368,24 @@ def lsh_signatures(
     same resolved tree (same per-bit CASE/zip_with/aggregate, same
     repr-round-tripped double literals, so values and plan shape are
     bit-identical; A/B in OPTIMIZATION_r15.md)."""
+    sig = _sign_bits_sql(vec_col, dim, range(n_bits))
+    return corpus.withColumn("lsh_sig", F.expr(sig))
+
+
+def _sign_bits_sql(vec_col: str, dim: int, planes: range) -> str:
+    """SQL for the integer whose bit i is the sign of <v, plane
+    ``planes[i]``> — the signature expression of ``lsh_signatures``
+    and of each band in ``_banded_values``."""
     v = f"transform({quote_ident(vec_col)}, x -> CAST(x AS DOUBLE))"
     terms = []
-    for i in range(n_bits):
-        lits = ", ".join(repr(c) + "D" for c in _hyperplane(dim, i))
+    for i, plane in enumerate(planes):
+        lits = ", ".join(repr(c) + "D" for c in _hyperplane(dim, plane))
         dot_sql = (
             f"aggregate(zip_with({v}, array({lits}), (x, y) -> x * y), "
             f"0.0D, (acc, x) -> acc + x)"
         )
         terms.append(f"(CASE WHEN {dot_sql} > 0 THEN {2**i}L ELSE 0L END)")
-    return corpus.withColumn("lsh_sig", F.expr(" + ".join(terms)))
+    return " + ".join(terms)
 
 
 def _first_match_filter(
@@ -372,6 +408,31 @@ def _first_match_filter(
     return keep
 
 
+def _explode_bands(
+    signed: DataFrame, cols: list, n_bits: int, band_bits: int
+) -> DataFrame:
+    """``cols`` of ``signed`` plus one row per band: the
+    ``band_bits``-wide slices of ``lsh_sig`` as (band_id, band_val) —
+    the zero-shuffle projection both LSH band equi-joins key on."""
+    n_bands = n_bits // band_bits
+    mask = (1 << band_bits) - 1
+    bands = F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(c).alias("band_id"),
+                    F.shiftright(F.col("lsh_sig"), c * band_bits)
+                    .bitwiseAND(F.lit(mask))
+                    .alias("band_val"),
+                )
+                for c in range(n_bands)
+            ]
+        )
+    ).alias("b")
+    names = signed.select(*cols).columns
+    return signed.select(*cols, bands).select(*names, "b.band_id", "b.band_val")
+
+
 def lsh_candidates(
     signed: DataFrame,
     *,
@@ -387,24 +448,7 @@ def lsh_candidates(
     ``ann_topk``; at 100 TB the removed distinct is a full shuffle of
     every candidate pair)."""
     n_bands = n_bits // band_bits
-    mask = (1 << band_bits) - 1
-    banded = signed.select(
-        id_col,
-        "lsh_sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("band_id"),
-                        F.shiftright(F.col("lsh_sig"), c * band_bits)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("band_val"),
-                    )
-                    for c in range(n_bands)
-                ]
-            )
-        ).alias("b"),
-    ).select(id_col, "lsh_sig", "b.band_id", "b.band_val")
+    banded = _explode_bands(signed, [id_col, "lsh_sig"], n_bits, band_bits)
     a = banded.select(
         F.col(id_col).alias("id_a"), F.col("lsh_sig").alias("__siga"),
         "band_id", "band_val",
@@ -448,20 +492,10 @@ def _banded_values(
     # Column-API py4j calls — same tree, same repr-round-tripped double
     # literals, seconds of driver time saved per construction (the
     # lsh_signatures rewrite, guide §7.3; A/B in OPTIMIZATION_r15.md).
-    v = f"transform({quote_ident(vec_col)}, x -> CAST(x AS DOUBLE))"
-    vals = []
-    for j in range(n_bands):
-        terms = []
-        for i in range(band_bits):
-            lits = ", ".join(
-                repr(c) + "D" for c in _hyperplane(dim, j * plane_stride + i)
-            )
-            dot_sql = (
-                f"aggregate(zip_with({v}, array({lits}), (x, y) -> x * y), "
-                f"0.0D, (acc, x) -> acc + x)"
-            )
-            terms.append(f"(CASE WHEN {dot_sql} > 0 THEN {2**i}L ELSE 0L END)")
-        vals.append(" + ".join(terms))
+    vals = [
+        _sign_bits_sql(vec_col, dim, range(j * plane_stride, j * plane_stride + band_bits))
+        for j in range(n_bands)
+    ]
     return corpus.withColumn("__bv", F.expr("array(" + ", ".join(vals) + ")"))
 
 
@@ -523,7 +557,6 @@ def banded_near_dup_pairs(
     first-match filter over the band-value ARRAY replaces the
     distinct(), exact-cosine verify makes precision 1.0."""
     corpus = ensure_parallelism(corpus)
-    v = as_double(vec_col)
     signed = _banded_values(
         corpus,
         vec_col=vec_col,
@@ -556,25 +589,7 @@ def banded_near_dup_pairs(
         .filter((F.col("id_a") < F.col("id_b")) & keep)
         .select("id_a", "id_b")
     )
-    sides = corpus.select(
-        F.col(id_col).alias("__uid"), v.alias("__v"), norm(v).alias("__n")
-    )
-    a = sides.select(
-        F.col("__uid").alias("id_a"), F.col("__v").alias("va"), F.col("__n").alias("na")
-    )
-    b = sides.select(
-        F.col("__uid").alias("id_b"), F.col("__v").alias("vb"), F.col("__n").alias("nb")
-    )
-    return (
-        cands.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn(
-            "cos",
-            F.round(dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6),
-        )
-        .filter(F.col("cos") >= threshold)
-        .select("id_a", "id_b", "cos")
-    )
+    return _verify_pairs(corpus, cands, id_col=id_col, vec_col=vec_col, threshold=threshold)
 
 
 def ann_topk(
@@ -608,43 +623,28 @@ def ann_topk(
     That kills the dedup aggregation a groupBy would need, so the only
     exchange in the whole operator is the per-query top-k window's."""
     n_bands = n_bits // band_bits
-    mask = (1 << band_bits) - 1
 
     def banded(df: DataFrame, id_alias: str, vec_alias: str, sig_alias: str) -> DataFrame:
         signed = lsh_signatures(df, vec_col=vec_col, dim=dim, n_bits=n_bits)
-        return signed.select(
-            F.col(id_col).alias(id_alias),
-            as_double(vec_col).alias(vec_alias),
-            F.col("lsh_sig").alias(sig_alias),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(c).alias("band_id"),
-                            F.shiftright(F.col("lsh_sig"), c * band_bits)
-                            .bitwiseAND(F.lit(mask))
-                            .alias("band_val"),
-                        )
-                        for c in range(n_bands)
-                    ]
-                )
-            ).alias("b"),
-        ).select(id_alias, vec_alias, sig_alias, "b.band_id", "b.band_val")
+        return _explode_bands(
+            signed,
+            [
+                F.col(id_col).alias(id_alias),
+                as_double(vec_col).alias(vec_alias),
+                F.col("lsh_sig").alias(sig_alias),
+            ],
+            n_bits,
+            band_bits,
+        )
 
     banded_c = banded(ensure_parallelism(corpus), "neighbor_id", "cvec", "__csig")
     banded_q = banded(queries, "query_id", "qvec", "__qsig")
     first_match = _first_match_filter("__csig", "__qsig", n_bands, band_bits)
-    scored = (
-        banded_c.join(F.broadcast(banded_q), ["band_id", "band_val"])
-        .filter((F.col("query_id") != F.col("neighbor_id")) & first_match)
-        .withColumn("cos", F.round(cosine(F.col("qvec"), F.col("cvec")), 6))
-        .select("query_id", "neighbor_id", "cos")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cos", "rn")
+    return _cos_topk(
+        banded_c.join(F.broadcast(banded_q), ["band_id", "band_val"]).filter(
+            (F.col("query_id") != F.col("neighbor_id")) & first_match
+        ),
+        k,
     )
 
 
@@ -732,6 +732,101 @@ def _pq_code_structs(v: Column, n_sub: int, sub_len: int) -> Column:
     )
 
 
+def _pq_encode(
+    df: DataFrame,
+    codebook_source: DataFrame,
+    *,
+    id_col: str,
+    vec_col: str,
+    dim: int,
+    n_sub: int,
+    keep: tuple[str, ...] = (),
+) -> DataFrame:
+    """THE PQ encoder: (id, *keep, subspace, code, dist), one row per
+    (vector, subspace), each slice coded as its nearest sub-centroid
+    (L2, 6dp, code-id tiebreak). ``keep`` columns of ``df`` ride
+    through — the IVF cell id, so codes and cells materialize together
+    with no corpus-vs-corpus join.
+
+    A pure PROJECTION (r16): the sub-codebook rides ONE broadcast row
+    as an array, each row scores all n_sub subspaces in a single map
+    pass (``_pq_code_structs``), and the code relation explodes out
+    afterwards; the corpus never shuffles and nothing is sorted."""
+    if dim % n_sub:
+        raise ValueError(f"dim {dim} not divisible by n_sub {n_sub}")
+    sub_len = dim // n_sub
+    cent_row = _pq_cent_row(codebook_source, id_col, vec_col, n_sub, sub_len)
+    return (
+        df.withColumn("__v", as_double(vec_col))
+        .crossJoin(F.broadcast(cent_row))
+        .withColumn("__codes", _pq_code_structs(F.col("__v"), n_sub, sub_len))
+        .select(id_col, *keep, F.posexplode("__codes").alias("__m", "__best"))
+        # empty-codebook contract: array_min over an empty codebook is
+        # NULL; the old inner join produced no rows there
+        .filter(F.col("__best").isNotNull())
+        .select(
+            id_col,
+            *keep,
+            (F.col("__m") + 1).cast("long").alias("subspace"),
+            F.col("__best.code").alias("code"),
+            F.col("__best.dist").alias("dist"),
+        )
+    )
+
+
+def _adc_topk(
+    codes: DataFrame,
+    queries: DataFrame,
+    codebook_source: DataFrame,
+    *,
+    id_col: str,
+    vec_col: str,
+    dim: int,
+    n_sub: int,
+    k: int,
+    probes: DataFrame | None = None,
+) -> DataFrame:
+    """THE PQ asymmetric-distance (ADC) search over ``_pq_encode``
+    codes: ``adist(q, x) = sum_m ||q_m - centroid[code_m(x)]||²``.
+
+    The per-query distance TABLE (|queries| × n_sub × n_centroids rows)
+    is broadcast and the codes join it map-side, so the corpus-side
+    candidate stream flows into one partial-aggregated SUM per (query,
+    neighbor); that singleton-row sum and the per-query top-k window
+    are the only exchanges. With ``probes`` — a broadcast (query_id,
+    cid) probe list — only codes in a query's probed cells are
+    candidates (IVF restriction); without it every code is. Distances
+    round to 6dp after the cross-subspace sum (neighbor-id tiebreak)
+    so the ranking reproduces across engines."""
+    sub_len = dim // n_sub  # divisibility checked by _pq_encode
+    cent = _pq_slices(codebook_source, id_col, vec_col, "cvec", n_sub, sub_len).withColumnRenamed(
+        id_col, "code"
+    )
+    q = _pq_slices(queries, id_col, vec_col, "qvec", n_sub, sub_len).withColumnRenamed(
+        id_col, "query_id"
+    )
+    table = q.join(cent, "subspace").select(
+        "query_id",
+        F.col("subspace").cast("long").alias("subspace"),
+        "code",
+        _l2sq(F.col("qvec"), F.col("cvec")).alias("part"),
+    )
+    if probes is None:
+        cands = codes.join(F.broadcast(table), ["subspace", "code"]).filter(
+            F.col(id_col) != F.col("query_id")
+        )
+    else:
+        cands = (
+            codes.join(F.broadcast(probes), "cid")
+            .filter(F.col(id_col) != F.col("query_id"))
+            .join(F.broadcast(table), ["query_id", "subspace", "code"])
+        )
+    summed = cands.groupBy("query_id", F.col(id_col).alias("neighbor_id")).agg(
+        F.round(F.sum("part"), 6).alias("adist")
+    )
+    return _topk(summed, "adist", k, desc=False)
+
+
 def pq_codes(
     corpus: DataFrame,
     codebook_source: DataFrame,
@@ -747,36 +842,14 @@ def pq_codes(
 
     This is the 100 TB embedding-compression path (a 64-dim float vector
     becomes n_sub bytes; IVF+PQ is the standard billion-scale ANN
-    layout). r16 (guide §2.4): code assignment is a pure PROJECTION —
-    the sub-codebook rides ONE broadcast row as an array, each corpus
-    row scores all n_sub subspaces in a single map pass (``array_min``
-    over ``transform``, ordering identical to the previous
-    min(struct(dist, code)) aggregate), and the (id, subspace, code,
-    dist) relation explodes out afterwards. The r15 form shuffled
-    |corpus| × n_sub partial-argmin rows and paid a per-partition
-    SortAggregate over the full × n_centroids expansion; now the
-    corpus never shuffles and nothing is sorted. Distances are rounded
-    to 6dp before ranking (centroid id tiebreak) so the argmin
-    reproduces across engines.
+    layout). Code assignment is ``_pq_encode``'s projection: ordering
+    identical to the r15 min(struct(dist, code)) aggregate, whose
+    |corpus| × n_sub partial-argmin shuffle and SortAggregate it
+    replaced. Distances are rounded to 6dp before ranking (centroid id
+    tiebreak) so the argmin reproduces across engines.
     """
-    if dim % n_sub:
-        raise ValueError(f"dim {dim} not divisible by n_sub {n_sub}")
-    sub_len = dim // n_sub
-    cent_row = _pq_cent_row(codebook_source, id_col, vec_col, n_sub, sub_len)
-    return (
-        corpus.withColumn("__v", as_double(vec_col))
-        .crossJoin(F.broadcast(cent_row))
-        .withColumn("__codes", _pq_code_structs(F.col("__v"), n_sub, sub_len))
-        .select(id_col, F.posexplode("__codes").alias("__m", "__best"))
-        # empty-codebook contract: array_min over an empty codebook is
-        # NULL; the old inner join produced no rows there
-        .filter(F.col("__best").isNotNull())
-        .select(
-            id_col,
-            (F.col("__m") + 1).cast("long").alias("subspace"),
-            F.col("__best.code").alias("code"),
-            F.col("__best.dist").alias("dist"),
-        )
+    return _pq_encode(
+        corpus, codebook_source, id_col=id_col, vec_col=vec_col, dim=dim, n_sub=n_sub
     )
 
 
@@ -792,48 +865,20 @@ def pq_ann_topk(
     k: int = 5,
 ) -> DataFrame:
     """PQ asymmetric-distance (ADC) top-k: approximate nearest neighbors
-    scored entirely from compressed codes.
+    scored entirely from compressed codes — ``_adc_topk`` over every
+    corpus code (no probe restriction).
 
-    ``adist(q, x) = sum_m ||q_m - centroid[code_m(x)]||²`` — the query
-    stays full-precision, the corpus exists only as its PQ codes. The
-    per-query distance TABLE (|queries| × n_sub × n_centroids rows) is
-    broadcast; the codes frame joins it on (subspace, code) map-side, so
-    the only shuffle is the per-(query, vector) partial-distance sum —
-    with map-side combine that is |corpus| × |queries| singleton rows,
-    and the final per-query top-k is a WindowGroupLimit. This is exactly
-    the billion-scale ADC scan layout: full vectors are read once to
-    build codes; searches never touch them again.
-
-    Distances are rounded to 6dp after the cross-subspace sum
-    (neighbor-id tiebreak) so the ranking reproduces across engines.
+    The query stays full-precision, the corpus exists only as its PQ
+    codes; with map-side combine the distance sum shuffles |corpus| ×
+    |queries| singleton rows, and the final per-query top-k is a
+    WindowGroupLimit. This is exactly the billion-scale ADC scan
+    layout: full vectors are read once to build codes; searches never
+    touch them again.
     """
-    if dim % n_sub:
-        raise ValueError(f"dim {dim} not divisible by n_sub {n_sub}")
-    sub_len = dim // n_sub
     codes = pq_codes(corpus, codebook_source, id_col=id_col, vec_col=vec_col, dim=dim, n_sub=n_sub)
-    cent = _pq_slices(codebook_source, id_col, vec_col, "cvec", n_sub, sub_len).withColumnRenamed(
-        id_col, "code"
-    )
-    q = _pq_slices(queries, id_col, vec_col, "qvec", n_sub, sub_len).withColumnRenamed(
-        id_col, "query_id"
-    )
-    table = q.join(cent, "subspace").select(
-        "query_id",
-        F.col("subspace").cast("long").alias("subspace"),
-        "code",
-        _l2sq(F.col("qvec"), F.col("cvec")).alias("part"),
-    )
-    summed = (
-        codes.join(F.broadcast(table), ["subspace", "code"])
-        .filter(F.col(id_col) != F.col("query_id"))
-        .groupBy("query_id", F.col(id_col).alias("neighbor_id"))
-        .agg(F.round(F.sum("part"), 6).alias("adist"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adist"), F.asc("neighbor_id"))
-    return (
-        summed.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "adist", "rn")
+    return _adc_topk(
+        codes, queries, codebook_source,
+        id_col=id_col, vec_col=vec_col, dim=dim, n_sub=n_sub, k=k,
     )
 
 
@@ -856,77 +901,51 @@ def ivfpq_topk(
 
     Index build is a single map-side pass over the corpus: coarse-assign
     each vector to its nearest cell (broadcast centroids), then PQ-code
-    the ASSIGNED frame with the cell id carried through the slice
-    explode and the struct-argmin groupBy — the cid rides the grouping
-    key (it is functionally dependent on the vector id), so codes and
-    cell ids materialize together with NO corpus-vs-corpus join. At
-    100 TB the inverted file would be written partitioned by ``cid``;
-    searches then open only the probed cells (partition pruning).
+    the ASSIGNED frame with the cell id carried through
+    (``_pq_encode``), so codes and cell ids materialize together with
+    NO corpus-vs-corpus join. At 100 TB the inverted file would be
+    written partitioned by ``cid``; searches then open only the probed
+    cells (partition pruning).
 
-    Search: each query probes its ``nprobe`` nearest cells; the
-    (query_id, cid) probe list and the per-(query, subspace, code) ADC
-    distance table are both broadcast, so the corpus-side candidate
-    stream — |corpus| x nprobe/|cells| x n_sub rows — flows map-side
-    into one partial-aggregated SUM per (query, neighbor), and the only
-    exchanges in the whole operator are that singleton-row sum and the
-    per-query top-k window. Distances round to 6dp after the
-    cross-subspace sum (neighbor-id tiebreak) so the ranking reproduces
-    across engines; with ``nprobe >= |cells|`` the result is exactly
+    Search: each query probes its ``nprobe`` nearest cells, and
+    ``_adc_topk`` scores the codes of the probed cells — the
+    corpus-side candidate stream is |corpus| x nprobe/|cells| x n_sub
+    rows. With ``nprobe >= |cells|`` the result is exactly
     ``pq_ann_topk`` (pinned in tests)."""
-    if dim % n_sub:
-        raise ValueError(f"dim {dim} not divisible by n_sub {n_sub}")
-    sub_len = dim // n_sub
-
-    # -- index build: cells + codes in one map-side pass (r16: the code
-    # argmin is a projection over the one-row broadcast codebook array —
-    # no shuffle, no SortAggregate; see pq_codes) ---------------------
     coarse_row = _cent_array_row(centroids, id_col, vec_col)  # shared: cells + probes
     cells = _assign_probes(
         ensure_parallelism(corpus), coarse_row, vec_col=vec_col, nprobe=1
     )
-    cent = _pq_slices(codebook_source, id_col, vec_col, "cvec", n_sub, sub_len).withColumnRenamed(
-        id_col, "code"
-    )
-    cent_row = _pq_cent_row(codebook_source, id_col, vec_col, n_sub, sub_len)
-    codes = (
-        cells.withColumn("__v", as_double(vec_col))
-        .crossJoin(F.broadcast(cent_row))
-        .withColumn("__codes", _pq_code_structs(F.col("__v"), n_sub, sub_len))
-        .select(id_col, "cid", F.posexplode("__codes").alias("__m", "__best"))
-        .filter(F.col("__best").isNotNull())
-        .select(
-            id_col,
-            "cid",
-            (F.col("__m") + 1).cast("long").alias("subspace"),
-            F.col("__best.code").alias("code"),
-        )
-    )
-
-    # -- search: broadcast probes + broadcast ADC table --------------
     probes = _assign_probes(
         queries, coarse_row, vec_col=vec_col, nprobe=nprobe
     ).select(F.col(id_col).alias("query_id"), "cid")
-    q = _pq_slices(queries, id_col, vec_col, "qvec", n_sub, sub_len).withColumnRenamed(
-        id_col, "query_id"
+    return _ivfpq_search(
+        cells, probes, queries, codebook_source,
+        id_col=id_col, vec_col=vec_col, dim=dim, n_sub=n_sub, k=k,
     )
-    table = q.join(cent, "subspace").select(
-        "query_id",
-        F.col("subspace").cast("long").alias("subspace"),
-        "code",
-        _l2sq(F.col("qvec"), F.col("cvec")).alias("part"),
+
+
+def _ivfpq_search(
+    cells: DataFrame,
+    probes: DataFrame,
+    queries: DataFrame,
+    codebook_source: DataFrame,
+    *,
+    id_col: str,
+    vec_col: str,
+    dim: int,
+    n_sub: int,
+    k: int,
+) -> DataFrame:
+    """The IVF-PQ operators' common half: PQ-code the ``cells`` frame
+    (corpus rows + ``cid``) and run the probe-restricted ADC search."""
+    codes = _pq_encode(
+        cells, codebook_source,
+        id_col=id_col, vec_col=vec_col, dim=dim, n_sub=n_sub, keep=("cid",),
     )
-    summed = (
-        codes.join(F.broadcast(probes), "cid")
-        .filter(F.col(id_col) != F.col("query_id"))
-        .join(F.broadcast(table), ["query_id", "subspace", "code"])
-        .groupBy("query_id", F.col(id_col).alias("neighbor_id"))
-        .agg(F.round(F.sum("part"), 6).alias("adist"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adist"), F.asc("neighbor_id"))
-    return (
-        summed.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "adist", "rn")
+    return _adc_topk(
+        codes, queries, codebook_source,
+        id_col=id_col, vec_col=vec_col, dim=dim, n_sub=n_sub, k=k, probes=probes,
     )
 
 
@@ -968,38 +987,12 @@ def ivfpq_multiprobe_topk(
       code assignment is Θ(n·k*), linear, vs the mod-sampled codebook's
       Θ(n²/mod).
 
-    Search mechanics are ``ivfpq_topk``'s unchanged: probes and ADC
-    tables broadcast, candidate partial-distances sum map-side, per-
-    query top-k via WindowGroupLimit. Deterministic end-to-end, so
+    Only the cells and probes differ from ``ivfpq_topk``; coding and
+    search are the same ``_ivfpq_search``. Deterministic end-to-end, so
     hash-checked (plans/scaled_knobs.py)."""
-    if dim % n_sub:
-        raise ValueError(f"dim {dim} not divisible by n_sub {n_sub}")
-    sub_len = dim // n_sub
-
-    # -- index build: LSH cells + fixed-size PQ codes, one map pass
-    # (r16: projection-form code argmin, as ivfpq_topk) ---------------
     cells = lsh_signatures(
         ensure_parallelism(corpus), vec_col=vec_col, dim=dim, n_bits=cell_bits
     ).withColumnRenamed("lsh_sig", "cid")
-    cent = _pq_slices(codebook_source, id_col, vec_col, "cvec", n_sub, sub_len).withColumnRenamed(
-        id_col, "code"
-    )
-    cent_row = _pq_cent_row(codebook_source, id_col, vec_col, n_sub, sub_len)
-    codes = (
-        cells.withColumn("__v", as_double(vec_col))
-        .crossJoin(F.broadcast(cent_row))
-        .withColumn("__codes", _pq_code_structs(F.col("__v"), n_sub, sub_len))
-        .select(id_col, "cid", F.posexplode("__codes").alias("__m", "__best"))
-        .filter(F.col("__best").isNotNull())
-        .select(
-            id_col,
-            "cid",
-            (F.col("__m") + 1).cast("long").alias("subspace"),
-            F.col("__best.code").alias("code"),
-        )
-    )
-
-    # -- search: own cell + Hamming-1 flips, broadcast ADC table ------
     qsig = lsh_signatures(queries, vec_col=vec_col, dim=dim, n_bits=cell_bits)
     probes = qsig.select(
         F.col(id_col).alias("query_id"),
@@ -1013,27 +1006,9 @@ def ivfpq_multiprobe_topk(
             )
         ).alias("cid"),
     )
-    q = _pq_slices(queries, id_col, vec_col, "qvec", n_sub, sub_len).withColumnRenamed(
-        id_col, "query_id"
-    )
-    table = q.join(cent, "subspace").select(
-        "query_id",
-        F.col("subspace").cast("long").alias("subspace"),
-        "code",
-        _l2sq(F.col("qvec"), F.col("cvec")).alias("part"),
-    )
-    summed = (
-        codes.join(F.broadcast(probes), "cid")
-        .filter(F.col(id_col) != F.col("query_id"))
-        .join(F.broadcast(table), ["query_id", "subspace", "code"])
-        .groupBy("query_id", F.col(id_col).alias("neighbor_id"))
-        .agg(F.round(F.sum("part"), 6).alias("adist"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adist"), F.asc("neighbor_id"))
-    return (
-        summed.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "adist", "rn")
+    return _ivfpq_search(
+        cells, probes, queries, codebook_source,
+        id_col=id_col, vec_col=vec_col, dim=dim, n_sub=n_sub, k=k,
     )
 
 
@@ -1079,20 +1054,30 @@ def hard_negative_mining(
         F.col(label_col).alias("label"),
         as_double(vec_col).alias("__qvec"),
     )
-    scored = (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("__cid"))
-        .withColumn("__cos", F.round(cosine(F.col("__qvec"), F.col("__cvec")), 6))
-        .select("query_id", "label", "__cid", "__clabel", "__cos")
+    return _triplets(
+        c.join(F.broadcast(q), F.col("query_id") != F.col("__cid")),
+        ["query_id", "label"],
     )
+
+
+def _triplets(pairs: DataFrame, keys: list[str]) -> DataFrame:
+    """THE triplet tail over (query, candidate) pairs carrying
+    ``__qvec``/``__cvec``, ``label``/``__clabel`` and ``__cid``: 6dp
+    cosine, then both argmaxes — the same-label positive and the
+    different-label hard negative — in ONE grouped aggregation over
+    ``keys``; queries lacking either side drop out. One row per query:
+    (*keys, pos_id, pos_cos, neg_id, neg_cos), ordered by query_id."""
+    scored = pairs.withColumn(
+        "__cos", F.round(cosine(F.col("__qvec"), F.col("__cvec")), 6)
+    ).select(*keys, "__cid", "__clabel", "__cos")
     same = F.col("__clabel") == F.col("label")
-    agg = scored.groupBy("query_id", "label").agg(
+    agg = scored.groupBy(*keys).agg(
         _best_by_cos(same).alias("__p"), _best_by_cos(~same).alias("__n")
     )
     return (
         agg.filter(F.col("__p").isNotNull() & F.col("__n").isNotNull())
         .select(
-            "query_id",
-            "label",
+            *keys,
             F.col("__p.cid").alias("pos_id"),
             (-F.col("__p.nc")).alias("pos_cos"),
             F.col("__n.cid").alias("neg_id"),
@@ -1162,28 +1147,9 @@ def wave_triplet_mining(
             )
         ),
     )
-    scored = (
-        c.join(F.broadcast(q), "__w")
-        .filter(F.col("query_id") != F.col("__cid"))
-        .withColumn("__cos", F.round(cosine(F.col("__qvec"), F.col("__cvec")), 6))
-        .select("query_id", "label", "wave", "__cid", "__clabel", "__cos")
-    )
-    same = F.col("__clabel") == F.col("label")
-    agg = scored.groupBy("query_id", "label", "wave").agg(
-        _best_by_cos(same).alias("__p"), _best_by_cos(~same).alias("__n")
-    )
-    return (
-        agg.filter(F.col("__p").isNotNull() & F.col("__n").isNotNull())
-        .select(
-            "query_id",
-            "label",
-            "wave",
-            F.col("__p.cid").alias("pos_id"),
-            (-F.col("__p.nc")).alias("pos_cos"),
-            F.col("__n.cid").alias("neg_id"),
-            (-F.col("__n.nc")).alias("neg_cos"),
-        )
-        .orderBy("query_id")
+    return _triplets(
+        c.join(F.broadcast(q), "__w").filter(F.col("query_id") != F.col("__cid")),
+        ["query_id", "label", "wave"],
     )
 
 
@@ -1221,15 +1187,6 @@ def rerank_exact(
     q = queries.select(
         F.col(id_col).alias("query_id"), as_double(vec_col).alias("qvec")
     )
-    scored = (
-        c.join(F.broadcast(short), "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .withColumn("cos", F.round(cosine(F.col("qvec"), F.col("cvec")), 6))
-        .select("query_id", "neighbor_id", "cos")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cos", "rn")
+    return _cos_topk(
+        c.join(F.broadcast(short), "neighbor_id").join(F.broadcast(q), "query_id"), k
     )

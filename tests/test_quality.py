@@ -4,6 +4,7 @@ the single-scan plan property."""
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from m2_b3_market_data_pipeline_spark.operators.quality import (
     expectation_counts,
@@ -54,3 +55,33 @@ def test_fk_orphans_null_child_key_is_orphan(spark):
         key=lambda x: (x is None, x),
     )
     assert got == [2, None]
+
+
+def test_names_with_quotes_and_spaces_never_reach_sql_text(spark):
+    """Column and rule names are data, not SQL: a quote or a space in
+    either must neither raise a ParseException nor shift a count."""
+    df = spark.createDataFrame(
+        [(1, 2.0), (None, -1.0), (3, None), (3, 4.0)],
+        T.StructType(
+            [
+                T.StructField("o'brien", T.IntegerType()),
+                T.StructField("unit price", T.DoubleType()),
+            ]
+        ),
+    )
+    prof = {
+        r.column: (r.n_rows, r.n_null, r.n_distinct)
+        for r in profile_columns(df, ["o'brien", "unit price"]).collect()
+    }
+    assert prof == {"o'brien": (4, 1, 2), "unit price": (4, 1, 3)}
+    out = {
+        r.rule: r.n_violations
+        for r in expectation_counts(
+            df,
+            {
+                "it's": F.col("unit price") >= 0,
+                "not null": F.col("o'brien").isNotNull(),
+            },
+        ).collect()
+    }
+    assert out == {"it's": 2, "not null": 1}

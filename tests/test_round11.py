@@ -1,6 +1,6 @@
 """Round-11 additions: the hashed-bucket trigram LM twin, the
-band-count-scaled near-dup layout, the MMR reachable-band sizing rule,
-and the byte-sized dedup join switch.
+band-count layout rule, the byte-sized dedup join switch and the
+incremental dedup stores.
 """
 
 from __future__ import annotations
@@ -148,53 +148,6 @@ def test_scaled_band_layout_rule():
         w, b = scaled_band_layout(n)
         t = (1 / b) ** (1 / w)
         assert abs(t - t0) < 0.02
-
-
-def test_banded_near_dup_matches_sliced_layout(spark, sf_dir):
-    """At a layout both forms can express (w<=15, b<=4, same plane
-    indices), the per-band-family operator and the sliced-BIGINT
-    operator agree exactly: banded_near_dup_pairs with plane_stride =
-    band_bits reproduces lsh_near_dup_pairs' banding (band j of the
-    contiguous signature IS planes [j*w, (j+1)*w)), so the only
-    difference under test is the representation."""
-    from m2_b3_market_data_pipeline_spark.operators.similarity import (
-        banded_near_dup_pairs,
-        lsh_near_dup_pairs,
-    )
-    from m2_b3_market_data_pipeline_spark.plans.registry import load
-
-    emb = load(spark, sf_dir, "embeddings")
-    old = lsh_near_dup_pairs(
-        emb, dim=64, threshold=0.3, n_bits=12, band_bits=4
-    ).collect()
-    new = banded_near_dup_pairs(
-        emb, dim=64, threshold=0.3, band_bits=4, n_bands=3, plane_stride=4
-    ).collect()
-    key = lambda r: (r["id_a"], r["id_b"])
-    assert sorted(map(key, old)) == sorted(map(key, new))
-    assert len(new) > 0  # fixture yields pairs at this permissive layout
-
-
-def test_mmr_reach_band_theorem_on_fixture(spark, sf_dir):
-    """The band rule's parity claim, checked directly: mmr_select_scaled
-    equals the full-candidate greedy (no shortlist at all) on the
-    fixture — selection ids, ranks, and 6dp scores."""
-    from m2_b3_market_data_pipeline_spark.operators.retrieval import (
-        mmr_greedy,
-        mmr_relevance,
-        mmr_select_scaled,
-    )
-    from m2_b3_market_data_pipeline_spark.plans.registry import load
-
-    emb = load(spark, sf_dir, "embeddings")
-    scaled = mmr_select_scaled(emb, k=8, lam=0.7).collect()
-    cand = mmr_relevance(emb).cache()
-    try:
-        full = mmr_greedy(cand, k=8, lam=0.7).collect()
-    finally:
-        cand.unpersist()
-    assert [tuple(r) for r in scaled] == [tuple(r) for r in full]
-    assert len(scaled) == 8
 
 
 def test_dedup_shuffle_switch_trips_on_bytes(spark):
@@ -463,29 +416,6 @@ def test_near_dedup_incremental_store_replay_crash_window(spark, sf_dir, tmp_pat
     sigs = read_signatures(spark, state)
     assert sigs.count() == docs.count()
     assert "batch" not in sigs.columns
-
-
-def test_banded_near_dup_plan_shape(spark, sf_dir):
-    """Plan pin for the band-count layout: the candidate path is a
-    hash equi-join on (band_id, band_val) — zero BNLJ / cartesian /
-    sort-merge at fixture scale (the estimator's broadcasts are
-    correct below the §20 sizing boundary), and exactly two Generates
-    (one posexplode per join side) — the same exploded-band shape the
-    r7 ann_topk rewrite pinned, carried to the per-band-family
-    representation."""
-    from m2_b3_market_data_pipeline_spark.operators.similarity import (
-        banded_near_dup_pairs,
-    )
-    from m2_b3_market_data_pipeline_spark.plans.registry import load
-
-    emb = load(spark, sf_dir, "embeddings")
-    df = banded_near_dup_pairs(
-        emb, dim=64, threshold=0.45, band_bits=6, n_bands=4, plane_stride=20
-    )
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
-    assert plan.count("Generate") == 2, plan[:1200]
 
 
 def test_near_dedup_store_compaction(spark, sf_dir, tmp_path):

@@ -1,6 +1,6 @@
 """Round-12 additions: the pre-round-11 flat-store upgrade path for
-the incremental sinks, the byte-true shuffle-switch stat, and the
-banded-layout plane-stride guard (r11 advisor orders).
+the incremental sinks and the byte-true shuffle-switch stat (r11
+advisor orders).
 """
 
 from __future__ import annotations
@@ -183,23 +183,6 @@ def test_semdedup_sink_migrates_pre_r11_flat_store(spark, sf_dir, tmp_path):
     assert state_ids == {v for v, p in want if not p}
 
 
-def test_banded_near_dup_rejects_overlapping_plane_families(spark):
-    """plane_stride < band_bits would make bands share hyperplanes —
-    correlated band values, broken independence math (r11 advisor)."""
-    from m2_b3_market_data_pipeline_spark.operators.similarity import (
-        banded_near_dup_pairs,
-    )
-
-    df = spark.range(1).select(
-        F.col("id").alias("vec_id"),
-        F.array(*[F.lit(0.1)] * 4).alias("embedding"),
-    )
-    with pytest.raises(ValueError, match="plane_stride"):
-        banded_near_dup_pairs(
-            df, dim=4, threshold=0.9, band_bits=8, n_bands=2, plane_stride=4
-        )
-
-
 def test_dedup_switch_counts_bytes_not_chars(spark):
     """The shuffle-switch stat must be octet_length: a CJK shingle is
     ~3 bytes/char in UTF-8, and the threshold is byte-denominated.
@@ -295,44 +278,6 @@ def test_bpe_learn_merges_matches_duckdb_trainer(spark, sf_dir):
     want = [tuple(r) for r in odf.itertuples(index=False, name=None)]
     assert got == want
     assert len(got) == 16
-
-
-def test_mmr_greedy_multi_matches_single_chains(spark, sf_dir):
-    """The folded multi-chain greedy (r11 verdict item 5) must pick
-    EXACTLY what per-chain mmr_greedy picks — same ids, ranks, and
-    6dp scores — for every pool shape the recall gate uses (full set,
-    prefix shortlists, band filter)."""
-    from m2_b3_market_data_pipeline_spark.operators.retrieval import (
-        mmr_greedy,
-        mmr_greedy_multi,
-        mmr_reach_band,
-        mmr_relevance,
-    )
-    from m2_b3_market_data_pipeline_spark.plans.registry import load
-
-    emb = load(spark, sf_dir, "embeddings")
-    cand = mmr_relevance(emb).cache()
-    pool = cand.orderBy(F.desc("rel"), "vec_id").limit(16).cache()
-    try:
-        rels = sorted((r["rel"] for r in pool.collect()), reverse=True)
-        rk = rels[7] if len(rels) >= 8 else rels[-1]
-        band = cand.filter(F.col("rel") >= rk - mmr_reach_band(0.7))
-        pools = {
-            "exact": cand,
-            "s8": pool.orderBy(F.desc("rel"), "vec_id").limit(8),
-            "band": band,
-        }
-        multi = mmr_greedy_multi(pools, k=8, lam=0.7)
-        for tag, p in pools.items():
-            single = [
-                (r["rank"], r["vec_id"], r["mmr_score"])
-                for r in mmr_greedy(p, k=8, lam=0.7).collect()
-            ]
-            assert multi[tag] == single, tag
-        assert len(multi["exact"]) == 8
-    finally:
-        pool.unpersist()
-        cand.unpersist()
 
 
 def _make_bmp(width, height, pixel, *, top_down=False):

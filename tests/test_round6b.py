@@ -220,36 +220,6 @@ def test_lang_segments_detects_code_switch(spark):
     assert got[3].majority_lang == "und"  # no markers anywhere
 
 
-def test_hard_negative_mining_planted_geometry(spark):
-    # Query q (label A) sits between a same-label twin (cos ~1) and a
-    # near-identical different-label vector; the triplet must pick the
-    # twin as positive and the close wrong-label vector as the HARD
-    # negative (not the far one).
-    from m2_b3_market_data_pipeline_spark.operators.similarity import (
-        hard_negative_mining,
-    )
-
-    q = [1.0, 0.0, 0.0, 0.0]
-    near = [0.9, 0.1, 0.0, 0.0]   # closest overall, wrong label
-    far = [0.0, 0.0, 1.0, 0.0]    # wrong label, far away
-    twin = [0.95, 0.0, 0.05, 0.0]  # same label, close
-    emb = spark.createDataFrame(
-        [(0, "A", q), (1, "B", near), (2, "B", far), (3, "A", twin)],
-        "vec_id long, label string, embedding array<double>",
-    )
-    queries = emb.filter(F.col("vec_id") == 0)
-    rows = hard_negative_mining(emb, queries).collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert r.pos_id == 3 and r.neg_id == 1
-    assert r.neg_cos > 0.9 and r.pos_cos > 0.9  # both genuinely hard/close
-    # a query with no same-label counterpart yields no triplet
-    lonely = spark.createDataFrame(
-        [(0, "A", q), (1, "B", near)], "vec_id long, label string, embedding array<double>"
-    )
-    assert hard_negative_mining(lonely, lonely.filter(F.col("vec_id") == 0)).count() == 0
-
-
 def test_knn_label_accuracy_perfect_on_separated_clusters(spark, monkeypatch, tmp_path):
     # Two well-separated label clusters: every query's 2 nearest
     # neighbors share its label => accuracy 1.0 for both classes.

@@ -98,38 +98,6 @@ def test_semdedup_incremental_never_prunes_corpus_and_is_monotone(spark):
     assert got == {10: True, 11: False}
 
 
-def test_ivfpq_full_probe_equals_pq_ann_topk(spark, sf_dir):
-    """With nprobe >= |cells| the IVF restriction admits every corpus
-    vector, so IVF-PQ must degenerate to EXACTLY the flat PQ-ADC search
-    — same neighbors, same distances, same ranks. Pins the composite's
-    scoring path to the already-oracle-checked pq_ann_topk."""
-    from m2_b3_market_data_pipeline_spark.operators.similarity import (
-        ivfpq_topk,
-        pq_ann_topk,
-    )
-    from m2_b3_market_data_pipeline_spark.plans.expansion_similarity import (
-        CENTROID_MOD,
-        EMBED_DIM,
-        PQ_SUB,
-        QUERY_MOD,
-        TOP_K,
-    )
-    from m2_b3_market_data_pipeline_spark.plans.registry import load
-
-    emb = load(spark, sf_dir, "embeddings")
-    centroids = emb.filter(F.col("vec_id") % CENTROID_MOD == 0)
-    queries = emb.filter(F.col("vec_id") % QUERY_MOD == 0)
-    n_cells = centroids.count()
-    full = ivfpq_topk(
-        emb, queries, centroids, centroids,
-        dim=EMBED_DIM, n_sub=PQ_SUB, k=TOP_K, nprobe=n_cells,
-    )
-    flat = pq_ann_topk(
-        emb, queries, centroids, dim=EMBED_DIM, n_sub=PQ_SUB, k=TOP_K
-    )
-    assert sorted(map(tuple, full.collect())) == sorted(map(tuple, flat.collect()))
-
-
 def test_ivfpq_restricts_candidates_and_stays_hash_joined(spark, sf_dir):
     """Plan pin for ivfpq_ann_topk: the probe restriction and the ADC
     distance table must both arrive as BROADCAST HASH joins (the corpus
@@ -302,81 +270,6 @@ def test_triangle_counts_matches_python_golden(spark):
     assert got == want
     assert got[0] == (3, 1.0)  # clique corner: C(3,2) closed wedges
     assert got[7][0] == 0  # star hub: max degree, zero triangles
-
-
-def test_rerank_full_shortlist_degenerates_to_brute_force(spark, sf_dir):
-    """With the shortlist deepened to the whole corpus, the exact
-    re-rank must reproduce brute_force_topk row-for-row (same 6dp
-    cosine, same tiebreak) — stage 2 adds no semantics of its own, it
-    only rescores what stage 1 admits."""
-    from m2_b3_market_data_pipeline_spark.plans.expansion_similarity import (
-        CENTROID_MOD,
-        EMBED_DIM,
-        NPROBE,
-        PQ_SUB,
-        QUERY_MOD,
-        TOP_K,
-    )
-    from m2_b3_market_data_pipeline_spark.plans.registry import load
-    from m2_b3_market_data_pipeline_spark.operators.similarity import (
-        brute_force_topk,
-        ivfpq_topk,
-        rerank_exact,
-    )
-
-    emb = load(spark, sf_dir, "embeddings")
-    n = emb.count()
-    centroids = emb.filter(F.col("vec_id") % CENTROID_MOD == 0)
-    n_cells = centroids.count()
-    queries = emb.filter(F.col("vec_id") % QUERY_MOD == 0)
-    # full probe + full-depth shortlist: stage 1 admits everything
-    shortlist = ivfpq_topk(
-        emb, queries, centroids, centroids,
-        dim=EMBED_DIM, n_sub=PQ_SUB, k=n, nprobe=n_cells,
-    )
-    got = rerank_exact(emb, queries, shortlist, k=TOP_K)
-    want = brute_force_topk(emb, queries, k=TOP_K)
-    assert sorted(got.collect()) == sorted(want.collect())
-
-
-def test_rerank_recall_dominates_adc_ranking(spark, sf_dir):
-    """The point of the re-rank: at the same shortlist, exact rescoring
-    recovers QUANTIZATION misrankings — so reranked recall@k vs the
-    exact baseline must never fall below the raw ADC top-k's recall.
-    (It cannot recover CELL-restriction misses: a true neighbor outside
-    the probed cells never reaches stage 2, which is why fixture recall
-    sits well under 1.0 at nprobe=2 — that loss is ivfpq_recall_check's
-    business, not the re-rank's.) Also pin the output contract: exactly
-    TOP_K rows per query."""
-    from m2_b3_market_data_pipeline_spark.plans.all_queries import QUERIES
-    from m2_b3_market_data_pipeline_spark.plans.expansion_similarity import (
-        QUERY_MOD,
-        TOP_K,
-    )
-    from m2_b3_market_data_pipeline_spark.plans.registry import load
-    from m2_b3_market_data_pipeline_spark.operators.similarity import brute_force_topk
-
-    emb = load(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") % QUERY_MOD == 0)
-    exact = {
-        (r.query_id, r.neighbor_id)
-        for r in brute_force_topk(emb, queries, k=TOP_K).collect()
-    }
-    adc = {
-        (r.query_id, r.neighbor_id)
-        for r in QUERIES["ivfpq_ann_topk"](spark, sf_dir).collect()
-    }
-    rerank = {
-        (r.query_id, r.neighbor_id)
-        for r in QUERIES["ivfpq_rerank_topk"](spark, sf_dir).collect()
-    }
-    assert len(rerank & exact) >= len(adc & exact)
-    from collections import Counter
-
-    per_query = Counter(q for q, _ in rerank)
-    n_queries = len({q for q, _ in exact})
-    assert len(per_query) == n_queries
-    assert all(c == TOP_K for c in per_query.values()), per_query
 
 
 def test_dup_span_removal_cuts_exactly_the_planted_span(spark):
