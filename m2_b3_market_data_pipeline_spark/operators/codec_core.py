@@ -32,6 +32,17 @@ def check_size(what: str, width: int, height: int) -> None:
         )
 
 
+def check_frames(what: str, n_bytes: int) -> None:
+    """Raise ValueError when one payload's frames would decode to more
+    than ``MAX_DECODED_BYTES``: a frame count multiplies a checked
+    raster past memory as surely as a header dimension does."""
+    if n_bytes > MAX_DECODED_BYTES:
+        raise ValueError(
+            f"{what} exceeds the {MAX_DECODED_BYTES}-byte decoded-frames "
+            "bound"
+        )
+
+
 def quarantine(what: str):
     """Decorate a decoder entry point so a malformed stream surfaces
     as ValueError: ``struct.error`` and ``IndexError`` from deep in a

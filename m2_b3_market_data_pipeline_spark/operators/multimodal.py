@@ -57,9 +57,9 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .codec_core import (
-    MAX_DECODED_BYTES,
     BitWriter,
     canonical_codes,
+    check_frames,
     check_size,
     lzw_decode,
     lzw_width,
@@ -2200,6 +2200,18 @@ def _decode_dib(body: bytes, width: int, height: int, bpp: int) -> DecodedImage:
     return DecodedImage(width, h, rgb.tobytes())
 
 
+def _bounded_frames(what: str, images: Iterator[DecodedImage]) -> list[DecodedImage]:
+    """Collect a video's decoded frames, raising once their total bytes
+    pass ``MAX_DECODED_BYTES``."""
+    frames: list[DecodedImage] = []
+    total = 0
+    for img in images:
+        total += len(img.pixels)
+        check_frames(what, total)
+        frames.append(img)
+    return frames
+
+
 def _parse_avi(data: bytes) -> tuple[float, list[DecodedImage]]:
     """Pure-stdlib RIFF/AVI container parse -> (fps, decoded frames).
     Walks hdrl (avih frame timing; the first 'vids' strl's strf
@@ -2207,7 +2219,8 @@ def _parse_avi(data: bytes) -> tuple[float, list[DecodedImage]]:
     '00dc' compressed frames decode via the stdlib chain (MJPEG —
     JPEG-per-frame — rides the r13 baseline JPEG decoder), '00db'
     uncompressed frames via the DIB layout. Nested 'rec ' LISTs are
-    descended. Any frame no decoder reads raises ValueError — the
+    descended. Any frame no decoder reads, or a frame past the
+    ``MAX_DECODED_BYTES`` total, raises ValueError — the
     payload-level quarantine in the featurizer skips the whole
     document, never poisons the task. No video-codec bitstreams
     (H.264 etc.) are guessed at: fail loud."""
@@ -2224,39 +2237,42 @@ def _parse_avi(data: bytes) -> tuple[float, list[DecodedImage]]:
 
     usec_per_frame = 0
     bmp_w = bmp_h = bmp_bpp = None
-    frames: list[DecodedImage] = []
 
-    def walk_movi(pos: int, end: int) -> None:
+    def walk_movi(pos: int, end: int) -> Iterator[DecodedImage]:
         for cid, body_start, size in chunks(pos, end):
             body = data[body_start : body_start + size]
             if cid == b"LIST" and body[:4] == b"rec ":
-                walk_movi(body_start + 4, body_start + size)
+                yield from walk_movi(body_start + 4, body_start + size)
             elif cid == b"00dc":
-                frames.append(decode_image(body))
+                yield decode_image(body)
             elif cid == b"00db":
                 if bmp_w is None:
                     raise ValueError("AVI 00db frame before strf header")
-                frames.append(_decode_dib(body, bmp_w, bmp_h, bmp_bpp))
+                yield _decode_dib(body, bmp_w, bmp_h, bmp_bpp)
 
-    for cid, body_start, size in chunks(12, len(data)):
-        if cid != b"LIST":
-            continue
-        subtype = data[body_start : body_start + 4]
-        if subtype == b"hdrl":
-            for hcid, hstart, hsize in chunks(body_start + 4, body_start + size):
-                if hcid == b"avih" and hsize >= 4:
-                    (usec_per_frame,) = struct.unpack_from("<I", data, hstart)
-                elif hcid == b"LIST" and data[hstart : hstart + 4] == b"strl":
-                    is_vids = False
-                    for scid, sstart, ssize in chunks(hstart + 4, hstart + hsize):
-                        if scid == b"strh" and ssize >= 4:
-                            is_vids = data[sstart : sstart + 4] == b"vids"
-                        elif scid == b"strf" and is_vids and ssize >= 40:
-                            _bsz, w, h = struct.unpack_from("<Iii", data, sstart)
-                            _pl, bpp = struct.unpack_from("<HH", data, sstart + 12)
-                            bmp_w, bmp_h, bmp_bpp = w, h, bpp
-        elif subtype == b"movi":
-            walk_movi(body_start + 4, body_start + size)
+    def walk() -> Iterator[DecodedImage]:
+        nonlocal usec_per_frame, bmp_w, bmp_h, bmp_bpp
+        for cid, body_start, size in chunks(12, len(data)):
+            if cid != b"LIST":
+                continue
+            subtype = data[body_start : body_start + 4]
+            if subtype == b"hdrl":
+                for hcid, hstart, hsize in chunks(body_start + 4, body_start + size):
+                    if hcid == b"avih" and hsize >= 4:
+                        (usec_per_frame,) = struct.unpack_from("<I", data, hstart)
+                    elif hcid == b"LIST" and data[hstart : hstart + 4] == b"strl":
+                        is_vids = False
+                        for scid, sstart, ssize in chunks(hstart + 4, hstart + hsize):
+                            if scid == b"strh" and ssize >= 4:
+                                is_vids = data[sstart : sstart + 4] == b"vids"
+                            elif scid == b"strf" and is_vids and ssize >= 40:
+                                _bsz, w, h = struct.unpack_from("<Iii", data, sstart)
+                                _pl, bpp = struct.unpack_from("<HH", data, sstart + 12)
+                                bmp_w, bmp_h, bmp_bpp = w, h, bpp
+            elif subtype == b"movi":
+                yield from walk_movi(body_start + 4, body_start + size)
+
+    frames = _bounded_frames("AVI video", walk())
     if not frames:
         raise ValueError("AVI contains no decodable video frames")
     fps = 1e6 / usec_per_frame if usec_per_frame else 0.0
@@ -3391,9 +3407,16 @@ def _parse_mp4(data: bytes) -> tuple[float, list[DecodedImage]]:
     raise from decode_image — fail loud, never guess pixels; the
     metadata walk itself stays available via mp4_video_meta."""
     info = _parse_mp4_tables(data)
-    frames = [
-        decode_image(data[off : off + sz]) for off, sz in info["samples"]
-    ]
+    # A sample table may list one small extent any number of times, so
+    # bound the frames the header declares before decoding any; the
+    # decoded bytes are bounded too, in case the header understates.
+    check_frames(
+        "MP4 video", info["n_samples"] * info["width"] * info["height"] * 3
+    )
+    frames = _bounded_frames(
+        "MP4 video",
+        (decode_image(data[off : off + sz]) for off, sz in info["samples"]),
+    )
     if not frames:
         raise ValueError("MP4 contains no video samples")
     return info["fps"], frames
@@ -3675,11 +3698,7 @@ def _parse_gif(data: bytes) -> tuple[float, list[DecodedImage]]:
             else:
                 rect[:] = rgb
             # frame count must not multiply past memory either
-            if (len(frames) + 1) * width * height * 3 > MAX_DECODED_BYTES:
-                raise ValueError(
-                    "GIF animation exceeds the "
-                    f"{MAX_DECODED_BYTES}-byte decoded-frames bound"
-                )
+            check_frames("GIF animation", (len(frames) + 1) * width * height * 3)
             frames.append(DecodedImage(width, height, canvas.tobytes()))
             delays.append(delay_cs)
             if disposal == 2:  # restore background into the frame rect

@@ -28,8 +28,9 @@ def profile_columns(df: DataFrame, cols: list[str]) -> DataFrame:
     """
     aggs: list[Column] = [F.count(F.lit(1)).alias("__n")]
     for c in cols:
-        aggs.append(F.count(F.when(F.col(c).isNull(), 1)).alias(f"__null_{c}"))
-        aggs.append(F.countDistinct(F.col(c)).alias(f"__dist_{c}"))
+        col = F.col(quote_ident(c))  # a top-level name, dots included
+        aggs.append(F.count(F.when(col.isNull(), 1)).alias(f"__null_{c}"))
+        aggs.append(F.countDistinct(col).alias(f"__dist_{c}"))
     wide = df.agg(*aggs)
     stack_args = []
     for c in cols:

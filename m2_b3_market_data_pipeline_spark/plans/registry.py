@@ -16,9 +16,12 @@ Determinism contract applied to every registered query (both sides):
 
 from __future__ import annotations
 
+import os
+import weakref
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
@@ -42,6 +45,50 @@ def register(name: str, oracle: str | None = None) -> Callable[[SparkQuery], Spa
     return deco
 
 
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+_SESSION_TZ = "spark.sql.session.timeZone"
+
+# Inferred schemas: session -> path -> (stamp, schema). Inferring a parquet
+# schema runs a Spark job that reads a footer, and a query suite loads the
+# same fixture tables over and over.
+_SCHEMAS: weakref.WeakKeyDictionary[SparkSession, dict[str, tuple[tuple, StructType]]] = (
+    weakref.WeakKeyDictionary()
+)
+
+
+def _file_stamp(path: str) -> tuple | None:
+    """(relative name, size, mtime) of each file under ``path``; None
+    when ``path`` is not on the local file system."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return (("", st.st_size, st.st_mtime_ns),)
+    if not os.path.isdir(path):
+        return None
+    stamp = []
+    for root, _dirs, names in os.walk(path):
+        for name in names:
+            full = os.path.join(root, name)
+            st = os.stat(full)
+            stamp.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(stamp))
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema inferred once per
+    session and file state. Every call still builds a new relation, so a
+    self-join of two loads keeps distinct attribute ids; only the schema
+    is reused, never a DataFrame."""
+    files = _file_stamp(path)
+    if files is None:
+        return spark.read.parquet(path)
+    stamp = (files, spark.conf.get(_NANOS_AS_LONG), spark.conf.get(_SESSION_TZ))
+    memo = _SCHEMAS.setdefault(spark, {})
+    hit = memo.get(path)
+    if hit is None or hit[0] != stamp:
+        hit = memo[path] = (stamp, spark.read.parquet(path).schema)
+    return spark.read.schema(hit[1]).parquet(path)
+
+
 def load(spark: SparkSession, sf_dir: str, table: str, *, floor: bool = True) -> DataFrame:
     # The caller may hand us ANY SparkSession (the driver builds a bare one
     # with none of session.py's confs), so every conf a query depends on must
@@ -52,9 +99,9 @@ def load(spark: SparkSession, sf_dir: str, table: str, *, floor: bool = True) ->
     #   TIMESTAMP(NANOS), which a stock reader rejects (PARQUET_TYPE_ILLEGAL).
     # - UTC session tz: timestamp<->string/date arithmetic must agree with
     #   the (timezone-naive) DuckDB oracle regardless of host tz.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
+    spark.conf.set(_NANOS_AS_LONG, "true")
+    spark.conf.set(_SESSION_TZ, "UTC")
+    df = _read_parquet(spark, f"{sf_dir}/{table}.parquet")
     if table == "events":
         from pyspark.sql import functions as F
         from pyspark.sql import types as T

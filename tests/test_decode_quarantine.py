@@ -7,10 +7,11 @@ from a header it has not checked.
 One deterministic mutation fuzz runs over the writers' own outputs
 (every ``encode_image`` format, plus MJPEG-AVI, MP4, animated GIF and
 WAV): byte flips, truncations, and header length/dimension fields
-inflated to large values. Three crafted bombs pin the decode-size
+inflated to large values. Four crafted bombs pin the decode-size
 bound: a JPEG whose SOF claims 60000x60000, a lossless WebP whose
-VP8L header claims 16383x16383, and a 16x16 PNG whose IDAT inflates
-to 400 MiB."""
+VP8L header claims 16383x16383, a 16x16 PNG whose IDAT inflates
+to 400 MiB, and an MP4 whose sample table lists one small JPEG
+extent past the decoded-frames bound."""
 
 from __future__ import annotations
 
@@ -22,6 +23,7 @@ import zlib
 import numpy as np
 import pytest
 
+from m2_b3_market_data_pipeline_spark.operators import codec_core
 from m2_b3_market_data_pipeline_spark.operators.multimodal import (
     DecodedImage,
     _decode_jpeg,
@@ -39,6 +41,7 @@ from m2_b3_market_data_pipeline_spark.operators.webp import (
     decode_webp,
     webp_meta,
 )
+from tests.test_mp4_decode import _independent_mp4, _solid_frames
 
 # Wall-clock bound per mutated payload: every base payload decodes in
 # well under 50 ms; a decoder that sizes work from an unchecked header
@@ -105,8 +108,6 @@ def _gif_animated():
 
 
 def _mp4_independent():
-    from tests.test_mp4_decode import _independent_mp4, _solid_frames
-
     _vals, samples = _solid_frames(n=2)
     return _independent_mp4(samples, w=16, h=16)
 
@@ -274,3 +275,29 @@ def test_png_deflate_bomb_inflates_only_what_ihdr_implies():
         tracemalloc.stop()
     assert img.pixels == rgb.tobytes()  # trailing image data is ignored
     assert peak < 4 << 20, peak
+
+
+def test_mp4_repeating_one_extent_rejected_before_decoding():
+    """One 64x64 JPEG (a few hundred bytes) listed as enough samples to
+    decode past the decoded-frames bound: the frames the header declares
+    are checked before any sample decodes."""
+    _vals, (jpeg,) = _solid_frames(n=1, w=64, h=64)
+    n = codec_core.MAX_DECODED_BYTES // (64 * 64 * 3) + 1
+    payload = _independent_mp4([jpeg], w=64, h=64, repeat=n)
+    assert len(payload) < 8 * n + 4096
+    _raises_fast(_parse_mp4, payload, "decoded-frames bound")
+
+
+def test_video_frames_bounded_by_decoded_bytes(monkeypatch):
+    """A header that understates its frames still stops at the bound
+    once the decoded bytes pass it: AVI declares no frame count here, and
+    this MP4's tkhd claims 1x1 for 16x16 samples."""
+    monkeypatch.setattr(codec_core, "MAX_DECODED_BYTES", 2 * 16 * 16 * 3)
+    assert len(_parse_avi(encode_video_mjpeg([_smooth16()] * 2))[1]) == 2
+    _raises_fast(
+        _parse_avi, encode_video_mjpeg([_smooth16()] * 3), "decoded-frames bound"
+    )
+    _vals, samples = _solid_frames(n=3)
+    _raises_fast(
+        _parse_mp4, _independent_mp4(samples, w=1, h=1), "decoded-frames bound"
+    )

@@ -38,14 +38,22 @@ def _independent_mp4(
     co64: bool = False,
     largesize_mdat: bool = False,
     two_chunks: bool = True,
+    repeat: int = 1,
 ) -> bytes:
     """moov-first layout; samples split across two chunks with a gap
     byte between them (stsc: chunk 1 carries n-1 samples, chunk 2 the
-    last one) unless two_chunks=False."""
+    last one) unless two_chunks=False. ``repeat`` > 1 stores one sample
+    once and lists its extent ``repeat`` times, one chunk each."""
     n = len(samples)
     ftyp = _box(b"ftyp", b"mp42" + struct.pack(">I", 0) + b"mp42isom")
 
-    if two_chunks and n >= 2:
+    if repeat > 1:
+        assert n == 1
+        mdat_payload = samples[0]
+        stsc_entries = [(1, 1, 1)]
+        rel_offsets = [0] * repeat
+        samples, n = samples * repeat, repeat
+    elif two_chunks and n >= 2:
         chunk1 = b"".join(samples[:-1])
         chunk2 = samples[-1]
         mdat_payload = chunk1 + b"\xAA" + chunk2  # junk gap byte

@@ -651,3 +651,25 @@ def test_mmr_relevance_pass_broadcasts_query_not_corpus(spark, sf_dir):
     # one broadcast exchange (the query row); no shuffle exchange of the corpus
     assert "BroadcastExchange" in plan
     assert not re.search(r"Exchange hashpartitioning", plan), plan
+
+
+def test_warm_query_suite_pass_compiles_no_class(spark, sf_dir):
+    """Whole-stage codegen compiles each plan shape once: a second run of
+    the benchmark's query_suite queries adds no Janino compile. Under
+    Spark's default cache of 100 classes the six queries (109 classes)
+    evicted one another, and every pass recompiled all of them."""
+    from m2_b3_market_data_pipeline_spark.operators.dedup import release_cached
+    from perfbench.query_suite import suite
+
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def run_suite():
+        for name in suite():
+            df = all_queries.QUERIES[name](spark, sf_dir)
+            df.write.format("noop").mode("overwrite").save()
+            release_cached(df)
+
+    run_suite()
+    before = compiles.getCount()
+    run_suite()
+    assert compiles.getCount() - before == 0

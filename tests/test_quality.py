@@ -58,22 +58,27 @@ def test_fk_orphans_null_child_key_is_orphan(spark):
 
 
 def test_names_with_quotes_and_spaces_never_reach_sql_text(spark):
-    """Column and rule names are data, not SQL: a quote or a space in
-    either must neither raise a ParseException nor shift a count."""
+    """Column and rule names are data, not SQL: a quote, a space or a
+    dot in either must neither raise nor shift a count."""
     df = spark.createDataFrame(
-        [(1, 2.0), (None, -1.0), (3, None), (3, 4.0)],
+        [(1, 2.0, "x"), (None, -1.0, "x"), (3, None, None), (3, 4.0, "y")],
         T.StructType(
             [
                 T.StructField("o'brien", T.IntegerType()),
                 T.StructField("unit price", T.DoubleType()),
+                T.StructField("a.b", T.StringType()),
             ]
         ),
     )
     prof = {
         r.column: (r.n_rows, r.n_null, r.n_distinct)
-        for r in profile_columns(df, ["o'brien", "unit price"]).collect()
+        for r in profile_columns(df, ["o'brien", "unit price", "a.b"]).collect()
     }
-    assert prof == {"o'brien": (4, 1, 2), "unit price": (4, 1, 3)}
+    assert prof == {
+        "o'brien": (4, 1, 2),
+        "unit price": (4, 1, 3),
+        "a.b": (4, 1, 2),
+    }
     out = {
         r.rule: r.n_violations
         for r in expectation_counts(
