@@ -71,6 +71,12 @@ def _digest(plan: str) -> dict:
     norm = re.sub(r"\(\d+\)", "(n)", norm)
     norm = re.sub(r"\[plan_id=\d+\]", "[plan_id=]", norm)  # session-global counter
     norm = re.sub(r"RDD\[\d+\]", "RDD[]", norm)  # session-global RDD ids (ExistingRDD scans)
+    # An RDD's call site names the JVM frame that created it. For
+    # createDataFrame that is a reflective call: JDK 17 prints
+    # `NativeMethodAccessorImpl.java:0` for the first 16 calls in a session
+    # and `<unknown>:0` once reflection inflates, so the file and line of a
+    # call site are not a plan property either.
+    norm = re.sub(r"(RDD\[\] at \w+) at [^\s,\]\)]+:\d+", r"\1 at <callsite>", norm)
     # Higher-order-function lambda variables (lambda x_37#) number off a
     # session-global counter too — the hash must not depend on how many
     # lambdas compiled earlier in the digest run's session.
