@@ -307,8 +307,8 @@ def main() -> None:
     #   fast-window round on record — trigram's pre-floor 0.81 record
     #   was set in that same window).
     # Round 14 (r13 verdict item 3, idle-window A/B in
-    # tools/ab_bench_drifters.py, table in BASELINE.md "Round-14
-    # drifter adjudication"): the two composites whose r03-era
+    # tools/ab_bench_drifters.py at commit f6dc786, table in BASELINE.md
+    # "Round-14 drifter adjudication"): the two composites whose r03-era
     # best-knowns PRE-DATE the adjudicated r7 minhash-stage floor
     # (minhash_dedup itself is clamped 0.77 -> 1.03 below) clamp to
     # the floored form's recorded-round min — corpus_pipeline r08

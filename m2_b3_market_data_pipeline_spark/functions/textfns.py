@@ -68,23 +68,6 @@ def seeded_hash60(value: Column, seed: int) -> Column:
     return F.conv(F.substring(seeded_md5(value, seed), 1, 15), 16, 10).cast("bigint")
 
 
-def _seeded_hasher(seed: int):
-    # NOTE: must stay a 1-arg lambda — F.transform treats a 2-arg lambda
-    # (e.g. ``lambda s, i=i``) as an (element, index) function and passes
-    # the ARRAY INDEX as the second argument, silently replacing the seed.
-    return lambda s: seeded_hash60(s, seed)
-
-
-def minhash_signature(shingle_col: Column, num_hashes: int) -> list[Column]:
-    """k min-hashes of a shingle set: for each seed, the numeric min of
-    the seeded 60-bit hash over all shingles. Pure projection — computed
-    per-row with zero shuffle; NULL when the shingle set is empty."""
-    return [
-        F.array_min(F.transform(shingle_col, _seeded_hasher(i))).alias(f"mh{i}")
-        for i in range(num_hashes)
-    ]
-
-
 def normalized_text(text: str | Column) -> Column:
     """Whitespace-canonical form used for exact-dup fingerprints."""
     return F.concat_ws(" ", tokens(text))

@@ -1,25 +1,35 @@
 """Deduplication operators for LLM training-data pipelines.
 
-Four families, each shaped for 100 TB (BASELINE.json north star):
+Every near-duplicate operator is a candidate generator over ONE band
+join (``band_join``): each side is projected to (id, band-value array,
+carried columns), the arrays are posexploded to (band_id, band_val)
+rows, the sides equi-join on that key, and each pair is kept only at
+its lowest matching band — so a pair surfaces once without a distinct()
+shuffle over the candidate set, and the join volume is docs x bands,
+never docs². The same split distributed similarity search makes between
+bucket-join candidates and exact verification (Time Series Similarity
+Search for Streaming Data in Distributed Systems, EDBT 2019):
 
-- **Exact**: hash-groupBy on content fingerprint; keep the
-  deterministic winner via row_number. One shuffle on the fingerprint.
-- **MinHash + LSH**: per-doc signatures are a pure projection (no
-  shuffle); banding turns near-dup search into an equi-join on
-  (band_id, band_hash) — the classic shingle→minhash→band→bucket-join
-  pipeline. Candidate pairs are then verified with exact Jaccard.
-  Shuffle cost: one exchange on band hash (data volume = docs × bands,
-  NOT docs²).
+- **MinHash + LSH**: per-doc signatures (``with_minhash``) banded into
+  md5 band hashes; candidates from the band join, verified by exact
+  Jaccard (``jaccard_verify``) — the self-join (``minhash_dedup_pairs``)
+  and the delta-vs-corpus cross join (``minhash_incremental_pairs*``,
+  the streaming sink) share both halves. ``needs_sort_merge`` is the one
+  broadcast-vs-sort-merge rule for their corpus-sized joins.
 - **SimHash**: 64-bit signature via token-hash bit voting (carried as
   two 32-bit bigint halves so neither engine touches the sign bit);
-  near-dups are pairs within small Hamming distance. Signature is one
-  shuffle (token explode + per-doc bit sums). 64 bits matter at scale:
-  the pigeonhole join buckets on 16-bit chunks (65k values each), not
-  the 256-value buckets a 32-bit signature would give — bucket
-  population stays ~|corpus|/65k instead of degenerating quadratic.
-- **n-gram Jaccard**: exact similarity join via shingle inverted index
-  (explode + self-join on shingle, then group per pair) — the exact
-  baseline the approximate methods are judged against.
+  the pigeonhole chunks are the band values and the exact Hamming
+  distance verifies. 64 bits matter at scale: the chunks are 16 bits
+  wide (65k values each), not the 256-value buckets a 32-bit signature
+  would give — bucket population stays ~|corpus|/65k.
+- Hyperplane LSH over embeddings (``similarity.py``'s
+  ``banded_near_dup_pairs`` and ``ann_topk``) runs the same band join.
+
+Exact baselines sit beside them: ``exact_dedup`` (hash-groupBy on a
+fingerprint), the n-gram Jaccard and containment joins over a shingle
+inverted index, and the positional-gram span operators
+(``dup_ngram_coverage``, ``remove_dup_spans``), which share one front
+end (``_dup_gram_positions``).
 
 All hashing uses the portable md5 family (functions/textfns.py) so every
 operator is oracle-checkable against DuckDB.
@@ -27,14 +37,11 @@ operator is oracle-checkable against DuckDB.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.textfns import (  # noqa: F401  (minhash_signature kept as the projection-form alternative)
-    minhash_signature,
-    normalized_text,
+from ..functions.textfns import (
     seeded_hash60,
-    seeded_md5,
     shingles,
     tokens,
 )
@@ -112,11 +119,11 @@ def with_minhash(
 ) -> DataFrame:
     """Append mh0..mh{k-1} columns via explode + ONE hash aggregate with
     k min()s (map-side partial min keeps shuffle volume at one row per
-    (doc, k) regardless of shingle count). A pure-projection alternative
-    (minhash_signature) exists but duplicates the shingle computation per
-    hash column under projection collapse; the explode+agg form does the
-    shingling exactly once. Docs with empty shingle sets keep NULL
-    signatures via the left join.
+    (doc, k) regardless of shingle count). A per-row projection of k
+    ``array_min(transform(...))`` columns would repeat the shingle
+    computation per hash column under projection collapse; the
+    explode+agg form does the shingling exactly once. Docs with empty
+    shingle sets keep NULL signatures via the left join.
 
     Hashes are NUMERIC (seeded_hash60): min(BIGINT) stays in a codegen'd
     HashAggregate — min over the previous md5 STRINGS planned a
@@ -134,47 +141,91 @@ def with_minhash(
     return with_sh.join(sig, id_col, "left")
 
 
-def band_signatures(
+def needs_sort_merge(docs: int, sh_bytes: int = 0) -> bool:
+    """THE broadcast-vs-sort-merge rule for the minhash joins, whose
+    sides are all corpus-derived: past ``SHUFFLE_JOIN_MIN_DOCS``
+    signatures or ``SHUFFLE_JOIN_MIN_SH_BYTES`` of shingle text they pin
+    to sort-merge (see ``minhash_dedup_pairs`` for the sf30 finding).
+    Callers pass the stats they already have; none is computed here."""
+    return docs > SHUFFLE_JOIN_MIN_DOCS or sh_bytes > SHUFFLE_JOIN_MIN_SH_BYTES
+
+
+def band_join(
+    left: DataFrame,
+    right: DataFrame,
+    *,
+    n_bands: int,
+    pair: Column | None = None,
+    hint: str | None = None,
+) -> DataFrame:
+    """THE band join of every near-dup candidate generator. Each side is
+    (id, ``__bands`` array of ``n_bands`` band values, carried columns),
+    its column names distinct from the other side's. The arrays explode
+    to (band_id, band_val) rows — a zero-shuffle projection — and the
+    sides equi-join on that key, so the join volume is rows x bands and
+    never a cross product (a band-match disjunction has no hash key and
+    plans as BroadcastNestedLoopJoin).
+
+    ``pair`` is the caller's predicate over the two id columns (``<``
+    for a self-join, ``!=`` or None for a cross join); ``hint`` is a
+    join hint on the right side (``merge`` pins sort-merge,
+    ``broadcast`` the build side). A pair agreeing on m bands would
+    surface m times; the FIRST-MATCH filter keeps it only at its lowest
+    matching band (every earlier band value differs), which replaces the
+    distinct() over the candidate set — at corpus scale a full shuffle
+    of every candidate pair (measured 6x at 10x volume, BASELINE.md
+    round-7 A/B). Returns both sides' id and carried columns."""
+    cols = [c for c in left.columns + right.columns if c != "__bands"]
+
+    def explode(side: DataFrame, arr: str) -> DataFrame:
+        # _outer: for a plain posexplode Catalyst infers a
+        # size(__bands) > 0 filter and pushes it below the projection,
+        # computing every band value twice. The one (NULL, NULL) row an
+        # outer explode adds for a NULL or empty array never equi-joins.
+        return side.select(
+            *[c for c in side.columns if c != "__bands"],
+            F.col("__bands").alias(arr),
+            F.posexplode_outer("__bands").alias("band_id", "band_val"),
+        )
+
+    r = explode(right, "__br")
+    if hint:
+        r = r.hint(hint)
+    keep = F.lit(True) if pair is None else pair
+    for e in range(n_bands - 1):
+        keep = keep & ((F.col("band_id") <= e) | (F.col("__bl")[e] != F.col("__br")[e]))
+    return (
+        explode(left, "__bl")
+        .join(r, ["band_id", "band_val"])
+        .filter(keep)
+        .select(*cols)
+    )
+
+
+def _minhash_bands(
     signed: DataFrame,
     *,
-    id_col: str = "doc_id",
+    id_col: str,
+    as_id: str,
     num_hashes: int = NUM_HASHES,
     band_size: int = BAND_SIZE,
-    keep_all_bands: bool = False,
 ) -> DataFrame:
-    """Explode a signature frame to (id, band_id, band_hash) rows — the
-    LSH bucket keys. Docs with empty shingle sets (NULL minhash) are
-    dropped so they never collide. Shared by the self-join
-    (``lsh_candidate_pairs``) and the cross-relation incremental join
-    (``minhash_incremental_pairs``).
-
-    ``keep_all_bands=True`` additionally carries the full per-doc band
-    array (``__bands``) on every exploded row, which is what lets the
-    candidate joins apply the FIRST-MATCH filter (emit a pair only at
-    its lowest matching band) instead of a distinct() over the
-    candidate set — at corpus scale that distinct is a full shuffle of
-    every candidate pair (6x measured at 10x volume, BASELINE.md
-    round-7 A/B); the array costs n_bands hashes per row, bounded by
-    the signature size."""
-    n_bands = num_hashes // band_size
-    hash_arr = F.array(
-        *[
-            F.md5(
-                F.concat_ws(
-                    "", *[F.col(f"mh{b * band_size + j}") for j in range(band_size)]
+    """(``as_id``, ``__bands``): the md5 hash of each band of
+    ``band_size`` min-hashes — the LSH bucket keys. Docs with empty
+    shingle sets (NULL minhash) are dropped so they never collide."""
+    return signed.filter(F.col("mh0").isNotNull()).select(
+        F.col(id_col).alias(as_id),
+        F.array(
+            *[
+                F.md5(
+                    F.concat_ws(
+                        "", *[F.col(f"mh{b * band_size + j}") for j in range(band_size)]
+                    )
                 )
-            )
-            for b in range(n_bands)
-        ]
+                for b in range(num_hashes // band_size)
+            ]
+        ).alias("__bands"),
     )
-    out = (
-        signed.filter(F.col("mh0").isNotNull())
-        .select(F.col(id_col), hash_arr.alias("__bands"))
-        .select(
-            id_col, "__bands", F.posexplode("__bands").alias("band_id", "band_hash")
-        )
-    )
-    return out if keep_all_bands else out.drop("__bands")
 
 
 def lsh_candidate_pairs(
@@ -185,78 +236,58 @@ def lsh_candidate_pairs(
     band_size: int = BAND_SIZE,
     force_shuffle: bool = False,
 ) -> DataFrame:
-    """Band the signatures and self-join on (band_id, band_hash):
-    candidate pairs (id_a < id_b), each emitted EXACTLY ONCE via the
-    first-match band filter (see ``band_signatures`` keep_all_bands) —
-    no distinct() shuffle over the candidate set.
+    """Candidate pairs (id_a < id_b) of a signature frame: its band
+    self-join, each pair emitted exactly once.
 
     ``force_shuffle`` pins the join to sort-merge — see
     minhash_dedup_pairs for the sizing rule and the sf30 finding."""
-    n_bands = num_hashes // band_size
-    banded = band_signatures(
-        signed,
-        id_col=id_col,
-        num_hashes=num_hashes,
-        band_size=band_size,
-        keep_all_bands=True,
-    )
-    a = banded.alias("a")
-    b = banded.alias("b")
-    if force_shuffle:
-        b = b.hint("merge")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+    sides = [
+        _minhash_bands(
+            signed, id_col=id_col, as_id=i, num_hashes=num_hashes, band_size=band_size
         )
-        .filter(
-            _band_first_match(
-                F.col("a.__bands"), F.col("b.__bands"), F.col("a.band_id"), n_bands
-            )
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
+        for i in ("id_a", "id_b")
+    ]
+    return band_join(
+        *sides,
+        n_bands=num_hashes // band_size,
+        pair=F.col("id_a") < F.col("id_b"),
+        hint="merge" if force_shuffle else None,
     )
-
-
-def _band_first_match(
-    a_bands: Column, b_bands: Column, band_id: Column, n_bands: int
-) -> Column:
-    """Keep a banded candidate row only if no EARLIER band also matches
-    — the dedup-free "emit once" rule shared with the simhash pigeonhole
-    and hyperplane-LSH joins."""
-    keep = F.lit(True)
-    for e in range(n_bands - 1):
-        keep = keep & ((band_id <= F.lit(e)) | (a_bands[e] != b_bands[e]))
-    return keep
 
 
 def jaccard_verify(
     pairs: DataFrame,
     with_sh: DataFrame,
+    other_sh: DataFrame | None = None,
     *,
     id_col: str = "doc_id",
     threshold: float,
     force_shuffle: bool = False,
 ) -> DataFrame:
-    """Exact Jaccard on candidate pairs via array intersect/union over the
-    (distinct) shingle sets; keeps pairs >= threshold. The shingle-set
-    side is joined twice — at scale both joins shuffle on doc id once
-    (``force_shuffle``; sizing rule at minhash_dedup_pairs)."""
-    sets_a = with_sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
-    sets_b = with_sh.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
+    """THE exact Jaccard verify of the self and cross minhash paths.
+    ``pairs``' two columns name the sides; ``with_sh`` carries
+    (``id_col``, sh) for the first, ``other_sh`` for the second (the
+    corpus side of a cross join; default ``with_sh``, a self-join).
+    Array intersect/union over the (distinct) shingle sets, keeping
+    pairs >= threshold. Each set side is joined once — at scale both
+    joins shuffle on doc id (``force_shuffle``; sizing rule at
+    minhash_dedup_pairs)."""
+    ida, idb = pairs.columns[:2]
+    sa = with_sh.select(F.col(id_col).alias(ida), F.col("sh").alias("sh_a"))
+    sb = (with_sh if other_sh is None else other_sh).select(
+        F.col(id_col).alias(idb), F.col("sh").alias("sh_b")
+    )
     if force_shuffle:
-        sets_a = sets_a.hint("merge")
-        sets_b = sets_b.hint("merge")
+        sa = sa.hint("merge")
+        sb = sb.hint("merge")
     inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
     union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
     return (
-        pairs.join(sets_a, "id_a")
-        .join(sets_b, "id_b")
+        pairs.join(sa, ida)
+        .join(sb, idb)
         .withColumn("jaccard", F.round(inter / union, 6))
         .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+        .select(ida, idb, "jaccard")
     )
 
 
@@ -325,10 +356,7 @@ def minhash_dedup_pairs(
             )
         ).alias("sh_bytes"),
     ).collect()[0]
-    big = (
-        stats["docs"] > SHUFFLE_JOIN_MIN_DOCS
-        or (stats["sh_bytes"] or 0) > SHUFFLE_JOIN_MIN_SH_BYTES
-    )
+    big = needs_sort_merge(stats["docs"], stats["sh_bytes"] or 0)
     pairs = lsh_candidate_pairs(signed, id_col=id_col, force_shuffle=big)
     out = jaccard_verify(
         pairs, signed.select(id_col, "sh"), id_col=id_col, threshold=threshold,
@@ -395,12 +423,13 @@ def _cross_pairs_from_signed(
     force_shuffle: bool | None = None,
 ) -> DataFrame:
     """Band join + exact Jaccard verify between two SIGNATURE frames
-    (``with_minhash`` output: sh + mh0..mhK). Shared by the from-text
-    and stored-signature-table incremental paths and the streaming
-    sink; persist lifecycle belongs to the callers.
+    (``with_minhash`` output: sh + mh0..mhK), no pair predicate: every
+    (delta, corpus) candidate counts. Shared by the from-text and
+    stored-signature-table incremental paths and the streaming sink;
+    persist lifecycle belongs to the callers.
 
-    ``force_shuffle`` None (default) derives the join strategy from the
-    two sides' row counts — the INCREMENTAL twin of the
+    ``force_shuffle`` None (default) feeds the two sides' row counts to
+    ``needs_sort_merge`` — the INCREMENTAL twin of the
     ``minhash_dedup_pairs`` switch (round 12): at the fifth decade the
     sink's drain died building an auto-broadcast of the corpus-sized
     band/verify sides ("serialized results ... bigger than
@@ -419,46 +448,16 @@ def _cross_pairs_from_signed(
     store side is parquet-backed anyway), or pass an explicit
     ``force_shuffle`` derived from counts you already track."""
     if force_shuffle is None:
-        force_shuffle = (
-            d_signed.count() + c_signed.count() > SHUFFLE_JOIN_MIN_DOCS
-        )
-    n_bands = NUM_HASHES // BAND_SIZE
-    d_bands = band_signatures(d_signed, id_col=id_col, keep_all_bands=True).select(
-        F.col(id_col).alias("delta_id"),
-        F.col("__bands").alias("__dbands"),
-        "band_id",
-        "band_hash",
+        force_shuffle = needs_sort_merge(d_signed.count() + c_signed.count())
+    cand = band_join(
+        _minhash_bands(d_signed, id_col=id_col, as_id="delta_id"),
+        _minhash_bands(c_signed, id_col=id_col, as_id="corpus_id"),
+        n_bands=NUM_HASHES // BAND_SIZE,
+        hint="merge" if force_shuffle else None,
     )
-    c_bands = band_signatures(c_signed, id_col=id_col, keep_all_bands=True).select(
-        F.col(id_col).alias("corpus_id"),
-        F.col("__bands").alias("__cbands"),
-        "band_id",
-        "band_hash",
-    )
-    if force_shuffle:
-        c_bands = c_bands.hint("merge")
-    cand = (
-        d_bands.join(c_bands, ["band_id", "band_hash"])
-        .filter(
-            _band_first_match(
-                F.col("__dbands"), F.col("__cbands"), F.col("band_id"), n_bands
-            )
-        )
-        .select("delta_id", "corpus_id")
-    )
-    sets_d = d_signed.select(F.col(id_col).alias("delta_id"), F.col("sh").alias("sh_a"))
-    sets_c = c_signed.select(F.col(id_col).alias("corpus_id"), F.col("sh").alias("sh_b"))
-    if force_shuffle:
-        sets_d = sets_d.hint("merge")
-        sets_c = sets_c.hint("merge")
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    return (
-        cand.join(sets_d, "delta_id")
-        .join(sets_c, "corpus_id")
-        .withColumn("jaccard", F.round(inter / union, 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("delta_id", "corpus_id", "jaccard")
+    return jaccard_verify(
+        cand, d_signed, c_signed, id_col=id_col, threshold=threshold,
+        force_shuffle=force_shuffle,
     )
 
 
@@ -652,65 +651,35 @@ def simhash_near_pairs(
 ) -> DataFrame:
     """Pairs within Hamming distance <= max_hamming, using the pigeonhole
     trick: split the 64-bit signature into (max_hamming+1) chunks; any
-    pair within distance d must agree exactly on >= 1 chunk -> equi-join
-    per chunk instead of a cross join. bit_count over both halves
-    verifies exactly. At the default max_hamming=3 the chunks are 16
-    bits wide (the Manku et al. WWW'07 layout): 65k bucket values per
-    chunk keeps bucket population ~|corpus|/65k.
-
-    A pair agreeing on m chunks would surface m times; the FIRST-MATCH
-    filter — both signatures already ride the join for the Hamming
-    verify, so "every earlier chunk's XOR group is non-zero" is a few
-    bit ops — keeps each pair only at its lowest matching chunk. That
-    replaces the distinct() the multi-chunk matches otherwise need,
-    which at corpus scale is a full shuffle of every candidate pair
-    (measured 6x on the banded-LSH twin at 10x volume; BASELINE.md
-    round-7 first-match A/B)."""
+    pair within distance d must agree exactly on >= 1 chunk, so the
+    chunks are the band values of a ``band_join`` instead of a cross
+    join. bit_count over both halves verifies exactly. At the default
+    max_hamming=3 the chunks are 16 bits wide (the Manku et al. WWW'07
+    layout): 65k bucket values per chunk keeps bucket population
+    ~|corpus|/65k."""
     chunks = max_hamming + 1
-    layout = simhash_chunks(chunks)
-    banded = sigs.select(
-        id_col,
-        "simhash_lo",
-        "simhash_hi",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk_id"),
-                        F.shiftright(F.col(half), shift)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("chunk_val"),
-                    )
-                    for c, (half, shift, mask) in enumerate(layout)
-                ]
-            )
-        ).alias("ch"),
-    ).select(id_col, "simhash_lo", "simhash_hi", "ch.chunk_id", "ch.chunk_val")
-    a, b = banded.alias("a"), banded.alias("b")
-    diff = {
-        "simhash_lo": F.col("a.simhash_lo").bitwiseXOR(F.col("b.simhash_lo")),
-        "simhash_hi": F.col("a.simhash_hi").bitwiseXOR(F.col("b.simhash_hi")),
-    }
-    ham = (F.bit_count(diff["simhash_lo"]) + F.bit_count(diff["simhash_hi"])).cast(
+    vals = F.array(
+        *[
+            F.shiftright(F.col(half), shift).bitwiseAND(F.lit(mask))
+            for half, shift, mask in simhash_chunks(chunks)
+        ]
+    )
+    lo_a, hi_a, lo_b, hi_b = (F.col(c) for c in ("lo_a", "hi_a", "lo_b", "hi_b"))
+    sides = [
+        sigs.select(
+            F.col(id_col).alias(f"id_{t}"),
+            F.col("simhash_lo").alias(f"lo_{t}"),
+            F.col("simhash_hi").alias(f"hi_{t}"),
+            vals.alias("__bands"),
+        )
+        for t in ("a", "b")
+    ]
+    ham = (F.bit_count(lo_a.bitwiseXOR(lo_b)) + F.bit_count(hi_a.bitwiseXOR(hi_b))).cast(
         "bigint"
     )
-    first_match = F.lit(True)
-    for e, (half, shift, mask) in enumerate(layout[:-1]):
-        grp = F.shiftright(diff[half], shift).bitwiseAND(F.lit(mask))
-        first_match = first_match & ((F.col("a.chunk_id") <= e) | (grp != 0))
     return (
-        a.join(
-            b,
-            (F.col("a.chunk_id") == F.col("b.chunk_id"))
-            & (F.col("a.chunk_val") == F.col("b.chunk_val"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .filter(first_match)
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            ham.alias("hamming"),
-        )
+        band_join(*sides, n_bands=chunks, pair=F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b", ham.alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
     )
 
@@ -768,6 +737,55 @@ def containment_pairs(
     )
 
 
+def _dup_gram_positions(
+    df: DataFrame, *, id_col: str, text_col: str, n: int, min_df: int
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The positional-gram front end of the span operators: ``base`` =
+    (id, ``__tk`` tokens, n_tok) with NULL text as the empty document;
+    ``grams`` = the persisted (id, ``__pos``, ``__gram``) positional
+    n-grams; ``occ`` = (id, ``__pos``) of the grams that occur in >=
+    ``min_df`` distinct docs.
+
+    Scale shape: positional grams are one explode (O(tokens) rows, the
+    zip_with shingle chain — never O(tokens·n) regex work); the gram
+    document-frequency table is one (doc,gram)-distinct + one gram
+    aggregate; duplicated grams flow back via a shuffle EQUI-JOIN on
+    gram — NOT a broadcast, because at corpus scale the duplicated-gram
+    set grows with the corpus (unlike boilerplate's chrome-sized df>=5
+    set). The gram stream feeds two consumers (df table + membership
+    join), so it is persisted for the life of the plan — the caller
+    puts it on ``_cached_frames`` (release via ``release_cached``); at
+    100 TB the same role is played by materializing the positional-gram
+    table once."""
+    base = df.select(
+        F.col(id_col),
+        F.coalesce(tokens(text_col), F.array().cast("array<string>")).alias("__tk"),
+    ).select(
+        id_col,
+        "__tk",
+        F.size("__tk").cast("bigint").alias("n_tok"),
+    )
+    grams = (
+        base.filter(F.col("n_tok") >= n)
+        .select(
+            id_col,
+            F.posexplode(shingles(F.col("__tk"), n, distinct=False)).alias(
+                "__pos", "__gram"
+            ),
+        )
+        .persist()
+    )
+    dup = (
+        grams.select(id_col, "__gram")
+        .distinct()
+        .groupBy("__gram")
+        .agg(F.count("*").alias("__df"))
+        .filter(F.col("__df") >= min_df)
+        .select("__gram")
+    )
+    return base, grams, grams.join(dup, "__gram").select(id_col, "__pos")
+
+
 def dup_ngram_coverage(
     df: DataFrame,
     *,
@@ -791,40 +809,13 @@ def dup_ngram_coverage(
     not sum — the interval-union step of span dedup); ``dup_frac`` =
     covered / n_tok. Docs shorter than ``n`` tokens report zeros.
 
-    Scale shape: positional grams are one explode (O(tokens) rows, the
-    zip_with shingle chain — never O(tokens·n) regex work); the gram
-    document-frequency table is one (doc,gram)-distinct + one gram
-    aggregate; duplicated grams flow back via a shuffle EQUI-JOIN on
-    gram — NOT a broadcast, because at corpus scale the duplicated-gram
-    set grows with the corpus (unlike boilerplate's chrome-sized df>=5
-    set). The coverage explode multiplies only the DUPLICATED positions
-    by n, and the two count-distincts expand only that subset. The gram
-    stream feeds two consumers (df table + membership join), so it is
-    persisted for the life of the plan — ``_cached_frames`` contract as
-    minhash (release via ``release_cached``); at 100 TB the same role
-    is played by materializing the positional-gram table once."""
-    base = df.select(
-        F.col(id_col), tokens(text_col).alias("__tk")
-    ).select(
-        id_col,
-        "__tk",
-        F.coalesce(F.size("__tk"), F.lit(0)).cast("bigint").alias("n_tok"),
+    Front end: ``_dup_gram_positions``. The coverage explode multiplies
+    only the DUPLICATED positions by n, and the two count-distincts
+    expand only that subset. Caches the gram stream on the result —
+    call ``release_cached`` after the consuming action."""
+    base, grams, occ = _dup_gram_positions(
+        df, id_col=id_col, text_col=text_col, n=n, min_df=min_df
     )
-    grams = base.filter(F.col("n_tok") >= n).select(
-        id_col,
-        F.posexplode(shingles(F.col("__tk"), n, distinct=False)).alias(
-            "__pos", "__gram"
-        ),
-    ).persist()
-    dup = (
-        grams.select(id_col, "__gram")
-        .distinct()
-        .groupBy("__gram")
-        .agg(F.count("*").alias("__df"))
-        .filter(F.col("__df") >= min_df)
-        .select("__gram")
-    )
-    occ = grams.join(dup, "__gram").select(id_col, "__pos")
     cov = (
         occ.select(
             id_col,
@@ -876,54 +867,29 @@ def remove_dup_spans(
     spans and emits the cleaned token stream — the transform a curation
     pipeline actually applies before training.
 
-    Same front end as the coverage operator (positional grams, gram
-    document-frequency table, equi-join membership — never a broadcast,
-    the duplicated-gram set grows with the corpus). The rebuild is the
-    scale-sensitive part: instead of re-exploding the whole corpus into
-    tokens and re-aggregating (O(all tokens) shuffle rows), the covered
-    indices collapse to ONE per-doc set (bounded by doc length, only
-    for docs that HAVE duplicated spans) and the kept tokens are
-    computed MAP-SIDE by an indexed higher-order filter over the
-    original token array — untouched docs pass through the left join
-    with their token stream intact, paying nothing.
+    Same front end as the coverage operator (``_dup_gram_positions``).
+    The rebuild is the scale-sensitive part: instead of re-exploding
+    the whole corpus into tokens and re-aggregating (O(all tokens)
+    shuffle rows), the covered indices collapse to ONE per-doc set
+    (bounded by doc length, only for docs that HAVE duplicated spans)
+    and the kept tokens are computed MAP-SIDE by an indexed
+    higher-order filter over the original token array — untouched docs
+    pass through the left join with their token stream intact, paying
+    nothing.
 
     Returns (id, n_tok, kept_tokens, clean_text): clean_text is the
     space-joined kept tokens (canonical whitespace — the tokenizer
     contract shared with every text operator), '' for empty docs.
+    NULL text degrades to the empty document (n_tok 0, kept_tokens 0,
+    clean_text '') on BOTH engines: the front end coalesces it, where
+    a NULL token array would make kept_tokens NULL (ANSI size(NULL))
+    while the oracle emits 0.
     """
-    # NULL text degrades to the empty document (n_tok 0, kept_tokens 0,
-    # clean_text '') on BOTH engines: tokens(NULL) is NULL, and leaving
-    # it NULL would make kept_tokens NULL (ANSI size(NULL)) while the
-    # oracle emits 0 — a latent hash divergence.
-    base = df.select(
-        F.col(id_col),
-        F.coalesce(tokens(text_col), F.array().cast("array<string>")).alias("__tk"),
-    ).select(
-        id_col,
-        "__tk",
-        F.size("__tk").cast("bigint").alias("n_tok"),
-    )
-    grams = (
-        base.filter(F.col("n_tok") >= n)
-        .select(
-            id_col,
-            F.posexplode(shingles(F.col("__tk"), n, distinct=False)).alias(
-                "__pos", "__gram"
-            ),
-        )
-        .persist()
-    )
-    dup = (
-        grams.select(id_col, "__gram")
-        .distinct()
-        .groupBy("__gram")
-        .agg(F.count("*").alias("__df"))
-        .filter(F.col("__df") >= min_df)
-        .select("__gram")
+    base, grams, occ = _dup_gram_positions(
+        df, id_col=id_col, text_col=text_col, n=n, min_df=min_df
     )
     cov = (
-        grams.join(dup, "__gram")
-        .select(
+        occ.select(
             id_col,
             F.explode(
                 F.sequence(F.col("__pos"), F.col("__pos") + (n - 1))

@@ -8,16 +8,18 @@ Streaming Data in Distributed Systems, EDBT 2019):
 - **Candidate generators**, one per operator: the broadcast query set
   against the whole corpus (``brute_force_topk``,
   ``hard_negative_mining``), IVF cells (``ivf_topk``), hyperplane-LSH
-  band equi-joins (``ann_topk``, ``lsh_near_dup_pairs``,
-  ``banded_near_dup_pairs``), IVF or LSH cells over PQ codes
-  (``ivfpq_topk``, ``ivfpq_multiprobe_topk``), an ANN shortlist
-  (``rerank_exact``) and admitted corpus waves (``wave_triplet_mining``).
+  bands joined by ``dedup.band_join``, the one band equi-join every
+  near-dup operator runs (``banded_near_dup_pairs``, ``ann_topk``),
+  IVF or LSH cells over PQ codes (``ivfpq_topk``,
+  ``ivfpq_multiprobe_topk``), an ANN shortlist (``rerank_exact``) and
+  admitted corpus waves (``wave_triplet_mining``).
 - **Shared scorers**, written once: ``_topk`` (the per-query top-k
   window) and ``_cos_topk`` (exact cosine into it); ``_verify_pairs``
   (exact cosine over candidate pairs); ``_pq_encode`` and
   ``_adc_topk`` (PQ codes and the asymmetric-distance search);
   ``_triplets`` (the positive / hard-negative argmax);
-  ``_explode_bands`` (the band rows both LSH joins key on).
+  ``_banded_values`` (the per-band hyperplane values both LSH
+  operators band on).
 
 LSH and IVF candidates are verified by exact cosine, so their recall
 is tunable and their precision exact; PQ search scores compressed
@@ -34,6 +36,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.ident import quote_ident
+from .dedup import band_join
 from .parallelism import ensure_parallelism
 
 
@@ -122,34 +125,6 @@ def cosine_pairs_above(
         .filter(F.col("cos") >= threshold)
         .select("id_a", "id_b", "cos")
     )
-
-
-def lsh_near_dup_pairs(
-    corpus: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int,
-    threshold: float,
-    n_bits: int = 16,
-    band_bits: int = 4,
-) -> DataFrame:
-    """Embedding near-dup at scale: hyperplane-LSH band candidates, then
-    exact cosine verification on the candidate set only.
-
-    This is the production registration (cosine_pairs_above is the
-    quadratic ground-truth baseline, test-only): shuffle volume is
-    |corpus| × bands candidate rows, never |corpus|² — the equi-join on
-    (band_id, band_val) replaces the cross join. Candidates outside the
-    threshold are discarded by the exact verify, so precision is 1.0;
-    recall is governed by the band layout and is asserted against the
-    exact baseline in tests. Deterministic end-to-end (LCG hyperplanes),
-    hence oracle-checkable by reproducing the same planes as SQL
-    literals."""
-    corpus = ensure_parallelism(corpus)
-    signed = lsh_signatures(corpus, vec_col=vec_col, dim=dim, n_bits=n_bits)
-    cands = lsh_candidates(signed, id_col=id_col, n_bits=n_bits, band_bits=band_bits)
-    return _verify_pairs(corpus, cands, id_col=id_col, vec_col=vec_col, threshold=threshold)
 
 
 def _verify_pairs(
@@ -388,84 +363,6 @@ def _sign_bits_sql(vec_col: str, dim: int, planes: range) -> str:
     return " + ".join(terms)
 
 
-def _first_match_filter(
-    sig_a: str, sig_b: str, n_bands: int, band_bits: int
-) -> Column:
-    """Post-join filter that keeps a banded candidate row only at the
-    pair's LOWEST matching band: XOR the two signatures once, then the
-    row survives iff every band BEFORE the joined one has a non-zero
-    XOR group (i.e. differs). Each pair thus surfaces exactly once —
-    the collapse a distinct()/groupBy would otherwise buy with a full
-    shuffle of the candidate set. Measured at 10x corpus volume
-    (46M candidate pairs): 5.8s for the distinct form vs 1.0s for this
-    filter (BASELINE.md round-7 note)."""
-    mask = (1 << band_bits) - 1
-    diff = F.col(sig_a).bitwiseXOR(F.col(sig_b))
-    keep = F.lit(True)
-    for e in range(n_bands - 1):
-        grp = F.shiftright(diff, e * band_bits).bitwiseAND(F.lit(mask))
-        keep = keep & ((F.col("band_id") <= e) | (grp != 0))
-    return keep
-
-
-def _explode_bands(
-    signed: DataFrame, cols: list, n_bits: int, band_bits: int
-) -> DataFrame:
-    """``cols`` of ``signed`` plus one row per band: the
-    ``band_bits``-wide slices of ``lsh_sig`` as (band_id, band_val) —
-    the zero-shuffle projection both LSH band equi-joins key on."""
-    n_bands = n_bits // band_bits
-    mask = (1 << band_bits) - 1
-    bands = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(c).alias("band_id"),
-                    F.shiftright(F.col("lsh_sig"), c * band_bits)
-                    .bitwiseAND(F.lit(mask))
-                    .alias("band_val"),
-                )
-                for c in range(n_bands)
-            ]
-        )
-    ).alias("b")
-    names = signed.select(*cols).columns
-    return signed.select(*cols, bands).select(*names, "b.band_id", "b.band_val")
-
-
-def lsh_candidates(
-    signed: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    n_bits: int = 16,
-    band_bits: int = 4,
-) -> DataFrame:
-    """Bucket-join on signature bands -> candidate pairs (id_a < id_b),
-    each pair emitted EXACTLY ONCE: both signatures ride the join and
-    the first-match bit filter keeps a pair only at its LOWEST matching
-    band, replacing the distinct() a multi-band match otherwise needs —
-    one fewer exchange over the candidate set (the same rewrite as
-    ``ann_topk``; at 100 TB the removed distinct is a full shuffle of
-    every candidate pair)."""
-    n_bands = n_bits // band_bits
-    banded = _explode_bands(signed, [id_col, "lsh_sig"], n_bits, band_bits)
-    a = banded.select(
-        F.col(id_col).alias("id_a"), F.col("lsh_sig").alias("__siga"),
-        "band_id", "band_val",
-    )
-    b = banded.select(
-        F.col(id_col).alias("id_b"), F.col("lsh_sig").alias("__sigb"),
-        "band_id", "band_val",
-    )
-
-    first_match = _first_match_filter("__siga", "__sigb", n_bands, band_bits)
-    return (
-        a.join(b, ["band_id", "band_val"])
-        .filter((F.col("id_a") < F.col("id_b")) & first_match)
-        .select("id_a", "id_b")
-    )
-
-
 def _banded_values(
     corpus: DataFrame,
     *,
@@ -475,11 +372,13 @@ def _banded_values(
     n_bands: int,
     plane_stride: int,
 ) -> DataFrame:
-    """corpus + ``__bv`` = the band-count layout's per-band value array
-    (band j's ``band_bits``-wide integer over its own hyperplane family
-    at plane offset j*plane_stride) — THE computation both the pair
-    operator and the fifth-decade witness key on; one code path so the
-    witness can never drift from what the candidate join hashes."""
+    """corpus + ``__bv`` = the per-band value array (band j's
+    ``band_bits``-wide integer over its own hyperplane family at plane
+    offset j*plane_stride) — THE computation the pair operator, the ANN
+    top-k and the fifth-decade witness key on; one code path so the
+    witness can never drift from what the candidate join hashes. With
+    ``plane_stride == band_bits`` band j is bits [j*w, (j+1)*w) of the
+    contiguous ``lsh_signatures`` signature."""
     if plane_stride < band_bits:
         # Overlapping hyperplane families correlate band values across
         # bands, silently voiding the independence assumption behind
@@ -537,25 +436,29 @@ def banded_near_dup_pairs(
     n_bands: int,
     plane_stride: int,
 ) -> DataFrame:
-    """Embedding near-dup with INDEPENDENT per-band hyperplane
-    families — the post-60-bit layout (r10 verdict item 2): band j's
-    value is a ``band_bits``-wide integer from planes
-    ``[j*plane_stride, j*plane_stride + band_bits)``, so the width can
-    keep absorbing the corpus residual past the one-BIGINT cap that
-    clamps ``lsh_near_dup_pairs`` at 15 bits, and the band count grows
-    to hold the LSH threshold (knob physics and the b =
-    ceil(4^(w/15)) rule in ``knobs.scaled_band_layout``).
+    """Embedding near-dup at scale: hyperplane-LSH band candidates from
+    ``band_join``, then exact cosine verification on the candidate set
+    only (``_verify_pairs``; cosine_pairs_above is the quadratic
+    ground-truth baseline, test-only). Shuffle volume is b·|corpus|
+    band rows, never |corpus|²; candidates outside the threshold are
+    discarded by the verify, so precision is 1.0 and recall is governed
+    by the band layout (asserted against the exact baseline in tests).
+    Deterministic end-to-end (LCG hyperplanes), hence oracle-checkable
+    by reproducing the same planes as SQL literals.
 
-    ``plane_stride`` pins band j's plane family INDEPENDENT of the
-    width knob (family j always starts at plane j*stride), so the same
-    static hyperplane-literal grid serves every corpus size on both
-    engines — the oracle masks terms with i >= the width knob instead
-    of re-deriving plane indices (plans/scaled_knobs.py).
-
-    Same candidate/verify shape as ``lsh_near_dup_pairs``: band
-    equi-join (shuffle volume b·|corpus| rows, never |corpus|²),
-    first-match filter over the band-value ARRAY replaces the
-    distinct(), exact-cosine verify makes precision 1.0."""
+    Band j's value is a ``band_bits``-wide integer from planes
+    ``[j*plane_stride, j*plane_stride + band_bits)``. With
+    ``plane_stride == band_bits`` that is the sliced contiguous
+    signature (``embedding_near_dups``, the bits-scaled variant); a
+    stride independent of the width (the band-count layout, r10 verdict
+    item 2) lets the width keep absorbing the corpus residual past the
+    one-BIGINT 60-bit cap while the band count grows to hold the LSH
+    threshold (knob physics and the b = ceil(4^(w/15)) rule in
+    ``knobs.scaled_band_layout``), and pins band j's plane family
+    independent of the width knob, so the same static hyperplane-literal
+    grid serves every corpus size on both engines — the oracle masks
+    terms with i >= the width knob instead of re-deriving plane indices
+    (plans/scaled_knobs.py)."""
     corpus = ensure_parallelism(corpus)
     signed = _banded_values(
         corpus,
@@ -565,30 +468,11 @@ def banded_near_dup_pairs(
         n_bands=n_bands,
         plane_stride=plane_stride,
     )
-    banded = signed.select(
-        id_col, "__bv", F.posexplode("__bv").alias("band_id", "band_val")
-    )
-    a_side = banded.select(
-        F.col(id_col).alias("id_a"), F.col("__bv").alias("__bva"),
-        "band_id", "band_val",
-    )
-    b_side = banded.select(
-        F.col(id_col).alias("id_b"), F.col("__bv").alias("__bvb"),
-        "band_id", "band_val",
-    )
-    # First-match filter over the value arrays (same collapse as
-    # _first_match_filter, per-band arrays instead of BIGINT groups).
-    keep = F.lit(True)
-    for e in range(n_bands - 1):
-        keep = keep & (
-            (F.col("band_id") <= e)
-            | (F.col("__bva")[e] != F.col("__bvb")[e])
-        )
-    cands = (
-        a_side.join(b_side, ["band_id", "band_val"])
-        .filter((F.col("id_a") < F.col("id_b")) & keep)
-        .select("id_a", "id_b")
-    )
+    sides = [
+        signed.select(F.col(id_col).alias(i), F.col("__bv").alias("__bands"))
+        for i in ("id_a", "id_b")
+    ]
+    cands = band_join(*sides, n_bands=n_bands, pair=F.col("id_a") < F.col("id_b"))
     return _verify_pairs(corpus, cands, id_col=id_col, vec_col=vec_col, threshold=threshold)
 
 
@@ -603,46 +487,39 @@ def ann_topk(
     n_bits: int = 16,
     band_bits: int = 4,
 ) -> DataFrame:
-    """Approximate top-k: LSH band candidates via an exploded-band HASH
-    equi-join, then exact cosine + per-query top-k on candidates only.
+    """Approximate top-k: LSH band candidates from ``band_join`` (the
+    query side broadcast), then exact cosine + per-query top-k on
+    candidates only.
 
-    Plan shape (the 100 TB path): each side's signature explodes into
-    n_bands (band_id, band_val) rows — a zero-shuffle projection — and
-    candidates come from a broadcast hash join on that key, never from a
-    band-match DISJUNCTION. An OR of band equalities has no single hash
-    key, so Spark plans it as BroadcastNestedLoopJoin — |corpus| ×
-    |queries| predicate evaluations, which degrades quadratically as the
-    query count grows. With the exploded form the candidate set is
-    IDENTICAL (a pair survives iff ANY band matches) and the join is
-    O(matching band rows).
-
-    A pair matching in m bands would surface m times; the FIRST-MATCH
-    filter (emit only at the lowest matching band — both full
-    signatures ride the join, so "no earlier band also matches" is a
-    post-join bit comparison) makes each pair surface exactly once.
-    That kills the dedup aggregation a groupBy would need, so the only
-    exchange in the whole operator is the per-query top-k window's."""
+    Plan shape (the 100 TB path): each side's ``n_bits // band_bits``
+    band values (band j = signature bits [j*w, (j+1)*w), the
+    ``_banded_values`` layout with plane_stride = band_bits) explode to
+    (band_id, band_val) rows and candidates come from a broadcast hash
+    join on that key, never from a band-match DISJUNCTION, which has no
+    single hash key and plans as BroadcastNestedLoopJoin — |corpus| ×
+    |queries| predicate evaluations. The candidate set is IDENTICAL (a
+    pair survives iff ANY band matches), each pair surfaces once, and
+    the only exchange in the whole operator is the per-query top-k
+    window's."""
     n_bands = n_bits // band_bits
 
-    def banded(df: DataFrame, id_alias: str, vec_alias: str, sig_alias: str) -> DataFrame:
-        signed = lsh_signatures(df, vec_col=vec_col, dim=dim, n_bits=n_bits)
-        return _explode_bands(
-            signed,
-            [
-                F.col(id_col).alias(id_alias),
-                as_double(vec_col).alias(vec_alias),
-                F.col("lsh_sig").alias(sig_alias),
-            ],
-            n_bits,
-            band_bits,
+    def side(df: DataFrame, id_alias: str, vec_alias: str) -> DataFrame:
+        return _banded_values(
+            df, vec_col=vec_col, dim=dim, band_bits=band_bits, n_bands=n_bands,
+            plane_stride=band_bits,
+        ).select(
+            F.col(id_col).alias(id_alias),
+            as_double(vec_col).alias(vec_alias),
+            F.col("__bv").alias("__bands"),
         )
 
-    banded_c = banded(ensure_parallelism(corpus), "neighbor_id", "cvec", "__csig")
-    banded_q = banded(queries, "query_id", "qvec", "__qsig")
-    first_match = _first_match_filter("__csig", "__qsig", n_bands, band_bits)
     return _cos_topk(
-        banded_c.join(F.broadcast(banded_q), ["band_id", "band_val"]).filter(
-            (F.col("query_id") != F.col("neighbor_id")) & first_match
+        band_join(
+            side(ensure_parallelism(corpus), "neighbor_id", "cvec"),
+            side(queries, "query_id", "qvec"),
+            n_bands=n_bands,
+            pair=F.col("query_id") != F.col("neighbor_id"),
+            hint="broadcast",
         ),
         k,
     )

@@ -337,15 +337,14 @@ def _decode_image_stream(
     green_size = 256 + 24 + (1 << cache_bits if cache_bits else 0)
     groups = []
     for _ in range(n_groups):
-        groups.append(
-            (
-                _read_prefix_code(bits, green_size),
-                _read_prefix_code(bits, 256),
-                _read_prefix_code(bits, 256),
-                _read_prefix_code(bits, 256),
-                _read_prefix_code(bits, 40),
-            )
+        codes = (
+            _read_prefix_code(bits, green_size),
+            _read_prefix_code(bits, 256),
+            _read_prefix_code(bits, 256),
+            _read_prefix_code(bits, 256),
+            _read_prefix_code(bits, 40),
         )
+        groups.append(codes + (_zero_bit_fill(codes, cache_bits),))
     cache = [0] * (1 << cache_bits) if cache_bits else None
     cache_shift = 32 - cache_bits if cache_bits else 0
     n = xsize * height
@@ -358,6 +357,22 @@ def _decode_image_stream(
             g = groups[meta[(y >> meta_bits) * mw + (x >> meta_bits)]]
         else:
             g = groups[0]
+        if g[5] is not None:
+            # every pixel up to the group's tile edge is one value and
+            # reads no bits: fill the run at C speed
+            end = n
+            if meta is not None:
+                end = pos + min(xsize, ((x >> meta_bits) + 1) << meta_bits) - x
+            is_cache, val = g[5]
+            if is_cache:
+                px = cache[val]
+            else:
+                px = val
+                if cache is not None:
+                    cache[((_HASH_MUL * px) & 0xFFFFFFFF) >> cache_shift] = px
+            pixels[pos:end] = [px] * (end - pos)
+            pos = end
+            continue
         sym = g[0].read(bits)
         if sym < 256:
             red = g[1].read(bits)
@@ -391,6 +406,25 @@ def _decode_image_stream(
             pixels[pos] = cache[idx]
             pos += 1
     return pixels, transforms
+
+
+def _zero_bit_fill(codes, cache_bits: int):
+    """(is_cache, value) when a group's codes decode every pixel to
+    one value without reading a bit — a literal whose green, red, blue
+    and alpha codes are all single-symbol (value: the ARGB pixel), or a
+    single-symbol in-range color-cache hit (value: the cache index) —
+    else None."""
+    green = codes[0].single
+    if green is None:
+        return None
+    if green < 256:
+        red, blue, alpha = (c.single for c in codes[1:4])
+        if None in (red, blue, alpha):
+            return None
+        return False, (alpha << 24) | (red << 16) | (green << 8) | blue
+    if green >= 280 and green - 280 < (1 << cache_bits if cache_bits else 0):
+        return True, green - 280
+    return None
 
 
 def _subsample(size: int, bits: int) -> int:

@@ -231,7 +231,7 @@ def value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     "trending_daily",
     oracle="""
 WITH d AS (
-    SELECT date_trunc('day', ts) AS day, event_type, CAST(COUNT(*) AS BIGINT) AS n
+    SELECT CAST(ts AS DATE) AS day, event_type, CAST(COUNT(*) AS BIGINT) AS n
     FROM events GROUP BY 1, 2
 )
 SELECT day, event_type, n, rn FROM (

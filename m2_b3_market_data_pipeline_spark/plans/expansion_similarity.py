@@ -18,9 +18,9 @@ from ..operators.multimodal import attach_binary, extract_features, sample_frame
 from ..operators.similarity import (
     _hyperplane,
     ann_topk,
+    banded_near_dup_pairs,
     brute_force_topk,
     ivf_topk,
-    lsh_near_dup_pairs,
     pq_ann_topk,
     pq_codes,
 )
@@ -89,7 +89,7 @@ def _lsh_sig_sql(vec_expr: str, *, dim: int = EMBED_DIM, n_bits: int = LSH_BITS)
 
 def _lsh_band_sql(source: str) -> str:
     """UNION ALL of (id, band_id, band_val) rows — DuckDB's equivalent of
-    the band explode in ``lsh_candidates``."""
+    the band explode in ``dedup.band_join``."""
     selects = [
         f"SELECT vec_id, {b} AS band_id, (sig >> {b * LSH_BAND_BITS}) & {_LSH_MASK} AS band_val FROM {source}"
         for b in range(_LSH_BANDS)
@@ -122,15 +122,16 @@ WHERE ROUND(list_inner_product(sa.v, sb.v) /
 def embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup pairs at scale: hyperplane-LSH band candidates
     + exact-cosine verify on candidates only (operators/similarity.py::
-    lsh_near_dup_pairs). Shuffle volume is docs×bands, never docs² — the
-    quadratic ``cosine_pairs_above`` form is demoted to the test-only
-    recall baseline. The oracle reproduces the deterministic LCG
-    hyperplanes as SQL literals, so this approximate operator is still
-    hash-checked end-to-end."""
+    banded_near_dup_pairs, bands sliced from one contiguous signature:
+    plane_stride = band width). Shuffle volume is docs×bands, never
+    docs² — the quadratic ``cosine_pairs_above`` form is demoted to the
+    test-only recall baseline. The oracle reproduces the deterministic
+    LCG hyperplanes as SQL literals, so this approximate operator is
+    still hash-checked end-to-end."""
     emb = load(spark, sf_dir, "embeddings")
-    return lsh_near_dup_pairs(
+    return banded_near_dup_pairs(
         emb, dim=EMBED_DIM, threshold=NEAR_DUP_THRESHOLD,
-        n_bits=LSH_BITS, band_bits=LSH_BAND_BITS,
+        band_bits=LSH_BAND_BITS, n_bands=_LSH_BANDS, plane_stride=LSH_BAND_BITS,
     )
 
 

@@ -37,7 +37,6 @@ from ..operators.similarity import (
     _hyperplane,
     banded_near_dup_pairs,
     ivfpq_multiprobe_topk,
-    lsh_near_dup_pairs,
 )
 from .dedup_quality import SEM_THRESHOLD
 from .expansion_similarity import (
@@ -147,12 +146,13 @@ def embedding_near_dups_bits_scaled(spark: SparkSession, sf_dir: str) -> DataFra
     threshold as ``embedding_near_dups``; slope in SCALE.md §14."""
     emb, n = _emb_count(spark, sf_dir)
     bb = scaled_band_bits(n, target_occupancy=BAND_OCC, lo=BAND_LO, hi=BAND_HI)
-    return lsh_near_dup_pairs(
+    return banded_near_dup_pairs(
         emb,
         dim=EMBED_DIM,
         threshold=NEAR_DUP_THRESHOLD,
-        n_bits=ND_BANDS * bb,
         band_bits=bb,
+        n_bands=ND_BANDS,
+        plane_stride=bb,
     )
 
 
@@ -333,7 +333,7 @@ _BLW_W_SQL_S, _BL_B_SQL_S = band_layout_sql(
 
 
 # Pair-level witness SQL for the LOCAL fifth-decade check
-# (tools/scale_band_witness.py; SCALE.md §22.3). Not registered: below
+# (tools/scale_band_witness.py at commit f6dc786; SCALE.md §22.3). Not registered: below
 # sf1 the sampled corpus has no near-dup pairs, so its driver row
 # would be the empty relation — the registered witness below
 # hash-checks the banding computation itself instead, which has
@@ -379,7 +379,8 @@ def embedding_bands_witness(spark: SparkSession, sf_dir: str) -> DataFrame:
     knobs recomputed from the sample cardinality on both sides (the
     dedup_clusters_sample semantics). The derived PAIR set is checked
     at sf100 by the same sample through BANDS_WITNESS_PAIRS_SQL
-    (tools/scale_band_witness.py, recorded in SCALE.md §22.3) rather
+    (tools/scale_band_witness.py at commit f6dc786, recorded in
+    SCALE.md §22.3) rather
     than registered, because below sf1 the sampled corpus has no
     near-dup pairs and an always-empty driver row is no evidence."""
     from ..operators.similarity import banded_signatures_df

@@ -7,11 +7,12 @@ from a header it has not checked.
 One deterministic mutation fuzz runs over the writers' own outputs
 (every ``encode_image`` format, plus MJPEG-AVI, MP4, animated GIF and
 WAV): byte flips, truncations, and header length/dimension fields
-inflated to large values. Four crafted bombs pin the decode-size
-bound: a JPEG whose SOF claims 60000x60000, a lossless WebP whose
-VP8L header claims 16383x16383, a 16x16 PNG whose IDAT inflates
-to 400 MiB, and an MP4 whose sample table lists one small JPEG
-extent past the decoded-frames bound."""
+inflated to large values. Crafted bombs pin the decode-size bound: a
+JPEG whose SOF claims 60000x60000, a lossless WebP whose VP8L header
+claims 16383x16383, a 16x16 PNG whose IDAT inflates to 400 MiB, and
+an MP4 whose sample table lists one small JPEG extent past the
+decoded-frames bound; a VP8L stream that spends no bits per pixel
+decodes its header-sized raster within the time bound."""
 
 from __future__ import annotations
 
@@ -39,6 +40,7 @@ from m2_b3_market_data_pipeline_spark.operators.multimodal import (
 )
 from m2_b3_market_data_pipeline_spark.operators.webp import (
     decode_webp,
+    encode_webp_vp8l,
     webp_meta,
 )
 from tests.test_mp4_decode import _independent_mp4, _solid_frames
@@ -244,6 +246,26 @@ def test_vp8l_header_claiming_16383_squared_rejected_before_allocation():
     payload[at + 1 : at + 5] = hdr.to_bytes(4, "little")
     assert webp_meta(bytes(payload))["width"] == 16383
     _raises_fast(decode_webp, bytes(payload), "canvas bound")
+
+
+def test_vp8l_zero_bit_pixels_fill_within_the_bound():
+    """A VP8L stream whose prefix codes are all single-symbol reads no
+    bits per pixel, so its header alone sets the work: a solid 4x4
+    raster re-headed as 2048x2048 decodes within the bound, every pixel
+    the one literal."""
+    rgb = bytes([200, 100, 50])
+    payload = bytearray(
+        encode_webp_vp8l(DecodedImage(4, 4, rgb * 16), use_lz77=False)
+    )
+    at = payload.index(b"VP8L") + 8
+    hdr = int.from_bytes(payload[at + 1 : at + 5], "little")
+    hdr = (hdr & ~((1 << 28) - 1)) | 2047 | (2047 << 14)
+    payload[at + 1 : at + 5] = hdr.to_bytes(4, "little")
+    t0 = time.perf_counter()
+    img = decode_webp(bytes(payload))
+    assert time.perf_counter() - t0 < PAYLOAD_SECONDS
+    assert (img.width, img.height) == (2048, 2048)
+    assert img.pixels == rgb * (2048 * 2048)
 
 
 def test_png_deflate_bomb_inflates_only_what_ihdr_implies():

@@ -7,9 +7,11 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from m2_b3_market_data_pipeline_spark.operators.dedup import (
+    dup_ngram_coverage,
     exact_dedup,
     minhash_dedup_pairs,
     ngram_jaccard_pairs,
+    release_cached,
     simhash_near_pairs,
     simhash_signatures,
 )
@@ -19,6 +21,7 @@ from m2_b3_market_data_pipeline_spark.operators.similarity import (
     cosine_pairs_above,
     ivf_topk,
 )
+from m2_b3_market_data_pipeline_spark.plans.registry import load
 
 
 def _docs(spark):
@@ -245,7 +248,9 @@ def test_lsh_near_dups_subset_of_exact_with_recall(spark, sf_dir):
     verify) must be a SUBSET of the quadratic ground truth with identical
     cosines (precision 1.0 — the verify step guarantees it), and recall
     above a floor at the registered band layout."""
-    from m2_b3_market_data_pipeline_spark.operators.similarity import lsh_near_dup_pairs
+    from m2_b3_market_data_pipeline_spark.operators.similarity import (
+        banded_near_dup_pairs,
+    )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     exact = {
@@ -254,7 +259,9 @@ def test_lsh_near_dups_subset_of_exact_with_recall(spark, sf_dir):
     }
     approx = {
         (r.id_a, r.id_b): r.cos
-        for r in lsh_near_dup_pairs(emb, dim=64, threshold=0.45).collect()
+        for r in banded_near_dup_pairs(
+            emb, dim=64, threshold=0.45, band_bits=4, n_bands=4, plane_stride=4
+        ).collect()
     }
     assert set(approx) <= set(exact)
     for key, cos in approx.items():
@@ -339,3 +346,261 @@ def test_pq_ann_topk_invariants(spark, sf_dir):
         assert out.withColumn("p", prev).filter(F.col("p") > F.col("adist")).count() == 0
     finally:
         out.unpersist()
+
+
+def test_dup_ngram_coverage_interval_union(spark):
+    # Docs 1 and 2 share a 6-token run => two overlapping 5-gram
+    # positions, covering 6 distinct token indices (union, not 10).
+    shared = "alpha beta gamma delta epsilon zeta"
+    docs = spark.createDataFrame(
+        [
+            (1, f"{shared} unique one two"),
+            (2, f"other start {shared}"),
+            (3, "nothing in common with anybody else at all"),
+            (4, "tiny doc"),  # < n tokens
+        ],
+        "doc_id long, text string",
+    )
+    out = dup_ngram_coverage(docs, n=5, min_df=2)
+    got = {r.doc_id: r for r in out.collect()}
+    release_cached(out)
+    assert got[1].dup_positions == 2 and got[1].covered_tokens == 6
+    assert got[2].dup_positions == 2 and got[2].covered_tokens == 6
+    assert got[1].n_tok == 9
+    assert abs(got[1].dup_frac - round(6 / 9, 6)) < 1e-9
+    assert got[3].dup_positions == 0 and got[3].covered_tokens == 0
+    assert got[3].dup_frac == 0.0
+    # short doc still reports a row, all zeros
+    assert got[4].n_tok == 2 and got[4].covered_tokens == 0
+
+
+def test_dup_ngram_coverage_within_doc_repeat_not_counted(spark):
+    # A 5-gram repeated twice INSIDE one doc but appearing in no other
+    # doc has document frequency 1 — not a cross-doc duplicate.
+    phrase = "one two three four five"
+    docs = spark.createDataFrame(
+        [(1, f"{phrase} filler {phrase}"), (2, "entirely different words here now")],
+        "doc_id long, text string",
+    )
+    out = dup_ngram_coverage(docs, n=5, min_df=2)
+    got = {r.doc_id: r for r in out.collect()}
+    release_cached(out)
+    assert got[1].dup_positions == 0 and got[1].covered_tokens == 0
+
+
+def test_dup_ngram_coverage_null_text_counts_as_zero(spark):
+    docs = spark.createDataFrame(
+        [(1, None), (2, "one two three four five six"), (3, "one two three four five six")],
+        "doc_id long, text string",
+    )
+    out = dup_ngram_coverage(docs, n=5, min_df=2)
+    got = {r.doc_id: r for r in out.collect()}
+    release_cached(out)
+    assert got[1].n_tok == 0 and got[1].covered_tokens == 0 and got[1].dup_frac == 0.0
+    assert got[2].covered_tokens == 6  # the planted twins still match
+
+
+def test_dup_span_removal_cuts_exactly_the_planted_span(spark):
+    """Plant one 6-token sentence verbatim in two docs and nowhere
+    else: removal must cut exactly that span from both (every token of
+    it is under some duplicated 5-gram), keep everything else, and
+    leave the third doc untouched. Also the cross-operator invariant:
+    kept_tokens == n_tok - covered_tokens per doc, with the covered
+    side computed by the independent dup_ngram_coverage operator."""
+    from m2_b3_market_data_pipeline_spark.operators.dedup import (
+        dup_ngram_coverage,
+        release_cached,
+        remove_dup_spans,
+    )
+
+    span = "the quick brown fox jumps high"
+    docs = spark.createDataFrame(
+        [
+            (1, f"alpha beta {span} gamma delta"),
+            (2, f"one two three {span} four five six"),
+            (3, "totally unrelated text with no repeats at all here"),
+        ],
+        "doc_id long, text string",
+    )
+    out = remove_dup_spans(docs, n=5, min_df=2)
+    got = {r.doc_id: r for r in out.collect()}
+    release_cached(out)
+    assert got[1].clean_text == "alpha beta gamma delta"
+    assert got[2].clean_text == "one two three four five six"
+    assert got[3].clean_text == "totally unrelated text with no repeats at all here"
+    assert got[1].kept_tokens == 4 and got[2].kept_tokens == 6
+
+    cov_df = dup_ngram_coverage(docs, n=5, min_df=2)
+    cov = {r.doc_id: r for r in cov_df.collect()}
+    release_cached(cov_df)
+    for d in (1, 2, 3):
+        assert got[d].kept_tokens == cov[d].n_tok - cov[d].covered_tokens, d
+
+
+def test_remove_dup_spans_null_text_degrades_to_empty(spark):
+    """NULL text must degrade to the empty document (n_tok 0,
+    kept_tokens 0, clean_text '') exactly as the DuckDB oracle does —
+    not NULL kept_tokens from ANSI size(NULL)."""
+    from m2_b3_market_data_pipeline_spark.operators.dedup import (
+        release_cached,
+        remove_dup_spans,
+    )
+
+    docs = spark.createDataFrame(
+        [
+            (1, None),
+            (2, "a b c d e f"),
+            (3, "a b c d e f"),
+        ],
+        "doc_id long, text string",
+    )
+    out = remove_dup_spans(docs, n=5, min_df=2)
+    got = {r.doc_id: r for r in out.collect()}
+    release_cached(out)
+    assert got[1].n_tok == 0
+    assert got[1].kept_tokens == 0 and got[1].clean_text == ""
+    # The duplicated docs still get fully cut (regression guard).
+    assert got[2].kept_tokens == 0 and got[3].kept_tokens == 0
+
+
+def test_scaled_near_dups_precision_one_vs_exact(spark, sf_dir):
+    """The bits-scaled near-dup path verifies candidates with exact
+    cosine, so found pairs ⊆ exact pairs at the same threshold
+    (precision 1.0) — the property that makes LSH candidate pruning
+    safe. Recall is a knob trade, reported not asserted."""
+    from m2_b3_market_data_pipeline_spark.plans.scaled_knobs import (
+        embedding_near_dups_bits_scaled,
+    )
+
+    emb = load(spark, sf_dir, "embeddings")
+    exact = {
+        (r.id_a, r.id_b)
+        for r in cosine_pairs_above(emb, threshold=0.45).collect()
+    }
+    found = {
+        (r.id_a, r.id_b)
+        for r in embedding_near_dups_bits_scaled(spark, sf_dir).collect()
+    }
+    assert found <= exact
+
+
+def test_minhash_join_strategy_sizing_rule(spark, sf_dir):
+    """The sf30 finding's rule, pinned both ways: at fixture scale the
+    minhash pair path keeps the estimator's broadcasts (zero
+    SortMergeJoin — the same-window A/B showed forced-merge costing
+    +27%/+87% where broadcast fits), while force_shuffle pins every
+    corpus-derived join to sort-merge (the shape that survived sf30
+    where the auto-broadcast died). The threshold constant carries the
+    measured boundary."""
+    from m2_b3_market_data_pipeline_spark.operators.dedup import (
+        SHUFFLE_JOIN_MIN_DOCS,
+        jaccard_verify,
+        lsh_candidate_pairs,
+        release_cached,
+        with_minhash,
+    )
+    from m2_b3_market_data_pipeline_spark.plans import all_queries
+    from m2_b3_market_data_pipeline_spark.plans.registry import load
+
+    assert 438_350 < SHUFFLE_JOIN_MIN_DOCS < 1_059_006  # the measured boundary
+
+    # Small corpus -> the registered query keeps the broadcast plan.
+    df = all_queries.QUERIES["minhash_dedup"](spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    release_cached(df)
+    assert "SortMergeJoin" not in plan, plan[:1500]
+
+    # force_shuffle -> every pair-path join is sort-merge, none broadcast.
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
+    signed = with_minhash(docs).persist()
+    try:
+        pairs = lsh_candidate_pairs(signed, force_shuffle=True)
+        out = jaccard_verify(
+            pairs, signed.select("doc_id", "sh"), threshold=0.5, force_shuffle=True
+        )
+        forced = out._jdf.queryExecution().executedPlan().toString()
+    finally:
+        signed.unpersist()
+    # >= 3 sort-merge joins = the banded self-join + both verify joins.
+    # with_minhash's internal signature left-join stays
+    # estimator-decided (NOT hinted): its build side is an AGGREGATE
+    # output whose runtime size AQE measures accurately — at sf30 it
+    # chose sort-merge by itself (the probe recorded 11 SMJ / 0 BHJ),
+    # while at fixture scale its broadcast is correct and cheap.
+    assert forced.count("SortMergeJoin") >= 3, forced[:1500]
+
+
+def test_incremental_cross_pairs_shuffle_switch(spark):
+    """The fifth-decade streaming finding (round 12): the incremental
+    band/verify joins must pin to SORT-MERGE past the doc threshold —
+    at 3.05M stored docs the auto-broadcast of the corpus-sized sides
+    died on spark.driver.maxResultSize mid-drain. force_shuffle=True
+    plans SortMergeJoin with zero BroadcastHashJoin; the small-corpus
+    default keeps the (faster there) broadcast plan; pair OUTPUT is
+    identical under both strategies."""
+    from m2_b3_market_data_pipeline_spark.operators.dedup import (
+        _cross_pairs_from_signed,
+        fan_out,
+        with_minhash,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, f"alpha beta gamma delta epsilon zeta eta theta doc{i % 3}")
+         for i in range(12)],
+        "doc_id long, text string",
+    )
+    d = with_minhash(fan_out(docs.filter("doc_id % 2 = 0"))).persist()
+    c = with_minhash(fan_out(docs.filter("doc_id % 2 = 1"))).persist()
+    try:
+        forced = _cross_pairs_from_signed(d, c, threshold=0.3, force_shuffle=True)
+        plan = forced._jdf.queryExecution().executedPlan().toString()
+        assert "SortMergeJoin" in plan
+        assert "BroadcastHashJoin" not in plan
+        auto = _cross_pairs_from_signed(d, c, threshold=0.3)  # tiny: stays broadcast-eligible
+        got_f = {(r.delta_id, r.corpus_id, r.jaccard) for r in forced.collect()}
+        got_a = {(r.delta_id, r.corpus_id, r.jaccard) for r in auto.collect()}
+        assert got_f == got_a and got_f, "strategy must not change pairs"
+    finally:
+        d.unpersist()
+        c.unpersist()
+
+
+def test_one_near_dup_core():
+    """Every near-dup candidate generator runs dedup.band_join: dedup.py
+    and similarity.py hold ONE band equi-join (a join keyed on band or
+    chunk ids) and ONE first-match loop between them, and the deleted
+    per-operator copies do not come back."""
+    import ast
+    import inspect
+    import pathlib
+
+    from m2_b3_market_data_pipeline_spark.operators import dedup, similarity
+
+    def banded(node) -> bool:
+        text = ast.unparse(node)
+        return "band_id" in text or "chunk_id" in text
+
+    joins = loops = 0
+    for mod in (dedup, similarity):
+        for node in ast.walk(ast.parse(inspect.getsource(mod))):
+            if isinstance(node, ast.For) and banded(node):
+                loops += 1
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "join"
+                and any(banded(a) for a in node.args + node.keywords)
+            ):
+                joins += 1
+    assert (joins, loops) == (1, 1)
+
+    package = pathlib.Path(dedup.__file__).parents[1]
+    source = "\n".join(p.read_text() for p in package.rglob("*.py"))
+    for name in (
+        "lsh_near_dup_pairs",
+        "lsh_candidates",
+        "_first_match_filter",
+        "_band_first_match",
+        "minhash_signature",
+    ):
+        assert f"def {name}(" not in source, name

@@ -56,3 +56,36 @@ def test_entry_smoke(spark):
     df = e.entry(spark)
     assert df.count() > 0
     assert set(e.oracle_sql()) <= set(e.queries())
+
+
+def test_trending_daily_oracle_is_deterministic_on_adversarial_events(tmp_path):
+    """The trending_daily oracle keeps the NULL-day group of the
+    adversarial fixture's NULL-ts event under parallel DuckDB: 30 fresh
+    4-thread connections each return the 1-thread result."""
+    import pathlib
+    import sys
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    sys.path.insert(0, str(pathlib.Path(__file__).parents[1] / "tools"))
+    from make_adversarial_data import PLANTS
+
+    table = pq.read_table(f"{SF_DIR}/events.parquet")
+    table = pa.concat_tables(
+        [table, pa.Table.from_pylist(PLANTS["events"], schema=table.schema)]
+    )
+    path = tmp_path / "events.parquet"
+    pq.write_table(table, path, compression="snappy")
+
+    def run(threads: int):
+        con = duckdb.connect(config={"threads": threads})
+        try:
+            con.execute(f"CREATE VIEW events AS SELECT * FROM '{path}'")
+            return _canon_frame(con.execute(all_queries.ORACLES["trending_daily"]).df())
+        finally:
+            con.close()
+
+    want = run(1)
+    for _ in range(30):
+        assert run(4) == want

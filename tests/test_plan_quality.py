@@ -307,7 +307,7 @@ def test_runtime_bloom_filter_injects_on_selective_shuffle_join(spark, sf_dir):
 
 def test_incremental_dedup_joins_on_band_keys(spark, sf_dir):
     """Delta-vs-corpus near-dedup must candidate via the (band_id,
-    band_hash) equi-join — a nested-loop or cartesian fallback would
+    band_val) equi-join — a nested-loop or cartesian fallback would
     mean the LSH blocking failed and the join degenerates to
     delta x corpus."""
     from m2_b3_market_data_pipeline_spark.operators.dedup import release_cached
@@ -317,7 +317,7 @@ def test_incremental_dedup_joins_on_band_keys(spark, sf_dir):
     release_cached(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    assert "band_hash" in plan and "band_id" in plan
+    assert "band_val" in plan and "band_id" in plan
 
 
 def test_simhash_aggregates_stay_in_codegen(spark, sf_dir):

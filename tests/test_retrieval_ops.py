@@ -334,27 +334,32 @@ def test_rerank_recall_dominates_adc_ranking(spark, sf_dir):
 
 
 def test_banded_near_dup_matches_sliced_layout(spark, sf_dir):
-    """At a layout both forms can express (w<=15, b<=4, same plane
-    indices), the per-band-family operator and the sliced-BIGINT
-    operator agree exactly: banded_near_dup_pairs with plane_stride =
-    band_bits reproduces lsh_near_dup_pairs' banding (band j of the
-    contiguous signature IS planes [j*w, (j+1)*w)), so the only
-    difference under test is the representation."""
+    """With plane_stride = band_bits, banded_near_dup_pairs' per-band
+    hyperplane families are the slices of ONE contiguous signature
+    (band j IS planes [j*w, (j+1)*w) of lsh_signatures): its pairs
+    equal a pure-Python band bucketing of the sliced 12-bit signature,
+    verified against the exact cosine baseline."""
+    from collections import defaultdict
+
     from m2_b3_market_data_pipeline_spark.operators.similarity import (
         banded_near_dup_pairs,
-        lsh_near_dup_pairs,
+        cosine_pairs_above,
+        lsh_signatures,
     )
     from m2_b3_market_data_pipeline_spark.plans.registry import load
 
     emb = load(spark, sf_dir, "embeddings")
-    old = lsh_near_dup_pairs(
-        emb, dim=64, threshold=0.3, n_bits=12, band_bits=4
-    ).collect()
+    buckets = defaultdict(list)
+    for r in lsh_signatures(emb, dim=64, n_bits=12).collect():
+        for j in range(3):
+            buckets[(j, (r["lsh_sig"] >> (4 * j)) & 15)].append(r["vec_id"])
+    cands = {(a, b) for ids in buckets.values() for a in ids for b in ids if a < b}
+    exact = {(r["id_a"], r["id_b"]) for r in cosine_pairs_above(emb, threshold=0.3).collect()}
     new = banded_near_dup_pairs(
         emb, dim=64, threshold=0.3, band_bits=4, n_bands=3, plane_stride=4
     ).collect()
     key = lambda r: (r["id_a"], r["id_b"])
-    assert sorted(map(key, old)) == sorted(map(key, new))
+    assert sorted(map(key, new)) == sorted(cands & exact)
     assert len(new) > 0  # fixture yields pairs at this permissive layout
 
 

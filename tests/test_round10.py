@@ -206,49 +206,3 @@ def test_mmr_recall_overlap_bounds(spark, sf_dir):
         assert 0 <= r["n_overlap"] <= r["n_selected"]
         assert abs(r["overlap_frac"] - round(r["n_overlap"] / r["n_selected"], 6)) < 1e-9
     assert rows[0]["overlap_frac"] == 1.0
-
-
-def test_minhash_join_strategy_sizing_rule(spark, sf_dir):
-    """The sf30 finding's rule, pinned both ways: at fixture scale the
-    minhash pair path keeps the estimator's broadcasts (zero
-    SortMergeJoin — the same-window A/B showed forced-merge costing
-    +27%/+87% where broadcast fits), while force_shuffle pins every
-    corpus-derived join to sort-merge (the shape that survived sf30
-    where the auto-broadcast died). The threshold constant carries the
-    measured boundary."""
-    from m2_b3_market_data_pipeline_spark.operators.dedup import (
-        SHUFFLE_JOIN_MIN_DOCS,
-        jaccard_verify,
-        lsh_candidate_pairs,
-        release_cached,
-        with_minhash,
-    )
-    from m2_b3_market_data_pipeline_spark.plans import all_queries
-    from m2_b3_market_data_pipeline_spark.plans.registry import load
-
-    assert 438_350 < SHUFFLE_JOIN_MIN_DOCS < 1_059_006  # the measured boundary
-
-    # Small corpus -> the registered query keeps the broadcast plan.
-    df = all_queries.QUERIES["minhash_dedup"](spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    release_cached(df)
-    assert "SortMergeJoin" not in plan, plan[:1500]
-
-    # force_shuffle -> every pair-path join is sort-merge, none broadcast.
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    signed = with_minhash(docs).persist()
-    try:
-        pairs = lsh_candidate_pairs(signed, force_shuffle=True)
-        out = jaccard_verify(
-            pairs, signed.select("doc_id", "sh"), threshold=0.5, force_shuffle=True
-        )
-        forced = out._jdf.queryExecution().executedPlan().toString()
-    finally:
-        signed.unpersist()
-    # >= 3 sort-merge joins = the banded self-join + both verify joins.
-    # with_minhash's internal signature left-join stays
-    # estimator-decided (NOT hinted): its build side is an AGGREGATE
-    # output whose runtime size AQE measures accurately — at sf30 it
-    # chose sort-merge by itself (the probe recorded 11 SMJ / 0 BHJ),
-    # while at fixture scale its broadcast is correct and cheap.
-    assert forced.count("SortMergeJoin") >= 3, forced[:1500]

@@ -491,38 +491,3 @@ def test_wav_decode_and_frame_rms_end_to_end(spark):
     win = (loud + quiet)[n // 4 : n // 2]
     assert by_doc[1][1] == math.sqrt(sum(s * s for s in win) / len(win))
     assert all(r["sample_rate"] == 8000 for r in rows if r["doc_id"] == 1)
-
-
-def test_incremental_cross_pairs_shuffle_switch(spark):
-    """The fifth-decade streaming finding (round 12): the incremental
-    band/verify joins must pin to SORT-MERGE past the doc threshold —
-    at 3.05M stored docs the auto-broadcast of the corpus-sized sides
-    died on spark.driver.maxResultSize mid-drain. force_shuffle=True
-    plans SortMergeJoin with zero BroadcastHashJoin; the small-corpus
-    default keeps the (faster there) broadcast plan; pair OUTPUT is
-    identical under both strategies."""
-    from m2_b3_market_data_pipeline_spark.operators.dedup import (
-        _cross_pairs_from_signed,
-        fan_out,
-        with_minhash,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, f"alpha beta gamma delta epsilon zeta eta theta doc{i % 3}")
-         for i in range(12)],
-        "doc_id long, text string",
-    )
-    d = with_minhash(fan_out(docs.filter("doc_id % 2 = 0"))).persist()
-    c = with_minhash(fan_out(docs.filter("doc_id % 2 = 1"))).persist()
-    try:
-        forced = _cross_pairs_from_signed(d, c, threshold=0.3, force_shuffle=True)
-        plan = forced._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "BroadcastHashJoin" not in plan
-        auto = _cross_pairs_from_signed(d, c, threshold=0.3)  # tiny: stays broadcast-eligible
-        got_f = {(r.delta_id, r.corpus_id, r.jaccard) for r in forced.collect()}
-        got_a = {(r.delta_id, r.corpus_id, r.jaccard) for r in auto.collect()}
-        assert got_f == got_a and got_f, "strategy must not change pairs"
-    finally:
-        d.unpersist()
-        c.unpersist()

@@ -5,7 +5,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from m2_b3_market_data_pipeline_spark.operators.dedup import (
-    dup_ngram_coverage,
     fan_out,
     release_cached,
 )
@@ -47,46 +46,6 @@ def test_semdedup_does_not_prune_across_clusters(spark):
     )
     out = {r.vec_id: r.pruned for r in semdedup(emb, k=2, iters=1, threshold=0.99).collect()}
     assert out == {0: False, 1: False, 2: True, 3: True}
-
-
-def test_dup_ngram_coverage_interval_union(spark):
-    # Docs 1 and 2 share a 6-token run => two overlapping 5-gram
-    # positions, covering 6 distinct token indices (union, not 10).
-    shared = "alpha beta gamma delta epsilon zeta"
-    docs = spark.createDataFrame(
-        [
-            (1, f"{shared} unique one two"),
-            (2, f"other start {shared}"),
-            (3, "nothing in common with anybody else at all"),
-            (4, "tiny doc"),  # < n tokens
-        ],
-        "doc_id long, text string",
-    )
-    out = dup_ngram_coverage(docs, n=5, min_df=2)
-    got = {r.doc_id: r for r in out.collect()}
-    release_cached(out)
-    assert got[1].dup_positions == 2 and got[1].covered_tokens == 6
-    assert got[2].dup_positions == 2 and got[2].covered_tokens == 6
-    assert got[1].n_tok == 9
-    assert abs(got[1].dup_frac - round(6 / 9, 6)) < 1e-9
-    assert got[3].dup_positions == 0 and got[3].covered_tokens == 0
-    assert got[3].dup_frac == 0.0
-    # short doc still reports a row, all zeros
-    assert got[4].n_tok == 2 and got[4].covered_tokens == 0
-
-
-def test_dup_ngram_coverage_within_doc_repeat_not_counted(spark):
-    # A 5-gram repeated twice INSIDE one doc but appearing in no other
-    # doc has document frequency 1 — not a cross-doc duplicate.
-    phrase = "one two three four five"
-    docs = spark.createDataFrame(
-        [(1, f"{phrase} filler {phrase}"), (2, "entirely different words here now")],
-        "doc_id long, text string",
-    )
-    out = dup_ngram_coverage(docs, n=5, min_df=2)
-    got = {r.doc_id: r for r in out.collect()}
-    release_cached(out)
-    assert got[1].dup_positions == 0 and got[1].covered_tokens == 0
 
 
 def test_frame_dedup_finds_planted_duplicate_payloads(spark):
@@ -184,18 +143,6 @@ def test_source_overlap_matrix_crosses_sources(spark, sf_dir):
     for r in rows:
         assert r.source_a <= r.source_b  # canonical ordering
         assert r.n_pairs >= 1 and 0.0 <= r.avg_jaccard <= 1.0
-
-
-def test_dup_ngram_coverage_null_text_counts_as_zero(spark):
-    docs = spark.createDataFrame(
-        [(1, None), (2, "one two three four five six"), (3, "one two three four five six")],
-        "doc_id long, text string",
-    )
-    out = dup_ngram_coverage(docs, n=5, min_df=2)
-    got = {r.doc_id: r for r in out.collect()}
-    release_cached(out)
-    assert got[1].n_tok == 0 and got[1].covered_tokens == 0 and got[1].dup_frac == 0.0
-    assert got[2].covered_tokens == 6  # the planted twins still match
 
 
 def test_lang_segments_detects_code_switch(spark):

@@ -272,43 +272,6 @@ def test_triangle_counts_matches_python_golden(spark):
     assert got[7][0] == 0  # star hub: max degree, zero triangles
 
 
-def test_dup_span_removal_cuts_exactly_the_planted_span(spark):
-    """Plant one 6-token sentence verbatim in two docs and nowhere
-    else: removal must cut exactly that span from both (every token of
-    it is under some duplicated 5-gram), keep everything else, and
-    leave the third doc untouched. Also the cross-operator invariant:
-    kept_tokens == n_tok - covered_tokens per doc, with the covered
-    side computed by the independent dup_ngram_coverage operator."""
-    from m2_b3_market_data_pipeline_spark.operators.dedup import (
-        dup_ngram_coverage,
-        release_cached,
-        remove_dup_spans,
-    )
-
-    span = "the quick brown fox jumps high"
-    docs = spark.createDataFrame(
-        [
-            (1, f"alpha beta {span} gamma delta"),
-            (2, f"one two three {span} four five six"),
-            (3, "totally unrelated text with no repeats at all here"),
-        ],
-        "doc_id long, text string",
-    )
-    out = remove_dup_spans(docs, n=5, min_df=2)
-    got = {r.doc_id: r for r in out.collect()}
-    release_cached(out)
-    assert got[1].clean_text == "alpha beta gamma delta"
-    assert got[2].clean_text == "one two three four five six"
-    assert got[3].clean_text == "totally unrelated text with no repeats at all here"
-    assert got[1].kept_tokens == 4 and got[2].kept_tokens == 6
-
-    cov_df = dup_ngram_coverage(docs, n=5, min_df=2)
-    cov = {r.doc_id: r for r in cov_df.collect()}
-    release_cached(cov_df)
-    for d in (1, 2, 3):
-        assert got[d].kept_tokens == cov[d].n_tok - cov[d].covered_tokens, d
-
-
 def test_recursive_reach_matches_python_bfs(spark, sf_dir):
     """copurchase_reach (the Spark 4 recursive-CTE surface) must agree
     with a pure-Python BFS over the same co-purchase edges: identical

@@ -70,32 +70,6 @@ def test_countmin_estimate_covers_absent_keys(spark):
     assert est["never-inserted"] == 0
 
 
-def test_remove_dup_spans_null_text_degrades_to_empty(spark):
-    """NULL text must degrade to the empty document (n_tok 0,
-    kept_tokens 0, clean_text '') exactly as the DuckDB oracle does —
-    not NULL kept_tokens from ANSI size(NULL)."""
-    from m2_b3_market_data_pipeline_spark.operators.dedup import (
-        release_cached,
-        remove_dup_spans,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (1, None),
-            (2, "a b c d e f"),
-            (3, "a b c d e f"),
-        ],
-        "doc_id long, text string",
-    )
-    out = remove_dup_spans(docs, n=5, min_df=2)
-    got = {r.doc_id: r for r in out.collect()}
-    release_cached(out)
-    assert got[1].n_tok == 0
-    assert got[1].kept_tokens == 0 and got[1].clean_text == ""
-    # The duplicated docs still get fully cut (regression guard).
-    assert got[2].kept_tokens == 0 and got[3].kept_tokens == 0
-
-
 def test_triangle_counts_rejects_out_of_range_node_ids(spark):
     """The (deg, id) rank pack requires ids in [0, 2^32); a violating
     id must raise loudly instead of silently corrupting the

@@ -20,7 +20,6 @@ from m2_b3_market_data_pipeline_spark.operators.knobs import (
 )
 from m2_b3_market_data_pipeline_spark.operators.similarity import (
     cosine,
-    cosine_pairs_above,
     ivfpq_multiprobe_topk,
     as_double,
 )
@@ -92,27 +91,6 @@ def test_semdedup_lsh_prune_rule(spark, sf_dir):
         ]
         has_dup = any(cos(vecs[i], vecs[r.vec_id]) >= 0.45 for i in mates)
         assert r.pruned == has_dup, r.vec_id
-
-
-def test_scaled_near_dups_precision_one_vs_exact(spark, sf_dir):
-    """The bits-scaled near-dup path verifies candidates with exact
-    cosine, so found pairs ⊆ exact pairs at the same threshold
-    (precision 1.0) — the property that makes LSH candidate pruning
-    safe. Recall is a knob trade, reported not asserted."""
-    from m2_b3_market_data_pipeline_spark.plans.scaled_knobs import (
-        embedding_near_dups_bits_scaled,
-    )
-
-    emb = load(spark, sf_dir, "embeddings")
-    exact = {
-        (r.id_a, r.id_b)
-        for r in cosine_pairs_above(emb, threshold=0.45).collect()
-    }
-    found = {
-        (r.id_a, r.id_b)
-        for r in embedding_near_dups_bits_scaled(spark, sf_dir).collect()
-    }
-    assert found <= exact
 
 
 def test_ivfpq_multiprobe_structure(spark, sf_dir):

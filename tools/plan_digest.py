@@ -14,7 +14,10 @@ Compare: python tools/plan_digest.py --diff old.json new.json
 Known hash-noise floor: a handful of queries whose node DETAILS embed
 session-order-dependent state (InMemoryRelation captures, reused-
 exchange/subquery references — decontaminate, dup_ngram_spans,
-profile_events, q21_sole_returned_supplier as of round 8; seasonal_backtest joined the set in round 9 when the registry order shifted around it) can flip
+profile_events, q21_sole_returned_supplier as of round 8;
+seasonal_backtest joined the set in round 9 when the registry order
+shifted around it, triangle_coparts_subgraph later, seen flipping hash
+between two sf0.01 runs with every node count identical) can flip
 hash when the REGISTRY ORDER around them changes, with every
 scale-relevant node count identical. When --diff flags one of these,
 compare the counts before treating it as a plan regression; a count
