@@ -26,18 +26,14 @@ from m2_b3_market_data_pipeline_spark.session import get_spark, sf_dir
 # Breadth over the operator surface, restricted to queries whose cost
 # scales with sf (lineitem/orders/events/documents/embeddings-driven).
 #
-# SIZE BUDGET: the per-round capture of bench output keeps only the
-# LAST 2000 BYTES; a line past that loses the whole round's evidence
-# (it happened in round 5). The printed line costs ~26 bytes per
-# headline query, so the set is capped at ~62 REPRESENTATIVE queries —
-# at least one per operator family, heaviest member preferred; trivial
-# (<0.4s) family-duplicates rotate out when new operators join (their
-# historical per-query numbers persist in the BENCH_r*.json records).
-# test_bench_line_fits_driver_capture pins the worst-case line size.
-# Round-6b rotation: quality_score / q14_promo_share / zorder_keys out
-# (<0.4s best-known, families still covered by text_stats+tfidf,
-# q1..q21+partsupp, and the zorder plan pin), semdedup_prune and
-# dup_ngram_spans in.
+# SIZE BUDGET: the bench capture keeps only the LAST 2000 BYTES of
+# output; a longer line loses the run's evidence entirely. The printed
+# line costs ~26 bytes per headline query, so the set is capped at ~62
+# REPRESENTATIVE queries — at least one per operator family, heaviest
+# member preferred. When a new operator joins, a trivial (<0.4s)
+# family-duplicate rotates out; its historical numbers persist in the
+# BENCH_r*.json records. test_bench_line_fits_driver_capture pins the
+# worst-case line size.
 HEADLINE = [
     "refined_pipeline",
     "q1_pricing_summary",
@@ -49,30 +45,16 @@ HEADLINE = [
     "simhash_signatures",
     "cosine_topk",
     "tfidf_top_terms",
-    # added with round-1 coverage growth (TPC-H wave 4, streaming joins,
-    # IVF ANN) — totals before/after are not comparable 1:1; compare
-    # per-query against BASELINE.md
     "q9_product_profit",
     "q21_sole_returned_supplier",
     "ivf_ann_topk",
-    # round-2 corpus-preparation wave
     "corpus_pipeline",
     "embedding_near_dups",
     "dedup_clusters",
     "decontaminate",
-    # round-2 event-log analytics + CDC wave (sessionize_stats rotated
-    # out in round 10 for the capture cap — 0.49s, events family covered
-    # by session_window; its correctness row is green in the r9 record)
-    # round-4 wave 6
     "trigram_lm_score",
     "containment_pairs",
     "phash_near_dups",
-    # round-5 incremental-curation wave
-    # round-6: literal partsupp TPC-H graphs + sketch accuracy checks
-    # (q11/q16_partsupp and approx_quantile_check rotated out in round
-    # 10 for the capture cap — 0.58-0.67s; the partsupp family keeps
-    # q2/q9/q20 + the TPC-H core reps, the sketch family keeps
-    # approx_distinct_check, and all three keep green correctness rows)
     "q9_partsupp",
     "q20_partsupp",
     "approx_distinct_check",
@@ -81,28 +63,9 @@ HEADLINE = [
     "quality_gate_funnel",
     "audio_frame_energy",
     "lsh_recall_check",
-    # round-6 second wave: semantic dedup, duplicated-span coverage,
-    # DSIR importance weights, LM quality deciles (frame_dedup rides the
-    # already-benched multimodal_frames path; snapshot_diff and
-    # mixture_rebalance rotate out — <0.4s, families still covered)
     "semdedup_prune",
     "dup_ngram_spans",
     "dsir_weights",
-    # round-7: the rewritten exploded-band ANN path (was BNLJ; measure
-    # the hash-join shape directly, not only via ann_recall_check) and
-    # the incremental semantic-dedup / growing-corpus mining wave.
-    # Rotated out to stay under the driver's 2000-byte tail capture
-    # (test_bench_line_fits_driver_capture): q4_order_priority,
-    # q18_large_orders (TPC-H family keeps 10 headline reps),
-    # retention_cohorts (0.34s; events family keeps sessionize_stats),
-    # and with the BPE/IVF-PQ/PageRank wave also twap_daily (0.35s;
-    # market family keeps asof/resample/indicators), orc_roundtrip
-    # (0.29s; formats family keeps hash-checked correctness rows), and
-    # fuzzy_name_match (0.27s; the blocking-key join is plan-pinned) —
-    # historical numbers in BENCH_r01-r06/BENCH_FULL. The triangle +
-    # re-rank additions rotate out lead_lag (0.41s; window family keeps
-    # window_rank/resample_ohlc) and markov_transitions (0.45s; events
-    # family keeps sessionize_stats/session_window).
     "ann_topk_lsh",
     "incremental_semdedup",
     "streaming_triplets",
@@ -111,76 +74,18 @@ HEADLINE = [
     "pagerank_cosuppliers",
     "triangle_coparts",
     "ivfpq_rerank_topk",
-    # round-8: the published-filter curation wave's heaviest member
-    # (gopher_rules, ~1.1s quiet-window: 7 rules over token+line arrays
-    # in shuffle-free stacked projections). repetition_stats rotates
-    # out to stay under the capture cap (0.36s pure projection; the
-    # projection-shaped text-signal family stays covered by text_stats
-    # and gopher_rules itself, and its correctness row is green).
-    # c4_line_filters (0.37s) and source_temperature_weights (1.0s,
-    # dominated by session fan-out of a 20-row aggregate) stay out —
-    # families covered by this rep and the hash-checked rows.
-    # round-9: the corpus-scaled-knob production forms of the three
-    # §13-superlinear operators (SCALE.md §14) join their fixed-knob
-    # judged baselines so the scale path has per-round perf evidence.
-    # Capture-cap rotation (standing policy — history persists in
-    # BENCH_r01-r08): text_stats (0.30s; text-signal family covered by
-    # gopher_rules + tfidf_top_terms), tumbling_window (0.32s;
-    # streaming-window family keeps session_window), dedup_exact
-    # (0.47s hash-groupBy; dedup family keeps minhash/ngram/simhash,
-    # correctness row in the r9 window), token_fertility (0.43s;
-    # tokenizer family keeps bpe_learn_merges + bpe_apply_check row).
     "semdedup_k_scaled",
     "embedding_near_dups_bits_scaled",
     "ivfpq_cells_scaled",
-    # round-9 second wave: BM25 lexical retrieval (inverted-index shape)
-    # and the counting-trained NB classifier (the wave's heaviest
-    # member: |V| x |labels| model grid + doc-token scoring shuffle).
-    # Capture-cap rotation: json_parse_audit (0.53s; input-audit row
-    # green in the record, dead-letter shape pinned in test_wave7) and
-    # lm_quality_buckets (0.52s; corpus-quality family keeps
-    # dsir_weights + gopher_rules + boilerplate_frac) rotate out.
     "bm25_topk",
     "nb_lang_classifier",
-    # round-10: the hashed-feature NB variant (bounded model broadcast
-    # at open vocab — the production twin of nb_lang_classifier) and
-    # the MMR shortlist recall gate (4 greedy chains per run, the
-    # heaviest retrieval-quality member).
     "nb_hashed",
     "mmr_recall_check",
-    # round-11: the three ordered scale twins (r10 verdict items 2/3/5)
-    # join their judged baselines — the band-count near-dup layout past
-    # the 15-bit width cap, the knob-bounded trigram LM, and the
-    # reachable-band MMR (its exact-parity pool makes it the family's
-    # heaviest member on diffuse fixtures BY DESIGN — cost-honesty note
-    # in the operator). Capture-cap rotation (worst-case line 1996 ->
-    # 1880 bytes; last best-knowns in BASELINE.md's round-11 ledger so
-    # a re-add inherits history): asof_join_quotes (0.56s r10; market
-    # family keeps resample_ohlc + twap/indicator history),
-    # cdc_merge_upsert (0.57s; CDC correctness row green, sink pinned
-    # in tests), gopher_rules (0.51s; corpus-quality family keeps
-    # dsir_weights + boilerplate_frac + tfidf_top_terms),
-    # incremental_near_dedup (0.87s; dedup family keeps minhash /
-    # ngram / simhash / incremental_semdedup).
     "trigram_lm_hashed",
     "embedding_near_dups_bands_scaled",
     "mmr_select_scaled",
-    # round-13 media-decode differential gates (the real
-    # encode->decode->featurize chain, image and video); session_window
-    # (0.45s) and centroid_assign (0.70s, now the test-pinned sub-step
-    # of kmeans_clusters) rotate out per the trivial-family-duplicate
-    # policy above — their historical numbers persist in BENCH_r*.json,
-    # and the event-time-window family keeps its green correctness
-    # rows (session/tumbling/sliding are sub-second Catalyst windows;
-    # bench exists for sf-scaling evidence, which they don't carry)
     "decoded_phash_check",
     "decoded_video_check",
-    # round-14 gates: progressive JPEG (the ten-scan Annex G ladder)
-    # and the audio leg's real WAV decode; q3_shipping_priority
-    # (0.77s) and q2_partsupp (0.84s) rotate out per the
-    # family-duplicate policy — the TPC-H core keeps q1/q5 + q9/q21
-    # and the partsupp family keeps q9/q20_partsupp, all with green
-    # correctness rows; historical numbers persist in BENCH_r*.json
     "decoded_pjpeg_check",
     "decoded_wav_check",
 ]
@@ -276,82 +181,46 @@ def main() -> None:
         for q, t in parsed.get("queries", {}).items():
             if q in best_known and isinstance(t, (int, float)):
                 best_known[q] = min(best_known[q], t)
-    # Re-baselined best-knowns (round 9, r8 verdict item 4): a best-known
-    # set by a PRE-FLOOR plan in a fast VM window is not a target the
-    # current (better-at-scale) plan can ever hit, so it flags forever
-    # and trains everyone to ignore the flag list. For queries whose
-    # plan change was ADJUDICATED a win (same-window A/B + plan pins,
-    # BASELINE.md rounds 7-8), historical numbers below the floored
-    # form's recorded best are clamped UP to it; the current run can
-    # still lower the bar by actually beating it. Values = the floored
-    # form's best across every recorded round since the floor landed
-    # (r7: 1.70/1.17, r8: 1.09/1.22) — the r9 measurement day was a
-    # documented slow phase (best-of-3 idle 1.16-3.60s / 1.74-2.24s), so
-    # the recorded-round min is the tighter, more defensible bar
-    # (BASELINE.md "Round-9 re-baseline").
-    #
-    # Round 10 (r9 verdict item 3) extends the clamp to the three
-    # queries the r9 judge adjudicated as carrying the same class of
-    # pre-floor / fast-window best-knowns (VERDICT.md r9 "Flag
-    # adjudication", judge-run same-window control A/B):
-    # - trigram_lm_score / minhash_dedup: BASELINE.md's own round-7
-    #   floor table lists their 0.81 / 0.77 best-knowns as PRE-FLOOR
-    #   fast-window records; clamp to the floored form's recorded-round
-    #   min (r7-r9: trigram 1.16/1.08/2.32 -> 1.08; minhash
-    #   1.03/1.04/1.03 -> 1.03).
-    # - centroid_assign: plan shape unchanged since it registered (the
-    #   broadcast-argmin BNLJ, PLAN_DIGEST), but its 0.299 best-known is
-    #   an r3-era fast-window record the judge's idle A/B showed the
-    #   identical plan running 2.7x of in a slow window while unflagged
-    #   peers ran 3.6x; clamp to the r6 recorded 0.39 (the newest
-    #   fast-window round on record — trigram's pre-floor 0.81 record
-    #   was set in that same window).
-    # Round 14 (r13 verdict item 3, idle-window A/B in
-    # tools/ab_bench_drifters.py at commit f6dc786, table in BASELINE.md
-    # "Round-14 drifter adjudication"): the two composites whose r03-era
-    # best-knowns PRE-DATE the adjudicated r7 minhash-stage floor
-    # (minhash_dedup itself is clamped 0.77 -> 1.03 below) clamp to
-    # the floored form's recorded-round min — corpus_pipeline r08
-    # 1.42, dedup_clusters r07 2.84. With these floors both normalize
-    # to <= 1.0 against the same-session window controls; the other
-    # five r13 drifters normalized to 0.90-1.14 with no clamp at all.
-    # Round 15: decoded_phash_check's 0.64 best-known belongs to the
-    # RETIRED 13-format rotation; the r15 build widened the gate to 17
-    # formats (VP8L x2 + LZW/PackBits TIFF — strictly more computed
-    # work per run). Clamp to the widened form's same-session idle
-    # best-of-5 (1.31s, BASELINE.md "Round-15 re-baseline").
+    # Re-baselined best-knowns: a best-known set by an older plan, or in
+    # a fast VM window, can be a target the current plan never hits, so
+    # it would flag forever and train everyone to ignore the flag list.
+    # For each query below, a plan change was adjudicated a win by a
+    # same-window A/B (BASELINE.md, "re-baseline" and "drifter
+    # adjudication" sections; VERDICT.md "Flag adjudication"), and
+    # historical numbers under the current form's recorded best are
+    # clamped UP to it. The current run can still lower the bar by
+    # beating it.
     REBASED_FLOOR = {
+        # the parallelism-floored scan forms' recorded-round minimum
         "boilerplate_frac": 1.09,
         "dsir_weights": 1.17,
         "trigram_lm_score": 1.08,
         "minhash_dedup": 1.03,
+        # same plan; its older best-known was a fast-window record
         "centroid_assign": 0.39,
+        # composites whose best-knowns predate the minhash-stage floor
         "corpus_pipeline": 1.42,
         "dedup_clusters": 2.84,
+        # the gate now decodes 17 formats, not 13: more work per run
         "decoded_phash_check": 1.31,
     }
     for q, floor_t in REBASED_FLOOR.items():
         if q in best_known:
             best_known[q] = min(timings[q], max(best_known[q], floor_t))
     # Throttle-robust flagging: this VM's GLOBAL speed swings 1.5-4x
-    # between windows (BASELINE.md), which used to flag whole groups of
-    # unrelated queries in a slow window (round-9 measurement: a quiet
-    # run at uniform ~1.4x inflation flagged 4 queries whose code had
-    # not changed). A real regression is a RELATIVE outlier: its
-    # time/best-known ratio stands out against the window's throttle
-    # factor, not just against an absolute 2x.
+    # between windows (BASELINE.md), which would flag whole groups of
+    # unrelated queries in a slow window. A real regression is a
+    # RELATIVE outlier: its time/best-known ratio stands out against the
+    # window's throttle factor, not just against an absolute 2x.
     #
-    # Round 10 (r9 verdict item 3): the phase index is now a FIXED
-    # 3-query CONTROL SET, not the headline-set median. The median is
-    # biased by entries whose best-knowns were themselves set in slow
-    # windows (they read "fast" and drag the median down — exactly how
-    # 2.8x ratios flagged in r9 while an unflagged query ran 3.6x in
-    # the same minutes). The controls are plain, plan-stable queries
-    # whose best-knowns are r1-era fast-window records (0.377 / 0.313 /
-    # 0.322), so their ratio in THIS window measures the window itself;
-    # median-of-3 tolerates one control genuinely regressing (which the
-    # flag rule below would then catch, since its ratio would stand 2x
-    # above the other two). Flag iff ratio > max(2, 2 * control_ratio).
+    # The throttle factor comes from a FIXED 3-query CONTROL SET, not
+    # the headline median: the median is biased by entries whose
+    # best-knowns were themselves set in slow windows. The controls are
+    # plain, plan-stable queries with fast-window best-knowns, so their
+    # ratio in THIS window measures the window itself; median-of-3
+    # tolerates one control genuinely regressing (the flag rule would
+    # then catch it, its ratio standing 2x above the other two). Flag
+    # iff ratio > max(2, 2 * control_ratio).
     WINDOW_CONTROLS = ("q1_pricing_summary", "window_rank", "resample_ohlc")
     ctl = sorted(
         timings[q] / best_known[q] for q in WINDOW_CONTROLS if best_known.get(q)
@@ -359,18 +228,12 @@ def main() -> None:
     control_ratio = ctl[len(ctl) // 2] if ctl else 1.0
     ratios = sorted(t / best_known[q] for q, t in timings.items() if best_known[q] > 0)
     median_ratio = ratios[len(ratios) // 2] if ratios else 1.0
-    # Uniform-regression guard (r9 ADVICE, hardened per r10 ADVICE):
-    # a code change that slows EVERYTHING equally inflates the controls
-    # too and would suppress every relative flag. The historically
-    # observed throttle envelope tops out near 4x (BASELINE.md:
-    # identical queries 0.9s vs 4.2s); a control ratio beyond it is
-    # either an extreme VM phase or a genuine global regression. The
-    # r10 advisor pointed out that merely PRINTING window_anomaly while
-    # the bar kept scaling as 2*control_ratio still suppressed every
-    # per-query flag under a global regression — so the bar is now
-    # CLAMPED at the envelope: past control_ratio 4.0 the bar stops
-    # rising, per-query flags reappear, and the anomaly bit tells the
-    # reader whether to blame the VM or the code.
+    # Uniform-regression guard: a change that slows EVERYTHING equally
+    # inflates the controls too and would suppress every relative flag.
+    # The observed throttle envelope tops out near 4x (BASELINE.md:
+    # identical queries 0.9s vs 4.2s), so the bar stops rising at a
+    # control ratio of 4; past it, per-query flags reappear and the
+    # anomaly bit tells the reader whether to blame the VM or the code.
     window_anomaly = control_ratio > 4.0
     bar = max(2.0, 2.0 * min(control_ratio, 4.0))
     flagged = sorted(
@@ -378,10 +241,10 @@ def main() -> None:
         for q, t in timings.items()
         if t > bar * best_known[q] and t - best_known[q] > 0.5
     )
-    # The printed line must stay small: round 5's line (with a per-query
-    # best_known dict inlined) outgrew the driver's tail capture and the
-    # whole round's bench evidence was lost ("parsed": null). Keep the
-    # driver-contract fields + two scalars; full detail goes to a file.
+    # The printed line must stay small: a line with a per-query
+    # best_known dict inlined outgrew the 2000-byte tail capture and the
+    # run's bench evidence was lost ("parsed": null). Keep the contract
+    # fields + two scalars; full detail goes to a file.
     summary = {
         "metric": "headline_queries_total_runtime",
         "value": total,

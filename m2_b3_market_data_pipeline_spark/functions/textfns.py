@@ -1,7 +1,7 @@
 """Portable text expressions: tokenization, shingling, hashing.
 
-Every builder here has an exact DuckDB twin (see plans/expansion_*.py
-oracles) so dedup/text operators are hash-checkable end-to-end. All are
+Every builder here has an exact DuckDB twin (see the oracles in
+plans/) so dedup/text operators are hash-checkable end-to-end. All are
 built-in Spark SQL functions — JVM-side, codegen-friendly, no Python
 UDFs — which is what keeps them viable on 100 TB of documents
 (SURVEY.md §2.11).

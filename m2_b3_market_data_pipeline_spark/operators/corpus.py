@@ -6,7 +6,7 @@ The operations that sit between "raw crawl" and "tokenizer input" at
 composed filter -> dedup -> near-dedup pipeline. Everything is built-in
 Spark SQL expressions — codegen'd projections and ordinary shuffles, no
 Python in the hot path — and every operator has a DuckDB oracle twin in
-plans/expansion_corpus.py.
+plans/corpus_quality.py and plans/corpus_prep.py.
 
 Scale notes per operator:
 - repetition stats: the distinct-ratio signals are pure projections

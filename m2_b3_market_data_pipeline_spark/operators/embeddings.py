@@ -16,7 +16,7 @@ Scale notes:
   K dot products inside codegen. For K beyond broadcast range, switch
   to the IVF two-level scheme in operators/similarity.py.
 
-Each operator has a DuckDB oracle twin in plans/expansion_embeddings.py.
+Each operator has a DuckDB oracle twin in plans/retrieval_quality.py.
 """
 
 from __future__ import annotations

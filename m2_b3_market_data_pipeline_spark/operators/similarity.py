@@ -342,7 +342,7 @@ def lsh_signatures(
     bench iteration — while the string parses JVM-side in ~0.3s to the
     same resolved tree (same per-bit CASE/zip_with/aggregate, same
     repr-round-tripped double literals, so values and plan shape are
-    bit-identical; A/B in OPTIMIZATION_r15.md)."""
+    bit-identical; A/B in be3ad13:OPTIMIZATION_r15.md)."""
     sig = _sign_bits_sql(vec_col, dim, range(n_bits))
     return corpus.withColumn("lsh_sig", F.expr(sig))
 
@@ -390,7 +390,7 @@ def _banded_values(
     # One generated SQL string instead of n_bands * band_bits * dim
     # Column-API py4j calls — same tree, same repr-round-tripped double
     # literals, seconds of driver time saved per construction (the
-    # lsh_signatures rewrite, guide §7.3; A/B in OPTIMIZATION_r15.md).
+    # lsh_signatures rewrite, guide §7.3; A/B in be3ad13:OPTIMIZATION_r15.md).
     vals = [
         _sign_bits_sql(vec_col, dim, range(j * plane_stride, j * plane_stride + band_bits))
         for j in range(n_bands)
@@ -420,8 +420,11 @@ def banded_signatures_df(
         n_bands=n_bands,
         plane_stride=plane_stride,
     )
+    # _outer, as in dedup.band_join: a plain posexplode makes Catalyst
+    # infer size(__bv) > 0 below the projection, computing every band
+    # value twice. __bv is a fixed-length array, so no row is added.
     return signed.select(
-        id_col, F.posexplode("__bv").alias("band_id", "band_val")
+        id_col, F.posexplode_outer("__bv").alias("band_id", "band_val")
     )
 
 

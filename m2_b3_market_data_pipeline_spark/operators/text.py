@@ -6,7 +6,7 @@ quality scoring, token counting, and document fingerprinting over the
 projection per document, no shuffle, no UDFs — so throughput at 100 TB is
 bounded by parquet scan speed, not Python.
 
-Each operator has a DuckDB oracle twin in plans/expansion_text.py.
+Each operator has a DuckDB oracle twin in plans/text_queries.py.
 """
 
 from __future__ import annotations

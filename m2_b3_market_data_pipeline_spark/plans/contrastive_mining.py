@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from ..operators.similarity import wave_triplet_mining
 from .dedup_quality import _SEM_COS
-from .expansion_similarity import QUERY_MOD
+from .retrieval_quality import QUERY_MOD
 from .registry import load, register
 from .sql_fragments import EMB
 

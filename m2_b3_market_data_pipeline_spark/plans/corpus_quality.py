@@ -1,6 +1,7 @@
 """Corpus-quality curation queries: mixture enforcement, boilerplate
-detection, tokenizer fertility, quality funnels, DSIR importance
-weights, LM-score bucketing, PMI collocations, cross-source near-dup
+detection, repetition and character-entropy signals, tokenizer
+fertility, quality funnels, DSIR importance weights, char-trigram LM
+scoring and LM-score bucketing, PMI collocations, cross-source near-dup
 provenance, and code-switch segmentation.
 
 - ``mixture_rebalance``: token-budget enforcement — cap every source at
@@ -18,6 +19,9 @@ provenance, and code-switch segmentation.
 - ``dsir_weights``: DSIR hashed-n-gram importance weights (Xie et al.
   2023) — broadcast-sized smoothed multinomials, per-doc log2
   likelihood-ratio sums.
+- ``trigram_lm_score``: char-trigram LM quality scoring (perplexity
+  proxy) with a broadcast-bounded model (operators/text.py);
+  ``trigram_lm_hashed`` folds grams to seeded-hash buckets first.
 - ``lm_quality_buckets``: CCNet-style LM-score deciles via ONE exact-
   percentile aggregate + broadcast boundaries (no global sort/NTILE).
 - ``bigram_pmi``: PMI collocation mining (BPE-merge candidates).
@@ -33,8 +37,16 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.textfns import shingles, token_count, tokens
-from ..operators.corpus import GATE_COLS, N_GATE_STAGES
-from .expansion_dedup import minhash_pairs_sql
+from ..operators.corpus import (
+    GATE_COLS,
+    N_GATE_STAGES,
+    top_bigram_fraction,
+    with_char_entropy,
+    with_repetition_stats,
+)
+from ..operators.dedup import fan_out
+from ..operators.text import PRE_HASH_SEED, TRI_HASH_SEED, trigram_lm_scores
+from .lexical_dedup import minhash_pairs_sql
 from .registry import load, register
 from .sql_fragments import NTOK, TK
 
@@ -388,8 +400,39 @@ def dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 LM_DECILES = [round(0.1 * i, 1) for i in range(1, 10)]
 
 
+@register(
+    "trigram_lm_score",
+    oracle="""
+WITH t AS (SELECT doc_id, lower(trim(text)) AS s FROM documents),
+g AS (
+    SELECT doc_id,
+           unnest(list_transform(generate_series(1, greatest(length(s) - 2, 0)),
+                                 i -> substr(s, i, 3))) AS gram
+    FROM t
+),
+c3 AS (SELECT gram, COUNT(*) AS n3 FROM g GROUP BY gram),
+c2 AS (SELECT substr(gram, 1, 2) AS pre, COUNT(*) AS n2 FROM g GROUP BY 1),
+model AS (
+    SELECT gram, log2(CAST(n3 AS DOUBLE) / CAST(n2 AS DOUBLE)) AS logp
+    FROM c3 JOIN c2 ON substr(c3.gram, 1, 2) = c2.pre
+)
+SELECT g.doc_id,
+       CAST(COUNT(*) AS BIGINT) AS n_trigrams,
+       ROUND(AVG(logp), 6) AS avg_logp
+FROM g JOIN model ON g.gram = model.gram
+GROUP BY g.doc_id
+""",
+)
+def trigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Self-trained char-trigram LM scoring (operators/text.py). The
+    model is bounded by |charset|^3 so it broadcasts; the corpus side
+    never shuffles on model keys — the KenLM-style quality filter at
+    100 TB."""
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
+    return trigram_lm_scores(docs)
+
+
 def _trigram_oracle() -> str:
-    from . import expansion_wave6  # noqa: F401  (registers trigram_lm_score)
     from .registry import ORACLES
 
     return ORACLES["trigram_lm_score"]
@@ -555,8 +598,8 @@ from ..operators.text import LANG_MARKERS, LANG_SEG_TOKENS  # noqa: E402
 def _lang_segments_oracle(seg_tokens: int = LANG_SEG_TOKENS) -> str:
     """The segment-voting chain rendered from the SAME marker constants
     as operators/text.py::lang_segments (one definition, two engines —
-    the expansion_text.py::_lang_case_sql pattern)."""
-    from .expansion_text import lang_vote_sql
+    the text_queries.py::_lang_case_sql pattern)."""
+    from .text_queries import lang_vote_sql
 
     from .sql_fragments import sql_word_set
 
@@ -945,3 +988,125 @@ def source_kl_divergence_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle; the corpus marginal is a vocab-bounded broadcast."""
     docs = load(spark, sf_dir, "documents").select("source", "text")
     return source_unigram_kl(docs)
+
+_BG = "[tk[i] || ' ' || tk[i+1] for i in generate_series(1, len(tk) - 1)]"
+
+
+@register(
+    "repetition_stats",
+    oracle=f"""
+WITH t AS (SELECT doc_id, {_TK} AS tk FROM documents),
+b AS (SELECT doc_id, tk, {_BG} AS bg FROM t)
+SELECT doc_id,
+       CAST(len(tk) AS BIGINT) AS n_tokens,
+       CASE WHEN len(tk) > 0 THEN
+         ROUND(1.0 - CAST(len(list_distinct(tk)) AS DOUBLE) / CAST(len(tk) AS DOUBLE), 6)
+       END AS dup_token_frac,
+       CASE WHEN len(bg) > 0 THEN
+         ROUND(1.0 - CAST(len(list_distinct(bg)) AS DOUBLE) / CAST(len(bg) AS DOUBLE), 6)
+       END AS dup_bigram_frac
+FROM b
+""",
+)
+def repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gopher-style repetition fractions (duplicate tokens / bigrams per
+    document) as pure projections — no shuffle (operators/corpus.py)."""
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
+    return with_repetition_stats(docs).select(
+        "doc_id", "n_tokens", "dup_token_frac", "dup_bigram_frac"
+    )
+
+
+@register(
+    "top_bigram_frac",
+    oracle=f"""
+WITH t AS (SELECT doc_id, {_TK} AS tk FROM documents),
+b AS (SELECT doc_id, unnest({_BG}) AS bg FROM t),
+c AS (SELECT doc_id, bg, COUNT(*) AS cnt FROM b GROUP BY 1, 2)
+SELECT doc_id,
+       CAST(SUM(cnt) AS BIGINT) AS n_bigrams,
+       ROUND(CAST(MAX(cnt) AS DOUBLE) / CAST(SUM(cnt) AS DOUBLE), 6) AS top_bigram_frac
+FROM c GROUP BY doc_id
+""",
+)
+def top_bigram_frac(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Most-frequent-bigram share per document (the Gopher top-2-gram
+    filter): explode + two-level aggregation with map-side partials
+    (operators/corpus.py)."""
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
+    return top_bigram_fraction(docs)
+
+
+@register(
+    "char_entropy",
+    oracle="""
+WITH t AS (
+    SELECT doc_id,
+           list_transform(generate_series(1, length(text)), i -> substr(text, i, 1)) AS cs
+    FROM documents
+)
+SELECT doc_id,
+       CASE WHEN len(cs) > 0 THEN
+         ROUND(-list_sum(list_transform(list_distinct(cs),
+             d -> (CAST(len(list_filter(cs, c -> c = d)) AS DOUBLE)
+                   / CAST(len(cs) AS DOUBLE))
+                  * log2(CAST(len(list_filter(cs, c -> c = d)) AS DOUBLE)
+                         / CAST(len(cs) AS DOUBLE)))), 6)
+       END AS char_entropy
+FROM t
+""",
+)
+def char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Shannon entropy of the per-document character distribution — a
+    gibberish/compressibility quality signal, computed as one
+    higher-order-function projection per row, no explode, no shuffle
+    (operators/corpus.py::with_char_entropy)."""
+    docs = fan_out(load(spark, sf_dir, "documents").select("doc_id", "text"))
+    return with_char_entropy(docs).select("doc_id", "char_entropy")
+
+
+# Hashed-bucket twin (r10 verdict item 3): grams and prefixes fold to
+# seeded-hash buckets BEFORE both count passes. 64 buckets over the
+# fixture's ~2-4k observed trigrams forces real collisions, so the
+# differential gate exercises the fold itself (the nb_hashed posture).
+TRI_BUCKETS = 64
+
+
+@register(
+    "trigram_lm_hashed",
+    oracle=f"""
+WITH t AS (SELECT doc_id, lower(trim(text)) AS s FROM documents),
+g AS (
+    SELECT doc_id,
+           unnest(list_transform(generate_series(1, greatest(length(s) - 2, 0)),
+                                 i -> substr(s, i, 3))) AS gram
+    FROM t
+),
+h AS (
+    SELECT doc_id,
+           CAST(('0x' || substr(md5('{TRI_HASH_SEED}|' || gram), 1, 15)) AS BIGINT)
+               % {TRI_BUCKETS} AS tb,
+           CAST(('0x' || substr(md5('{PRE_HASH_SEED}|' || substr(gram, 1, 2)), 1, 15)) AS BIGINT)
+               % {TRI_BUCKETS} AS pb
+    FROM g
+),
+c3 AS (SELECT tb, COUNT(*) AS n3 FROM h GROUP BY tb),
+c2 AS (SELECT pb, COUNT(*) AS n2 FROM h GROUP BY pb)
+SELECT h.doc_id,
+       CAST(COUNT(*) AS BIGINT) AS n_trigrams,
+       ROUND(AVG(log2(CAST(n3 AS DOUBLE) / CAST(n2 AS DOUBLE))), 6) AS avg_logp
+FROM h JOIN c3 USING (tb) JOIN c2 USING (pb)
+GROUP BY h.doc_id
+""",
+)
+def trigram_lm_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hashed-bucket trigram LM scoring — the scale-safe twin of
+    ``trigram_lm_score`` for OPEN charsets (SCALE.md §19.3): both
+    model tables are <= {TRI_BUCKETS} rows BY CONTRACT (a knob, not
+    the |charset|^3 alphabet assumption a CJK-bearing corpus breaks at
+    ~1e8 observed trigrams), the same seeded-hash fold nb_hashed and
+    dsir_log_weights ship, applied AT the explode projection so train
+    and score cannot drift. The dense form stays registered as the
+    judged baseline (operators/text.py::trigram_lm_scores)."""
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
+    return trigram_lm_scores(docs, n_buckets=TRI_BUCKETS)

@@ -24,18 +24,13 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import dup_ngram_coverage
 from ..operators.embeddings import assign_with_vector, semdedup, semdedup_incremental
-from .expansion_dedup import minhash_pairs_sql
-from .expansion_embeddings import (
-    KMEANS_ITERS,
-    N_CENTROIDS,
-    _km_assign_cte,
-    _km_update_cte,
-)
+from .lexical_dedup import minhash_pairs_sql
+from .retrieval_quality import KMEANS_ITERS, N_CENTROIDS, _km_assign_cte, _km_update_cte
 from .registry import load, register
 from .sql_fragments import EMB, TK
 
 # Fixture max pairwise cosine is ~0.51 (sf0.01) / ~0.60 (sf0.1) — same
-# rationale as expansion_similarity.NEAR_DUP_THRESHOLD: a small
+# rationale as retrieval_quality.NEAR_DUP_THRESHOLD: a small
 # non-empty prune set at both SFs, so the operator is exercised. Shared
 # by the batch SemDeDup prune and the incremental delta-vs-corpus form.
 SEM_THRESHOLD = 0.45

@@ -1,12 +1,14 @@
-"""Event-log analytics wave: sessionization, funnels, retention cohorts,
-anomaly scoring, and histograms over the ``events`` fixture.
+"""Event-log analytics: sessionization, funnels, retention cohorts,
+anomaly scoring, histograms and Markov transitions over the ``events``
+fixture.
 
 The reference's Athena surface (reference: README.md:274-296) leaves these
 to hand-written SQL; here each is a first-class registered operator with a
 DuckDB oracle. Scale notes per query in the docstrings — the common theme
 is one shuffle on ``user_id`` that several consecutive window/agg passes
 then reuse (Spark keeps the child partitioning, so sessionize ->
-session_stats is ONE exchange total).
+session_stats is ONE exchange total). ``markov_transitions`` needs no
+self-join: the lead window pairs consecutive events in place.
 """
 
 from __future__ import annotations
@@ -256,4 +258,55 @@ def trending_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         counts.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= 3)
         .select("day", "event_type", "n", "rn")
+    )
+
+
+@register(
+    "markov_transitions",
+    oracle="""
+WITH s AS (
+    SELECT user_id, event_type,
+           LEAD(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
+               AS next_event
+    FROM events
+    WHERE ts IS NOT NULL
+),
+c AS (
+    SELECT event_type AS cur_event, next_event, COUNT(*) AS n_trans
+    FROM s WHERE next_event IS NOT NULL
+    GROUP BY 1, 2
+)
+SELECT cur_event, next_event, CAST(n_trans AS BIGINT) AS n_trans,
+       ROUND(CAST(n_trans AS DOUBLE) /
+             SUM(n_trans) OVER (PARTITION BY cur_event), 6) AS p
+FROM c
+""",
+)
+def markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """First-order Markov transition matrix over per-user event streams:
+    lead() pairs consecutive events in place (no self-join), one count
+    aggregate, and the row-normalization is a window over the TINY
+    (|event types|^2) transition table — the heavy table is touched
+    once. Event-time contract: NULL-ts rows have no stream position and
+    are excluded (Spark orders NULLS FIRST, DuckDB LAST)."""
+    s = load(spark, sf_dir, "events").filter(F.col("ts").isNotNull()).withColumn(
+        "next_event",
+        F.lead("event_type").over(
+            Window.partitionBy("user_id").orderBy("ts", "event_id")
+        ),
+    )
+    c = (
+        s.filter(F.col("next_event").isNotNull())
+        .groupBy(F.col("event_type").alias("cur_event"), "next_event")
+        .agg(F.count("*").alias("n_trans"))
+    )
+    return c.select(
+        "cur_event",
+        "next_event",
+        "n_trans",
+        F.round(
+            F.col("n_trans").cast("double")
+            / F.sum("n_trans").over(Window.partitionBy("cur_event")),
+            6,
+        ).alias("p"),
     )

@@ -1,5 +1,6 @@
-"""Text-format edge queries: CSV / JSON-lines round trips under the
-hash oracle.
+"""Storage-format queries: CSV / JSON-lines / ORC round trips under the
+hash oracle, and Z-order (Morton) layout keys for two-column data
+skipping (operators/layout.py; the write path is pytest-verified).
 
 Same proof shape as ``reference_queries.py::refined_write_roundtrip``:
 the Spark side pushes fixture data out through the text sink and back
@@ -21,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..operators.layout import zorder_key, zorder_key_sql
 from ..sources.formats import (
     read_csv,
     read_jsonl,
@@ -187,3 +189,27 @@ def orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _target(sf_dir, "orc")
     write_orc(slice_, path)
     return read_orc(spark, path, schema)
+ZBITS = 16
+
+
+@register(
+    "zorder_keys",
+    oracle=f"""
+SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
+       CAST({zorder_key_sql('l_partkey', 'l_suppkey', bits=ZBITS)} AS BIGINT) AS zval
+FROM lineitem
+""",
+)
+def zorder_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Morton-code clustering key over (l_partkey, l_suppkey)
+    (operators/layout.py): pure bit arithmetic in codegen; the write
+    path range-partitions + sorts on it so parquet min/max stats prune
+    scans filtered on EITHER column."""
+    li = load(spark, sf_dir, "lineitem")
+    return li.select(
+        "l_orderkey",
+        "l_linenumber",
+        "l_partkey",
+        "l_suppkey",
+        zorder_key("l_partkey", "l_suppkey", bits=ZBITS).alias("zval"),
+    )

@@ -1,4 +1,5 @@
-"""Media-modality analytics over binary payloads: per-frame energy
+"""Media-modality analytics over binary payloads: multimodal metadata,
+features and sampled frames, perceptual-hash near-dups, per-frame energy
 contours (the silence/clipping filter shape) and corpus-wide duplicate
 frames over the sampled-frame relation. Real codec decode is stubbed
 (operators/multimodal.py policy); the byte-domain stand-in keeps the
@@ -12,8 +13,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import fan_out
-from ..operators.multimodal import attach_binary, frame_dedup, sample_frames
-from .expansion_similarity import FRAMES_CTE_SQL
+from ..operators.multimodal import (
+    attach_binary,
+    extract_features,
+    frame_dedup,
+    sample_frames,
+)
 from .registry import load, register
 
 @register(
@@ -55,6 +60,27 @@ def audio_frame_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "documents").select("doc_id", "text"), modality="audio"
     )
     return frame_energy(docs, id_col="doc_id", binary_col="content")
+
+
+# Shared frame-sampling CTE chain (ends in ``fr``): the byte-window
+# stand-in for the stubbed codec decode (4 evenly-spaced 16-byte
+# frames, payloads >= 64 bytes). ONE definition — the frame_dedup
+# oracle (plans/dedup_quality.py) folds the same relation, so the
+# sampling stand-in cannot drift between the two checks.
+# Byte-domain: offsets/strides are BYTE offsets over hex(encode(text))
+# (2 hex chars per byte), and frame_hash is md5 of the frame's hex —
+# matching operators/multimodal.py::sample_frames exactly for ANY
+# input, multi-byte codepoints included (no ASCII caveat).
+FRAMES_CTE_SQL = """sized AS (
+    SELECT doc_id, hex(encode(text)) AS h,
+           CAST(octet_length(encode(text)) AS BIGINT) AS len
+    FROM documents WHERE octet_length(encode(text)) >= 64
+),
+f AS (SELECT doc_id, len, h, unnest([0, 1, 2, 3]) AS frame_idx FROM sized),
+fr AS (
+    SELECT doc_id, frame_idx,
+           md5(substring(h, frame_idx * ((len - 16) // 3) * 2 + 1, 32)) AS frame_hash
+    FROM f)"""
 @register(
     "frame_dedup",
     oracle=f"""
@@ -631,3 +657,202 @@ def webp_meta_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id bigint, format string, width int, height int, "
         "has_alpha boolean, animated boolean, n_frames int",
     )
+
+
+@register(
+    "multimodal_meta",
+    oracle="""
+SELECT doc_id,
+       CAST(strlen(text) AS INT)  AS byte_len,
+       md5(text)                  AS content_md5,
+       sha256(text)               AS content_sha256,
+       CASE WHEN strlen(text) > 300 THEN 'large' ELSE 'small' END AS size_class
+FROM documents
+""",
+)
+def multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Binary-column plumbing: payload as opaque bytes + typed metadata
+    (byte length, content hashes, size class). The fixture payload is
+    utf-8 text; the schema is the one real images/audio would use
+    (operators/multimodal.py)."""
+    docs = load(spark, sf_dir, "documents")
+    wrapped = attach_binary(docs)
+    return wrapped.select(
+        "doc_id",
+        F.col("meta.byte_len").alias("byte_len"),
+        F.col("meta.content_md5").alias("content_md5"),
+        F.sha2(F.col("content"), 256).alias("content_sha256"),
+        F.when(F.col("meta.byte_len") > 300, F.lit("large")).otherwise(F.lit("small")).alias("size_class"),
+    )
+
+
+def _bin_count_sql(bin_idx: int) -> str:
+    """COUNT FILTER for bytes in histogram bin ``bin_idx`` (16 bins over
+    0-255) over the per-byte relation ``v(doc_id, val)`` — true byte
+    domain via hex pairs, exact for any input including multi-byte
+    codepoints (previously a regex char-class count with an ASCII-only
+    caveat)."""
+    return f"COUNT(*) FILTER (val // 16 = {bin_idx})"
+
+
+@register(
+    "multimodal_features",
+    oracle=f"""
+WITH src AS (
+    SELECT doc_id, text, hex(encode(text)) AS h,
+           CAST(octet_length(encode(text)) AS BIGINT) AS L
+    FROM documents WHERE text IS NOT NULL
+),
+v AS (
+    SELECT doc_id,
+           unnest(list_transform(generate_series(1, CAST(L AS INT)),
+                  i -> CAST(('0x' || substr(h, 2 * i - 1, 2)) AS BIGINT))) AS val
+    FROM src
+),
+c AS (
+    SELECT doc_id,
+           {_bin_count_sql(2)} AS c2,
+           {_bin_count_sql(6)} AS c6,
+           {_bin_count_sql(7)} AS c7
+    FROM v GROUP BY doc_id
+)
+SELECT s.doc_id,
+       CAST(s.L AS INT) AS byte_len,
+       md5(s.text)      AS content_md5,
+       CASE WHEN s.L = 0 THEN 0.0 ELSE ROUND(COALESCE(c.c2, 0) * 1.0 / s.L, 6) END AS f2,
+       CASE WHEN s.L = 0 THEN 0.0 ELSE ROUND(COALESCE(c.c6, 0) * 1.0 / s.L, 6) END AS f6,
+       CASE WHEN s.L = 0 THEN 0.0 ELSE ROUND(COALESCE(c.c7, 0) * 1.0 / s.L, 6) END AS f7,
+       16               AS feature_dim
+FROM src s LEFT JOIN c USING (doc_id)
+""",
+)
+def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Arrow-batched byte-level feature extraction via mapInPandas — the
+    decode/featurize stage shape for real media, with the deterministic
+    byte-histogram standing in for the (stubbed) image decode
+    (operators/multimodal.py). Hash-checked: the oracle reproduces the
+    histogram in the TRUE byte domain (hex pairs of the utf-8
+    encoding), exact for any input including multi-byte codepoints;
+    bins 2/6/7 are the ASCII-populated ones (space/punct and letters).
+    NULL payloads are excluded by the decode contract (can't featurize
+    nothing); an empty payload yields the all-zero histogram."""
+    docs = load(spark, sf_dir, "documents")
+    wrapped = attach_binary(docs)
+    feats = extract_features(wrapped)
+    return feats.select(
+        "doc_id",
+        "byte_len",
+        "content_md5",
+        F.round(F.element_at("feature", 3), 6).alias("f2"),
+        F.round(F.element_at("feature", 7), 6).alias("f6"),
+        F.round(F.element_at("feature", 8), 6).alias("f7"),
+        F.size("feature").alias("feature_dim"),
+    )
+
+
+@register(
+    "multimodal_frames",
+    oracle=f"""
+WITH {FRAMES_CTE_SQL}
+SELECT doc_id, frame_idx, frame_hash FROM fr
+""",
+)
+def multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Frame sampling over binary payloads: 1 row → 4 evenly-spaced
+    fixed-size frames via Arrow-batched mapInPandas, the video
+    frame-extraction pipeline shape (operators/multimodal.py::
+    sample_frames; the codec decode is stubbed, the byte-window slice is
+    the deterministic stand-in). fan_out spreads the narrow scan before
+    the per-row Python work. The frame digest is md5 over the frame's
+    hex encoding (portable-digest form, like the portable-hash Bloom),
+    so the DuckDB oracle slices hex(encode(text)) and is byte-exact for
+    any input — multi-byte codepoints included, no ASCII caveat."""
+    docs = load(spark, sf_dir, "documents")
+    return sample_frames(fan_out(attach_binary(docs)), n_frames=4, frame_bytes=16)
+
+
+PHASH_PERTURB_MOD = 10  # every 10th doc gets a perturbed twin planted
+PHASH_MAX_HAMMING = 3
+
+
+@register(
+    "phash_near_dups",
+    oracle="""
+WITH corpus AS (
+    -- length()/substr() are CHARACTER-based in both engines, matching
+    -- the Spark side's substr/length perturbation exactly.
+    SELECT doc_id, text FROM documents
+    UNION ALL
+    SELECT doc_id + 1000000 AS doc_id,
+           concat(substr(text, 1, length(text) - 5), 'XXXXX') AS text
+    FROM documents WHERE doc_id % 10 = 0
+),
+-- From here on the domain is explicit BYTES (hex of the utf-8
+-- encoding), mirroring perceptual_hash's byte-level signature — char
+-- functions like ord()/substr(text,...) would diverge from Spark on
+-- any non-ASCII document.
+sized AS (
+    SELECT doc_id, hex(encode(text)) AS h,
+           CAST(octet_length(encode(text)) AS BIGINT) AS L
+    FROM corpus WHERE octet_length(encode(text)) >= 64
+),
+v AS (
+    SELECT doc_id, L,
+           unnest(list_transform(generate_series(1, CAST(L AS INT)),
+                                 i -> CAST(('0x' || substr(h, 2 * i - 1, 2)) AS BIGINT))) AS val,
+           unnest(generate_series(1, CAST(L AS INT))) AS pos
+    FROM sized
+),
+sg AS (
+    SELECT doc_id, (64 * (pos - 1)) // L AS seg,
+           SUM(val) AS ssum, COUNT(*) AS slen
+    FROM v GROUP BY 1, 2
+),
+tots AS (SELECT doc_id, SUM(ssum) AS tot, SUM(slen) AS n FROM sg GROUP BY 1),
+sig AS (
+    SELECT sg.doc_id,
+           SUM(CASE WHEN seg < 32 AND ssum * n > tot * slen
+                    THEN CAST(1 AS BIGINT) << CAST(seg AS INT) ELSE 0 END) AS lo,
+           SUM(CASE WHEN seg >= 32 AND ssum * n > tot * slen
+                    THEN CAST(1 AS BIGINT) << CAST(seg - 32 AS INT) ELSE 0 END) AS hi
+    FROM sg JOIN tots ON sg.doc_id = tots.doc_id
+    GROUP BY 1
+),
+banded AS (SELECT doc_id, lo, hi, unnest([0, 1, 2, 3]) AS c FROM sig),
+b2 AS (
+    SELECT doc_id, lo, hi, c,
+           CASE WHEN c < 2 THEN (lo >> (c * 16)) & 65535
+                ELSE (hi >> ((c - 2) * 16)) & 65535 END AS cv
+    FROM banded
+),
+pairs AS (
+    SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
+           CAST(bit_count(xor(a.lo, b.lo)) + bit_count(xor(a.hi, b.hi)) AS BIGINT)
+               AS hamming
+    FROM b2 a JOIN b2 b
+      ON a.c = b.c AND a.cv = b.cv AND a.doc_id < b.doc_id
+)
+SELECT id_a, id_b, hamming FROM pairs WHERE hamming <= 3
+""",
+)
+def phash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Perceptual-hash near-dup join for multimodal payloads: aHash-style
+    segment-mean signatures (operators/multimodal.py::perceptual_hash)
+    fed straight into the SimHash Hamming pigeonhole join
+    (operators/dedup.py::simhash_near_pairs) — signature families
+    compose, the join machinery is shared. The fixture corpus has no
+    organic byte-level near-dups, so every 10th doc gets a PLANTED
+    length-preserving perturbed twin (last 5 bytes replaced) standing in
+    for a re-encoded image; both engines construct the same corpus, so
+    the planted pairs are hash-checked, not hand-waved."""
+    from ..operators.dedup import simhash_near_pairs
+    from ..operators.multimodal import attach_binary, perceptual_hash
+
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
+    pert = docs.filter(F.col("doc_id") % PHASH_PERTURB_MOD == 0).select(
+        (F.col("doc_id") + 1000000).alias("doc_id"),
+        F.expr("concat(substr(text, 1, length(text) - 5), 'XXXXX')").alias("text"),
+    )
+    corpus = docs.unionByName(pert)
+    sigs = perceptual_hash(attach_binary(corpus))
+    return simhash_near_pairs(sigs, max_hamming=PHASH_MAX_HAMMING)

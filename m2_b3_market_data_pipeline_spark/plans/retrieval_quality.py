@@ -1,6 +1,16 @@
-"""Retrieval-quality queries: ANN recall evidence, the IVF-PQ
-composite stack (top-k, recall, exact re-rank), and the k-NN
-label-agreement probe of embedding quality.
+"""Embedding and retrieval queries: embedding hygiene (L2
+normalization, int8 quantization, k-means and nearest-centroid
+assignment, JL projection), exact cosine top-k, banded-LSH near-dups
+and ANN, IVF and PQ top-k, ANN recall evidence, the IVF-PQ composite
+stack (top-k, recall, exact re-rank), the k-NN label-agreement probe of
+embedding quality, BM25 and MMR.
+
+Float vectors are verified bit-meaningfully by hashing micro-unit
+integer codes (ROUND(x * 1e6) AS BIGINT) — integer strings are
+identical across engines, unlike double-to-string formatting. Exact
+paths are oracle-checked against DuckDB ``list_inner_product`` over
+DOUBLE[] (both engines sum left-to-right in double precision; results
+rounded to 6dp).
 
 All paths are deterministic (fixed every-Nth-vector codebooks, LCG
 hyperplanes as literals, 6dp-rounded cosines, explicit tiebreaks), so
@@ -9,28 +19,64 @@ even APPROXIMATE retrieval quality hash-checks against DuckDB.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators.similarity import ann_topk, brute_force_topk, ivfpq_topk
-from .expansion_similarity import (
-    _ANN_BAND_MATCH,
-    _CCOS_C,
-    _CCOS_Q,
-    _PQ_LEN,
-    _QCOS,
-    _lsh_sig_sql,
-    CENTROID_MOD,
-    EMBED_DIM,
-    LSH_BAND_BITS,
-    LSH_BITS,
-    NPROBE,
-    PQ_SUB,
-    QUERY_MOD,
-    TOP_K,
+from ..operators.embeddings import (
+    assign_centroids,
+    kmeans_iterate,
+    l2_normalize,
+    quantize_int8,
+)
+from ..operators.similarity import (
+    _hyperplane,
+    ann_topk,
+    banded_near_dup_pairs,
+    brute_force_topk,
+    ivf_topk,
+    ivfpq_topk,
+    pq_ann_topk,
+    pq_codes,
 )
 from .registry import load, register
 from .sql_fragments import EMB, TK
+EMBED_DIM = 64
+LSH_BAND_BITS = 4
+
+
+LSH_BITS = 16
+
+QUERY_MOD = 100  # queries = vec_id % 100 == 0
+TOP_K = 5
+_LSH_BANDS = LSH_BITS // LSH_BAND_BITS
+_LSH_MASK = (1 << LSH_BAND_BITS) - 1
+_ANN_BAND_MATCH = " OR ".join(
+    f"((c.sig >> {b * LSH_BAND_BITS}) & {_LSH_MASK}) = ((q.sig >> {b * LSH_BAND_BITS}) & {_LSH_MASK})"
+    for b in range(_LSH_BANDS)
+)
+
+
+_QCOS = (
+    "ROUND(list_inner_product(q.v, c.v) / "
+    "(sqrt(list_inner_product(q.v, q.v)) * sqrt(list_inner_product(c.v, c.v))), 6)"
+)
+
+
+def _lsh_sig_sql(vec_expr: str, *, dim: int = EMBED_DIM, n_bits: int = LSH_BITS) -> str:
+    """DuckDB expression computing the SAME hyperplane-LSH signature as
+    ``operators/similarity.py::lsh_signatures``: the LCG hyperplanes are
+    deterministic, so they embed as literal DOUBLE lists and the bit
+    pattern reproduces exactly (verified bit-for-bit at sf0.001/0.01/0.1
+    — dot-product signs never sit inside float summation noise on the
+    fixtures)."""
+    terms = []
+    for i in range(n_bits):
+        comps = ", ".join(repr(c) for c in _hyperplane(dim, i))
+        terms.append(
+            f"CASE WHEN list_inner_product({vec_expr}, [{comps}]) > 0"
+            f" THEN CAST({2**i} AS BIGINT) ELSE CAST(0 AS BIGINT) END"
+        )
+    return " + ".join(terms)
 
 @register(
     "ann_recall_check",
@@ -89,9 +135,26 @@ def ann_recall_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("query_id")
     )
+
+
+PQ_SUB = 4  # subspaces; 64-dim -> 4 slices of 16 dims
+_PQ_LEN = EMBED_DIM // PQ_SUB
 _PQ_DIST_P = (
     "ROUND(list_sum([ (s.sv[i] - pcent.cv[i]) * (s.sv[i] - pcent.cv[i]) "
     f"for i in generate_series(1, {_PQ_LEN}) ]), 6)"
+)
+
+
+CENTROID_MOD = 50  # centroids = vec_id % 50 == 0 (deterministic coarse codebook)
+NPROBE = 2
+
+_CCOS_C = (
+    "ROUND(list_inner_product(c.v, cent.cv) / "
+    "(sqrt(list_inner_product(c.v, c.v)) * sqrt(list_inner_product(cent.cv, cent.cv))), 6)"
+)
+_CCOS_Q = (
+    "ROUND(list_inner_product(q.qv, cent.cv) / "
+    "(sqrt(list_inner_product(q.qv, q.qv)) * sqrt(list_inner_product(cent.cv, cent.cv))), 6)"
 )
 
 
@@ -752,3 +815,462 @@ def mmr_select_scaled_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributions yield small pools from the same rule)."""
     emb = load(spark, sf_dir, "embeddings")
     return mmr_select_scaled(emb, k=MMR_K, lam=MMR_LAMBDA)
+
+N_CENTROIDS = 8
+KMEANS_ITERS = 2
+
+
+def _micro_md5(col: Column) -> Column:
+    """md5 over comma-joined micro-unit integer codes of a double array
+    — the cross-engine-stable way to value-check a float vector."""
+    return F.md5(
+        F.array_join(
+            F.transform(col, lambda x: F.round(x * 1e6).cast("bigint").cast("string")),
+            ",",
+        )
+    )
+
+
+_MICRO_SQL = "array_to_string(list_transform({v}, x -> CAST(ROUND(x * 1000000) AS BIGINT)), ',')"
+
+
+@register(
+    "embed_normalize",
+    oracle=f"""
+WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM {EMB}),
+n AS (SELECT vec_id, v, sqrt(list_inner_product(v, v)) AS nrm FROM e)
+SELECT vec_id,
+       ROUND(nrm, 6) AS l2_norm,
+       CASE WHEN nrm > 0 THEN
+         md5({_MICRO_SQL.format(v="list_transform(v, x -> x / nrm)")})
+       END AS unit_md5
+FROM n
+""",
+)
+def embed_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """L2 normalization as a pure projection — norm plus an md5 over the
+    micro-unit codes of the full unit vector, so all 64 components are
+    value-checked (operators/embeddings.py)."""
+    emb = load(spark, sf_dir, "embeddings")
+    out = l2_normalize(emb)
+    return out.select(
+        "vec_id",
+        F.round("l2_norm", 6).alias("l2_norm"),
+        _micro_md5(F.col("unit")).alias("unit_md5"),
+    )
+
+
+@register(
+    "embed_quantize",
+    oracle=f"""
+WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM {EMB}),
+s AS (SELECT vec_id, v, list_max(list_transform(v, x -> abs(x))) / 127.0 AS scale FROM e),
+q AS (SELECT vec_id, v, scale,
+             list_transform(v, x -> CAST(ROUND(x / scale) AS INT)) AS qv
+      FROM s WHERE scale > 0)
+SELECT vec_id,
+       ROUND(scale, 9) AS q_scale,
+       md5(array_to_string(qv, ',')) AS q_md5,
+       ROUND(list_sum(list_transform(generate_series(1, len(v)),
+                                     i -> pow(v[i] - qv[i] * scale, 2)))
+             / len(v), 9) AS q_mse
+FROM q
+""",
+)
+def embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Symmetric int8 quantization: integer codes hashed exactly, scale
+    and reconstruction MSE rounded (operators/embeddings.py). Codes are
+    bit-stable across engines, so this checks the quantizer itself, not
+    a float shadow of it."""
+    emb = load(spark, sf_dir, "embeddings")
+    out = quantize_int8(emb).filter(F.col("q_scale") > 0)
+    return out.select(
+        "vec_id",
+        F.round("q_scale", 9).alias("q_scale"),
+        F.md5(
+            F.array_join(F.transform("q_vec", lambda q: q.cast("string")), ",")
+        ).alias("q_md5"),
+        F.round("q_mse", 9).alias("q_mse"),
+    )
+
+
+def _km_dist(a: str, b: str) -> str:
+    return (
+        f"list_inner_product({a}, {a}) - 2 * list_inner_product({a}, {b})"
+        f" + list_inner_product({b}, {b})"
+    )
+
+
+def _km_assign_cte(cents: str, out: str) -> str:
+    d = _km_dist("e.v", "c.cv")
+    return f"""{out} AS (
+    SELECT vec_id, v, centroid_id, dist FROM (
+        SELECT e.vec_id, e.v, c.centroid_id, {d} AS dist,
+               ROW_NUMBER() OVER (PARTITION BY e.vec_id
+                                  ORDER BY {d}, c.centroid_id) AS rn
+        FROM e CROSS JOIN {cents} c) WHERE rn = 1)"""
+
+
+def _km_update_cte(assigned: str, out: str) -> str:
+    return f"""{out} AS (
+    SELECT centroid_id, list(m ORDER BY dim) AS cv FROM (
+        SELECT centroid_id, dim, ROUND(AVG(v[dim]), 6) AS m
+        FROM {assigned}, unnest(generate_series(1, {EMBED_DIM})) AS t(dim)
+        GROUP BY centroid_id, dim) GROUP BY centroid_id)"""
+
+
+def _kmeans_oracle(iters: int) -> str:
+    ctes = [
+        f"e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM {EMB})",
+        f"c0 AS (SELECT CAST(vec_id AS INT) AS centroid_id, v AS cv FROM e "
+        f"WHERE vec_id < {N_CENTROIDS})",
+    ]
+    for i in range(iters):
+        ctes.append(_km_assign_cte(f"c{i}", f"a{i}"))
+        ctes.append(_km_update_cte(f"a{i}", f"c{i + 1}"))
+    ctes.append(_km_assign_cte(f"c{iters}", "af"))
+    return (
+        "WITH " + ",\n".join(ctes)
+        + "\nSELECT vec_id, centroid_id, ROUND(dist, 6) AS sq_dist FROM af"
+    )
+
+
+@register("kmeans_clusters", oracle=_kmeans_oracle(KMEANS_ITERS))
+def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Lloyd's k-means (deterministic seeding, 6dp-rounded centroid
+    updates so the iterate is bit-stable) — the iterative-algorithm
+    pattern on Spark: broadcast argmin assign + explode-by-dimension
+    mean per round, only the k x dim centroid frame crosses rounds
+    (operators/embeddings.py::kmeans_iterate). Oracle: the same
+    iterations unrolled as chained CTEs."""
+    emb = load(spark, sf_dir, "embeddings")
+    return kmeans_iterate(emb, k=N_CENTROIDS, iters=KMEANS_ITERS)
+
+
+@register(
+    "centroid_assign",
+    oracle=f"""
+WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM {EMB}),
+c AS (SELECT vec_id AS centroid_id, v AS cv FROM e WHERE vec_id < {N_CENTROIDS}),
+d AS (
+    SELECT e.vec_id, c.centroid_id,
+           list_inner_product(e.v, e.v) - 2 * list_inner_product(e.v, c.cv)
+             + list_inner_product(c.cv, c.cv) AS dist
+    FROM e CROSS JOIN c
+)
+SELECT vec_id, centroid_id, ROUND(dist, 6) AS sq_dist
+FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, centroid_id) AS rn
+      FROM d)
+WHERE rn = 1
+""",
+)
+def centroid_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Nearest-centroid assignment (the k-means / IVF-training inner
+    step): broadcast K centroids, argmin of K codegen'd distances per
+    row, deterministic tiebreak (operators/embeddings.py). The corpus
+    side never shuffles for the join."""
+    emb = load(spark, sf_dir, "embeddings")
+    centroids = emb.filter(F.col("vec_id") < N_CENTROIDS).select(
+        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("centroid")
+    )
+    return assign_centroids(emb, centroids)
+
+
+# --- Johnson-Lindenstrauss random projection -------------------------------
+
+from ..operators.embeddings import jl_project, jl_signs  # noqa: E402
+from ..operators.similarity import as_double, norm  # noqa: E402
+
+JL_OUT = 16
+JL_SEED = 9000
+
+
+def _jl_oracle() -> str:
+    """The same ±1 sign matrix as literals; proj components y_i are
+    named CTE columns so the norm sum references each exactly once, and
+    the squared sum parenthesizes left-to-right to match Spark's
+    aggregate fold."""
+    scale = JL_OUT ** 0.5
+    ys = ", ".join(
+        f"list_inner_product(v, {signs}) / {scale!r} AS y{i}"
+        for i, signs in enumerate(jl_signs(EMBED_DIM, JL_OUT, JL_SEED))
+    )
+    sq = ""
+    for i in range(JL_OUT):
+        sq = f"({sq} + y{i} * y{i})" if sq else f"(0.0 + y0 * y0)"
+    return f"""
+WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM {EMB}),
+proj AS (SELECT vec_id, v, {ys} FROM c)
+SELECT vec_id,
+       ROUND(sqrt(list_inner_product(v, v)), 6) AS orig_norm,
+       ROUND(sqrt({sq}), 6) AS proj_norm,
+       ROUND(sqrt({sq}) / sqrt(list_inner_product(v, v)), 6) AS norm_ratio
+FROM proj
+ORDER BY vec_id
+"""
+
+
+@register("jl_project_norms", oracle=_jl_oracle())
+def jl_project_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Random-projection dimensionality reduction (Johnson-Lindenstrauss
+    with Achlioptas ±1 signs, operators/embeddings.py::jl_project) —
+    the pre-ANN shrink step (64 -> 16 here; 1024 -> 64 in production).
+    Per-vector norm preservation is the checked signal: orig/projected
+    norms and their ratio, 6dp. Pure codegen projection, no shuffle —
+    parquet-scan-bound at any corpus size; the sign matrix is literals
+    on both engines."""
+    emb = load(spark, sf_dir, "embeddings")
+    proj = jl_project(
+        emb, vec_col="embedding", dim=EMBED_DIM, out_dim=JL_OUT, seed=JL_SEED
+    )
+    v = as_double("embedding")
+    onorm = norm(v)
+    pnorm = norm(F.col("projected"))
+    return proj.select(
+        "vec_id",
+        F.round(onorm, 6).alias("orig_norm"),
+        F.round(pnorm, 6).alias("proj_norm"),
+        F.round(pnorm / onorm, 6).alias("norm_ratio"),
+    ).orderBy("vec_id")
+# The fixture vectors have max pairwise cosine ~0.51 (sf0.01) / ~0.60
+# (sf0.1); 0.45 yields a small non-empty pair set at both SFs so the
+# operator's output is actually exercised, not vacuously empty.
+NEAR_DUP_THRESHOLD = 0.45
+
+_COS = (
+    "ROUND(list_inner_product(q.v, c.v) / "
+    "(sqrt(list_inner_product(q.v, q.v)) * sqrt(list_inner_product(c.v, c.v))), 6)"
+)
+
+
+@register(
+    "cosine_topk",
+    oracle=f"""
+WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM {EMB}),
+q AS (SELECT vec_id, v FROM c WHERE vec_id % {QUERY_MOD} = 0)
+SELECT query_id, neighbor_id, cos, rn FROM (
+    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+           {_COS} AS cos,
+           ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY {_COS} DESC, c.vec_id) AS rn
+    FROM c CROSS JOIN q
+    WHERE q.vec_id <> c.vec_id
+) WHERE rn <= {TOP_K}
+""",
+)
+def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact brute-force cosine top-k: broadcast query set, corpus never
+    shuffles for the join, WindowGroupLimit keeps O(k) state per query
+    (operators/similarity.py)."""
+    emb = load(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") % QUERY_MOD == 0)
+    return brute_force_topk(emb, queries, k=TOP_K)
+
+
+def _lsh_band_sql(source: str) -> str:
+    """UNION ALL of (id, band_id, band_val) rows — DuckDB's equivalent of
+    the band explode in ``dedup.band_join``."""
+    selects = [
+        f"SELECT vec_id, {b} AS band_id, (sig >> {b * LSH_BAND_BITS}) & {_LSH_MASK} AS band_val FROM {source}"
+        for b in range(_LSH_BANDS)
+    ]
+    return " UNION ALL ".join(selects)
+
+
+@register(
+    "embedding_near_dups",
+    oracle=f"""
+WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM {EMB}),
+sigs AS (SELECT vec_id, v, {_lsh_sig_sql("v")} AS sig FROM c),
+bands AS ({_lsh_band_sql("sigs")}),
+cand AS (
+    SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
+    FROM bands a JOIN bands b
+      ON a.band_id = b.band_id AND a.band_val = b.band_val AND a.vec_id < b.vec_id
+)
+SELECT p.id_a, p.id_b,
+       ROUND(list_inner_product(sa.v, sb.v) /
+             (sqrt(list_inner_product(sa.v, sa.v)) * sqrt(list_inner_product(sb.v, sb.v))), 6) AS cos
+FROM cand p
+JOIN c sa ON sa.vec_id = p.id_a
+JOIN c sb ON sb.vec_id = p.id_b
+WHERE ROUND(list_inner_product(sa.v, sb.v) /
+            (sqrt(list_inner_product(sa.v, sa.v)) * sqrt(list_inner_product(sb.v, sb.v))), 6)
+      >= {NEAR_DUP_THRESHOLD}
+""",
+)
+def embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding near-dup pairs at scale: hyperplane-LSH band candidates
+    + exact-cosine verify on candidates only (operators/similarity.py::
+    banded_near_dup_pairs, bands sliced from one contiguous signature:
+    plane_stride = band width). Shuffle volume is docs×bands, never
+    docs² — the quadratic ``cosine_pairs_above`` form is demoted to the
+    test-only recall baseline. The oracle reproduces the deterministic
+    LCG hyperplanes as SQL literals, so this approximate operator is
+    still hash-checked end-to-end."""
+    emb = load(spark, sf_dir, "embeddings")
+    return banded_near_dup_pairs(
+        emb, dim=EMBED_DIM, threshold=NEAR_DUP_THRESHOLD,
+        band_bits=LSH_BAND_BITS, n_bands=_LSH_BANDS, plane_stride=LSH_BAND_BITS,
+    )
+
+
+@register(
+    "ann_topk_lsh",
+    oracle=f"""
+WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM {EMB}),
+sigs AS (SELECT vec_id, v, {_lsh_sig_sql("v")} AS sig FROM e),
+q AS (SELECT * FROM sigs WHERE vec_id % {QUERY_MOD} = 0)
+SELECT query_id, neighbor_id, cos, rn FROM (
+    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, {_QCOS} AS cos,
+           ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY {_QCOS} DESC, c.vec_id) AS rn
+    FROM sigs c JOIN q
+      ON ({_ANN_BAND_MATCH}) AND q.vec_id <> c.vec_id
+) WHERE rn <= {TOP_K}
+""",
+)
+def ann_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Approximate top-k via random-hyperplane LSH band candidates +
+    exact re-rank (operators/similarity.py::ann_topk). Hash-checked: the
+    deterministic LCG hyperplanes reproduce as literal matrices in the
+    oracle, making even the approximate path value-verified; recall vs
+    the exact ``cosine_topk`` baseline is asserted in tests."""
+    emb = load(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") % QUERY_MOD == 0)
+    return ann_topk(emb, queries, dim=EMBED_DIM, k=TOP_K, n_bits=LSH_BITS, band_bits=LSH_BAND_BITS)
+_RCOS = (
+    "ROUND(list_inner_product(qv, v) / "
+    "(sqrt(list_inner_product(qv, qv)) * sqrt(list_inner_product(v, v))), 6)"
+)
+
+
+@register(
+    "ivf_ann_topk",
+    oracle=f"""
+WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM {EMB}),
+cent AS (SELECT vec_id AS cid, v AS cv FROM c WHERE vec_id % {CENTROID_MOD} = 0),
+asg AS (
+    SELECT vec_id, v, cid FROM (
+        SELECT c.vec_id, c.v, cent.cid,
+               ROW_NUMBER() OVER (PARTITION BY c.vec_id
+                                  ORDER BY {_CCOS_C} DESC, cent.cid) AS rn
+        FROM c CROSS JOIN cent) WHERE rn = 1),
+q AS (SELECT vec_id AS query_id, v AS qv FROM c WHERE vec_id % {QUERY_MOD} = 0),
+probe AS (
+    SELECT query_id, qv, cid FROM (
+        SELECT q.query_id, q.qv, cent.cid,
+               ROW_NUMBER() OVER (PARTITION BY q.query_id
+                                  ORDER BY {_CCOS_Q} DESC, cent.cid) AS rn
+        FROM q CROSS JOIN cent) WHERE rn <= {NPROBE})
+SELECT query_id, neighbor_id, cos, rn FROM (
+    SELECT p.query_id, a.vec_id AS neighbor_id, {_RCOS} AS cos,
+           ROW_NUMBER() OVER (PARTITION BY p.query_id
+                              ORDER BY {_RCOS} DESC, a.vec_id) AS rn
+    FROM probe p JOIN asg a ON a.cid = p.cid
+    WHERE a.vec_id <> p.query_id
+) WHERE rn <= {TOP_K}
+""",
+)
+def ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF-bucketed ANN: deterministic coarse codebook (every
+    ``CENTROID_MOD``-th vector), corpus inverted into cells, queries
+    probe their NPROBE nearest cells, exact re-rank inside cells only
+    (operators/similarity.py::ivf_topk). Unlike the hyperplane-LSH
+    path this one is fully deterministic, hence oracle-checked; recall
+    vs the exact baseline is asserted in tests."""
+    emb = load(spark, sf_dir, "embeddings")
+    centroids = emb.filter(F.col("vec_id") % CENTROID_MOD == 0)
+    queries = emb.filter(F.col("vec_id") % QUERY_MOD == 0)
+    return ivf_topk(emb, queries, centroids, k=TOP_K, nprobe=NPROBE)
+_PQ_DIST = (
+    "ROUND(list_sum([ (s.sv[i] - cent.cv[i]) * (s.sv[i] - cent.cv[i]) "
+    f"for i in generate_series(1, {_PQ_LEN}) ]), 6)"
+)
+
+
+@register(
+    "pq_codes",
+    oracle=f"""
+WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM {EMB}),
+m AS (SELECT unnest(generate_series(1, {PQ_SUB})) AS m),
+sub AS (
+    SELECT vec_id, m, list_slice(v, (m - 1) * {_PQ_LEN} + 1, m * {_PQ_LEN}) AS sv
+    FROM c, m
+),
+cent AS (
+    SELECT vec_id AS code, m, list_slice(v, (m - 1) * {_PQ_LEN} + 1, m * {_PQ_LEN}) AS cv
+    FROM c, m WHERE vec_id % {CENTROID_MOD} = 0
+)
+SELECT vec_id, CAST(subspace AS BIGINT) AS subspace, code, dist FROM (
+    SELECT s.vec_id, s.m AS subspace, cent.code, {_PQ_DIST} AS dist,
+           ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.m
+                              ORDER BY {_PQ_DIST} ASC, cent.code) AS rn
+    FROM sub s JOIN cent ON s.m = cent.m
+) WHERE rn = 1
+""",
+)
+def pq_codes_query(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Product-quantization codes: every vector compressed to PQ_SUB
+    nearest-sub-centroid ids (operators/similarity.py::pq_codes;
+    deterministic codebook = every CENTROID_MOD-th vector, as IVF).
+    Hash-checked end-to-end including the per-slice L2 distances."""
+    emb = load(spark, sf_dir, "embeddings")
+    codebook = emb.filter(F.col("vec_id") % CENTROID_MOD == 0)
+    return pq_codes(emb, codebook, dim=EMBED_DIM, n_sub=PQ_SUB)
+
+
+_PQ_QPART = (
+    "list_sum([ (q.qv[i] - cent.cv[i]) * (q.qv[i] - cent.cv[i]) "
+    f"for i in generate_series(1, {_PQ_LEN}) ])"
+)
+
+
+@register(
+    "pq_ann_topk",
+    oracle=f"""
+WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM {EMB}),
+m AS (SELECT unnest(generate_series(1, {PQ_SUB})) AS m),
+sub AS (
+    SELECT vec_id, m, list_slice(v, (m - 1) * {_PQ_LEN} + 1, m * {_PQ_LEN}) AS sv
+    FROM c, m
+),
+cent AS (
+    SELECT vec_id AS code, m, list_slice(v, (m - 1) * {_PQ_LEN} + 1, m * {_PQ_LEN}) AS cv
+    FROM c, m WHERE vec_id % {CENTROID_MOD} = 0
+),
+codes AS (
+    SELECT vec_id, m, code FROM (
+        SELECT s.vec_id, s.m, cent.code,
+               ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.m
+                                  ORDER BY {_PQ_DIST} ASC, cent.code) AS rn
+        FROM sub s JOIN cent ON s.m = cent.m
+    ) WHERE rn = 1
+),
+q AS (SELECT vec_id AS query_id, m, sv AS qv FROM sub WHERE vec_id % {QUERY_MOD} = 0),
+tbl AS (
+    SELECT q.query_id, q.m, cent.code, {_PQ_QPART} AS part
+    FROM q JOIN cent ON q.m = cent.m
+),
+summed AS (
+    SELECT t.query_id, k.vec_id AS neighbor_id, ROUND(SUM(t.part), 6) AS adist
+    FROM codes k JOIN tbl t ON k.m = t.m AND k.code = t.code
+    WHERE k.vec_id <> t.query_id
+    GROUP BY t.query_id, k.vec_id
+)
+SELECT query_id, neighbor_id, adist, rn FROM (
+    SELECT query_id, neighbor_id, adist,
+           ROW_NUMBER() OVER (PARTITION BY query_id
+                              ORDER BY adist ASC, neighbor_id) AS rn
+    FROM summed
+) WHERE rn <= {TOP_K}
+""",
+)
+def pq_ann_topk_query(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PQ asymmetric-distance top-k (operators/similarity.py::
+    pq_ann_topk): queries stay full-precision, the corpus is searched
+    purely through its PQ codes via a broadcast distance table — the
+    billion-scale ADC scan. Deterministic codebook -> fully
+    hash-checked, like ivf_ann_topk."""
+    emb = load(spark, sf_dir, "embeddings")
+    codebook = emb.filter(F.col("vec_id") % CENTROID_MOD == 0)
+    queries = emb.filter(F.col("vec_id") % QUERY_MOD == 0)
+    return pq_ann_topk(emb, queries, codebook, dim=EMBED_DIM, n_sub=PQ_SUB, k=TOP_K)

@@ -39,14 +39,14 @@ from ..operators.similarity import (
     ivfpq_multiprobe_topk,
 )
 from .dedup_quality import SEM_THRESHOLD
-from .expansion_similarity import (
-    _PQ_LEN,
-    _lsh_sig_sql,
+from .retrieval_quality import (
     EMBED_DIM,
     NEAR_DUP_THRESHOLD,
     PQ_SUB,
     QUERY_MOD,
     TOP_K,
+    _PQ_LEN,
+    _lsh_sig_sql,
 )
 from .registry import load, register
 from .sql_fragments import EMB

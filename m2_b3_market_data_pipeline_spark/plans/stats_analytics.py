@@ -1,5 +1,6 @@
-"""Statistical analytics wave: group-wise regression, deterministic
-weighted sampling, equal-frequency binning, co-occurrence lift.
+"""Statistical analytics: group-wise regression, deterministic
+weighted sampling, equal-frequency binning, co-occurrence lift, and
+all pairwise Pearson correlations in ONE aggregation pass.
 
 All pure DataFrame compositions over the fixtures, each hash-checked.
 The numerically delicate parts (variance/covariance) use the engines'
@@ -9,6 +10,8 @@ small magnitudes so 6dp rounding absorbs summation-order drift.
 """
 
 from __future__ import annotations
+
+from itertools import combinations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -343,4 +346,36 @@ def mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("value"), 6).alias("value"),
             F.round(rz, 6).alias("robust_z"),
         )
+    )
+CORR_COLS = ("l_quantity", "l_extendedprice", "l_discount", "l_tax")
+
+
+def _corr_oracle() -> str:
+    pairs = [
+        f"SELECT '{a}' AS col_a, '{b}' AS col_b, ROUND(corr({a}, {b}), 6) AS pearson FROM lineitem"
+        for a, b in combinations(CORR_COLS, 2)
+    ]
+    return "\nUNION ALL\n".join(pairs)
+
+
+@register("correlation_matrix", oracle=_corr_oracle())
+def correlation_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """All pairwise Pearson correlations of the lineitem measures in a
+    SINGLE aggregation pass: every F.corr lands in one partial+final
+    hash aggregate, so the 100 TB table is scanned once for the whole
+    matrix (vs once per pair). Long-form output via unpivot-style
+    literal rows."""
+    li = load(spark, sf_dir, "lineitem")
+    pairs = list(combinations(CORR_COLS, 2))
+    wide = li.agg(
+        *[
+            F.round(F.corr(a, b), 6).alias(f"{a}__{b}")
+            for a, b in pairs
+        ]
+    )
+    long = wide.unpivot([], [f"{a}__{b}" for a, b in pairs], "pair", "pearson")
+    return long.select(
+        F.split("pair", "__")[0].alias("col_a"),
+        F.split("pair", "__")[1].alias("col_b"),
+        "pearson",
     )

@@ -11,7 +11,7 @@ engine-facing rules here mirror the parquet path's discipline:
   takes an explicit ``StructType``.
 - **Malformed rows are quantified, not fatal.** PERMISSIVE mode plus a
   corrupt-record column is the dead-letter-queue pattern (same shape as
-  ``plans/expansion_wave8.py::json_parse_audit``): parse failures land
+  ``plans/data_quality.py::json_parse_audit``): parse failures land
   in ``_corrupt`` for audit/quarantine instead of killing the job or
   being dropped silently (DROPMALFORMED loses data invisibly).
 - **Compression choice is a split-ability choice.** gzip text is NOT

@@ -1,7 +1,7 @@
 """Streaming incremental aggregation: maintain exact per-key aggregates
 by merging algebraic partials per micro-batch.
 
-The batch form of this algebra is ``plans/analytics_wave7.py::
+The batch form of this algebra is ``plans/market_indicators.py::
 partial_agg_merge`` (count/sum/min/max partials merge losslessly); this
 sink runs it continuously: each micro-batch is reduced to per-key
 partials (count, sum, min, max), merged with the on-disk partial state,

@@ -1,6 +1,6 @@
 """Streaming maintenance of the data-mixture table.
 
-``plans/expansion_wave8.py::corpus_mixture`` is the per-(source, lang)
+``plans/corpus_prep.py::corpus_mixture`` is the per-(source, lang)
 doc/token-count table training runs are configured from; this sink
 maintains it CONTINUOUSLY as document batches land, instead of
 rescanning the corpus per report. It is a thin specialization of

@@ -100,7 +100,7 @@ def test_connected_components_matches_union_find(spark, sf_dir, case):
             minhash_dedup_pairs,
             release_cached,
         )
-        from m2_b3_market_data_pipeline_spark.plans.expansion_dedup import (
+        from m2_b3_market_data_pipeline_spark.plans.lexical_dedup import (
             JACCARD_THRESHOLD,
         )
         from m2_b3_market_data_pipeline_spark.plans.registry import load

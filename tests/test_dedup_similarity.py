@@ -295,7 +295,10 @@ def test_pq_codes_centroids_self_code(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from m2_b3_market_data_pipeline_spark.plans.all_queries import QUERIES
-    from m2_b3_market_data_pipeline_spark.plans.expansion_similarity import CENTROID_MOD, PQ_SUB
+    from m2_b3_market_data_pipeline_spark.plans.retrieval_quality import (
+        CENTROID_MOD,
+        PQ_SUB,
+    )
 
     out = QUERIES["pq_codes"](spark, sf_dir)
     cent_rows = out.filter(F.col("vec_id") % CENTROID_MOD == 0)
@@ -329,7 +332,7 @@ def test_pq_ann_topk_invariants(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from m2_b3_market_data_pipeline_spark.plans.all_queries import QUERIES
-    from m2_b3_market_data_pipeline_spark.plans.expansion_similarity import TOP_K
+    from m2_b3_market_data_pipeline_spark.plans.retrieval_quality import TOP_K
 
     out = QUERIES["pq_ann_topk"](spark, sf_dir).cache()
     try:

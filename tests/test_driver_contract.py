@@ -137,24 +137,14 @@ def test_bench_line_fits_driver_capture():
     assert len(line) < 1900, (len(line), "trim HEADLINE or shorten the line")
 
 
-def test_registry_has_no_cache_leaks(spark, sf_dir):
+def test_registry_has_no_cache_leaks(registry_builds):
     """Every registered query that persists plan-scoped frames must
     surface ALL of them via the ``_cached_frames`` contract so
     ``release_cached`` empties the session cache — a persist invisible
     to the contract leaks an executor-memory entry per query per batch
     in any loop (the near_dedup_sink round-5 lesson, enforced for the
     WHOLE registry). Build-only: persist registers with the
-    CacheManager at plan-construction time, no execution needed."""
-    from m2_b3_market_data_pipeline_spark.operators.dedup import release_cached
-    from m2_b3_market_data_pipeline_spark.plans import all_queries
-
-    cm = spark._jsparkSession.sharedState().cacheManager()
-    spark.catalog.clearCache()
-    leakers = []
-    for name, fn in all_queries.QUERIES.items():
-        df = fn(spark, sf_dir)
-        release_cached(df)
-        if not cm.isEmpty():
-            leakers.append(name)
-            spark.catalog.clearCache()
+    CacheManager at plan-construction time, no execution needed; the
+    shared ``registry_builds`` pass records the CacheManager per query."""
+    leakers = [name for name, (_plan, leaked) in registry_builds.items() if leaked]
     assert not leakers, f"persisted frames not released: {leakers}"

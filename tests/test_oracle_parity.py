@@ -25,9 +25,10 @@ def duck():
 
 
 def _canon_frame(df):
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "tools"))
     from check_oracle import _rowset
 
     return _rowset(df)

@@ -415,7 +415,7 @@ def test_ann_topk_candidates_via_hash_equi_join(spark, sf_dir):
     assert exchanges - floors == 1, plan
 
 
-def test_surface_wide_aggregate_and_join_lint(spark, sf_dir):
+def test_surface_wide_aggregate_and_join_lint(registry_builds):
     """Whole-registry plan lint: no registered query may plan a
     CartesianProduct anywhere, and none may fall out of codegen'd hash
     aggregation (SortAggregate / ObjectHashAggregate) except the
@@ -424,8 +424,6 @@ def test_surface_wide_aggregate_and_join_lint(spark, sf_dir):
     shapes carry struct buffers). Catches the whole class of
     regressions fixed in round 6 (string-min minhash, collect_list
     phash, 65-wide simhash) for every FUTURE query too."""
-    from m2_b3_market_data_pipeline_spark.operators.dedup import release_cached
-
     INTRINSIC = {
         # percentile / approx_percentile sketch buffers
         "exact_percentiles", "approx_quantiles", "approx_quantile_check",
@@ -459,10 +457,7 @@ def test_surface_wide_aggregate_and_join_lint(spark, sf_dir):
         re.I,
     )
     offenders = {}
-    for name, fn in all_queries.QUERIES.items():
-        df = fn(spark, sf_dir)
-        plan = _plan(df)
-        release_cached(df)
+    for name, (plan, _leaked) in registry_builds.items():
         hits = [
             k
             for k in ("CartesianProduct", "SortAggregate", "ObjectHashAggregate")
@@ -474,6 +469,16 @@ def test_surface_wide_aggregate_and_join_lint(spark, sf_dir):
         ):
             offenders[name] = hits
     assert not offenders, offenders
+
+
+def test_bands_witness_computes_each_band_once(spark, sf_dir):
+    """16 hyperplanes, 16 dot products. The banding relation explodes
+    the per-band value array with posexplode_outer: a plain posexplode
+    makes Catalyst infer size(__bv) > 0 below the projection, and that
+    filter carries every dot product a second time."""
+    df = all_queries.QUERIES["embedding_bands_witness"](spark, sf_dir)
+    optimized = df._jdf.queryExecution().optimizedPlan().toString()
+    assert optimized.count("aggregate(zip_with") == 16
 
 
 def test_semdedup_in_cluster_join_is_equi_join(spark, sf_dir):

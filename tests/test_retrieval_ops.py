@@ -235,7 +235,7 @@ def test_ivfpq_full_probe_equals_pq_ann_topk(spark, sf_dir):
         ivfpq_topk,
         pq_ann_topk,
     )
-    from m2_b3_market_data_pipeline_spark.plans.expansion_similarity import (
+    from m2_b3_market_data_pipeline_spark.plans.retrieval_quality import (
         CENTROID_MOD,
         EMBED_DIM,
         PQ_SUB,
@@ -263,7 +263,7 @@ def test_rerank_full_shortlist_degenerates_to_brute_force(spark, sf_dir):
     re-rank must reproduce brute_force_topk row-for-row (same 6dp
     cosine, same tiebreak) — stage 2 adds no semantics of its own, it
     only rescores what stage 1 admits."""
-    from m2_b3_market_data_pipeline_spark.plans.expansion_similarity import (
+    from m2_b3_market_data_pipeline_spark.plans.retrieval_quality import (
         CENTROID_MOD,
         EMBED_DIM,
         NPROBE,
@@ -303,7 +303,7 @@ def test_rerank_recall_dominates_adc_ranking(spark, sf_dir):
     business, not the re-rank's.) Also pin the output contract: exactly
     TOP_K rows per query."""
     from m2_b3_market_data_pipeline_spark.plans.all_queries import QUERIES
-    from m2_b3_market_data_pipeline_spark.plans.expansion_similarity import (
+    from m2_b3_market_data_pipeline_spark.plans.retrieval_quality import (
         QUERY_MOD,
         TOP_K,
     )

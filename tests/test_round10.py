@@ -149,7 +149,7 @@ def test_dedup_clusters_sample_filters_before_shingling(spark, sf_dir):
     clusters frame reads a LogicalRDD (connected_components
     localCheckpoints each star round), so the pin inspects the PAIRS stage
     the query builds — the same sampled relation
-    (plans/expansion_corpus2.py::dedup_clusters_sample): the
+    (plans/lexical_dedup.py::dedup_clusters_sample): the
     md5(doc_id) sample filter prints BELOW (after, in root-first
     order) the signature work, i.e. it feeds the scan, not the pair
     output."""
@@ -157,9 +157,9 @@ def test_dedup_clusters_sample_filters_before_shingling(spark, sf_dir):
         minhash_dedup_pairs,
         release_cached,
     )
-    from m2_b3_market_data_pipeline_spark.plans.expansion_corpus2 import (
-        _DOC_SAMPLE_SQL,
+    from m2_b3_market_data_pipeline_spark.plans.lexical_dedup import (
         JACCARD_THRESHOLD,
+        _DOC_SAMPLE_SQL,
     )
     from m2_b3_market_data_pipeline_spark.plans.registry import load
 

@@ -15,7 +15,7 @@ from m2_b3_market_data_pipeline_spark.plans.corpus_quality import (
     boilerplate_frac_df,
     mixture_rebalance_df,
 )
-from m2_b3_market_data_pipeline_spark.plans.partsupp_tpch import derived_partsupp
+from m2_b3_market_data_pipeline_spark.plans.tpch import derived_partsupp
 
 
 def test_ann_recall_values_are_sane(spark, sf_dir):

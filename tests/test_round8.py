@@ -204,9 +204,7 @@ def test_floor_scoped_off_tfidf_chain(spark, sf_dir):
     vs 1.21s floored) — no round-robin repartition may enter its plan,
     while a floored heavy-map chain keeps it on this single-split
     fixture."""
-    from m2_b3_market_data_pipeline_spark.plans.expansion_text2 import (
-        tfidf_top_terms,
-    )
+    from m2_b3_market_data_pipeline_spark.plans.text_queries import tfidf_top_terms
     from m2_b3_market_data_pipeline_spark.plans.registry import load
 
     plan = tfidf_top_terms(spark, sf_dir)._jdf.queryExecution().toString()

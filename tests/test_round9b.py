@@ -52,7 +52,7 @@ def test_training_shards_excludes_null_text(spark):
 
 
 def test_jl_projection_preserves_norms_statistically(spark, sf_dir):
-    from m2_b3_market_data_pipeline_spark.plans.expansion_embeddings import (
+    from m2_b3_market_data_pipeline_spark.plans.retrieval_quality import (
         EMBED_DIM,
         JL_OUT,
         JL_SEED,

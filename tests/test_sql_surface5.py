@@ -1,11 +1,11 @@
 from __future__ import annotations
 
-from m2_b3_market_data_pipeline_spark.plans.sql_surface5 import (
-    approx_distinct_users,
-    band_join_revenue,
+from m2_b3_market_data_pipeline_spark.plans.market_indicators import (
     rolling_mean_time_range,
 )
 from m2_b3_market_data_pipeline_spark.plans.registry import load
+from m2_b3_market_data_pipeline_spark.plans.relational import band_join_revenue
+from m2_b3_market_data_pipeline_spark.plans.sketch_queries import approx_distinct_users
 
 
 def test_band_join_broadcasts_the_band_dim(spark, sf_dir):
@@ -42,7 +42,7 @@ def test_rolling_time_range_manual_spot_check(spark, sf_dir):
 
 def test_gap_fill_spine_is_continuous_per_user(spark, sf_dir):
     from pyspark.sql import functions as F
-    from m2_b3_market_data_pipeline_spark.plans.sql_surface5 import gap_fill_locf
+    from m2_b3_market_data_pipeline_spark.plans.market_indicators import gap_fill_locf
 
     out = gap_fill_locf(spark, sf_dir)
     per_user = out.groupBy("user_id").agg(
@@ -60,7 +60,7 @@ def test_regex_functions_is_shuffle_free(spark, sf_dir):
     RoundRobin (operators/parallelism.py) on the single-split fixture
     scan — it carries no key, so it is not a semantic shuffle and is
     absent on any real multi-split corpus."""
-    from m2_b3_market_data_pipeline_spark.plans.sql_surface5 import regex_functions
+    from m2_b3_market_data_pipeline_spark.plans.relational import regex_functions
 
     plan = regex_functions(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
     import re
@@ -72,7 +72,7 @@ def test_regex_functions_is_shuffle_free(spark, sf_dir):
 
 def test_train_test_split_fractions_and_stability(spark, sf_dir):
     from pyspark.sql import functions as F
-    from m2_b3_market_data_pipeline_spark.plans.sql_surface5 import train_test_split
+    from m2_b3_market_data_pipeline_spark.plans.relational import train_test_split
 
     out = train_test_split(spark, sf_dir)
     totals = {r["split"]: r["n"] for r in out.groupBy("split").agg(F.sum("n_docs").alias("n")).collect()}
@@ -86,7 +86,7 @@ def test_train_test_split_fractions_and_stability(spark, sf_dir):
 
 
 def test_sample_per_group_caps_at_k_and_is_stable(spark, sf_dir):
-    from m2_b3_market_data_pipeline_spark.plans.sql_surface5 import sample_per_group
+    from m2_b3_market_data_pipeline_spark.plans.relational import sample_per_group
 
     out = sample_per_group(spark, sf_dir)
     counts = out.groupBy("lang").count().collect()
@@ -97,7 +97,7 @@ def test_sample_per_group_caps_at_k_and_is_stable(spark, sf_dir):
 
 
 def test_salted_agg_has_two_aggregate_exchanges(spark, sf_dir):
-    from m2_b3_market_data_pipeline_spark.plans.sql_surface5 import salted_skew_agg
+    from m2_b3_market_data_pipeline_spark.plans.relational import salted_skew_agg
 
     plan = salted_skew_agg(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
     # phase 1 shuffles on (key, salt), phase 2 on key — both present

@@ -104,9 +104,7 @@ def test_sample_frames_shape_and_hashes(spark):
 
 
 def test_sample_frames_partitioning_invariant(spark, sf_dir):
-    from m2_b3_market_data_pipeline_spark.plans.expansion_similarity import (
-        multimodal_frames,
-    )
+    from m2_b3_market_data_pipeline_spark.plans.media_queries import multimodal_frames
     from m2_b3_market_data_pipeline_spark.plans.registry import load
 
     a = sorted(map(tuple, multimodal_frames(spark, sf_dir).collect()))

@@ -140,7 +140,7 @@ def test_zorder_files_carry_stats_for_both_dims(spark, sf_dir, tmp_path):
 def test_correlation_matrix_single_pass(spark, sf_dir):
     """Self-correlation sanity + one-aggregate plan (a second scan of
     lineitem would show two parquet scans in the physical plan)."""
-    from m2_b3_market_data_pipeline_spark.plans.expansion_wave6 import (
+    from m2_b3_market_data_pipeline_spark.plans.stats_analytics import (
         correlation_matrix,
     )
 
@@ -153,9 +153,7 @@ def test_correlation_matrix_single_pass(spark, sf_dir):
 
 
 def test_unpivot_round_trips_grouped_aggregate(spark, sf_dir):
-    from m2_b3_market_data_pipeline_spark.plans.expansion_wave6 import (
-        unpivot_metrics,
-    )
+    from m2_b3_market_data_pipeline_spark.plans.relational import unpivot_metrics
 
     long = unpivot_metrics(spark, sf_dir)
     flags = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(

@@ -4,8 +4,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from m2_b3_market_data_pipeline_spark.plans.analytics_wave7 import (
-    markov_transitions,
+from m2_b3_market_data_pipeline_spark.plans.events_analytics import markov_transitions
+from m2_b3_market_data_pipeline_spark.plans.market_indicators import (
     partial_agg_merge,
     seasonal_backtest,
     twap_daily,
@@ -31,7 +31,7 @@ def test_twap_weights_by_holding_time(spark):
     )
     # Run the registered query body against the fixture frame by
     # swapping the module's loader:
-    from m2_b3_market_data_pipeline_spark.plans import analytics_wave7 as mod
+    from m2_b3_market_data_pipeline_spark.plans import market_indicators as mod
 
     orig = mod.load
     try:
@@ -95,7 +95,7 @@ def test_partial_merge_equals_direct(spark):
 
 def test_realized_vol_hand_computed(spark):
     """Two ticks 10 -> 11 in one day: one return of 0.1, RV = 0.1."""
-    from m2_b3_market_data_pipeline_spark.plans import analytics_wave7 as mod
+    from m2_b3_market_data_pipeline_spark.plans import market_indicators as mod
 
     rows = [
         (1, "2026-01-01 10:00:00", 10.0),
@@ -122,9 +122,7 @@ def test_fuzzy_match_finds_all_planted_typos(spark):
     """Every planted one-char deletion must link back to its origin
     within distance 2 (deletion distance is 1, and the blocking key —
     first char + length band — cannot drop it since char 3 was deleted)."""
-    from m2_b3_market_data_pipeline_spark.plans.expansion_wave8 import (
-        fuzzy_name_match,
-    )
+    from m2_b3_market_data_pipeline_spark.plans.data_quality import fuzzy_name_match
 
     out = fuzzy_name_match(spark, SF).collect()
     true_matches = [r for r in out if r.is_true_match]
@@ -140,7 +138,7 @@ def test_fuzzy_match_finds_all_planted_typos(spark):
 
 
 def test_json_audit_counts_planted_corruption(spark):
-    from m2_b3_market_data_pipeline_spark.plans.expansion_wave8 import (
+    from m2_b3_market_data_pipeline_spark.plans.data_quality import (
         JSON_BAD_MOD,
         json_parse_audit,
     )
@@ -157,9 +155,7 @@ def test_json_audit_counts_planted_corruption(spark):
 def test_leakage_safe_split_never_splits_a_cluster(spark):
     """The leakage guarantee itself: every near-dup cluster maps to
     exactly one split."""
-    from m2_b3_market_data_pipeline_spark.plans.expansion_wave8 import (
-        leakage_safe_split,
-    )
+    from m2_b3_market_data_pipeline_spark.plans.lexical_dedup import leakage_safe_split
 
     out = leakage_safe_split(spark, SF)
     per_cluster = out.groupBy("cluster_id").agg(

@@ -15,7 +15,7 @@ import os
 import sys
 import time
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()

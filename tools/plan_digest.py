@@ -2,49 +2,39 @@
 
 Writes PLAN_DIGEST.json: per query, a normalized plan hash plus the
 scale-relevant node counts (exchanges, joins by type, cartesians,
-non-codegen aggregates). The round-6 `simhash_signatures` regression
-was diagnosed by comparing plan hashes across rounds by hand — this
-makes that instrument standing: a future round diffs two digests and
-sees exactly which queries' PLANS changed (vs mere wall-clock noise,
-which never changes a hash).
+non-codegen aggregates). Diffing two digests shows exactly which
+queries' PLANS changed, as opposed to wall-clock noise, which never
+changes a hash.
 
 Usage: python tools/plan_digest.py [sf_dir] [out.json]
 Compare: python tools/plan_digest.py --diff old.json new.json
 
-Known hash-noise floor: a handful of queries whose node DETAILS embed
-session-order-dependent state (InMemoryRelation captures, reused-
-exchange/subquery references — decontaminate, dup_ngram_spans,
-profile_events, q21_sole_returned_supplier as of round 8;
-seasonal_backtest joined the set in round 9 when the registry order
-shifted around it, triangle_coparts_subgraph later, seen flipping hash
-between two sf0.01 runs with every node count identical) can flip
-hash when the REGISTRY ORDER around them changes, with every
-scale-relevant node count identical. When --diff flags one of these,
-compare the counts before treating it as a plan regression; a count
-change is always real — with one caveat (round 9): an operator that
-executes a plan-SIZING action at build time (triangle_coparts' wedge
-estimate) materializes its persisted frames before the digest captures
-the plan, so InMemoryTableScan nodes print their full cached child
-plans and every count inflates by the embedded copies. For such
-operators compare the EXECUTED plan shape (tests pin it) rather than
-digest counts across the materialization change. Round 11: the
-minhash family (minhash_dedup, corpus_pipeline, lsh_recall_check,
-source_overlap_matrix) joined this class when the r10 eager count
-became the byte-stats aggregate — their digests now print 4
-InMemoryTableScan embedded child copies (BHJ 7->11 etc., counts
-doubled by the copies); the executed shape is unchanged (zero
-SortMergeJoin at fixture scale, the round-10 sizing-rule pins stay
-green, bench at best-known parity).
+Known hash noise: these queries' node details embed session-order
+state (InMemoryRelation captures, reused exchange and subquery
+references), so their hash can flip when the queries built before them
+change, with every node count identical: decontaminate,
+dup_ngram_spans, profile_events, q21_sole_returned_supplier,
+seasonal_backtest, triangle_coparts_subgraph. When --diff flags one,
+compare the counts; a count change is real.
+
+One caveat on counts: an operator that runs a plan-sizing action at
+build time (triangle_coparts' wedge estimate; the minhash family's
+byte-stats aggregate in minhash_dedup, corpus_pipeline,
+lsh_recall_check and source_overlap_matrix) materializes its persisted
+frames before the digest captures the plan, so each InMemoryTableScan
+prints its cached child plan and the counts include those copies. For
+these, compare the executed plan shape, which tests pin.
 """
 
 from __future__ import annotations
 
 import hashlib
 import json
+import os
 import re
 import sys
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 NODES = [
